@@ -1,43 +1,26 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Benchmark main: runs the headline queries from [[QueryCatalog]] on
-  * `SPARK_GRAFT_SF_DIR`, forcing full materialization through the noop
-  * sink (a bare `count()` would let Catalyst prune the computed columns),
-  * and prints ONE JSON line for the driver.
+/** Benchmark main: runs the headline queries from [[QueryCatalog]] (or
+  * the queries named as arguments) on `SPARK_GRAFT_SF_DIR`, forcing full
+  * materialization through the noop sink (a bare `count()` would let
+  * Catalyst prune the computed columns), and prints ONE JSON line for
+  * the driver.
+  *
+  * Usage: `sbt "runMain graft.Bench [query ...]"`
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // repo-root hygiene: Derby's log and the default ./spark-warehouse
-    // otherwise litter the cwd across rounds
-    System.setProperty("derby.stream.error.file",
-      new java.io.File("target/derby.log").getAbsolutePath)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_bench_wh").toString)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE coalescePartitions.minPartitionSize stays at the Spark
-      // default (1m) DELIBERATELY: the r20 A/B (OPTIMIZATION_r20.md)
-      // lowered it to 64k so small-byte/high-CPU text stages would keep
-      // more post-shuffle tasks, and the full headline bench measured
-      // NET SLOWER (35.70 vs 33.38 s) — in one shared local JVM the
-      // extra task overhead outweighs the parallelism on these inputs.
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     // min-of-5: two rounds of min-of-3 swing adjudication (r7→r8) showed
     // the 3-pass minimum still swinging ±25% on short scheduling-floor
     // queries; SCALE.md's dedicated min-of-5 numbers reproduce run-over-run
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "5").toInt
-    val targets = QueryCatalog.all.filter(_.headline)
+    val targets =
+      if (args.isEmpty) QueryCatalog.all.filter(_.headline)
+      else args.toSeq.map(n => QueryCatalog.byName.getOrElse(n,
+        sys.error(s"no such query: $n")))
 
     /** Evict blocks a finished query left in the block manager. The
       * dedup operators eagerly localCheckpoint shared subplans
@@ -74,38 +57,39 @@ object Bench {
     // of work before throwing would otherwise burn iters×30s of bench
     // wall-clock and churn GC into its interleaved neighbors
     val condemned = scala.collection.mutable.Set.empty[String]
+    def timedRun(q: QueryCatalog.Q): (String, Double) = {
+      val t0 = System.nanoTime()
+      // A query that THROWS must never be scored: the exception fires
+      // in milliseconds, and recording that as its time turned broken
+      // queries into apparent 80-90% "speedups" (BENCH_r09's four
+      // events lines). NaN marks the iteration failed; the query is
+      // reported under "failed" and excluded from the total.
+      val dt = if (condemned(q.name)) Double.NaN else try {
+        q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}")
+        condemned += q.name
+        Double.NaN
+      }
+      // outside the timed window: isolate neighbors. NOTE measured, do
+      // not "improve": adding a System.gc() here as well makes EVERY
+      // query ~0.3 s slower at near-zero sd (full G1 collection
+      // between queries un-warms the heap — the exact low-sd elevated
+      // plateau BENCH_r06 recorded for q_tpch_q3); block eviction
+      // alone gives the fast AND stable regime.
+      evictLeakedBlocks()
+      q.name -> dt
+    }
     val samples = (0 until iters).map { pass =>
       // between passes (never inside a timed window): one GC so the
       // ContextCleaner — which only fires when weak refs are processed —
       // drains the pass's broadcast/accumulator backlog; without it a
       // big-heap JVM almost never GCs, the backlog compounds, and later
       // passes degrade 2-3x (measured; the per-QUERY System.gc variant
-      // is worse — see the note below)
+      // is worse — see the note in timedRun)
       if (pass > 0) { System.gc(); Thread.sleep(2000) }
-      targets.map { q =>
-        val t0 = System.nanoTime()
-        // A query that THROWS must never be scored: the exception fires
-        // in milliseconds, and recording that as its time turned broken
-        // queries into apparent 80-90% "speedups" (BENCH_r09's four
-        // events lines). NaN marks the iteration failed; the query is
-        // reported under "failed" and excluded from the total.
-        val dt = if (condemned(q.name)) Double.NaN else try {
-          q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}")
-          condemned += q.name
-          Double.NaN
-        }
-        // outside the timed window: isolate neighbors. NOTE measured, do
-        // not "improve": adding a System.gc() here as well makes EVERY
-        // query ~0.3 s slower at near-zero sd (full G1 collection
-        // between queries un-warms the heap — the exact low-sd elevated
-        // plateau BENCH_r06 recorded for q_tpch_q3); block eviction
-        // alone gives the fast AND stable regime.
-        evictLeakedBlocks()
-        q.name -> dt
-      }
+      targets.map(timedRun)
     }
     // High-variance lines (BENCH_r12: q_peak_concurrency sd 2.70 on
     // mean ~2.1 s, q_range_join sd 0.47 on ~1.0 s — occasional
@@ -119,19 +103,7 @@ object Bench {
       sys.env.getOrElse("SPARK_GRAFT_BENCH_EXTRA_ITERS", "4").toInt
     val extra = (0 until extraIters).map { _ =>
       System.gc(); Thread.sleep(2000)
-      targets.filter(q => noisy(q.name)).map { q =>
-        val t0 = System.nanoTime()
-        val dt = if (condemned(q.name)) Double.NaN else try {
-          q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}")
-          condemned += q.name
-          Double.NaN
-        }
-        evictLeakedBlocks()
-        q.name -> dt
-      }
+      targets.filter(q => noisy(q.name)).map(timedRun)
     }
     val allSamples = samples ++ extra
     if (sys.env.contains("SPARK_GRAFT_BENCH_DEBUG"))

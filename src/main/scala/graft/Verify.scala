@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,21 +8,7 @@ object Verify {
     // optional 3rd arg: comma-separated query-name filter (local
     // iteration aid; the driver always runs the full set)
     val only = args.lift(2).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // repo-root hygiene: Derby's log and the default ./spark-warehouse
-    // otherwise litter the cwd across rounds
-    System.setProperty("derby.stream.error.file",
-      new java.io.File("target/derby.log").getAbsolutePath)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("graft_verify_wh").toString)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     new java.io.File(outDir).mkdirs()
     // A query that throws must stay VISIBLE: in r9 a throwing query
     // wrote nothing and simply vanished from CORRECTNESS (132→120

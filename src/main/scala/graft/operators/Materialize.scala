@@ -61,11 +61,6 @@ object Materialize {
     * text operators whose downstream work is order-insensitive
     * (aggregations, joins, sorted collects). */
   def fanOut(df: DataFrame): DataFrame = {
-    // opt-out knob (spark.graft.scanFanOut=false) for deployments whose
-    // scans are always wide enough, and for A/B-measuring the exchange
-    val enabled = df.sparkSession.conf
-      .getOption("spark.graft.scanFanOut").forall(_.toBoolean)
-    if (!enabled) return df
     val parallelism = df.sparkSession.sparkContext.defaultParallelism
     val parts = df.queryExecution.toRdd.getNumPartitions
     if (parts * 2 >= parallelism) df else df.repartition(parallelism)

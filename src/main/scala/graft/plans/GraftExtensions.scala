@@ -5,8 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Session extension registering graft's native expressions as SQL
-  * functions, for deployments that configure
-  * `spark.sql.extensions=graft.plans.GraftExtensions`:
+  * functions; [[graft.Session.local]] loads it into every session:
   *
   * {{{
   *   SELECT doc_id, minhash_signature(text, 32, 3), simhash64(text)

@@ -1,9 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Session, Tables}
 import graft.operators.CorpusOps
 
 /** Measurement tool (not part of the library surface): throughput of
@@ -19,14 +18,8 @@ object CorpusScale {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val mult = sys.env.getOrElse("SPARK_GRAFT_SCALE", "100").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
+    val cpus = spark.sparkContext.defaultParallelism
 
     val base = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
     // mult copies, ids disjoint; localCheckpoint so the timed stages
@@ -35,7 +28,7 @@ object CorpusScale {
         base.select((col("doc_id") + lit(i.toLong * 10000000L)).as("doc_id"),
           col("text")))
       .reduce(_ unionByName _)
-      .repartition(cpus.toInt * 2)
+      .repartition(cpus * 2)
       .localCheckpoint()
     val nDocs = docs.count()
     val nTokens = docs.select(sum(size(split(trim(col("text")), "\\s+"))))
@@ -56,7 +49,7 @@ object CorpusScale {
     }
     val (nPacked, tPack) = time {
       val packed = CorpusOps.packSequences(chunks._1, "cid", "n_chunk_tokens",
-        seqLen = 512L, partitions = cpus.toInt * 2)
+        seqLen = 512L, partitions = cpus * 2)
       packed.select(countDistinct(col("pack_id"))).collect()(0).getLong(0)
     }
     println(f"docs=$nDocs%d tokens=$nTokens%d " +
@@ -253,7 +246,7 @@ object CorpusScale {
           (col("vec_id") + lit(i.toLong * 10000000L)).as("vec_id"),
           col("embedding")))
       .reduce(_ unionByName _)
-      .repartition(cpus.toInt * 2)
+      .repartition(cpus * 2)
       .localCheckpoint()
     val nVecs = embs.count()
     val qVecs = baseEmb.filter(col("vec_id") < 128)

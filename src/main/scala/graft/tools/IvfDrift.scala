@@ -1,9 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Session, Tables}
 import graft.operators.Similarity
 
 /** Measurement main (dev tooling): how [[Similarity.ivfDriftSummary]]'s
@@ -31,12 +30,7 @@ import graft.operators.Similarity
 object IvfDrift {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(8)
     val dir = java.nio.file.Files
       .createTempDirectory("graft_ivfdrift").toString + "/idx"
     val emb = Tables.load(spark, sfDir, "embeddings")

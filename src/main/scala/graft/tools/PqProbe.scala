@@ -1,9 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Session, Tables}
 import graft.operators.Similarity
 
 /** Scratch: PQ behavior on the test embeddings — code collision rate,
@@ -12,12 +11,7 @@ import graft.operators.Similarity
 object PqProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(8)
     import spark.implicits._
 
     val emb = Tables.load(spark, sfDir, "embeddings")

@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.Session
 
 /** Dev scratch: native vs declarative sign-pack throughput (the
   * r16 verdict #5 Msig/s number for SCALE.md). Builds a synthetic
@@ -13,13 +14,7 @@ object SigThroughput {
   def main(args: Array[String]): Unit = {
     val n = args.lift(0).map(_.toLong).getOrElse(500000L)
     val dim = args.lift(1).map(_.toInt).getOrElse(128)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(32)
     val corpus = spark.range(n).select(col("id"),
         transform(sequence(lit(1), lit(dim)),
           d => (rand(42) * 2.0 - 1.0).cast("float")).as("v"))

@@ -3,9 +3,11 @@ package graft.tools
 import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.Session
 
 /** Measurement tool (not part of the library surface): stage-level
   * evidence that the r15 skew-safe doc-frequency rework in
@@ -29,15 +31,8 @@ import org.apache.spark.sql.functions._
 object SkewProbe {
   def main(args: Array[String]): Unit = {
     val nDocs = sys.env.getOrElse("SPARK_GRAFT_SKEW_DOCS", "200000").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
+    val cpus = spark.sparkContext.defaultParallelism
     import spark.implicits._
 
     // planted skew: ONE trigram shared by EVERY doc (df = nDocs — the
@@ -49,7 +44,7 @@ object SkewProbe {
       format_string("zzz zzz zzz tail%d alpha%d beta%d gamma%d",
         ($"id" / 2).cast("long"), ($"id" / 2).cast("long"),
         ($"id" / 2).cast("long"), ($"id" / 2).cast("long")).as("text"))
-      .repartition(cpus.toInt * 2)
+      .repartition(cpus * 2)
       .localCheckpoint()
     docs.count()
 

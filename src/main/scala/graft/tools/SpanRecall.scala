@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Session, Tables}
 import graft.operators.CorpusOps
 
 /** Measurement main (dev tooling, not a catalog query): pins the
@@ -125,12 +125,7 @@ object SpanRecall {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(8)
     val cfgs = Seq(Config(8, 8), Config(8, 12), Config(8, 16),
       Config(8, 24), Config(4, 16), Config(16, 16))
     println("| n | minTokens | exact ranges | approx ranges | " +

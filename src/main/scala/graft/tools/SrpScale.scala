@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.Session
 
 /** Dev scratch: the SRP tier's at-rest story, measured (the r17
   * verdict #2 number for SCALE.md). Builds a synthetic N x dim float
@@ -20,13 +21,7 @@ object SrpScale {
     val n = args.lift(0).map(_.toLong).getOrElse(500000L)
     val dim = args.lift(1).map(_.toInt).getOrElse(64)
     val nBits = args.lift(2).map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(32)
     import graft.operators.Similarity
 
     val corpus = spark.range(n).select(col("id"),

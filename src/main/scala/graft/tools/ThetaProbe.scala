@@ -1,16 +1,15 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.Session
 
 /** Scratch: runtime types/values of Spark 4.1's built-in theta/KLL
   * sketch functions (they landed in 4.x; the engine's sketch helpers
   * must ride them, not reimplement them). */
 object ThetaProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(4)
     import spark.implicits._
     val df = Seq((1L, "a"), (2L, "a"), (2L, "b"), (3L, "b")).toDF("v", "g")
     val sk = df.groupBy($"g").agg(theta_sketch_agg($"v", 12).as("th"))

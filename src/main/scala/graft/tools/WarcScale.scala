@@ -1,9 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Session, Tables}
 import graft.sources.Warc
 
 /** Measurement tool (not library surface): WARC write + parse
@@ -20,14 +19,8 @@ object WarcScale {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val mult = sys.env.getOrElse("SPARK_GRAFT_SCALE", "50").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
+    val cpus = spark.sparkContext.defaultParallelism
 
     val base = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
     val docs = (0 until mult).map(i =>
@@ -38,7 +31,7 @@ object WarcScale {
         concat(lit("http://www.example.org/doc/"), col("doc_id"))
           .as("target_uri"),
         encode(col("text"), "UTF-8").as("body"))
-      .repartition(cpus.toInt * 2) // 2 archive files per core
+      .repartition(cpus * 2) // 2 archive files per core
       .localCheckpoint()
     val nDocs = docs.count()
     val nBytes = docs.select(sum(length(col("body")))).collect()(0).getLong(0)
@@ -56,7 +49,7 @@ object WarcScale {
       val (nRead, tRead) = time { Warc.read(spark, dir).count() }
       require(nRead == nDocs, s"roundtrip mismatch: $nRead != $nDocs")
       println(f"docs=$nDocs%d payload_MB=${nBytes / 1e6}%.1f " +
-        f"gz_MB=${onDisk / 1e6}%.1f files=${cpus.toInt * 2}%d " +
+        f"gz_MB=${onDisk / 1e6}%.1f files=${cpus * 2}%d " +
         f"write_s=$tWrite%.2f read_s=$tRead%.2f " +
         f"write_MBps=${nBytes / 1e6 / tWrite}%.1f " +
         f"read_MBps=${nBytes / 1e6 / tRead}%.1f " +

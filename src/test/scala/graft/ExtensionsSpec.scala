@@ -36,8 +36,8 @@ class ExtensionsSpec extends SparkSpec {
     new GraftExtensions().apply(new SparkSessionExtensions)
   }
 
-  // --- SketchFilterSimplify (active via spark.sql.extensions on the
-  // --- shared test session) ---
+  // --- SketchFilterSimplify (active via GraftExtensions, which the
+  // --- session factory loads into the shared test session) ---
 
   private def filterConditions(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.queryExecution.optimizedPlan.collect {

@@ -3,23 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared test harness: one SparkSession per suite (lazy), small local
-  * parallelism, UTC — mirrors the driver's Verify session. */
+/** Shared test harness: one SparkSession per suite (lazy), from the
+  * same factory as every main, at a small fixed local parallelism. */
 trait SparkSpec extends AnyFunSuite {
-  // Derby (JdbcSourceSpec's embedded db) writes derby.log into the cwd
-  // unless told otherwise — keep the repo root clean
-  System.setProperty("derby.stream.error.file",
-    new java.io.File("target/derby.log").getAbsolutePath)
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.local(4)
 
   val sfDir = "/root/testdata/sf0.001"
 
