@@ -10,8 +10,11 @@ object Session {
 
   /** A local session on `cpus` cores (default: `SPARK_GRAFT_CPUS`, else
     * every available processor), with one shuffle partition per core,
-    * [[graft.plans.GraftExtensions]] loaded, a UTC session time zone, no
-    * UI, a throwaway warehouse directory and WARN logging.
+    * [[graft.plans.GraftExtensions]] loaded, a UTC session time zone,
+    * TIMESTAMP(NANOS) parquet columns read as INT64 (the legacy
+    * nanosAsLong conf, without which Spark refuses such files;
+    * [[graft.Tables.events]] normalizes the long), no UI, a throwaway
+    * warehouse directory and WARN logging. Loaders never set conf.
     *
     * AQE keeps Spark's defaults, coalescePartitions.minPartitionSize
     * included, DELIBERATELY: the r20 A/B (OPTIMIZATION_r20.md) lowered
@@ -31,6 +34,7 @@ object Session {
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh").toString)

@@ -1,6 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated testdata tables (TESTDATA.md).
   *
@@ -8,6 +12,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * through here so that scans stay declarative (Catalyst prunes columns
   * and pushes filters into the parquet reader) and so a future move to a
   * partitioned / bucketed layout is a one-line change per table.
+  *
+  * Every load reads with a pinned schema. The first load of a path
+  * infers its parquet schema, which costs one Spark job; later loads
+  * reuse it and launch no job. The cached schema is keyed by the path and
+  * checked against a fingerprint of what inference depends on: the
+  * (path, length, mtime) of every file under the path and the session's
+  * parquet type-mapping confs. A regenerated file or a changed conf no
+  * longer matches, so the next load infers again.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -17,7 +29,47 @@ object Tables {
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     if (name == "events") events(spark, sfDir)
     else if (name == "embeddings") embeddings(spark, sfDir)
-    else spark.read.parquet(s"$sfDir/$name.parquet")
+    else read(spark, s"$sfDir/$name.parquet")
+
+  /** A path's inferred schema and the fingerprint it was inferred under. */
+  private final case class Inferred(fingerprint: Seq[Any], schema: StructType)
+
+  /** One entry per path: bounded by the number of tables read. */
+  private val inferred = new ConcurrentHashMap[String, Inferred]()
+
+  /** Session confs that change the schema parquet inference returns. */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  /** The one parquet reader: `path` with its cached schema, inferred
+    * again whenever the fingerprint moved. A missing path fingerprints
+    * as no files, so inference raises Spark's own path-not-found error. */
+  private def read(s: SparkSession, path: String): DataFrame = {
+    val fp = fingerprint(s, path)
+    val schema = Option(inferred.get(path)).filter(_.fingerprint == fp)
+      .getOrElse {
+        val fresh = Inferred(fp, s.read.parquet(path).schema)
+        inferred.put(path, fresh)
+        fresh
+      }.schema
+    s.read.schema(schema).parquet(path)
+  }
+
+  private def fingerprint(s: SparkSession, path: String): Seq[Any] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val files = if (!fs.exists(p)) Nil else {
+      val it = fs.listFiles(p, true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+        .toSeq.sorted
+    }
+    files ++ inferenceConfs.map(s.conf.get)
+  }
 
   /** Register every table as a temp view so `spark.sql` works against
     * the same names the DuckDB oracle uses. */
@@ -33,7 +85,8 @@ object Tables {
   def lineitem(s: SparkSession, d: String): DataFrame = load(s, d, "lineitem")
   /** The driver has generated `events.ts` under two different parquet
     * encodings across rounds — TIMESTAMP(NANOS) (which Spark's reader
-    * only accepts as INT64 under the legacy nanosAsLong conf) and
+    * only accepts as INT64 under the legacy nanosAsLong conf, which
+    * [[Session.local]] sets) and
     * TIMESTAMP(MICROS, isAdjustedToUTC=false) (which Spark reads as
     * TIMESTAMP_NTZ). Branch on the type the reader actually produced so
     * either encoding — and a future UTC-adjusted one — loads to the same
@@ -46,8 +99,7 @@ object Tables {
     *  - TimestampType: already what downstream expects → pass through.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = s.read.parquet(s"$d/events.parquet")
+    val raw = read(s, s"$d/events.parquet")
     raw.withColumn("ts", normalizedTs(raw.schema("ts").dataType))
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
   }
@@ -90,7 +142,7 @@ object Tables {
     * (query-vector lookups in the ANN catalog queries) at use time.
     * The cast is a no-op on today's float32 files. */
   def embeddings(s: SparkSession, d: String): DataFrame = {
-    val raw = s.read.parquet(s"$d/embeddings.parquet")
+    val raw = read(s, s"$d/embeddings.parquet")
     raw.withColumn("embedding",
       raw("embedding").cast("array<float>"))
   }

@@ -294,8 +294,9 @@ object EventStreams {
   /** Streaming source over the driver's raw events parquet, robust to
     * the file's `ts` encoding. The driver has shipped the table as both
     * TIMESTAMP(NANOS) (readable only as INT64 under the legacy
-    * nanosAsLong conf) and TIMESTAMP(MICROS, isAdjustedToUTC=false)
-    * (read as TIMESTAMP_NTZ) across rounds; a hard-coded stream schema
+    * nanosAsLong conf, which [[graft.Session.local]] sets) and
+    * TIMESTAMP(MICROS, isAdjustedToUTC=false) (read as TIMESTAMP_NTZ)
+    * across rounds; a hard-coded stream schema
     * silently MISREADS the other encoding (declaring `ts: LongType`
     * against a micros file makes the file source hand back the micros
     * physical values as longs — no error, output lands in January 1970).
@@ -310,7 +311,6 @@ object EventStreams {
     * as the cross-device fallback) in a scratch dir registered for
     * JVM-exit deletion. */
   def rawEventSource(spark: SparkSession, eventsPath: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val (src, probed) = fileSource(spark, eventsPath)
     src.withColumn("ts", graft.Tables.normalizedTs(probed("ts").dataType))
   }
@@ -372,7 +372,6 @@ object EventStreams {
                            checkpointDir: String,
                            sinkName: String = "graft_stream_tumbling_restart")
       : DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(eventsPath)
     val srcDir = java.nio.file.Files.createTempDirectory("graft-restart-src")
     graft.TempDirs.deleteOnExit(srcDir.toFile)

@@ -19,6 +19,7 @@ class SessionSpec extends SparkSpec {
       assert(s.conf.get(StaticSQLConf.SPARK_SESSION_EXTENSIONS.key) ==
         "graft.plans.GraftExtensions")
       assert(s.conf.get(SQLConf.SESSION_LOCAL_TIMEZONE.key) == "UTC")
+      assert(s.conf.get(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key) == "true")
       assert(s.conf.get(partitions) == "2")
     } finally Session.local(4)
     assert(spark.conf.get(partitions) == "4")
