@@ -99,7 +99,7 @@ object ExcelSink {
                          startRow: Int = 6,
                          overrides: Map[String, String] = Map.empty,
                          maxRows: Int = DefaultMaxRows): Long = {
-    val sheet = ExcelScan.loadSheet(templatePath, None)
+    val sheet = ExcelScan.loadSheet(templatePath, None, lastRow = headerRow)
     val opts = ExcelOptions(sheet = None, headerRow = headerRow,
       dataStartRow = startRow, useHeader = true, blankRunStop = 10, maxCols = 500)
     val headers = ExcelScan.probeHeaders(sheet, opts)

@@ -4,6 +4,7 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -47,9 +48,12 @@ class ExcelTableProvider extends TableProvider with DataSourceRegister {
     }
   }
 
+  /** Reads the first workbook only through `headerRow`: the schema is
+    * the header probe, so the rows below it are never parsed here. */
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val opts = ExcelOptions(options)
-    val sheet = ExcelScan.loadSheet(paths(options).head, opts.sheet)
+    val sheet = ExcelScan.loadSheet(paths(options).head, opts.sheet,
+      lastRow = opts.headerRow)
     val headers = ExcelScan.probeHeaders(sheet, opts)
     StructType(headers.map(h => StructField(h, StringType, nullable = true)))
   }
@@ -125,22 +129,30 @@ class ExcelReaderFactory(fullSchema: StructType, required: StructType,
       private var row = opts.dataStartRow - 1
       private val lastRow = sheet.maxRow
       override def next(): Boolean = { row += 1; row <= lastRow }
-      override def get(): InternalRow =
-        InternalRow.fromSeq(colIndex.toSeq.map { c =>
-          val v = sheet(row, c)
-          if (v.isEmpty) null else UTF8String.fromString(v)
-        })
+      override def get(): InternalRow = {
+        val values = new Array[Any](colIndex.length)
+        var i = 0
+        while (i < colIndex.length) {
+          val v = sheet(row, colIndex(i))
+          if (v.nonEmpty) values(i) = UTF8String.fromString(v)
+          i += 1
+        }
+        new GenericInternalRow(values)
+      }
       override def close(): Unit = ()
     }
   }
 }
 
 object ExcelScan {
-  def loadSheet(path: String, sheetName: Option[String]): Xlsx.Sheet = {
+  /** One sheet of the workbook at `path` (the first when `sheetName` is
+    * None), parsed through row `lastRow` ([[Xlsx.read]]). */
+  def loadSheet(path: String, sheetName: Option[String],
+                lastRow: Int = Int.MaxValue): Xlsx.Sheet = {
     val in = new java.io.BufferedInputStream(
       new java.io.FileInputStream(path.stripPrefix("file:")))
     try {
-      val sheets = Xlsx.read(in)
+      val sheets = Xlsx.read(in, lastRow)
       sheetName match {
         case Some(n) => sheets.find(_.name == n).getOrElse(
           throw new IllegalArgumentException(

@@ -10,6 +10,20 @@ import scala.collection.mutable
   * of XML parts; we emit inline strings (no sharedStrings table) and
   * parse both inline and shared strings on read.
   *
+  * Read model: [[read]] parses each sheet part with one StAX pass into a
+  * row-major [[Sheet]] (an array of rows, each an array of values by
+  * column), tracking `maxRow`/`maxCol` as it goes. A `lastRow` bound
+  * stops the pass at the first cell past that row, so a header probe
+  * parses only the rows above and at its header. Shared strings are
+  * parsed lazily, only as far as the highest index a cell asks for.
+  * Cells and rows without an `r` attribute take their position from
+  * document order.
+  *
+  * Patch model: [[highlightCopy]] rewrites one sheet part with two
+  * linear index scans (no XML parse, no regex): the first finds which
+  * marked cells exist and their style indices, the second copies the
+  * XML verbatim between the edits it makes.
+  *
   * This is the byte-level core; Spark integration lives in
   * [[ExcelTable]] / [[ExcelSink]].
   */
@@ -37,10 +51,6 @@ object Xlsx {
       if (x <= 0) acc else go((x - 1) / 26, ('A' + (x - 1) % 26).toChar.toString + acc)
     go(n, "")
   }
-
-  /** Excel letters -> 1-based ordinal. */
-  def colOrdinal(letters: String): Int =
-    letters.foldLeft(0)((a, c) => a * 26 + (c - 'A' + 1))
 
   /** A cell value with its target 1-based (row, col) and an optional
     * style: 0 = none, 1..n = 1-based index into the `fills` palette
@@ -250,7 +260,9 @@ object Xlsx {
     *
     * `marks` values are 1-based indices into `fills`. Marks on cells
     * with no element in the sheet XML are inserted at the end of their
-    * row (ECMA-376 imposes no intra-row order; readers are tolerant).
+    * row (ECMA-376 imposes no intra-row order; readers are tolerant);
+    * marks in rows with no element become new rows appended before
+    * `</sheetData>`, after the existing rows.
     * A cell replaced by rich text loses a formula if it had one — same
     * as the reference, which overwrites the cell value with diffed
     * text. */
@@ -285,14 +297,15 @@ object Xlsx {
     require(parts.contains("xl/styles.xml"),
       s"$srcPath has no xl/styles.xml; highlightCopy patches existing styles")
 
-    val cellStyles = parseCellStyleIdx(parts(sheetPart))
-    val styleOf: ((Int, Int)) => Int = rc => cellStyles.getOrElse(rc, 0)
+    val sheetXml = new String(parts(sheetPart), "UTF-8")
+    val present = markedCellStyles(sheetXml, marks)
+    val styleOf: ((Int, Int)) => Int = rc => present.getOrElse(rc, 0)
     val combos: Seq[(Int, Int)] = marks.toSeq
       .map { case (rc, f) => (styleOf(rc), f) }.distinct.sorted
     val (patchedStyles, comboXf) = patchStyles(
       new String(parts("xl/styles.xml"), "UTF-8"), fills, combos)
-    val patchedSheet = patchSheet(new String(parts(sheetPart), "UTF-8"),
-      rc => comboXf((styleOf(rc), marks(rc))), marks, runsAt)
+    val patchedSheet = patchSheet(sheetXml,
+      rc => comboXf((styleOf(rc), marks(rc))), marks, present.keySet, runsAt)
 
     val zout = new ZipOutputStream(out)
     parts.foreach { case (name, bytes) =>
@@ -307,17 +320,19 @@ object Xlsx {
     zout.finish()
   }
 
-  /** Per-cell style index (`s` attribute) of a sheet part; cells
-    * without one are xf 0 and omitted. */
-  private def parseCellStyleIdx(bytes: Array[Byte]): Map[(Int, Int), Int] = {
-    val r = xif.createXMLStreamReader(new java.io.ByteArrayInputStream(bytes))
+  /** The marked cells that have an element in the sheet XML, each with
+    * its style index (`s`; 0 when absent). */
+  private def markedCellStyles(xml: String,
+                               marks: Map[(Int, Int), Int]): Map[(Int, Int), Int] = {
+    val cur = new SheetCursor(xml)
     val out = mutable.Map[(Int, Int), Int]()
-    while (r.hasNext) {
-      if (r.next() == XMLStreamConstants.START_ELEMENT && r.getLocalName == "c") {
-        val ref = r.getAttributeValue(null, "r")
-        val s = Option(r.getAttributeValue(null, "s")).map(_.toInt).getOrElse(0)
-        if (ref != null && s > 0) out(parseRef(ref)) = s
+    var tok = cur.next()
+    while (tok != Done) {
+      if (tok == CellElem && marks.contains((cur.row, cur.col))) {
+        val s = cur.attr("s")
+        out((cur.row, cur.col)) = if (s == null) 0 else s.toInt
       }
+      tok = cur.next()
     }
     out.toMap
   }
@@ -376,68 +391,166 @@ object Xlsx {
     tag + (if (selfClosing) "/>" else ">") + xf.substring(tagEnd + 1)
   }
 
-  /** Rewrite a sheet XML: marked cells get their new xf (and rich-text
-    * replacement where present); marks without a cell element are
-    * appended inside (or as) their row. */
+  /** Rewrite a sheet XML in one index scan: marked cells get their new
+    * xf (and rich-text replacement where present), marks without a cell
+    * element (`marks` minus `present`) are appended inside their row, or
+    * as new rows before `</sheetData>` when the row has no element.
+    * Everything between edits is copied verbatim. */
   private def patchSheet(xml: String, newXfFor: ((Int, Int)) => Int,
-                         marks: Map[(Int, Int), Int],
+                         marks: Map[(Int, Int), Int], present: Set[(Int, Int)],
                          runsAt: Map[(Int, Int), Seq[(String, Boolean)]]): String = {
-    def quoted(s: String) = java.util.regex.Matcher.quoteReplacement(s)
-    val seen = mutable.Set[(Int, Int)]()
-    val cellRe = """(?s)<c\b[^>]*?(?:/>|>.*?</c>)""".r
-    val refRe = """\br="([A-Z]+\d+)"""".r
-    var x = cellRe.replaceAllIn(xml, m => {
-      val elem = m.matched
-      refRe.findFirstMatchIn(elem).map(_.group(1)) match {
-        case Some(ref) =>
-          val rc = parseRef(ref)
-          if (!marks.contains(rc)) quoted(elem)
-          else {
-            seen += rc
-            val s = newXfFor(rc)
-            quoted(runsAt.get(rc) match {
-              case Some(runs) => richTextCell(ref, s, runs)
-              case None => setStyleAttr(elem, s)
-            })
-          }
-        case None => quoted(elem)
-      }
-    })
     val missingByRow: Map[Int, Seq[(Int, Int)]] =
-      (marks.keySet -- seen).toSeq.sorted.groupBy(_._1)
-    if (missingByRow.nonEmpty) {
-      def newCells(r: Int): String = missingByRow(r).map { rc =>
-        runsAt.get(rc) match {
-          case Some(runs) =>
-            richTextCell(colLetter(rc._2) + rc._1, newXfFor(rc), runs)
-          case None =>
-            s"""<c r="${colLetter(rc._2)}${rc._1}" s="${newXfFor(rc)}"/>"""
-        }
-      }.mkString
-      val doneRows = mutable.Set[Int]()
-      val rowRe = """(?s)<row\b[^>]*?(?:/>|>.*?</row>)""".r
-      val rowNumRe = """\br="(\d+)"""".r
-      x = rowRe.replaceAllIn(x, m => {
-        val elem = m.matched
-        rowNumRe.findFirstMatchIn(elem).map(_.group(1).toInt) match {
-          case Some(r) if missingByRow.contains(r) =>
-            doneRows += r
-            quoted(
-              if (elem.endsWith("/>")) elem.dropRight(2) + ">" + newCells(r) + "</row>"
-              else elem.stripSuffix("</row>") + newCells(r) + "</row>")
-          case _ => quoted(elem)
-        }
-      })
-      val leftover = missingByRow.keys.filterNot(doneRows).toSeq.sorted
-      if (leftover.nonEmpty) {
-        val rowsXml = leftover
-          .map(r => s"""<row r="$r">${newCells(r)}</row>""").mkString
-        x = if (x.contains("</sheetData>"))
-          x.replace("</sheetData>", rowsXml + "</sheetData>")
-        else x.replace("<sheetData/>", s"<sheetData>$rowsXml</sheetData>")
+      (marks.keySet -- present).toSeq.sorted.groupBy(_._1)
+    def newCells(r: Int): String = missingByRow(r).map { rc =>
+      runsAt.get(rc) match {
+        case Some(runs) =>
+          richTextCell(colLetter(rc._2) + rc._1, newXfFor(rc), runs)
+        case None =>
+          s"""<c r="${colLetter(rc._2)}${rc._1}" s="${newXfFor(rc)}"/>"""
+      }
+    }.mkString
+    val out = new java.lang.StringBuilder(xml.length + marks.size * 24)
+    var copied = 0 // xml before this index is already in `out`
+    def emit(upTo: Int, replacement: String): Unit = {
+      out.append(xml, copied, upTo).append(replacement)
+    }
+    val doneRows = mutable.Set[Int]()
+    val cur = new SheetCursor(xml)
+    var tok = cur.next()
+    while (tok != Done) {
+      val rc = (cur.row, cur.col)
+      tok match {
+        case CellElem if marks.contains(rc) =>
+          val xf = newXfFor(rc)
+          emit(cur.start, runsAt.get(rc) match {
+            case Some(runs) =>
+              richTextCell(Option(cur.ref).getOrElse(colLetter(rc._2) + rc._1), xf, runs)
+            case None => setStyleAttr(xml.substring(cur.start, cur.end), xf)
+          })
+          copied = cur.end
+        case RowOpen if cur.selfClosing && missingByRow.contains(cur.row) =>
+          doneRows += cur.row
+          emit(cur.tagEnd - 1, ">" + newCells(cur.row) + "</row>")
+          copied = cur.end
+        case RowClose if missingByRow.contains(cur.row) =>
+          doneRows += cur.row
+          emit(cur.start, newCells(cur.row))
+          copied = cur.start
+        case _ =>
+      }
+      tok = cur.next()
+    }
+    out.append(xml, copied, xml.length)
+    val x = out.toString
+    val leftover = missingByRow.keys.filterNot(doneRows).toSeq.sorted
+    if (leftover.isEmpty) x
+    else {
+      val rowsXml = leftover
+        .map(r => s"""<row r="$r">${newCells(r)}</row>""").mkString
+      if (x.contains("</sheetData>"))
+        x.replace("</sheetData>", rowsXml + "</sheetData>")
+      else x.replace("<sheetData/>", s"<sheetData>$rowsXml</sheetData>")
+    }
+  }
+
+  private final val Done = 0
+  private final val RowOpen = 1
+  private final val RowClose = 2
+  private final val CellElem = 3
+
+  /** Index scanner over a sheet part's XML for the highlight passes:
+    * steps through `<row>` start tags, `</row>` end tags and whole `<c>`
+    * elements in document order, giving each its position the way
+    * [[parseSheet]] does. An element is a `<c` / `<row` followed by a
+    * non-name character; it is self-closing when its start tag ends in
+    * `/>` and otherwise runs to the first `</c>` / `</row>`. */
+  private final class SheetCursor(xml: String) {
+    /** Current element: `[start, end)`, start tag closing at `tagEnd`. */
+    var start, tagEnd, end = 0
+    var selfClosing = false
+    /** Current row (row elements) or cell position (cells). */
+    var row, col = 0
+    /** The current cell's `r`, null when the cell has none. */
+    var ref: String = null
+    private var rowNum = 0
+    private var pos = 0
+    private var cellClose = 0 // memo: first `</c>` past the last search, -1 when none
+
+    /** Advance to the next element: [[RowOpen]], [[RowClose]],
+      * [[CellElem]], or [[Done]] at the end of the XML. */
+    def next(): Int = {
+      while (pos < xml.length) {
+        val lt = xml.indexOf('<', pos)
+        if (lt < 0) pos = xml.length
+        else if (opens(lt, "c")) {
+          val gt = xml.indexOf('>', lt + 2)
+          if (gt < 0) pos = xml.length
+          else {
+            selfClosing = xml.charAt(gt - 1) == '/'
+            if (!selfClosing && cellClose != -1 && cellClose <= gt)
+              cellClose = xml.indexOf("</c>", gt + 1)
+            val e = if (selfClosing) gt + 1 else if (cellClose < 0) -1 else cellClose + 4
+            if (e < 0) pos = lt + 1 // no end tag: not an element
+            else {
+              start = lt; tagEnd = gt; end = e; pos = e
+              ref = attr("r")
+              if (ref == null) { row = rowNum; col += 1 }
+              else { val p = refPos(ref); row = refRow(p); col = refCol(p) }
+              return CellElem
+            }
+          }
+        } else if (opens(lt, "row")) {
+          val gt = xml.indexOf('>', lt + 4)
+          if (gt < 0) pos = xml.length
+          else {
+            selfClosing = xml.charAt(gt - 1) == '/'
+            start = lt; tagEnd = gt; end = gt + 1; pos = gt + 1
+            val r = attr("r")
+            rowNum = if (r == null) rowNum + 1 else rowNumber(r)
+            row = rowNum; col = 0
+            return RowOpen
+          }
+        } else if (xml.startsWith("</row>", lt)) {
+          start = lt; end = lt + 6; pos = end
+          row = rowNum
+          return RowClose
+        } else pos = lt + 1
+      }
+      Done
+    }
+
+    /** `<name` at `lt`, followed by a character that cannot continue
+      * the element name. */
+    private def opens(lt: Int, name: String): Boolean = {
+      val after = lt + 1 + name.length
+      xml.startsWith(name, lt + 1) && after < xml.length && {
+        val ch = xml.charAt(after)
+        !(Character.isLetterOrDigit(ch) || ch == '_' || ch == '-' ||
+          ch == '.' || ch == ':')
       }
     }
-    x
+
+    /** Value of attribute `name` on the current start tag, or null. */
+    def attr(name: String): String = {
+      var i = start + 1
+      var found: String = null
+      while (found == null && i < tagEnd) {
+        if (xml.startsWith(name, i) && Character.isWhitespace(xml.charAt(i - 1))) {
+          var j = i + name.length
+          while (j < tagEnd && Character.isWhitespace(xml.charAt(j))) j += 1
+          if (j < tagEnd && xml.charAt(j) == '=') {
+            j += 1
+            while (j < tagEnd && Character.isWhitespace(xml.charAt(j))) j += 1
+            if (j < tagEnd && (xml.charAt(j) == '"' || xml.charAt(j) == '\'')) {
+              val close = xml.indexOf(xml.charAt(j), j + 1)
+              if (close > j && close < tagEnd) found = xml.substring(j + 1, close)
+            }
+          }
+        }
+        i += 1
+      }
+      found
+    }
   }
 
   private def setStyleAttr(cellElem: String, xf: Int): String = {
@@ -464,23 +577,73 @@ object Xlsx {
 
   // ----------------------------------------------------------------- read
 
-  /** One parsed sheet: sparse cells as (row, col) -> string value.
+  /** One parsed sheet, row-major: `rows(r)(c)` is the non-empty string
+    * value at 1-based (r, c), null where the cell is blank or absent.
     * All-string read (reference Compare.py:41-43 `dtype=str`): numeric
-    * cells keep their literal XML text. */
-  final case class Sheet(name: String, cells: Map[(Int, Int), String]) {
-    val maxRow: Int = if (cells.isEmpty) 0 else cells.keys.map(_._1).max
-    val maxCol: Int = if (cells.isEmpty) 0 else cells.keys.map(_._2).max
-    def apply(row: Int, col: Int): String = cells.getOrElse((row, col), "")
+    * cells keep their literal XML text. `maxRow`/`maxCol` count only
+    * non-empty cells. */
+  final class Sheet private[excel] (val name: String,
+                                    rows: Array[Array[String]],
+                                    val maxRow: Int, val maxCol: Int) {
+    def apply(row: Int, col: Int): String =
+      if (row < 0 || row >= rows.length || rows(row) == null) ""
+      else {
+        val r = rows(row)
+        if (col < 0 || col >= r.length || r(col) == null) "" else r(col)
+      }
+
+    /** Every non-empty cell keyed by (row, col): a view built on each
+      * call, not the storage. */
+    def cells: Map[(Int, Int), String] = {
+      val b = Map.newBuilder[(Int, Int), String]
+      for (r <- rows.indices if rows(r) != null; c <- rows(r).indices
+           if rows(r)(c) != null) b += (r, c) -> rows(r)(c)
+      b.result()
+    }
   }
 
-  private def parseRef(ref: String): (Int, Int) = {
-    val letters = ref.takeWhile(_.isLetter)
-    val digits = ref.drop(letters.length)
-    (digits.toInt, colOrdinal(letters))
+  // ECMA-376 sheet limits; a reference past them is malformed input, and
+  // bounding it bounds the row-major arrays
+  private final val MaxRows = 1048576
+  private final val MaxCols = 16384
+
+  /** Cell reference (`B12`) -> (row << 32 | col), by one char loop. */
+  private def refPos(ref: String): Long = {
+    var i = 0
+    var col = 0
+    while (i < ref.length && ref.charAt(i) >= 'A' && ref.charAt(i) <= 'Z' &&
+      col <= MaxCols) {
+      col = col * 26 + (ref.charAt(i) - 'A' + 1); i += 1
+    }
+    val digitsFrom = i
+    var row = 0L
+    while (i < ref.length && ref.charAt(i) >= '0' && ref.charAt(i) <= '9' &&
+      row <= MaxRows) {
+      row = row * 10 + (ref.charAt(i) - '0'); i += 1
+    }
+    if (col == 0 || col > MaxCols || i == digitsFrom || i != ref.length ||
+      row < 1 || row > MaxRows)
+      throw new IllegalArgumentException(s"malformed cell reference '$ref'")
+    (row << 32) | col
+  }
+  private def refRow(pos: Long): Int = (pos >>> 32).toInt
+  private def refCol(pos: Long): Int = pos.toInt
+
+  /** A `<row>`'s `r` attribute. */
+  private def rowNumber(r: String): Int = {
+    val n = r.trim.toIntOption.getOrElse(-1)
+    if (n < 1 || n > MaxRows)
+      throw new IllegalArgumentException(s"malformed row number r=\"$r\"")
+    n
   }
 
-  /** Parse every worksheet (and sharedStrings/styles, if present). */
-  def read(in: InputStream): Seq[Sheet] = {
+  /** Parse every worksheet (and sharedStrings/styles, if present) up to
+    * and including row `lastRow`: parsing of a sheet stops at its first
+    * cell past that row, which is sound because ECMA-376 requires rows in
+    * ascending order. Shared strings are parsed only as far as the
+    * highest index a parsed cell asks for, so a header-only read touches
+    * a few `<si>` entries, not the whole table. */
+  def read(in: InputStream, lastRow: Int = Int.MaxValue): Seq[Sheet] = {
     val zin = new ZipInputStream(in)
     val parts = mutable.Map[String, Array[Byte]]()
     var e = zin.getNextEntry
@@ -495,10 +658,9 @@ object Xlsx {
         parts(e.getName) = zin.readAllBytes()
       e = zin.getNextEntry
     }
-    val shared: IndexedSeq[String] = parts.get("xl/sharedStrings.xml")
-      .map(parseSharedStrings).getOrElse(IndexedSeq.empty)
-    val numFmts: IndexedSeq[Int] = parts.get("xl/styles.xml")
-      .map(parseCellXfNumFmts).getOrElse(IndexedSeq.empty)
+    val shared = new SharedStrings(parts.get("xl/sharedStrings.xml"))
+    val numFmts: Array[Int] = parts.get("xl/styles.xml")
+      .map(parseCellXfNumFmts).getOrElse(Array.emptyIntArray)
     // positional candidates: numbered worksheet parts in numeric order,
     // then any other worksheet parts in name order
     def partNum(p: String): Option[Int] =
@@ -516,15 +678,15 @@ object Xlsx {
       .map(parseSheetEntries).getOrElse(Seq.empty)
     val rels: Map[String, String] = parts.get("xl/_rels/workbook.xml.rels")
       .map(parseWorkbookRels).getOrElse(Map.empty)
+    def sheet(name: String, p: String) =
+      parseSheet(name, p, parts(p), shared, numFmts, lastRow)
     if (declared.nonEmpty)
       declared.zipWithIndex.flatMap { case ((name, rid), i) =>
         rels.get(rid).filter(parts.contains).orElse(positional.lift(i))
-          .map(p => Sheet(name, parseSheet(parts(p), shared, numFmts)))
+          .map(sheet(name, _))
       }
     else
-      positional.zipWithIndex.map { case (p, i) =>
-        Sheet(s"Sheet${i + 1}", parseSheet(parts(p), shared, numFmts))
-      }
+      positional.zipWithIndex.map { case (p, i) => sheet(s"Sheet${i + 1}", p) }
   }
 
   private val xif: XMLInputFactory = {
@@ -534,31 +696,45 @@ object Xlsx {
     f
   }
 
-  private def parseSharedStrings(bytes: Array[Byte]): IndexedSeq[String] = {
-    val r = xif.createXMLStreamReader(new java.io.ByteArrayInputStream(bytes))
-    val out = mutable.ArrayBuffer[String]()
-    val cur = new StringBuilder
-    var inSi = false
-    var inT = false
-    while (r.hasNext) {
-      r.next() match {
-        case XMLStreamConstants.START_ELEMENT =>
-          r.getLocalName match {
-            case "si" => inSi = true; cur.clear()
-            case "t" if inSi => inT = true
+  /** `xl/sharedStrings.xml`, parsed only as far as the highest index
+    * asked for. Each `<si>` reads as the concatenation of its `<t>` texts. */
+  private final class SharedStrings(bytes: Option[Array[Byte]]) {
+    private val r = bytes.map(b =>
+      xif.createXMLStreamReader(new java.io.ByteArrayInputStream(b)))
+    private val parsed = mutable.ArrayBuffer[String]()
+    private val cur = new java.lang.StringBuilder
+    private var inSi = false
+    private var inT = false
+
+    /** Entry `i`, None when the table holds no such entry. */
+    def lift(i: Int): Option[String] = {
+      r.foreach { r =>
+        while (parsed.length <= i && r.hasNext) {
+          r.next() match {
+            case XMLStreamConstants.START_ELEMENT =>
+              r.getLocalName match {
+                case "si" => inSi = true; cur.setLength(0)
+                case "t" if inSi => inT = true
+                case _ =>
+              }
+            case XMLStreamConstants.CHARACTERS if inT =>
+              cur.append(r.getTextCharacters, r.getTextStart, r.getTextLength)
+            case XMLStreamConstants.END_ELEMENT =>
+              r.getLocalName match {
+                case "si" => inSi = false; parsed += cur.toString
+                case "t" => inT = false
+                case _ =>
+              }
             case _ =>
           }
-        case XMLStreamConstants.CHARACTERS if inT => cur.append(r.getText)
-        case XMLStreamConstants.END_ELEMENT =>
-          r.getLocalName match {
-            case "si" => inSi = false; out += cur.toString
-            case "t" => inT = false
-            case _ =>
-          }
-        case _ =>
+        }
       }
+      if (i >= 0 && i < parsed.length) Some(parsed(i)) else None
     }
-    out.toIndexedSeq
+
+    /** Entries in the whole table; meaningful once a lookup missed. */
+    def size: Int = parsed.length
+    def present: Boolean = r.nonEmpty
   }
 
   private def parseSheetNames(bytes: Array[Byte]): Seq[String] =
@@ -618,7 +794,7 @@ object Xlsx {
     } yield part
 
   /** cellXfs -> numFmtId per xf index (for date-cell detection). */
-  private def parseCellXfNumFmts(bytes: Array[Byte]): IndexedSeq[Int] = {
+  private def parseCellXfNumFmts(bytes: Array[Byte]): Array[Int] = {
     val r = xif.createXMLStreamReader(new java.io.ByteArrayInputStream(bytes))
     val out = mutable.ArrayBuffer[Int]()
     var inCellXfs = false
@@ -637,7 +813,7 @@ object Xlsx {
         case _ =>
       }
     }
-    out.toIndexedSeq
+    out.toArray
   }
 
   // built-in date/datetime number formats (ECMA-376 §18.8.30): 14-17
@@ -646,42 +822,83 @@ object Xlsx {
   private def isDateTimeFmt(id: Int) = (id >= 18 && id <= 22) ||
     (id >= 45 && id <= 47)
 
-  private def parseSheet(bytes: Array[Byte], shared: IndexedSeq[String],
-                         numFmts: IndexedSeq[Int]): Map[(Int, Int), String] = {
+  /** Parse one sheet part through row `lastRow`. A cell's position is
+    * its `r`; where `r` is absent (it is optional on both `<c>` and
+    * `<row>`) it follows document order: a row is the previous row + 1,
+    * a cell the previous cell's column + 1 within its row. */
+  private def parseSheet(name: String, part: String, bytes: Array[Byte],
+                         shared: SharedStrings, numFmts: Array[Int],
+                         lastRow: Int): Sheet = {
     val r = xif.createXMLStreamReader(new java.io.ByteArrayInputStream(bytes))
-    val cells = mutable.Map[(Int, Int), String]()
+    var rows = new Array[Array[String]](64)
+    var maxRow, maxCol = 0
+    def put(row: Int, col: Int, value: String): Unit = {
+      if (row >= rows.length)
+        rows = java.util.Arrays.copyOf(rows,
+          math.max(row + 1, math.min(rows.length * 2, MaxRows + 1)))
+      var cells = rows(row)
+      if (cells == null) {
+        cells = new Array[String](math.max(col + 1, 8)); rows(row) = cells
+      } else if (col >= cells.length) {
+        cells = java.util.Arrays.copyOf(cells,
+          math.max(col + 1, math.min(cells.length * 2, MaxCols + 1)))
+        rows(row) = cells
+      }
+      cells(col) = value
+      if (row > maxRow) maxRow = row
+      if (col > maxCol) maxCol = col
+    }
+    var rowNum = 0
+    var row, col = 0
     var ref: String = null
+    var inCell = false
     var cellType: String = null
     var styleIdx: Int = -1
     var inV = false
     var inIsT = false
-    val text = new StringBuilder
-    while (r.hasNext) {
+    val text = new java.lang.StringBuilder
+    def where = s"$part cell ${Option(ref).getOrElse(colLetter(col) + row)}"
+    var more = true
+    while (more && r.hasNext) {
       r.next() match {
         case XMLStreamConstants.START_ELEMENT =>
           r.getLocalName match {
+            case "row" =>
+              val n = r.getAttributeValue(null, "r")
+              rowNum = if (n == null) rowNum + 1 else rowNumber(n)
+              col = 0
             case "c" =>
               ref = r.getAttributeValue(null, "r")
-              cellType = Option(r.getAttributeValue(null, "t")).getOrElse("n")
-              styleIdx = Option(r.getAttributeValue(null, "s"))
-                .map(_.toInt).getOrElse(-1)
-              text.clear()
+              if (ref == null) { row = rowNum; col += 1 }
+              else { val p = refPos(ref); row = refRow(p); col = refCol(p) }
+              if (row > lastRow) more = false
+              else {
+                if (col > MaxCols) throw new IllegalArgumentException(
+                  s"$where lies past column $MaxCols")
+                inCell = true
+                cellType = r.getAttributeValue(null, "t")
+                if (cellType == null) cellType = "n"
+                val s = r.getAttributeValue(null, "s")
+                styleIdx = if (s == null) -1 else s.toInt
+                text.setLength(0)
+              }
             case "v" => inV = true
             case "t" => inIsT = true
             case _ =>
           }
         case XMLStreamConstants.CHARACTERS if inV || inIsT =>
-          text.append(r.getText)
+          text.append(r.getTextCharacters, r.getTextStart, r.getTextLength)
         case XMLStreamConstants.END_ELEMENT =>
           r.getLocalName match {
             case "v" => inV = false
             case "t" => inIsT = false
-            case "c" if ref != null =>
+            case "c" if inCell =>
+              inCell = false
               val raw = text.toString
-              val fmt = if (styleIdx >= 0) numFmts.lift(styleIdx).getOrElse(0)
-                        else 0
+              val fmt = if (styleIdx >= 0 && styleIdx < numFmts.length)
+                numFmts(styleIdx) else 0
               val value = cellType match {
-                case "s" => shared.lift(raw.trim.toInt).getOrElse("")
+                case "s" => sharedString(shared, raw, where)
                 case "b" => if (raw.trim == "1") "TRUE" else "FALSE"
                 // date-formatted numeric cells surface as dates, the way
                 // openpyxl hands them to the reference (Compare.py reads
@@ -692,13 +909,25 @@ object Xlsx {
                   serialToString(raw.trim.toDouble, withTime = true)
                 case _ => raw
               }
-              if (value.nonEmpty) cells(parseRef(ref)) = value
-              ref = null
+              if (value.nonEmpty) put(row, col, value)
             case _ =>
           }
         case _ =>
       }
     }
-    cells.toMap
+    new Sheet(name, rows, maxRow, maxCol)
+  }
+
+  /** A `t="s"` cell's value: an index into the shared-string table. An
+    * index the table does not hold fails loudly rather than reading as
+    * a blank. */
+  private def sharedString(shared: SharedStrings, raw: String,
+                           where: => String): String = {
+    val i = raw.trim.toIntOption.getOrElse(throw new IllegalArgumentException(
+      s"$where: shared-string index '$raw' is not an integer"))
+    shared.lift(i).getOrElse(throw new IllegalArgumentException(
+      s"$where: shared-string index $i is out of range (" +
+        (if (shared.present) s"xl/sharedStrings.xml holds ${shared.size} entries"
+         else "the package has no xl/sharedStrings.xml") + ")"))
   }
 }

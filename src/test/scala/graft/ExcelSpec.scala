@@ -3,7 +3,10 @@ package graft
 import java.nio.file.Files
 import java.time.LocalDate
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.pipelines.Pipelines
 import graft.sources.excel.{ExcelSink, ExcelScan, ExcelOptions, Xlsx}
@@ -448,5 +451,186 @@ class ExcelSpec extends SparkSpec {
       try Xlsx.read(in) finally in.close() }
     assert(sheets.map(_.name) == Seq("Alpha", "Beta"))
     assert(sheets(1)(1, 1) == "beta")
+  }
+
+  // --- the bounded / row-major read and the linear highlight patch ---
+
+  private val WbRels = Seq(
+    "xl/workbook.xml" -> wbXml("Sheet1"),
+    "xl/_rels/workbook.xml.rels" -> relsXml("worksheets/sheet1.xml"))
+
+  private def sheetDataXml(rows: String*): String =
+    s"""<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>${rows.mkString}</sheetData></worksheet>"""
+
+  private def sharedXml(strings: String*): String =
+    s"""<sst xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" count="${strings.size}" uniqueCount="${strings.size}">""" +
+      strings.map(t => s"<si><t>$t</t></si>").mkString + "</sst>"
+
+  private val PlainStyles =
+    """<styleSheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><fills count="2"><fill><patternFill patternType="none"/></fill><fill><patternFill patternType="gray125"/></fill></fills><cellXfs count="1"><xf/></cellXfs></styleSheet>"""
+
+  private def readAll(path: String): Seq[Xlsx.Sheet] = {
+    val in = new java.io.FileInputStream(path)
+    try Xlsx.read(in) finally in.close()
+  }
+
+  test("cells and rows without r take their position from document order") {
+    val path = s"$tmpDir/rless.xlsx"
+    val sheetXml = sheetDataXml(
+      """<row><c t="inlineStr"><is><t>id</t></is></c><c t="inlineStr"><is><t>val</t></is></c></row>""",
+      """<row><c><v>1</v></c><c r="C2"><v>x</v></c><c><v>9</v></c></row>""",
+      """<row r="5"><c><v>5</v></c></row>""",
+      """<row><c r="B6"><v>6</v></c></row>""")
+    rawZip(path, WbRels ++ Seq("xl/styles.xml" -> PlainStyles,
+      "xl/worksheets/sheet1.xml" -> sheetXml))
+    val sheet = readAll(path).head
+    assert(Seq(sheet(1, 1), sheet(1, 2)) == Seq("id", "val"))
+    assert(Seq(sheet(2, 1), sheet(2, 2), sheet(2, 3), sheet(2, 4)) ==
+      Seq("1", "", "x", "9"))
+    assert(sheet(5, 1) == "5" && sheet(6, 2) == "6")
+    assert((sheet.maxRow, sheet.maxCol) == ((6, 4)))
+    // the header bound counts the same inferred rows
+    val header = ExcelScan.loadSheet(path, None, lastRow = 1)
+    assert((header.maxRow, header.maxCol) == ((1, 2)) && header(2, 1) == "")
+    assert(spark.read.format("xlsx").load(path).schema.fieldNames.toSeq ==
+      Seq("id", "val"))
+    // the highlight patch resolves the same positions: the r-less A2 and
+    // D2 are restyled in place, not duplicated
+    val hl = s"$tmpDir/rless_hl.xlsx"
+    val os = new java.io.FileOutputStream(hl)
+    try Xlsx.highlightCopy(path, os, None, Seq("FFADD8E6"),
+      Map((2, 1) -> 1, (2, 4) -> 1))
+    finally os.close()
+    val outXml = zipPart(hl, "xl/worksheets/sheet1.xml")
+    assert("<c\\b".r.findAllIn(outXml).size == "<c\\b".r.findAllIn(sheetXml).size)
+    assert(outXml.contains("""<row><c s="1"><v>1</v></c>""") &&
+      outXml.contains("""<c s="1"><v>9</v></c></row>"""), outXml)
+    assert(readAll(hl).head.cells == sheet.cells)
+  }
+
+  test("a shared-string index past the table fails naming the sheet part and cell") {
+    val path = s"$tmpDir/sst_range.xlsx"
+    rawZip(path, WbRels ++ Seq(
+      "xl/sharedStrings.xml" -> sharedXml("id", "val"),
+      "xl/worksheets/sheet1.xml" -> sheetDataXml(
+        """<row r="1"><c r="A1" t="s"><v>0</v></c><c r="B1" t="s"><v>1</v></c></row>""",
+        """<row r="2"><c r="A2" t="s"><v>0</v></c><c r="B2" t="s"><v>5</v></c></row>""")))
+    val e = intercept[IllegalArgumentException](readAll(path))
+    assert(e.getMessage.contains("xl/worksheets/sheet1.xml cell B2") &&
+      e.getMessage.contains("index 5") &&
+      e.getMessage.contains("xl/sharedStrings.xml holds 2 entries"), e.getMessage)
+  }
+
+  test("a header-bounded probe equals the full-read probe") {
+    // headers at row 1 and at row 5 (title rows above), as shared strings
+    // and as inline strings; data rows are wider than the header
+    def book(path: String, headerRow: Int, shared: Boolean): Unit = {
+      val names = Seq("id", "Name", "", "Cost", "Name")
+      val strings = mutable.LinkedHashMap[String, Int]()
+      def cell(ref: String, v: String): String =
+        if (v.isEmpty) ""
+        else if (shared)
+          s"""<c r="$ref" t="s"><v>${strings.getOrElseUpdate(v, strings.size)}</v></c>"""
+        else s"""<c r="$ref" t="inlineStr"><is><t>$v</t></is></c>"""
+      def row(r: Int, values: Seq[String]): String =
+        s"""<row r="$r">""" + values.zipWithIndex.map { case (v, i) =>
+          cell(Xlsx.colLetter(i + 1) + r, v) }.mkString + "</row>"
+      val rows = (1 until headerRow).map(r => row(r, Seq(s"title $r"))) ++
+        Seq(row(headerRow, names)) ++
+        (1 to 30).map(i => row(headerRow + i,
+          (1 to 8).map(c => if (c == 3) "" else s"v${i}_$c")))
+      val sheetXml = sheetDataXml(rows: _*)
+      rawZip(path, WbRels ++ Seq("xl/worksheets/sheet1.xml" -> sheetXml) ++
+        (if (shared) Seq("xl/sharedStrings.xml" -> sharedXml(strings.keys.toSeq: _*))
+         else Nil))
+    }
+    for (headerRow <- Seq(1, 5); shared <- Seq(true, false)) {
+      val path = s"$tmpDir/hdr_${headerRow}_$shared.xlsx"
+      book(path, headerRow, shared)
+      val opts = ExcelOptions(None, headerRow = headerRow,
+        dataStartRow = headerRow + 1, useHeader = true, blankRunStop = 10,
+        maxCols = 500)
+      val full = ExcelScan.probeHeaders(ExcelScan.loadSheet(path, None), opts)
+      val bounded = ExcelScan.probeHeaders(
+        ExcelScan.loadSheet(path, None, lastRow = headerRow), opts)
+      assert(full == Seq("id", "Name", "_c3", "Cost", "Name_1"))
+      assert(bounded == full, s"headerRow $headerRow shared $shared")
+      val df = spark.read.format("xlsx")
+        .option("headerRow", headerRow.toString).load(path)
+      assert(df.schema == StructType(full.map(StructField(_, StringType))))
+      assert(df.count() == 30 && df.select("Name_1").head().getString(0) == "v1_5")
+    }
+  }
+
+  test("schema inference reads only through the header row") {
+    // row 3 holds a malformed shared-string cell: the schema comes from
+    // row 1 alone, while the scan still fails loudly on it
+    val path = s"$tmpDir/bad_row3.xlsx"
+    rawZip(path, WbRels ++ Seq("xl/worksheets/sheet1.xml" -> sheetDataXml(
+      """<row r="1"><c r="A1" t="inlineStr"><is><t>a</t></is></c><c r="B1" t="inlineStr"><is><t>b</t></is></c></row>""",
+      """<row r="2"><c r="A2"><v>1</v></c><c r="B2"><v>2</v></c></row>""",
+      """<row r="3"><c r="A3" t="s"><v>oops</v></c></row>""")))
+    val df = spark.read.format("xlsx").load(path)
+    assert(df.schema.fieldNames.toSeq == Seq("a", "b"))
+    val e = intercept[Exception](df.collect())
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).mkString(" | ")
+    assert(chain.contains("xl/worksheets/sheet1.xml cell A3") &&
+      chain.contains("'oops'"), chain)
+  }
+
+  test("highlightCopy output is byte-identical to the regex patcher's on edge shapes") {
+    // `<cols>`/`<conditionalFormatting>` (both start with `<c`),
+    // self-closing cells and rows, marks on absent cells in present rows
+    // and in absent rows, existing rich-text runs, a formula cell and
+    // styled cells; the expected parts were recorded from the regex
+    // patcher this scan replaced
+    val sheetXml = Seq(
+      """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""",
+      """<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><cols><col min="1" max="3" width="14" customWidth="1"/></cols>""",
+      """<sheetData>""",
+      """<row r="1" spans="1:3"><c r="A1" t="inlineStr"><is><t>id</t></is></c><c r="B1" t="inlineStr"><is><t>val</t></is></c><c r="C1" s="1" t="inlineStr"><is><t>note</t></is></c></row>""",
+      """<row r="2" spans="1:3"><c r="A2" t="inlineStr"><is><t>k1</t></is></c><c r="B2" s="1"/><c r="C2" t="inlineStr"><is><t xml:space="preserve">alpha beta</t></is></c></row>""",
+      """<row r="3"/>""",
+      """<row r="4"><c r="A4" t="inlineStr"><is><t>k3</t></is></c></row>""",
+      """<row r="6" ht="20" customHeight="1"><c r="A6" s="2"><v>7</v></c><c r="B6" t="inlineStr"><is><r><t>rich</t></r><r><rPr><b/><color rgb="FF00AA00"/></rPr><t xml:space="preserve"> run</t></r></is></c><c r="C6" s="2"><f>A6*2</f><v>14</v></c></row>""",
+      """</sheetData><conditionalFormatting sqref="A1:C6"><cfRule type="cellIs" dxfId="0" priority="1" operator="equal"><formula>0</formula></cfRule></conditionalFormatting></worksheet>""")
+      .mkString("\n")
+    val stylesXml =
+      """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
+        """<styleSheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">""" +
+        """<fonts count="1"><font><sz val="11"/></font></fonts>""" +
+        """<fills count="2"><fill><patternFill patternType="none"/></fill><fill><patternFill patternType="gray125"/></fill></fills>""" +
+        """<cellXfs count="3"><xf/><xf numFmtId="14" applyNumberFormat="1"/><xf fontId="0" fillId="0"><alignment wrapText="1"/></xf></cellXfs>""" +
+        """</styleSheet>"""
+    val src = s"$tmpDir/edge.xlsx"
+    rawZip(src, Seq(
+      "xl/workbook.xml" -> wbXml("Edge"),
+      "xl/_rels/workbook.xml.rels" -> relsXml("worksheets/sheet1.xml"),
+      "xl/styles.xml" -> stylesXml,
+      "xl/worksheets/sheet1.xml" -> sheetXml))
+    val marks = Map((1, 3) -> 2, (2, 2) -> 1, (2, 3) -> 1, (3, 1) -> 3,
+      (4, 3) -> 1, (5, 2) -> 3, (6, 2) -> 2, (6, 3) -> 1, (9, 1) -> 2)
+    val runsAt = Map((2, 3) -> Seq(("alpha", false), ("gamma", true)),
+      (4, 3) -> Seq(("new", true)))
+    val hl = s"$tmpDir/edge_hl.xlsx"
+    val os = new java.io.FileOutputStream(hl)
+    try Xlsx.highlightCopy(src, os, Some("Edge"),
+      Seq("FFADD8E6", "FFFFC0CB", "FFFFFF00"), marks, runsAt)
+    finally os.close()
+    val expectedSheet = Seq(
+        """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""",
+        """<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><cols><col min="1" max="3" width="14" customWidth="1"/></cols>""",
+        """<sheetData>""",
+        """<row r="1" spans="1:3"><c r="A1" t="inlineStr"><is><t>id</t></is></c><c r="B1" t="inlineStr"><is><t>val</t></is></c><c r="C1" t="inlineStr" s="7"><is><t>note</t></is></c></row>""",
+        """<row r="2" spans="1:3"><c r="A2" t="inlineStr"><is><t>k1</t></is></c><c r="B2" s="6"/><c r="C2" s="3" t="inlineStr"><is><r><t xml:space="preserve">alpha</t></r><r><rPr><b/><color rgb="FFFF0000"/></rPr><t xml:space="preserve"> gamma</t></r></is></c></row>""",
+        """<row r="3"><c r="A3" s="5"/></row>""",
+        """<row r="4"><c r="A4" t="inlineStr"><is><t>k3</t></is></c><c r="C4" s="3" t="inlineStr"><is><r><rPr><b/><color rgb="FFFF0000"/></rPr><t xml:space="preserve">new</t></r></is></c></row>""",
+        """<row r="6" ht="20" customHeight="1"><c r="A6" s="2"><v>7</v></c><c r="B6" t="inlineStr" s="4"><is><r><t>rich</t></r><r><rPr><b/><color rgb="FF00AA00"/></rPr><t xml:space="preserve"> run</t></r></is></c><c r="C6" s="8"><f>A6*2</f><v>14</v></c></row>""",
+        """<row r="5"><c r="B5" s="5"/></row><row r="9"><c r="A9" s="4"/></row></sheetData><conditionalFormatting sqref="A1:C6"><cfRule type="cellIs" dxfId="0" priority="1" operator="equal"><formula>0</formula></cfRule></conditionalFormatting></worksheet>""").mkString("\n")
+    val expectedStyles = Seq(
+        """<?xml version="1.0" encoding="UTF-8" standalone="yes"?><styleSheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><fonts count="1"><font><sz val="11"/></font></fonts><fills count="5"><fill><patternFill patternType="none"/></fill><fill><patternFill patternType="gray125"/></fill><fill><patternFill patternType="solid"><fgColor rgb="FFADD8E6"/><bgColor indexed="64"/></patternFill></fill><fill><patternFill patternType="solid"><fgColor rgb="FFFFC0CB"/><bgColor indexed="64"/></patternFill></fill><fill><patternFill patternType="solid"><fgColor rgb="FFFFFF00"/><bgColor indexed="64"/></patternFill></fill></fills><cellXfs count="9"><xf/><xf numFmtId="14" applyNumberFormat="1"/><xf fontId="0" fillId="0"><alignment wrapText="1"/></xf><xf fillId="2" applyFill="1"/><xf fillId="3" applyFill="1"/><xf fillId="4" applyFill="1"/><xf numFmtId="14" applyNumberFormat="1" fillId="2" applyFill="1"/><xf numFmtId="14" applyNumberFormat="1" fillId="3" applyFill="1"/><xf fontId="0" fillId="2" applyFill="1"><alignment wrapText="1"/></xf></cellXfs></styleSheet>""").mkString("\n")
+    assert(zipPart(hl, "xl/worksheets/sheet1.xml") == expectedSheet)
+    assert(zipPart(hl, "xl/styles.xml") == expectedStyles)
   }
 }
