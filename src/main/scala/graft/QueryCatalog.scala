@@ -8493,11 +8493,11 @@ object QueryCatalog {
 
     Q("q_ivf_retrain", // the drift REMEDIATION gate (r14 verdict #3):
       // build the centroid index, age it with an appended
-      // shifted-distribution copy (the IvfDrift protocol's 2.0-shift —
-      // the population whose recall the frozen model loses), then
-      // ivfRetrain on the index's CURRENT contents. Gated properties:
-      // rows survive the rewrite exactly (idx_rows = 2N), the retrain
-      // keeps the model width (k_cells = 8), the retrained layout
+      // shifted-distribution copy (ids offset, +2.0 added to the first
+      // coordinate — the population whose recall the frozen model
+      // loses), then ivfRetrain on the index's CURRENT contents. Gated
+      // properties: rows survive the rewrite exactly (idx_rows = 2N),
+      // the retrain keeps the model width (k_cells = 8), the retrained layout
       // equals a one-shot assignment pass UNDER THE RETRAINED MODEL
       // (cell_diffs = 0: the same combined vectors re-assigned through
       // the public ivfAppend — which assigns with the PERSISTED model —

@@ -122,13 +122,6 @@ object TextFunctions {
         pmod(acc * 31 + length(t).cast("long") * 31 + ascii(substring(t, 1, 1)),
           lit(2147483648L)))
 
-  /** Stronger (non-oracle) fingerprint variant using crc32 token codes. */
-  def fingerprintCrc(c: Column): Column =
-    aggregate(
-      tokens(c),
-      lit(0L),
-      (acc, t) => pmod(acc * 31 + crc32(t.cast("binary")), lit(2147483648L)))
-
   /** Word n-gram shingles (distinct) of a text column: contiguous n-token
     * windows joined by a single space. Used by MinHash / Jaccard dedup. */
   def shingles(c: Column, n: Int): Column = {

@@ -1,7 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
-
 /** Fuzzy header reconciliation (reference `Upload.py:137-181`,
   * `Compare.py:34-39,141-151`): match source columns to target headers by
   * normalized name, taking the intersection, with an optional manual
@@ -50,15 +48,5 @@ object SchemaReconciler {
     sourceCols.flatMap { src =>
       overrides.get(src).orElse(targetByNorm.get(normSpace(src))).map(src -> _)
     }
-  }
-
-  /** Project `df` onto the columns that match `targetHeaders`, renamed to
-    * the target's names (the SNK3 header-matched write projection). */
-  def selectMatched(df: DataFrame, targetHeaders: Seq[String],
-                    overrides: Map[String, String] = Map.empty): DataFrame = {
-    val matched = matchColumns(df.columns.toSeq, targetHeaders, overrides)
-    require(matched.nonEmpty,
-      "no source columns match the target headers (reference Upload.py:184-190)")
-    df.select(matched.map { case (s, t) => df.col(s).as(t) }: _*)
   }
 }

@@ -1888,7 +1888,7 @@ object Similarity {
 
   /** Measured recall@`k` of the raw Hamming ranking against exact
     * cosine, per candidate pool depth — the [[recommendBqPool]]
-    * instrument (the tools/BqRecall recipe as a library surface, r17
+    * instrument (the pool-depth recall sweep as a library surface, r17
     * verdict what's-wrong #3): `maxQueries` hash-sampled corpus
     * vectors query both rankings ONCE (the Hamming pass at the
     * DEEPEST pool; shallower pools are rank prefixes), and recall is

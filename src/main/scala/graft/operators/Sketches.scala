@@ -102,28 +102,12 @@ object Sketches {
   // missing piece (`kll_sketch_merge_double` is a two-sketch scalar),
   // supplied by [[graft.plans.KllMergeAgg]] ----
 
-  /** Per-group KLL sketches of `valueCol` (binary column `kll`). */
-  def kllByGroup(df: DataFrame, groupCol: String, valueCol: String,
-                 k: Int = 200): DataFrame =
-    df.groupBy(col(groupCol))
-      .agg(kll_sketch_agg_double(col(valueCol).cast("double"), k).as("kll"))
-
   /** Merge sketch rows to a coarser grouping. */
   def kllMergeBy(sketches: DataFrame, groupCol: String,
                  sketchCol: String = "kll", k: Int = 200): DataFrame =
     sketches.groupBy(col(groupCol))
       .agg(Skc.kll_merge_agg(col(sketchCol), k)
         .as(sketchCol))
-
-  /** Quantile columns at the given ranks for a sketch column. Labels
-    * keep every significant digit (p50, p99_9) — rounding the label
-    * would let distinct ranks collide into one ambiguous column name. */
-  def kllQuantiles(sketch: Column, qs: Seq[Double]): Seq[Column] =
-    qs.map { q =>
-      val label = BigDecimal(q * 100).underlying.stripTrailingZeros
-        .toPlainString.replace('.', '_').replace("-", "m")
-      kll_sketch_get_quantile_double(sketch, lit(q)).as(s"p$label")
-    }
 
   // ---- Frequent items: heavy hitters with Misra-Gries error bounds.
   // Exact top-k by frequency shuffles every distinct item; the sketch

@@ -261,8 +261,10 @@ object Xlsx {
     * `marks` values are 1-based indices into `fills`. Marks on cells
     * with no element in the sheet XML are inserted at the end of their
     * row (ECMA-376 imposes no intra-row order; readers are tolerant);
-    * marks in rows with no element become new rows appended before
-    * `</sheetData>`, after the existing rows.
+    * marks in rows with no element become new rows, inserted before the
+    * first existing row with a larger number so rows stay in the
+    * ascending order ECMA-376 requires (rows past the last existing row
+    * go just before `</sheetData>`).
     * A cell replaced by rich text loses a formula if it had one — same
     * as the reference, which overwrites the cell value with diffed
     * text. */
@@ -393,9 +395,10 @@ object Xlsx {
 
   /** Rewrite a sheet XML in one index scan: marked cells get their new
     * xf (and rich-text replacement where present), marks without a cell
-    * element (`marks` minus `present`) are appended inside their row, or
-    * as new rows before `</sheetData>` when the row has no element.
-    * Everything between edits is copied verbatim. */
+    * element (`marks` minus `present`) are appended inside their row, or,
+    * when the row has no element, as a new row in row-number order:
+    * before the first existing row with a larger number, else before
+    * `</sheetData>`. Everything between edits is copied verbatim. */
   private def patchSheet(xml: String, newXfFor: ((Int, Int)) => Int,
                          marks: Map[(Int, Int), Int], present: Set[(Int, Int)],
                          runsAt: Map[(Int, Int), Seq[(String, Boolean)]]): String = {
@@ -415,10 +418,28 @@ object Xlsx {
       out.append(xml, copied, upTo).append(replacement)
     }
     val doneRows = mutable.Set[Int]()
+    def newRow(r: Int): String = s"""<row r="$r">${newCells(r)}</row>"""
+    val missingRows = missingByRow.keys.toArray.sorted
+    var nextMissing = 0 // missingRows before this index are settled
+    /** New rows for the not-yet-written missing rows numbered below `r`. */
+    def rowsBefore(r: Int): String = {
+      val sb = new java.lang.StringBuilder
+      while (nextMissing < missingRows.length && missingRows(nextMissing) < r) {
+        val m = missingRows(nextMissing)
+        if (doneRows.add(m)) sb.append(newRow(m))
+        nextMissing += 1
+      }
+      sb.toString
+    }
     val cur = new SheetCursor(xml)
     var tok = cur.next()
     while (tok != Done) {
       val rc = (cur.row, cur.col)
+      if (tok == RowOpen && nextMissing < missingRows.length &&
+        missingRows(nextMissing) < cur.row) {
+        emit(cur.start, rowsBefore(cur.row))
+        copied = cur.start
+      }
       tok match {
         case CellElem if marks.contains(rc) =>
           val xf = newXfFor(rc)
@@ -428,12 +449,12 @@ object Xlsx {
             case None => setStyleAttr(xml.substring(cur.start, cur.end), xf)
           })
           copied = cur.end
-        case RowOpen if cur.selfClosing && missingByRow.contains(cur.row) =>
-          doneRows += cur.row
+        case RowOpen if cur.selfClosing && missingByRow.contains(cur.row) &&
+            doneRows.add(cur.row) =>
           emit(cur.tagEnd - 1, ">" + newCells(cur.row) + "</row>")
           copied = cur.end
-        case RowClose if missingByRow.contains(cur.row) =>
-          doneRows += cur.row
+        case RowClose if missingByRow.contains(cur.row) &&
+            doneRows.add(cur.row) =>
           emit(cur.start, newCells(cur.row))
           copied = cur.start
         case _ =>
@@ -442,15 +463,11 @@ object Xlsx {
     }
     out.append(xml, copied, xml.length)
     val x = out.toString
-    val leftover = missingByRow.keys.filterNot(doneRows).toSeq.sorted
-    if (leftover.isEmpty) x
-    else {
-      val rowsXml = leftover
-        .map(r => s"""<row r="$r">${newCells(r)}</row>""").mkString
-      if (x.contains("</sheetData>"))
-        x.replace("</sheetData>", rowsXml + "</sheetData>")
-      else x.replace("<sheetData/>", s"<sheetData>$rowsXml</sheetData>")
-    }
+    val rowsXml = rowsBefore(Int.MaxValue)
+    if (rowsXml.isEmpty) x
+    else if (x.contains("</sheetData>"))
+      x.replace("</sheetData>", rowsXml + "</sheetData>")
+    else x.replace("<sheetData/>", s"<sheetData>$rowsXml</sheetData>")
   }
 
   private final val Done = 0

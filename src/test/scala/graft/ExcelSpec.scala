@@ -579,12 +579,14 @@ class ExcelSpec extends SparkSpec {
       chain.contains("'oops'"), chain)
   }
 
-  test("highlightCopy output is byte-identical to the regex patcher's on edge shapes") {
+  test("highlightCopy patches edge shapes in place and keeps rows ascending") {
     // `<cols>`/`<conditionalFormatting>` (both start with `<c`),
     // self-closing cells and rows, marks on absent cells in present rows
     // and in absent rows, existing rich-text runs, a formula cell and
-    // styled cells; the expected parts were recorded from the regex
-    // patcher this scan replaced
+    // styled cells. The expected parts were recorded from the regex
+    // patcher the linear scan replaced, except that the new row 5 now
+    // sits between rows 4 and 6 (the regex patcher appended it after
+    // row 6, out of the ascending order ECMA-376 requires)
     val sheetXml = Seq(
       """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""",
       """<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><cols><col min="1" max="3" width="14" customWidth="1"/></cols>""",
@@ -626,11 +628,16 @@ class ExcelSpec extends SparkSpec {
         """<row r="2" spans="1:3"><c r="A2" t="inlineStr"><is><t>k1</t></is></c><c r="B2" s="6"/><c r="C2" s="3" t="inlineStr"><is><r><t xml:space="preserve">alpha</t></r><r><rPr><b/><color rgb="FFFF0000"/></rPr><t xml:space="preserve"> gamma</t></r></is></c></row>""",
         """<row r="3"><c r="A3" s="5"/></row>""",
         """<row r="4"><c r="A4" t="inlineStr"><is><t>k3</t></is></c><c r="C4" s="3" t="inlineStr"><is><r><rPr><b/><color rgb="FFFF0000"/></rPr><t xml:space="preserve">new</t></r></is></c></row>""",
-        """<row r="6" ht="20" customHeight="1"><c r="A6" s="2"><v>7</v></c><c r="B6" t="inlineStr" s="4"><is><r><t>rich</t></r><r><rPr><b/><color rgb="FF00AA00"/></rPr><t xml:space="preserve"> run</t></r></is></c><c r="C6" s="8"><f>A6*2</f><v>14</v></c></row>""",
-        """<row r="5"><c r="B5" s="5"/></row><row r="9"><c r="A9" s="4"/></row></sheetData><conditionalFormatting sqref="A1:C6"><cfRule type="cellIs" dxfId="0" priority="1" operator="equal"><formula>0</formula></cfRule></conditionalFormatting></worksheet>""").mkString("\n")
+        """<row r="5"><c r="B5" s="5"/></row><row r="6" ht="20" customHeight="1"><c r="A6" s="2"><v>7</v></c><c r="B6" t="inlineStr" s="4"><is><r><t>rich</t></r><r><rPr><b/><color rgb="FF00AA00"/></rPr><t xml:space="preserve"> run</t></r></is></c><c r="C6" s="8"><f>A6*2</f><v>14</v></c></row>""",
+        """<row r="9"><c r="A9" s="4"/></row></sheetData><conditionalFormatting sqref="A1:C6"><cfRule type="cellIs" dxfId="0" priority="1" operator="equal"><formula>0</formula></cfRule></conditionalFormatting></worksheet>""").mkString("\n")
     val expectedStyles = Seq(
         """<?xml version="1.0" encoding="UTF-8" standalone="yes"?><styleSheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><fonts count="1"><font><sz val="11"/></font></fonts><fills count="5"><fill><patternFill patternType="none"/></fill><fill><patternFill patternType="gray125"/></fill><fill><patternFill patternType="solid"><fgColor rgb="FFADD8E6"/><bgColor indexed="64"/></patternFill></fill><fill><patternFill patternType="solid"><fgColor rgb="FFFFC0CB"/><bgColor indexed="64"/></patternFill></fill><fill><patternFill patternType="solid"><fgColor rgb="FFFFFF00"/><bgColor indexed="64"/></patternFill></fill></fills><cellXfs count="9"><xf/><xf numFmtId="14" applyNumberFormat="1"/><xf fontId="0" fillId="0"><alignment wrapText="1"/></xf><xf fillId="2" applyFill="1"/><xf fillId="3" applyFill="1"/><xf fillId="4" applyFill="1"/><xf numFmtId="14" applyNumberFormat="1" fillId="2" applyFill="1"/><xf numFmtId="14" applyNumberFormat="1" fillId="3" applyFill="1"/><xf fontId="0" fillId="2" applyFill="1"><alignment wrapText="1"/></xf></cellXfs></styleSheet>""").mkString("\n")
-    assert(zipPart(hl, "xl/worksheets/sheet1.xml") == expectedSheet)
+    val patched = zipPart(hl, "xl/worksheets/sheet1.xml")
+    assert(patched == expectedSheet)
     assert(zipPart(hl, "xl/styles.xml") == expectedStyles)
+    val rows = """<row r="(\d+)"""".r.findAllMatchIn(patched)
+      .map(_.group(1).toInt).toSeq
+    assert(rows.nonEmpty && rows.zip(rows.tail).forall { case (a, b) => a < b },
+      rows.mkString(","))
   }
 }

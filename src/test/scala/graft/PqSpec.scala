@@ -110,7 +110,7 @@ class PqSpec extends SparkSpec {
   }
 
   test("recall floor at the default config (m=8, nbits=8, rerank pool 5k)") {
-    // Protocol = graft.tools.PqRecall (the SCALE.md PQ recall table):
+    // Protocol, as in the SCALE.md PQ recall table:
     // mean recall@10 vs exact cosine over query ids spread across the
     // corpus, at the default operating point — 8-byte codes, exact
     // re-rank of a 5k-deep ADC candidate pool. Everything in the path

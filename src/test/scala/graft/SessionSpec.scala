@@ -6,7 +6,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
 
-/** The session policy has one home: [[Session.local]]. */
+/** The session policy has one home, [[Session.local]], and the program
+  * has three entry points. */
 class SessionSpec extends SparkSpec {
 
   test("Session.local carries the graft extensions, UTC and one shuffle partition per core") {
@@ -35,5 +36,18 @@ class SessionSpec extends SparkSpec {
     finally files.close()
     assert(hits == Seq(Paths.get("src/main/scala/graft/Session.scala") -> 1),
       hits.mkString("\n"))
+  }
+
+  test("src/main has three entry points: Bench, Verify and tools.Probe") {
+    val files = Files.walk(Paths.get("src/main"))
+    val mains = try files.iterator().asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
+      .filter(p => Files.readAllLines(p).asScala
+        .exists(l => l.contains("def main(") || l.contains("extends App")))
+      .map(_.toString).toSeq.sorted
+    finally files.close()
+    assert(mains == Seq("src/main/scala/graft/Bench.scala",
+      "src/main/scala/graft/Verify.scala",
+      "src/main/scala/graft/tools/Probe.scala"), mains.mkString("\n"))
   }
 }

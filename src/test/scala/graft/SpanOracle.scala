@@ -1,15 +1,14 @@
-package graft.tools
+package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.{Session, Tables}
 import graft.operators.CorpusOps
 
-/** Measurement main (dev tooling, not a catalog query): pins the
+/** Test-side exact oracle for the span-dedup family: pins the
   * merged-fixed-n duplicated-range approximation against an EXACT
-  * brute-force maximal-repeat oracle — the PqRecall move applied to the
-  * span-dedup family.
+  * brute-force maximal-repeat oracle, so the approximation's gap is a
+  * measured number rather than a prose claim.
   *
   * [[CorpusOps.dupSpansMerged]] discretizes Lee et al. 2021's
   * arbitrary-length duplicated substrings (their suffix array) to
@@ -27,8 +26,8 @@ import graft.operators.CorpusOps
   * windows into a hash map; affordable at the gate SFs, never a
   * production path).
   *
-  * Two structural facts this tool measures around (proofs in the
-  * scaladoc above, pinned by SpanOracleSpec):
+  * Two structural facts this oracle measures around (pinned by
+  * SpanOracleSpec):
   *   - `n == minTokens` => the approximation IS the exact oracle
   *     (identical maximal ranges, not just identical coverage);
   *   - `n < minTokens`  => recall is exactly 1.0 (every true range
@@ -36,10 +35,9 @@ import graft.operators.CorpusOps
   *     (length n..minTokens-1) duplicated windows can merge into a run
   *     that passes the length filter without any true >= minTokens
   *     duplicated substring inside it (over-extension).
-  * So the table's one moving number is token precision as (n,
-  * minTokens) separate — the cost of running the cheap fixed-n pass
-  * with a LONGER removal threshold instead of re-posting at n =
-  * minTokens. */
+  * So the one moving number is token precision as (n, minTokens)
+  * separate — the cost of running the cheap fixed-n pass with a LONGER
+  * removal threshold instead of re-posting at n = minTokens. */
 object SpanRecall {
 
   /** Whitespace tokens, identical to the engine's `tokens()` /
@@ -121,22 +119,5 @@ object SpanRecall {
       ce.size.toLong, ca.size.toLong,
       if (ce.isEmpty) 1.0 else inter.toDouble / ce.size,
       if (ca.isEmpty) 1.0 else inter.toDouble / ca.size)
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = Session.local(8)
-    val cfgs = Seq(Config(8, 8), Config(8, 12), Config(8, 16),
-      Config(8, 24), Config(4, 16), Config(16, 16))
-    println("| n | minTokens | exact ranges | approx ranges | " +
-      "identical | exact toks | approx toks | recall | precision |")
-    println("|---|---|---|---|---|---|---|---|---|")
-    for (c <- cfgs) {
-      val r = measure(spark, sfDir, c)
-      println(f"| ${r.n} | ${r.minTokens} | ${r.exactRanges} | " +
-        f"${r.approxRanges} | ${r.rangesIdentical} | ${r.exactTokens} | " +
-        f"${r.approxTokens} | ${r.recall}%.4f | ${r.precision}%.4f |")
-    }
-    spark.stop()
   }
 }

@@ -3,12 +3,12 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.CorpusOps
-import graft.tools.SpanRecall
 
 /** Pins [[CorpusOps.dupSpansMerged]] against the brute-force exact
-  * maximal-repeat oracle ([[SpanRecall.exactMaximalRanges]]) — the
-  * PqRecall move for the span-dedup family: the approximation's gap is
-  * a measured, pinned number, not a prose claim.
+  * maximal-repeat oracle ([[SpanRecall.exactMaximalRanges]], test code
+  * in SpanOracle.scala) — what PqSpec's recall floor does for PQ, done
+  * for the span-dedup family: the approximation's gap is a measured,
+  * pinned number, not a prose claim.
   *
   * Structure (mirrors SCALE.md's span-recall table):
   *   - n == minTokens: the fixed-n merged form IS the exact oracle —
