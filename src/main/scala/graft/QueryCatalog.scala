@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
-import graft.operators.{CorpusOps, Dedup, DiffEngine, Multimodal, Similarity, TextAnalysis, TimeSeries}
+import graft.operators.{CorpusOps, Dedup, DiffEngine, Multimodal, Similarity, TextAnalysis, TimeSeries, VectorCodec, VectorIndex}
 
 /** The operator inventory (SURVEY.md §2 Tier A + §7.1 Tier B), one entry
   * per operator: a Spark implementation and, where ANSI-SQL-expressible,
@@ -4855,10 +4855,10 @@ object QueryCatalog {
       // Batch ≡ per-query srpTopK is spec-pinned.
       (s, d) => {
         val planted = plantedEmbeddings(s, d)
-        Similarity.srpTopKBatch(planted, "vec_id", "embedding",
+        VectorIndex.topKBatch(planted, "vec_id", "embedding",
             planted.filter(col("vec_id") < 4)
               .select(col("vec_id").as("qid"), col("embedding").as("qv")),
-            "qid", "qv", k = 20, nBits = 4)
+            "qid", "qv", k = 20, VectorCodec.Srp(4))
           .groupBy(col("qid"))
           .agg(
             max_by(col("id"), struct(col("cos_sim"), -col("id")))
@@ -4890,9 +4890,9 @@ object QueryCatalog {
         TempDirs.deleteOnExit(new java.io.File(dir).getParentFile)
         val planted = plantedEmbeddings(s, d)
         if (!new java.io.File(dir, "_SUCCESS").exists())
-          Similarity.buildSrpIndex(planted, "vec_id", "embedding", dir,
-            nBits = 4)
-        Similarity.srpTopKIndexed(s, dir,
+          VectorIndex.build(planted, "vec_id", "embedding", dir,
+            VectorCodec.Srp(4))
+        VectorIndex.probe(s, dir,
             planted.filter(col("vec_id") < 4)
               .select(col("vec_id").as("qid"), col("embedding").as("qv")),
             "qid", "qv", k = 20)
@@ -4916,19 +4916,19 @@ object QueryCatalog {
     Q("q_srp_stream_exec", // STREAMING EXECUTION gate on the SRP
       // index (the q_bq_stream_exec recipe on the LSH tier): the
       // planted corpus drains through the incremental engine into
-      // per-batch signed subtrees (srpAppendBatch under the persisted
+      // per-batch signed subtrees (VectorIndex.appendBatch under the persisted
       // nBits — replays rewrite identical rows), then the standard
       // query batch probes the FRESH index at rest. One drain probes
-      // exactly like a one-shot buildSrpIndex, so the oracle is
+      // exactly like a one-shot VectorIndex.build, so the oracle is
       // q_srp_batch's VERBATIM.
       (s, d) => {
         val dir = scratchDir("graft-stream-srp")
         val planted = plantedEmbeddings(s, d)
         planted.write.parquet(s"$dir/src")
-        graft.streaming.EventStreams.srpIndexAvailableNow(s,
+        graft.streaming.EventStreams.vectorIndexAvailableNow(s,
           s"$dir/src", "vec_id", col("embedding"), s"$dir/idx",
-          s"$dir/ckpt", nBits = 4)
-        Similarity.srpTopKIndexed(s, s"$dir/idx",
+          s"$dir/ckpt", VectorCodec.Srp(4))
+        VectorIndex.probe(s, s"$dir/idx",
             planted.filter(col("vec_id") < 4)
               .select(col("vec_id").as("qid"), col("embedding").as("qv")),
             "qid", "qv", k = 20)
@@ -4964,19 +4964,19 @@ object QueryCatalog {
         val dir = s"$root/idx"
         val emb = t(s, d, "embeddings")
           .select(col("vec_id"), col("embedding"))
-        Similarity.buildSrpIndex(emb.filter(col("vec_id") < 400),
-          "vec_id", "embedding", dir, nBits = 4)
-        Similarity.srpAppend(
+        VectorIndex.build(emb.filter(col("vec_id") < 400),
+          "vec_id", "embedding", dir, VectorCodec.Srp(4))
+        VectorIndex.append(
           emb.filter(col("vec_id") >= 400).unionByName(
             emb.filter(col("vec_id") < 4)
               .select((col("vec_id") + 1000000L).as("vec_id"),
                 col("embedding"))),
-          "vec_id", "embedding", dir)
-        Similarity.srpDelete(dir,
+          "vec_id", "embedding", dir, VectorCodec.Srp(4))
+        VectorIndex.delete(dir,
           emb.filter(col("vec_id").between(4, 9)).select(col("vec_id")),
           "vec_id")
-        Similarity.srpCompact(s, dir)
-        Similarity.srpTopKIndexed(s, dir,
+        VectorIndex.compact(s, dir)
+        VectorIndex.probe(s, dir,
             emb.filter(col("vec_id") < 4)
               .select(col("vec_id").as("qid"), col("embedding").as("qv")),
             "qid", "qv", k = 20)
@@ -5022,12 +5022,12 @@ object QueryCatalog {
               .select((col("vec_id") + 1000000L).as("vec_id"),
                 col("embedding"), lit(99).as("label")))
         if (!new java.io.File(dir, "_SUCCESS").exists())
-          Similarity.buildSrpIndex(corpus, "vec_id", "embedding", dir,
-            nBits = 4, extraCols = Seq("label"))
-        Similarity.srpTopKIndexedFiltered(s, dir,
+          VectorIndex.build(corpus, "vec_id", "embedding", dir,
+            VectorCodec.Srp(4), extraCols = Seq("label"))
+        VectorIndex.probe(s, dir,
             emb.filter(col("vec_id") < 4)
               .select(col("vec_id").as("qid"), col("embedding").as("qv")),
-            "qid", "qv", k = 20, col("label") === 99)
+            "qid", "qv", k = 20, Some(col("label") === 99))
           .groupBy(col("qid"))
           .agg(
             max_by(col("id"), struct(col("cos_sim"), -col("id")))
@@ -5118,10 +5118,10 @@ object QueryCatalog {
       // in DedupSimilaritySpec.
       (s, d) => {
         val planted = plantedEmbeddings(s, d)
-        Similarity.int8TopKBatch(planted, "vec_id", "embedding",
+        VectorIndex.topKBatch(planted, "vec_id", "embedding",
             planted.filter(col("vec_id") < 4)
               .select(col("vec_id").as("qid"), col("embedding").as("qv")),
-            "qid", "qv", k = 20)
+            "qid", "qv", k = 20, VectorCodec.Int8)
           .groupBy(col("qid"))
           .agg(
             max_by(col("id"), struct(col("q_cos"), -col("id")))
@@ -5158,8 +5158,8 @@ object QueryCatalog {
         TempDirs.deleteOnExit(new java.io.File(dir).getParentFile)
         // _SUCCESS-gated like q_incr_bench: partial writes rebuild
         if (!new java.io.File(dir, "_SUCCESS").exists())
-          Similarity.writeInt8Corpus(t(s, d, "embeddings"), "vec_id",
-            "embedding", dir)
+          VectorIndex.build(t(s, d, "embeddings"), "vec_id",
+            "embedding", dir, VectorCodec.Int8)
         Similarity.int8TopKPrequantized(s, dir, queryId = 0L, k = 20)
           .agg(count(lit(1)).as("n_rows"),
             count_distinct(col("id")).as("n_ids"),
@@ -5197,7 +5197,8 @@ object QueryCatalog {
           Similarity.buildIvfCentroidIndex(emb, "vec_id", "embedding",
             s"$root/ivf", k = 8, iters = 3)
         if (!new java.io.File(s"$root/bq", "_SUCCESS").exists())
-          Similarity.buildBqIndex(emb, "vec_id", "embedding", s"$root/bq")
+          VectorIndex.build(emb, "vec_id", "embedding", s"$root/bq",
+            VectorCodec.Binary)
         val keep = Map(
           "bm25" -> Set("n_builds", "n_batches", "n_tombstones",
             "n_docs", "sum_dl", "generation"),
@@ -5402,10 +5403,10 @@ object QueryCatalog {
       // pool>=corpus == cosineTopKBatch degenerate law.
       (s, d) => {
         val planted = plantedEmbeddings(s, d)
-        Similarity.bqTopKBatch(planted, "vec_id", "embedding",
+        VectorIndex.topKBatch(planted, "vec_id", "embedding",
           planted.filter(col("vec_id") < 4)
             .select(col("vec_id").as("qid"), col("embedding").as("qv")),
-          "qid", "qv", k = 10)
+          "qid", "qv", k = 10, VectorCodec.Binary)
       },
       Some(bqBatchOracleSql())),
 
@@ -5425,8 +5426,9 @@ object QueryCatalog {
         TempDirs.deleteOnExit(new java.io.File(dir).getParentFile)
         val planted = plantedEmbeddings(s, d)
         if (!new java.io.File(dir, "_SUCCESS").exists())
-          Similarity.buildBqIndex(planted, "vec_id", "embedding", dir)
-        Similarity.bqTopKIndexed(s, dir,
+          VectorIndex.build(planted, "vec_id", "embedding", dir,
+            VectorCodec.Binary)
+        VectorIndex.probe(s, dir,
           planted.filter(col("vec_id") < 4)
             .select(col("vec_id").as("qid"), col("embedding").as("qv")),
           "qid", "qv", k = 10)
@@ -5434,7 +5436,7 @@ object QueryCatalog {
       Some(bqBatchOracleSql())),
 
     Q("q_bq_compact", // signature-index lifecycle: tombstone every
-      // id % 3 == 0 (bqDelete — immediate exclusion), COMPACT (the
+      // id % 3 == 0 (VectorIndex.delete — immediate exclusion), COMPACT (the
       // one explicit rewrite — tombstones clear), probe. A compacted
       // index must probe exactly like a fresh build over the
       // survivors, so the oracle is q_bq_batch's with the deletion
@@ -5447,12 +5449,13 @@ object QueryCatalog {
         TempDirs.deleteOnExit(new java.io.File(root))
         val dir = s"$root/idx"
         val planted = plantedEmbeddings(s, d)
-        Similarity.buildBqIndex(planted, "vec_id", "embedding", dir)
-        Similarity.bqDelete(dir,
+        VectorIndex.build(planted, "vec_id", "embedding", dir,
+          VectorCodec.Binary)
+        VectorIndex.delete(dir,
           planted.filter(col("vec_id") % 3 === 0).select(col("vec_id")),
           "vec_id")
-        Similarity.bqCompact(s, dir)
-        Similarity.bqTopKIndexed(s, dir,
+        VectorIndex.compact(s, dir)
+        VectorIndex.probe(s, dir,
           planted.filter(col("vec_id") < 4)
             .select(col("vec_id").as("qid"), col("embedding").as("qv")),
           "qid", "qv", k = 10)
@@ -5462,7 +5465,7 @@ object QueryCatalog {
     Q("q_bq_stream_exec", // STREAMING EXECUTION gate on the signature
       // index (r16 verdict #2): the planted corpus drains through the
       // incremental engine into per-batch signature subtrees
-      // (bqAppendBatch — replay-idempotent overwrite; no model to
+      // (VectorIndex.appendBatch — replay-idempotent overwrite; no model to
       // init, the signature is a pure function), then the standard
       // query batch probes the FRESH index at rest. One drain probes
       // exactly like a one-shot build, so the oracle is q_bq_batch's
@@ -5472,10 +5475,10 @@ object QueryCatalog {
         val dir = scratchDir("graft-stream-bq")
         val planted = plantedEmbeddings(s, d)
         planted.write.parquet(s"$dir/src")
-        graft.streaming.EventStreams.bqIndexAvailableNow(s,
+        graft.streaming.EventStreams.vectorIndexAvailableNow(s,
           s"$dir/src", "vec_id", col("embedding"), s"$dir/idx",
-          s"$dir/ckpt")
-        Similarity.bqTopKIndexed(s, s"$dir/idx",
+          s"$dir/ckpt", VectorCodec.Binary)
+        VectorIndex.probe(s, s"$dir/idx",
           planted.filter(col("vec_id") < 4)
             .select(col("vec_id").as("qid"), col("embedding").as("qv")),
           "qid", "qv", k = 10)
@@ -5484,7 +5487,7 @@ object QueryCatalog {
 
     Q("q_int8_indexed", // the at-rest BATCH face of the int8 tier
       // (r16 verdict #2's "(and int8)"): the 4x-quantized corpus is
-      // materialized once (writeInt8Corpus), the q_int8_batch query
+      // materialized once (VectorIndex.build), the q_int8_batch query
       // table probes it with NO quantization work in the query — per
       // query identical to the direct batch operator (quantization is
       // a pure per-vector function), so the oracle is q_int8_batch's
@@ -5496,8 +5499,9 @@ object QueryCatalog {
         TempDirs.deleteOnExit(new java.io.File(dir).getParentFile)
         val planted = plantedEmbeddings(s, d)
         if (!new java.io.File(dir, "_SUCCESS").exists())
-          Similarity.writeInt8Corpus(planted, "vec_id", "embedding", dir)
-        Similarity.int8TopKBatchPrequantized(s, dir,
+          VectorIndex.build(planted, "vec_id", "embedding", dir,
+            VectorCodec.Int8)
+        VectorIndex.probe(s, dir,
             planted.filter(col("vec_id") < 4)
               .select(col("vec_id").as("qid"), col("embedding").as("qv")),
             "qid", "qv", k = 20)
@@ -5566,12 +5570,12 @@ object QueryCatalog {
         TempDirs.deleteOnExit(new java.io.File(dir).getParentFile)
         val emb = t(s, d, "embeddings")
         if (!new java.io.File(dir, "_SUCCESS").exists())
-          Similarity.buildBqIndex(emb, "vec_id", "embedding", dir,
-            extraCols = Seq("label"))
-        Similarity.bqTopKIndexedFiltered(s, dir,
+          VectorIndex.build(emb, "vec_id", "embedding", dir,
+            VectorCodec.Binary, extraCols = Seq("label"))
+        VectorIndex.probe(s, dir,
           emb.filter(col("vec_id") < 4)
             .select(col("vec_id").as("qid"), col("embedding").as("qv")),
-          "qid", "qv", k = 10, col("label") === 1)
+          "qid", "qv", k = 10, Some(col("label") === 1))
       },
       Some("""WITH sig AS (SELECT vec_id, label,
              |  list_transform(range((len(embedding)+31)//32), w ->
@@ -5612,19 +5616,19 @@ object QueryCatalog {
         val dir = s"$root/corpus"
         val emb = t(s, d, "embeddings")
           .select(col("vec_id"), col("embedding"))
-        Similarity.writeInt8Corpus(emb.filter(col("vec_id") < 400),
-          "vec_id", "embedding", dir)
-        Similarity.int8Append(
+        VectorIndex.build(emb.filter(col("vec_id") < 400),
+          "vec_id", "embedding", dir, VectorCodec.Int8)
+        VectorIndex.append(
           emb.filter(col("vec_id") >= 400).unionByName(
             emb.filter(col("vec_id") < 4)
               .select((col("vec_id") + 1000000L).as("vec_id"),
                 col("embedding"))),
-          "vec_id", "embedding", dir)
-        Similarity.int8Delete(dir,
+          "vec_id", "embedding", dir, VectorCodec.Int8)
+        VectorIndex.delete(dir,
           emb.filter(col("vec_id").between(4, 9)).select(col("vec_id")),
           "vec_id")
-        Similarity.int8Compact(s, dir)
-        Similarity.int8TopKBatchPrequantized(s, dir,
+        VectorIndex.compact(s, dir)
+        VectorIndex.probe(s, dir,
             emb.filter(col("vec_id") < 4)
               .select(col("vec_id").as("qid"), col("embedding").as("qv")),
             "qid", "qv", k = 20)
@@ -5652,19 +5656,19 @@ object QueryCatalog {
     Q("q_int8_stream_exec", // STREAMING EXECUTION gate on the int8
       // layout (the q_bq_stream_exec recipe on the 4x tier): the
       // planted corpus drains through the incremental engine into
-      // per-batch quantized subtrees (int8AppendBatch — replays
+      // per-batch quantized subtrees (VectorIndex.appendBatch — replays
       // rewrite; quantization is a pure per-vector function, no model
       // to init), then the standard query batch probes the FRESH
       // table at rest — one drain probes exactly like a one-shot
-      // writeInt8Corpus, so the oracle is q_int8_batch's VALUES pin.
+      // VectorIndex.build, so the oracle is q_int8_batch's VALUES pin.
       (s, d) => {
         val dir = scratchDir("graft-stream-int8")
         val planted = plantedEmbeddings(s, d)
         planted.write.parquet(s"$dir/src")
-        graft.streaming.EventStreams.int8IndexAvailableNow(s,
+        graft.streaming.EventStreams.vectorIndexAvailableNow(s,
           s"$dir/src", "vec_id", col("embedding"), s"$dir/idx",
-          s"$dir/ckpt")
-        Similarity.int8TopKBatchPrequantized(s, s"$dir/idx",
+          s"$dir/ckpt", VectorCodec.Int8)
+        VectorIndex.probe(s, s"$dir/idx",
             planted.filter(col("vec_id") < 4)
               .select(col("vec_id").as("qid"), col("embedding").as("qv")),
             "qid", "qv", k = 20)
@@ -5688,7 +5692,7 @@ object QueryCatalog {
 
     Q("q_int8_filtered", // the int8 tier's FILTERED face (r17 verdict
       // #3 / missing #1): metadata rides the 4x-quantized rows
-      // (writeInt8Corpus extraCols) and the predicate runs on the
+      // (VectorIndex.build extraCols) and the predicate runs on the
       // compressed scan BEFORE the per-query top-k — the
       // q_ivfpq_batch_filtered planted design: 12 copies of vectors
       // 10..21 carry the otherwise-nonexistent label 99, k=20 > 12, so
@@ -5709,13 +5713,13 @@ object QueryCatalog {
             .select((col("vec_id") + 1000000).as("vec_id"),
               col("embedding"), lit(99).as("label")))
         if (!new java.io.File(dir, "_SUCCESS").exists())
-          Similarity.writeInt8Corpus(corpus, "vec_id", "embedding",
-            dir, extraCols = Seq("label"))
-        Similarity.int8TopKBatchPrequantizedFiltered(s, dir,
+          VectorIndex.build(corpus, "vec_id", "embedding",
+            dir, VectorCodec.Int8, extraCols = Seq("label"))
+        VectorIndex.probe(s, dir,
             emb.filter(col("vec_id") < 2)
               .select(col("vec_id").as("qid"),
                 col("embedding").as("qv")),
-            "qid", "qv", k = 20, col("label") === 99)
+            "qid", "qv", k = 20, Some(col("label") === 99))
           .select(col("qid"), col("id"))
       },
       Some("""SELECT q.qid, CAST(e.vec_id + 1000000 AS BIGINT) AS id
@@ -5739,7 +5743,8 @@ object QueryCatalog {
         TempDirs.deleteOnExit(new java.io.File(dir).getParentFile)
         val emb = t(s, d, "embeddings")
         if (!new java.io.File(dir, "_SUCCESS").exists())
-          Similarity.buildBqIndex(emb, "vec_id", "embedding", dir)
+          VectorIndex.build(emb, "vec_id", "embedding", dir,
+            VectorCodec.Binary)
         Similarity.bqTopKIndexedRerankedBatch(s, dir, emb, "vec_id",
           "embedding",
           emb.filter(col("vec_id") < 4)

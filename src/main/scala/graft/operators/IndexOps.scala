@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
 
 /** Cross-index operational surface (r16 verdict #6): one call that
   * answers "what lives at this root, and is maintenance due" for
@@ -12,7 +12,8 @@ object IndexOps {
 
   /** One-call index health report: detects what lives at `root` — a
     * centroid-IVF index, an IVF-PQ index, a BM25 posting index, a
-    * binary-signature index, or a raw embedding/vector table —
+    * model-free vector index (binary, int8 or SRP), or a raw
+    * embedding/vector table —
     * resolves VERSIONED roots through their `.current` pointer, and
     * emits that kind's FIXED metric set (never data-dependent) as one
     * long-format relation `(kind, layout, metric, value)`:
@@ -30,10 +31,10 @@ object IndexOps {
     *   - `bm25`: [[CorpusOps.bm25IndexStats]]'s row unpivoted
     *     (n_builds, n_batches, n_tombstones, n_docs, sum_dl, avgdl) —
     *     df_rows growth and n_batches are the "compact due" dials;
-    *   - `bq` / `int8` (the model-free quantized layouts): n_vecs,
-    *     n_batches, n_tombstones, tombstone_frac;
-    *   - `srp` (detected by the `.srpmeta` sidecar): the model-free
-    *     dials plus `n_bits` (the persisted signature width) and
+    *   - `bq` / `int8` / `srp` (the model-free [[VectorIndex]]
+    *     layouts, keyed by the codec read off the index): n_vecs,
+    *     n_batches, n_tombstones, tombstone_frac — and for `srp` also
+    *     `n_bits` (the persisted signature width) and
     *     `n_cells`/`count_skew` (bucket-occupancy health — the LSH
     *     prune assumes occupancy near n/2^nBits);
     *   - `embeddings` (a raw vector table, no index layout):
@@ -79,6 +80,19 @@ object IndexOps {
         .toDF("kind", "layout", "metric", "value")
     }
     def d(v: Double): java.lang.Double = java.lang.Double.valueOf(v)
+    def round6(v: Double): java.lang.Double = d(math.round(v * 1e6) / 1e6)
+    def frac(nTomb: Long, nVecs: Long): java.lang.Double =
+      if (nVecs > 0) round6(nTomb.toDouble / nVecs) else d(0.0)
+
+    /** (n_cells, n_vecs, max/avg occupancy) of rows carrying `cell`. */
+    def occupancy(rows: DataFrame): org.apache.spark.sql.Row =
+      rows.groupBy(col("cell")).agg(count(lit(1)).as("n")).agg(
+          count(lit(1)).as("n_cells"),
+          coalesce(sum(col("n")), lit(0L)).as("n_vecs"),
+          (max(col("n")).cast("double") / avg(col("n"))).as("skew"))
+        .collect()(0)
+    def skew(occ: org.apache.spark.sql.Row): java.lang.Double =
+      if (occ.isNullAt(2)) null else round6(occ.getDouble(2))
 
     if (exists(s"$genRoot/codes") && exists(s"$genRoot/model")) {
       // ---- IVF-PQ: occupancy skew + pending deletes off the codes.
@@ -95,23 +109,16 @@ object IndexOps {
           "tombstone_frac" -> d(0.0)))
       else {
         val codes = spark.read.parquet(s"$genRoot/codes")
-        val occ = codes.groupBy(col("cell"))
-          .agg(count(lit(1)).as("n")).agg(
-            count(lit(1)).as("n_cells"),
-            coalesce(sum(col("n")), lit(0L)).as("n_vecs"),
-            (max(col("n")).cast("double") / avg(col("n"))).as("skew"))
-          .collect()(0)
+        val occ = occupancy(codes)
         val nVecs = occ.getLong(1)
         val nTomb = tombstoneCount(s"$genRoot/tombstones",
           codes.select(col("id")))
         emit("ivfpq", layoutOf(s"$genRoot/codes"), Seq(
           "n_cells" -> d(occ.getLong(0).toDouble),
           "n_vecs" -> d(nVecs.toDouble),
-          "count_skew" -> (if (occ.isNullAt(2)) null
-            else d(math.round(occ.getDouble(2) * 1e6) / 1e6)),
+          "count_skew" -> skew(occ),
           "n_tombstones" -> d(nTomb.toDouble),
-          "tombstone_frac" -> d(if (nVecs > 0)
-            math.round(nTomb.toDouble / nVecs * 1e6) / 1e6 else 0.0)))
+          "tombstone_frac" -> frac(nTomb, nVecs)))
       }
     } else if (exists(s"$genRoot/postings") || exists(s"$root.df") ||
         hasDir(root, "tmod=")) {
@@ -143,75 +150,46 @@ object IndexOps {
           else d(if (r.getBoolean(4)) 1.0 else 0.0)),
         "n_tombstones" -> d(r.getLong(5).toDouble),
         "tombstone_frac" -> od(6)))
-    } else if (exists(s"$root.srpmeta")) {
-      // ---- SRP signature index: the model-free lifecycle dials plus
-      // the persisted nBits and the cell-occupancy skew (the bucket
-      // prune assumes occupancy stays near n/2^nBits)
-      val nBits = Similarity.readSrpNBits(spark, root)
-      if (Similarity.listDataFiles(spark, root).isEmpty)
-        emit("srp", "flat", Seq(
-          "n_vecs" -> d(0.0), "n_batches" -> d(0.0),
-          "n_tombstones" -> d(0.0), "tombstone_frac" -> d(0.0),
-          "n_bits" -> d(nBits.toDouble), "n_cells" -> d(0.0),
-          "count_skew" -> null))
-      else {
-        val rows = spark.read.parquet(root)
-        val occ = rows.groupBy(col("cell"))
-          .agg(count(lit(1)).as("n")).agg(
-            count(lit(1)).as("n_cells"),
-            coalesce(sum(col("n")), lit(0L)).as("n_vecs"),
-            (max(col("n")).cast("double") / avg(col("n"))).as("skew"))
-          .collect()(0)
-        val nVecs = occ.getLong(1)
-        val nBatches = {
-          val hp = new org.apache.hadoop.fs.Path(root)
-          hp.getFileSystem(conf).listStatus(hp).count(st =>
-            st.isDirectory && st.getPath.getName.startsWith("batch="))
-        }
-        val nTomb = tombstoneCount(s"$root.tombstones",
-          rows.select(col("id")))
-        emit("srp", layoutOf(root), Seq(
-          "n_vecs" -> d(nVecs.toDouble),
-          "n_batches" -> d(nBatches.toDouble),
-          "n_tombstones" -> d(nTomb.toDouble),
-          "tombstone_frac" -> d(if (nVecs > 0)
-            math.round(nTomb.toDouble / nVecs * 1e6) / 1e6 else 0.0),
-          "n_bits" -> d(nBits.toDouble),
-          "n_cells" -> d(occ.getLong(0).toDouble),
-          "count_skew" -> (if (occ.isNullAt(2)) null
-            else d(math.round(occ.getDouble(2) * 1e6) / 1e6))))
-      }
     } else {
-      require(exists(root), s"indexReport: nothing at $root")
-      val df = spark.read.parquet(root)
-      val isSig = df.schema.fields.exists(f =>
-        f.name == "sig" && (f.dataType match {
-          case ArrayType(LongType, _) => true
-          case _ => false
-        }))
-      val isInt8 = df.schema.fields.exists(f =>
-        f.name == "q_vec" && (f.dataType match {
-          case ArrayType(org.apache.spark.sql.types.ByteType, _) => true
-          case _ => false
-        }))
-      if (isSig || isInt8) {
-        // ---- model-free quantized index (binary signatures / int8)
-        val nVecs = df.count()
-        val nBatches = {
+      // ---- a model-free vector index (its codec read off the
+      // `.srpmeta` sidecar or the row schema, [[VectorIndex]]) — the
+      // lifecycle dials, plus SRP's persisted width and bucket
+      // occupancy (the prune assumes occupancy near n/2^nBits) — or
+      // else a raw embedding table
+      val data =
+        if (Similarity.listDataFiles(spark, root).isEmpty) None
+        else Some(spark.read.parquet(root))
+      require(data.nonEmpty || exists(s"$root.srpmeta"),
+        s"indexReport: nothing at $root")
+      val codec = VectorIndex.codecAt(spark, root, data.map(_.schema),
+        VectorIndex.srpBits(spark, root))
+      if (codec.nonEmpty) {
+        val occ = codec.collect { case _: VectorCodec.Srp => data.map(occupancy) }
+          .flatten
+        val nVecs = occ.fold(data.fold(0L)(_.count()))(_.getLong(1))
+        val nTomb = data.fold(0L)(df =>
+          tombstoneCount(s"$root.tombstones", df.select(col("id"))))
+        val nBatches = if (data.isEmpty) 0 else {
           val hp = new org.apache.hadoop.fs.Path(root)
           hp.getFileSystem(conf).listStatus(hp).count(st =>
             st.isDirectory && st.getPath.getName.startsWith("batch="))
         }
-        val nTomb = tombstoneCount(s"$root.tombstones",
-          df.select(col("id")))
-        emit(if (isSig) "bq" else "int8", layoutOf(root), Seq(
+        val (kind, dials) = codec.get match {
+          case VectorCodec.Binary => ("bq", Nil)
+          case VectorCodec.Int8 => ("int8", Nil)
+          case VectorCodec.Srp(nBits) => ("srp", Seq(
+            "n_bits" -> d(nBits.toDouble),
+            "n_cells" -> d(occ.fold(0L)(_.getLong(0)).toDouble),
+            "count_skew" -> occ.map(skew).orNull))
+        }
+        emit(kind, if (data.isEmpty) "flat" else layoutOf(root), Seq(
           "n_vecs" -> d(nVecs.toDouble),
           "n_batches" -> d(nBatches.toDouble),
           "n_tombstones" -> d(nTomb.toDouble),
-          "tombstone_frac" -> d(if (nVecs > 0)
-            math.round(nTomb.toDouble / nVecs * 1e6) / 1e6 else 0.0)))
+          "tombstone_frac" -> frac(nTomb, nVecs)) ++ dials)
       } else {
         // ---- raw embedding table: the ingest-health data card
+        val df = data.get
         val vecCol = df.schema.fields.find(_.dataType match {
           case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
           case _ => false

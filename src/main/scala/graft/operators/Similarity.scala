@@ -100,7 +100,7 @@ object Similarity {
     * (a query id literally named "id" would make the result carry two
     * unselectable "id" columns), so every face rejects it loudly
     * (r16 verdict residual, closed across the family). */
-  private def requireQueryIdNotReserved(queryIdCol: String,
+  private[operators] def requireQueryIdNotReserved(queryIdCol: String,
                                         op: String): Unit =
     require(queryIdCol != "id",
       s"$op: queryIdCol must not be named \"id\" — the output " +
@@ -192,38 +192,6 @@ object Similarity {
         round(cosine(col(vecCol), col("__qvec")), 6).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col("id"))
       .limit(k)
-  }
-
-  /** [[srpTopK]] for a query TABLE in ONE job — the batch face of the
-    * LSH-bucketed tier ([[cosineTopKBatch]]'s shape with the bucket
-    * equality as the join key): the corpus signs once per row, query
-    * signatures ride a broadcast, candidates meet their queries on
-    * CELL EQUALITY (each query scores only its bucket — 1/2^nBits of
-    * the corpus in expectation), exact cosine within the bucket,
-    * per-query WindowGroupLimit. Per query identical to [[srpTopK]]
-    * at the same dials (law spec-pinned); a query whose bucket holds
-    * nothing but itself contributes no rows. */
-  def srpTopKBatch(df: DataFrame, idCol: String, vecCol: String,
-                   queries: DataFrame, queryIdCol: String,
-                   queryVecCol: String, k: Int,
-                   nBits: Int = 8): DataFrame = {
-    require(k > 0, s"k must be positive: $k")
-    requireQueryIdNotReserved(queryIdCol, "srpTopKBatch")
-    val withSig = df.select(col(idCol).as("id"),
-      col(vecCol).as("__v"),
-      srpSignature(col(vecCol), nBits).as("__cell"))
-    val q = broadcast(queries.select(col(queryIdCol).as("__qid"),
-      col(queryVecCol).as("__qv"),
-      srpSignature(col(queryVecCol), nBits).as("__qcell")))
-    val w = Window.partitionBy(col("__qid"))
-      .orderBy(col("cos_sim").desc, col("id"))
-    withSig.join(q,
-        col("__cell") === col("__qcell") && col("id") =!= col("__qid"))
-      .select(col("__qid"), col("id"),
-        round(cosine(col("__v"), col("__qv")), 6).as("cos_sim"))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= k)
-      .select(col("__qid").as(queryIdCol), col("id"), col("cos_sim"))
   }
 
   /** IVF-style ANN index: embeddings written hive-partitioned by their
@@ -459,7 +427,7 @@ object Similarity {
     * one root (inconsistent partition depth breaks discovery), so
     * [[ivfAppend]] / [[ivfAppendBatch]] guard on it and
     * [[ivfRetrain]] preserves whichever it finds. */
-  private def ivfHasDirs(spark: org.apache.spark.sql.SparkSession,
+  private[operators] def ivfHasDirs(spark: org.apache.spark.sql.SparkSession,
                          indexPath: String, prefix: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(indexPath)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
@@ -1004,7 +972,7 @@ object Similarity {
   /** The pruned index relation minus tombstoned vectors (no-op when no
     * tombstone table exists — the probe plans of untombstoned indexes
     * are unchanged). */
-  private def withoutTombstones(
+  private[operators] def withoutTombstones(
       spark: org.apache.spark.sql.SparkSession, indexPath: String,
       df: DataFrame): DataFrame =
     withoutTombstonesAt(spark, s"$indexPath.tombstones", df)
@@ -1363,8 +1331,8 @@ object Similarity {
     * non-negative (no sign-bit overflow in either engine's packing
     * arithmetic). Delegates to the native fused
     * [[graft.plans.BinarySignature]] (one branchy integer loop per
-    * row — the ingest hot path of [[buildBqIndex]] signs the whole
-    * corpus once); [[binarySignatureDeclarative]] is the
+    * row — the ingest hot path of a binary [[VectorIndex]] signs the
+    * whole corpus once); [[binarySignatureDeclarative]] is the
     * built-ins-only semantic spec (bit-equality spec-pinned). An
     * EMPTY vector packs to an empty signature (matching the oracle's
     * `range((len+31)//32)` = []); a NULL vector stays NULL. */
@@ -1437,7 +1405,7 @@ object Similarity {
         .select(binarySignature(col(vecCol)).as("__qsig")))
     // sign the corpus BEFORE the join: one packing fold per row, not
     // one per (row, query) pair (production materializes (id, sig)
-    // once at ingest, like writePqCorpus)
+    // once at ingest: a binary [[VectorIndex]])
     df.filter(col(idCol) =!= queryId)
       .select(col(idCol).as("id"),
         binarySignature(col(vecCol)).as("__sig"))
@@ -1446,32 +1414,6 @@ object Similarity {
         hammingDistance(col("__sig"), col("__qsig")).as("hamming"))
       .orderBy(col("hamming").asc, col("id"))
       .limit(k)
-  }
-
-  /** [[bqTopK]] for a query TABLE in ONE job ([[cosineTopKBatch]]'s
-    * shape with the integer scorer): broadcast query signatures, one
-    * pass over the corpus, per-query WindowGroupLimit. Self-match
-    * excluded per query. Same recall warning as [[bqTopK]] — size the
-    * downstream funnel pool with [[recommendBqPool]]. */
-  def bqTopKBatch(df: DataFrame, idCol: String, vecCol: String,
-                  queries: DataFrame, queryIdCol: String,
-                  queryVecCol: String, k: Int): DataFrame = {
-    require(k > 0, s"k must be positive: $k")
-    requireQueryIdNotReserved(queryIdCol, "bqTopKBatch")
-    val q = broadcast(queries.select(col(queryIdCol).as("__qid"),
-      binarySignature(col(queryVecCol)).as("__qsig")))
-    val w = Window.partitionBy(col("__qid"))
-      .orderBy(col("hamming").asc, col("id"))
-    // sign the corpus BEFORE the broadcast join — one packing fold
-    // per row, not one per (row, query) pair
-    df.select(col(idCol).as("id"),
-        binarySignature(col(vecCol)).as("__sig"))
-      .join(q, col("id") =!= col("__qid"))
-      .select(col("__qid"), col("id"),
-        hammingDistance(col("__sig"), col("__qsig")).as("hamming"))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= k)
-      .select(col("__qid").as(queryIdCol), col("id"), col("hamming"))
   }
 
   /** The binary tier's production recipe — [[pqTopKRerankedBatch]]'s
@@ -1490,8 +1432,8 @@ object Similarity {
     requireQueryIdNotReserved(queryIdCol, "bqTopKRerankedBatch")
     exactRerankStage(df, idCol, vecCol, queries, queryIdCol,
       queryVecCol,
-      bqTopKBatch(df, idCol, vecCol, queries, queryIdCol, queryVecCol,
-          pool)
+      VectorIndex.topKBatch(df, idCol, vecCol, queries, queryIdCol,
+          queryVecCol, pool, VectorCodec.Binary)
         .select(col(queryIdCol).as("__qid"), col("id")),
       k)
   }
@@ -1646,224 +1588,11 @@ object Similarity {
         col("rank"))
   }
 
-  // ---- Persisted binary-signature index (r16 verdict #2): the
-  // 32x-at-rest claim is only real with signatures AT REST — without
-  // it every bqTopK* call re-runs the packing fold over the float
-  // corpus (the 47.7 s -> 5.9 s staging lesson, now paid once at
-  // ingest instead of once per query batch). The signature is a pure
-  // function of the vector — NO trained model — so the lifecycle is
-  // the house index contract with no retrain face at all: append is
-  // trivially one-shot-equivalent, compaction only heals deletions
-  // and upserts, and nothing ever needs a versioned swap. Layout:
-  // `(id, sig[, extraCols])` parquet at `<path>` (flat) or under
-  // `batch=<id>` subtrees (the replay-idempotent streaming face),
-  // tombstones at `<path>.tombstones`. The probe is a full
-  // signature-table scan at 32x fewer bytes than the float corpus —
-  // deliberately unpartitioned (Hamming has no cheap exact pruning;
-  // the compression IS the scale story, SCALE.md). ----
-
-  /** Materialize the binary-signature index: sign the corpus ONCE
-    * (native [[graft.plans.BinarySignature]] — the ingest hot path)
-    * and write `(id, sig[, extras])` at rest. `extraCols` ride the
-    * signature rows so [[bqTopKIndexedFiltered]] evaluates its
-    * predicate straight off the 32x-compressed scan. */
-  def buildBqIndex(df: DataFrame, idCol: String, vecCol: String,
-                   path: String, extraCols: Seq[String] = Nil): Unit =
-    bqSigned(df, idCol, vecCol, extraCols)
-      .write.mode("overwrite").parquet(path)
-
-  private def bqSigned(df: DataFrame, idCol: String, vecCol: String,
-                       extraCols: Seq[String]): DataFrame =
-    df.select(col(idCol).as("id") +:
-      binarySignature(col(vecCol)).as("sig") +: extraCols.map(col): _*)
-
-  /** Incremental maintenance of a [[buildBqIndex]] layout: sign and
-    * APPEND — the signature is a pure function of the vector, so an
-    * appended index is row-for-row identical to a one-shot build
-    * (the [[ivfAppend]] law with no model to hold fixed). */
-  def bqAppend(newVecs: DataFrame, idCol: String, vecCol: String,
-               path: String, extraCols: Seq[String] = Nil): Unit =
-    pureIndexAppend(bqSigned(newVecs, idCol, vecCol, extraCols), path,
-      "bqAppend", "bqAppendBatch")
-
-  /** The replay-idempotent micro-batch face of [[bqAppend]]
-    * ([[ivfAppendBatch]]'s contract on the signature index): the
-    * batch's rows OVERWRITE their own `batch=<id>` subtree, so a
-    * crashed-and-replayed batch rewrites identical rows instead of
-    * double-appending. `batch=-1` is [[bqCompact]]'s reserved fold
-    * target, hence `batchId >= 0`. */
-  def bqAppendBatch(batch: DataFrame, idCol: String, vecCol: String,
-                    path: String, batchId: Long,
-                    extraCols: Seq[String] = Nil): Unit =
-    pureIndexAppendBatch(bqSigned(batch, idCol, vecCol, extraCols),
-      path, batchId, "bqAppendBatch", "bqAppend", "bqCompact")
-
-  /** Tombstone vectors out of a signature index — the [[ivfDelete]]
-    * contract: ids append to `<path>.tombstones`, probes exclude them
-    * immediately, the index itself is untouched until
-    * [[bqCompact]]. */
-  def bqDelete(path: String, ids: DataFrame, idCol: String): Unit =
-    pureIndexDelete(path, ids, idCol)
-
-  /** Compact a signature index: rewrite without tombstoned rows,
-    * clear the tombstone table — the one explicit read-modify-write
-    * (the [[graft.operators.CorpusOps.bm25IndexCompact]] shape minus
-    * the statistics healing, because signatures carry none). A batch
-    * layout folds every `batch=<id>` subtree into the reserved
-    * `batch=-1` (stream batch ids are non-negative, so later
-    * increments never collide), keeping only each id's LATEST batch —
-    * the upsert-healing point for re-embedded ids; a flat layout
-    * compacts in place. Survivors are eagerly materialized BEFORE the
-    * overwrite (the house mutate-then-reread protection). Pause
-    * ingest across a compact (single-maintenance-actor). */
-  def bqCompact(spark: org.apache.spark.sql.SparkSession,
-                path: String): Unit = pureIndexCompact(spark, path)
-
-  // ---- The shared lifecycle core of the MODEL-FREE vector indexes
-  // (binary signatures, int8 quantization): their rows are pure
-  // per-vector functions, so append ≡ one-shot build, batches replay
-  // by overwrite, deletes are sibling tombstones, and compaction is
-  // deletion + latest-batch upsert healing with nothing to refit —
-  // no versioned swap ever needed. The faces above/below delegate
-  // here with their own names in the guard messages. ----
-
-  /** Column-set agreement between appended rows and the existing
-    * index (r18 review): extraCols that DIFFER from the build's would
-    * silently corrupt filtered probes — a later batch without the
-    * metadata column reads it as null and never matches any
-    * predicate, and a compact sampling the metadata-less footer
-    * erases the column for the whole index. One footer read per
-    * append, same cost class as the layout guards. The `batch`
-    * partition column is layout, not data. */
-  private def requireMatchingIndexColumns(rows: DataFrame,
-                                          path: String,
-                                          face: String): Unit = {
-    val spark = rows.sparkSession
-    if (listDataFiles(spark, path).nonEmpty) {
-      val existing = spark.read.parquet(path).columns.toSet - "batch"
-      val incoming = rows.columns.toSet
-      require(existing == incoming,
-        s"$face: the index at $path carries columns " +
-          existing.toSeq.sorted.mkString("(", ", ", ")") +
-          " but the appended rows carry " +
-          incoming.toSeq.sorted.mkString("(", ", ", ")") +
-          " — extraCols must match the build's exactly (a mismatch " +
-          "silently strands rows from filtered probes, and a compact " +
-          "can erase the metadata column for the whole index)")
-    }
-  }
-
-  private def pureIndexAppend(rows: DataFrame, path: String,
-                              face: String, batchFace: String): Unit = {
-    require(!ivfHasDirs(rows.sparkSession, path, "batch="),
-      s"$face: $path has the streaming batch layout — use " +
-        s"$batchFace (mixing layouts breaks partition discovery)")
-    requireMatchingIndexColumns(rows, path, face)
-    rows.write.mode("append").parquet(path)
-  }
-
-  private def pureIndexAppendBatch(rows: DataFrame, path: String,
-                                   batchId: Long, face: String,
-                                   flatFace: String,
-                                   compactFace: String): Unit = {
-    require(batchId >= 0,
-      s"batchId must be >= 0 (batch=-1 is $compactFace's reserved " +
-        s"fold target): $batchId")
-    val spark = rows.sparkSession
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    require(!fs.exists(p) || !fs.listStatus(p).exists(st =>
-        st.isFile && st.getPath.getName.endsWith(".parquet")),
-      s"$face: $path has the flat one-shot layout — use " +
-        s"$flatFace (mixing layouts breaks partition discovery)")
-    requireMatchingIndexColumns(rows, path, face)
-    rows.write.mode("overwrite").parquet(s"$path/batch=$batchId")
-  }
-
-  private def pureIndexDelete(path: String, ids: DataFrame,
-                              idCol: String): Unit =
-    ids.select(col(idCol).as("id")).distinct()
-      .write.mode("append")
-      .parquet(s"$path.tombstones")
-
-  private def pureIndexCompact(spark: org.apache.spark.sql.SparkSession,
-                               path: String,
-                               clusterBy: Option[String] = None): Unit = {
-    val batchLayout = ivfHasDirs(spark, path, "batch=")
-    val raw = spark.read.parquet(path)
-    val tombPath = new org.apache.hadoop.fs.Path(s"$path.tombstones")
-    val fs = tombPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val survivors = Materialize(
-      {
-        val deduped =
-          if (batchLayout) {
-            val latest = raw.groupBy(col("id"))
-              .agg(max(col("batch")).as("batch"))
-            raw.join(latest, Seq("id", "batch"))
-          } else raw
-        val keep = raw.columns.toSeq.filterNot(_ == "batch")
-        val p = deduped.select(keep.map(col): _*)
-        if (fs.exists(tombPath))
-          p.join(spark.read.parquet(s"$path.tombstones"), Seq("id"),
-            "left_anti")
-        else p
-      },
-      eager = true)
-    // the TYPED face says whether its layout is clustered ([[srpCompact]]
-    // passes `cell`; bq/int8 pass nothing) — never sniffed from a
-    // column name, which a user extraCols column could collide with
-    // (r18 review: metadata named "cell" on a bq index would have
-    // collapsed the rewrite onto its few distinct values)
-    val clustered =
-      clusterBy.fold(survivors)(c => survivors.repartition(col(c)))
-    if (batchLayout) {
-      clustered.write.mode("overwrite").parquet(s"$path/batch=-1")
-      val root = new org.apache.hadoop.fs.Path(path)
-      fs.listStatus(root)
-        .filter(st => st.isDirectory &&
-          st.getPath.getName.startsWith("batch=") &&
-          st.getPath.getName != "batch=-1")
-        .foreach(st => fs.delete(st.getPath, true))
-    } else
-      clustered.write.mode("overwrite").parquet(path)
-    fs.delete(tombPath, true)
-    ()
-  }
-
-  /** Batch Hamming top-k over a [[buildBqIndex]] layout — the pure
-    * at-rest probe: no packing work in the query (paid once at
-    * ingest), the scan reads 32x fewer bytes than the float corpus,
-    * scoring is XOR+popcount. Per query IDENTICAL to [[bqTopKBatch]]
-    * over the indexed corpus (signatures are pure functions — law
-    * spec-pinned, gate `q_bq_indexed` reuses `q_bq_batch`'s oracle
-    * verbatim). Tombstoned ids never surface. Same recall warning as
-    * [[bqTopK]]: raw Hamming is a candidate generator — funnel
-    * through [[bqTopKIndexedRerankedBatch]] with a
-    * [[recommendBqPool]]-sized pool. */
-  def bqTopKIndexed(spark: org.apache.spark.sql.SparkSession,
-                    path: String, queries: DataFrame,
-                    queryIdCol: String, queryVecCol: String,
-                    k: Int): DataFrame =
-    bqIndexedCore(spark, path, queries, queryIdCol, queryVecCol, k,
-      None, "bqTopKIndexed")
-
-  /** Metadata-filtered [[bqTopKIndexed]] — the predicate (over the
-    * metadata riding the signature rows, [[buildBqIndex]]'s
-    * `extraCols`) runs on the compressed scan BEFORE scoring and the
-    * per-query top-k; the scan is already full (no pruning to widen),
-    * so selectivity costs nothing extra. */
-  def bqTopKIndexedFiltered(spark: org.apache.spark.sql.SparkSession,
-                            path: String, queries: DataFrame,
-                            queryIdCol: String, queryVecCol: String,
-                            k: Int, predicate: Column): DataFrame =
-    bqIndexedCore(spark, path, queries, queryIdCol, queryVecCol, k,
-      Some(predicate), "bqTopKIndexedFiltered")
-
   /** The binary tier's production recipe AT REST — [[bqTopKRerankedBatch]]
     * with candidate generation reading the persisted signature index
     * instead of re-signing the float corpus: per-query `pool`
     * lowest-Hamming candidates off the 32x-compressed scan
-    * ([[bqTopKIndexed]]), exact cosine re-rank of ONLY the pooled rows
+    * ([[VectorIndex.probe]]), exact cosine re-rank of ONLY the pooled rows
     * against the caller's float table (broadcast candidate list — the
     * re-rank never scans the corpus). With `pool >= corpus` the result
     * IS [[cosineTopKBatch]] (gated); at any pool it equals
@@ -1880,7 +1609,7 @@ object Similarity {
     requireQueryIdNotReserved(queryIdCol, "bqTopKIndexedRerankedBatch")
     exactRerankStage(df, idCol, vecCol, queries, queryIdCol,
       queryVecCol,
-      bqTopKIndexed(spark, path, queries, queryIdCol, queryVecCol,
+      VectorIndex.probe(spark, path, queries, queryIdCol, queryVecCol,
           pool)
         .select(col(queryIdCol).as("__qid"), col("id")),
       k)
@@ -1911,8 +1640,8 @@ object Similarity {
       .select(col("__rq"), col("id"))
     val w = Window.partitionBy(col("__rq"))
       .orderBy(col("hamming").asc, col("id"))
-    val ranked = bqTopKBatch(df, idCol, vecCol, qs, "__rq", "__rv",
-        candidatePools.max)
+    val ranked = VectorIndex.topKBatch(df, idCol, vecCol, qs, "__rq",
+        "__rv", candidatePools.max, VectorCodec.Binary)
       .withColumn("__hrank", row_number().over(w))
     val joined = exact.join(ranked, Seq("__rq", "id"), "left")
     val pools = candidatePools.distinct.sorted
@@ -1994,28 +1723,6 @@ object Similarity {
           / col("n_exact").cast("double"), 4).as("recall"))
   }
 
-  private def bqIndexedCore(spark: org.apache.spark.sql.SparkSession,
-                            path: String, queries: DataFrame,
-                            queryIdCol: String, queryVecCol: String,
-                            k: Int, pred: Option[Column],
-                            face: String): DataFrame = {
-    // guards name the face the caller actually invoked (r17 advice)
-    require(k > 0, s"$face: k must be positive: $k")
-    requireQueryIdNotReserved(queryIdCol, face)
-    val q = broadcast(queries.select(col(queryIdCol).as("__qid"),
-      binarySignature(col(queryVecCol)).as("__qsig")))
-    val w = Window.partitionBy(col("__qid"))
-      .orderBy(col("hamming").asc, col("id"))
-    val idx = withoutTombstones(spark, path, spark.read.parquet(path))
-    pred.fold(idx)(idx.filter)
-      .join(q, col("id") =!= col("__qid"))
-      .select(col("__qid"), col("id"),
-        hammingDistance(col("sig"), col("__qsig")).as("hamming"))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= k)
-      .select(col("__qid").as(queryIdCol), col("id"), col("hamming"))
-  }
-
   // ------------------------------------------------------- int8 quantization
 
   /** Adds symmetric per-vector int8 quantization columns for `vecCol`:
@@ -2069,97 +1776,14 @@ object Similarity {
       .limit(k)
   }
 
-  /** [[int8TopK]] for a query TABLE in ONE job — the
-    * [[cosineTopKBatch]] shape over the quantized columns: the corpus
-    * quantizes once per row before the broadcast join (the
-    * [[bqTopKBatch]] staging rule), each pair scores the quantized
-    * cosine, per-query WindowGroupLimit. Per query identical to
-    * [[int8TopK]] (law pinned in DedupSimilaritySpec — the same
-    * quantization and scoring expressions on the same inputs). */
-  def int8TopKBatch(df: DataFrame, idCol: String, vecCol: String,
-                    queries: DataFrame, queryIdCol: String,
-                    queryVecCol: String, k: Int): DataFrame = {
-    require(k > 0, s"k must be positive: $k")
-    requireQueryIdNotReserved(queryIdCol, "int8TopKBatch")
-    val q = broadcast(withInt8Quantized(
-        queries.select(col(queryIdCol).as("__qid"),
-          col(queryVecCol).as("__qv")), "__qv")
-      .select(col("__qid"), col("q_vec").as("__qvec")))
-    val w = Window.partitionBy(col("__qid"))
-      .orderBy(col("q_cos").desc, col("id"))
-    withInt8Quantized(df, vecCol)
-      .select(col(idCol).as("id"), col("q_vec"))
-      .join(q, col("id") =!= col("__qid"))
-      .select(col("__qid"), col("id"),
-        round(quantizedCosine(col("q_vec"), col("__qvec")), 6)
-          .as("q_cos"))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= k)
-      .select(col("__qid").as(queryIdCol), col("id"), col("q_cos"))
-  }
-
-  /** Materialize the int8-quantized corpus: `(id, q_vec[, extras])`
-    * parquet — quantization AT REST, the deployment shape of
-    * [[withInt8Quantized]] (quantize once at ingest; every ANN scan
-    * after that reads quarter the bytes). Scale is not stored: cosine
-    * ranking never needs it, and candidates re-rank against the float
-    * table by id. `extraCols` ride the quantized rows (the
-    * [[buildBqIndex]] convention) so
-    * [[int8TopKBatchPrequantizedFiltered]] evaluates its predicate
-    * straight off the 4x-compressed scan. */
-  def writeInt8Corpus(df: DataFrame, idCol: String, vecCol: String,
-                      path: String, extraCols: Seq[String] = Nil): Unit =
-    int8Rows(df, idCol, vecCol, extraCols)
-      .write.mode("overwrite").parquet(path)
-
-  private def int8Rows(df: DataFrame, idCol: String, vecCol: String,
-                       extraCols: Seq[String] = Nil): DataFrame =
-    withInt8Quantized(df, vecCol)
-      .select(col(idCol).as("id") +: col("q_vec") +:
-        extraCols.map(col): _*)
-
-  // ---- int8 index lifecycle ([[pureIndexAppend]] family): the
-  // quantized row is a pure per-vector function, exactly like the
-  // binary signature — so the at-rest int8 corpus carries the same
-  // model-free lifecycle as [[buildBqIndex]]'s: append ≡ one-shot,
-  // replay-idempotent batches, sibling tombstones with immediate
-  // probe exclusion, deletion/upsert-healing compaction. ----
-
-  /** [[bqAppend]]'s contract on the int8 layout: quantize and APPEND
-    * (pure function — appended ≡ one-shot [[writeInt8Corpus]]). */
-  def int8Append(newVecs: DataFrame, idCol: String, vecCol: String,
-                 path: String, extraCols: Seq[String] = Nil): Unit =
-    pureIndexAppend(int8Rows(newVecs, idCol, vecCol, extraCols), path,
-      "int8Append", "int8AppendBatch")
-
-  /** [[bqAppendBatch]]'s contract on the int8 layout: the batch's
-    * quantized rows overwrite their own `batch=<id>` subtree —
-    * replays rewrite, never double-append. */
-  def int8AppendBatch(batch: DataFrame, idCol: String, vecCol: String,
-                      path: String, batchId: Long,
-                      extraCols: Seq[String] = Nil): Unit =
-    pureIndexAppendBatch(int8Rows(batch, idCol, vecCol, extraCols),
-      path, batchId, "int8AppendBatch", "int8Append", "int8Compact")
-
-  /** [[bqDelete]]'s contract on the int8 layout: sibling tombstones,
-    * immediate exclusion on every prequantized probe. */
-  def int8Delete(path: String, ids: DataFrame, idCol: String): Unit =
-    pureIndexDelete(path, ids, idCol)
-
-  /** [[bqCompact]]'s contract on the int8 layout: drop tombstoned
-    * rows, fold batches to `batch=-1` keeping each id's latest batch,
-    * clear the tombstone table. */
-  def int8Compact(spark: org.apache.spark.sql.SparkSession,
-                  path: String): Unit = pureIndexCompact(spark, path)
-
-  /** Brute-force top-k over a [[writeInt8Corpus]] layout: the pure
+  /** Brute-force top-k over an int8 [[VectorIndex]]: the pure
     * at-rest-quantized ANN scan (no quantization work in the query —
     * that was paid once at ingest). */
   def int8TopKPrequantized(spark: org.apache.spark.sql.SparkSession,
                            path: String, queryId: Long, k: Int): DataFrame = {
-    // tombstoned ids ([[int8Delete]]) never surface; no-op on an
-    // undeleted corpus (the exists check keeps legacy plans unchanged)
-    val qz = withoutTombstones(spark, path, spark.read.parquet(path))
+    // tombstoned ids ([[VectorIndex.delete]]) never surface; no-op on
+    // an undeleted corpus (the exists check keeps legacy plans unchanged)
+    val qz = VectorIndex.live(spark, path)
     val q = broadcast(qz.filter(col("id") === queryId)
       .select(col("q_vec").as("__qvec")))
     qz.filter(col("id") =!= queryId)
@@ -2170,239 +1794,7 @@ object Similarity {
       .limit(k)
   }
 
-  /** Batch top-k over a [[writeInt8Corpus]] layout — the at-rest
-    * batch face of the int8 tier (r16 verdict #2's "(and int8)"):
-    * query vectors quantize on the fly (|q| rows — free), the corpus
-    * scan reads the 4x-compressed table with NO quantization work in
-    * the query, per-query WindowGroupLimit. Per query identical to
-    * [[int8TopKBatch]] over the float corpus (quantization is a pure
-    * function of the vector — law gated, `q_int8_indexed` reuses
-    * `q_int8_batch`'s oracle verbatim). */
-  def int8TopKBatchPrequantized(spark: org.apache.spark.sql.SparkSession,
-                                path: String, queries: DataFrame,
-                                queryIdCol: String, queryVecCol: String,
-                                k: Int): DataFrame =
-    int8PrequantizedCore(spark, path, queries, queryIdCol, queryVecCol,
-      k, None, "int8TopKBatchPrequantized")
-
-  /** Metadata-filtered [[int8TopKBatchPrequantized]] — "int8 search
-    * WHERE label = X" with the predicate (over the metadata riding the
-    * quantized rows, [[writeInt8Corpus]]'s `extraCols`) evaluated on
-    * the 4x-compressed scan BEFORE scoring and the per-query top-k
-    * (the [[bqTopKIndexedFiltered]] contract on this tier, r17 verdict
-    * missing #1): post-filtering a truncated ranking loses every
-    * filtered row that didn't crack the unfiltered top-k — the exact
-    * recall-losing failure mode the filtered faces exist to prevent
-    * (spec-pinned). The scan is already full (Hamming-style exact
-    * pruning doesn't apply to quantized cosine either), so selectivity
-    * costs nothing extra. */
-  def int8TopKBatchPrequantizedFiltered(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      queries: DataFrame, queryIdCol: String, queryVecCol: String,
-      k: Int, predicate: Column): DataFrame =
-    int8PrequantizedCore(spark, path, queries, queryIdCol, queryVecCol,
-      k, Some(predicate), "int8TopKBatchPrequantizedFiltered")
-
-  private def int8PrequantizedCore(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      queries: DataFrame, queryIdCol: String, queryVecCol: String,
-      k: Int, pred: Option[Column], face: String): DataFrame = {
-    require(k > 0, s"$face: k must be positive: $k")
-    requireQueryIdNotReserved(queryIdCol, face)
-    val q = broadcast(withInt8Quantized(
-        queries.select(col(queryIdCol).as("__qid"),
-          col(queryVecCol).as("__qv")), "__qv")
-      .select(col("__qid"), col("q_vec").as("__qvec")))
-    val w = Window.partitionBy(col("__qid"))
-      .orderBy(col("q_cos").desc, col("id"))
-    val corpus = withoutTombstones(spark, path, spark.read.parquet(path))
-    pred.fold(corpus)(corpus.filter)
-      .join(q, col("id") =!= col("__qid"))
-      .select(col("__qid"), col("id"),
-        round(quantizedCosine(col("q_vec"), col("__qvec")), 6)
-          .as("q_cos"))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= k)
-      .select(col("__qid").as(queryIdCol), col("id"), col("q_cos"))
-  }
-
-  // ---- Persisted SRP signature index (r17 verdict #2): the
-  // LSH-bucketed tier's at-rest story, matching its bq/int8 siblings —
-  // without it every srpTopKBatch / srpNeighborPairs call re-ran the
-  // (native) SRP pack over the float corpus. Layout: `(id, cell,
-  // v[, extras])` parquet at `<path>` (flat, cell-clustered) or under
-  // `batch=<id>` subtrees (the replay-idempotent streaming face),
-  // tombstones at `<path>.tombstones`. UNLIKE the signature/int8 rows,
-  // an SRP cell is a function of (vector, nBits) — nBits is index
-  // METADATA, persisted once at `<path>.srpmeta` and read back by
-  // every append and probe (the layout-guard discipline: a probe
-  // cannot disagree with the build because it never supplies nBits).
-  // The rows keep the float vector: the bucket prune is the win (each
-  // query scores ~1/2^nBits of the corpus), scoring within the bucket
-  // stays exact cosine. ----
-
-  private def srpMetaPath(path: String): String = s"$path.srpmeta"
-
-  private def writeSrpMeta(spark: org.apache.spark.sql.SparkSession,
-                           path: String, nBits: Int): Unit = {
-    require(nBits >= 1 && nBits <= 63,
-      s"nBits out of 1..63: $nBits")
-    spark.range(1).select(lit(nBits).as("n_bits"))
-      .write.mode("overwrite").parquet(srpMetaPath(path))
-  }
-
-  /** The persisted `nBits` of a [[buildSrpIndex]] layout — the index
-    * metadata every append and probe derives its signatures from. */
-  def readSrpNBits(spark: org.apache.spark.sql.SparkSession,
-                   path: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(srpMetaPath(path))
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(p),
-      s"no SRP index metadata at ${srpMetaPath(path)} — build with " +
-        "buildSrpIndex (or initSrpIndex for a streaming-from-empty " +
-        "root) first")
-    spark.read.parquet(srpMetaPath(path)).collect()(0).getInt(0)
-  }
-
-  private def srpRows(df: DataFrame, idCol: String, vecCol: String,
-                      nBits: Int, extraCols: Seq[String]): DataFrame =
-    df.select(col(idCol).as("id") +:
-      srpSignature(col(vecCol), nBits).as("cell") +:
-      col(vecCol).as("v") +: extraCols.map(col): _*)
-
-  /** Materialize the SRP index: sign the corpus ONCE (native
-    * [[graft.plans.SrpSignature]]) and write `(id, cell, v[, extras])`
-    * at rest, clustered by cell (parquet min/max stats skip row
-    * groups on single-cell probes). `extraCols` ride the rows so
-    * [[srpTopKIndexedFiltered]] evaluates its predicate on the scan. */
-  def buildSrpIndex(df: DataFrame, idCol: String, vecCol: String,
-                    path: String, nBits: Int = 8,
-                    extraCols: Seq[String] = Nil): Unit = {
-    writeSrpMeta(df.sparkSession, path, nBits)
-    srpRows(df, idCol, vecCol, nBits, extraCols)
-      .repartition(col("cell"))
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** Initialize ONLY the metadata of an SRP index — the
-    * streaming-from-empty entry point ([[graft.streaming.EventStreams
-    * .srpIndexAvailableNow]] drains batches into a root whose nBits
-    * must exist before the first [[srpAppendBatch]]). ENSURE
-    * semantics, never overwrite: idempotent when the persisted nBits
-    * already equals `nBits`, and a LOUD refusal when it differs — a
-    * silent meta rewrite would leave every existing row's cell signed
-    * under the old width, stranding the old corpus in unreachable
-    * buckets (rebuild with [[buildSrpIndex]] to change nBits). */
-  def initSrpIndex(spark: org.apache.spark.sql.SparkSession,
-                   path: String, nBits: Int = 8): Unit = {
-    val p = new org.apache.hadoop.fs.Path(srpMetaPath(path))
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) {
-      val existing = readSrpNBits(spark, path)
-      require(existing == nBits,
-        s"initSrpIndex: $path is already an SRP index with " +
-          s"nBits=$existing — refusing to flip it to $nBits (existing " +
-          "rows are signed under the old width and would land in " +
-          "unreachable buckets; rebuild with buildSrpIndex to change " +
-          "the signature width)")
-    } else writeSrpMeta(spark, path, nBits)
-  }
-
-  /** [[bqAppend]]'s contract on the SRP layout: sign with the
-    * PERSISTED nBits and append — appended ≡ one-shot by purity of
-    * (vector, nBits) → cell. */
-  def srpAppend(newVecs: DataFrame, idCol: String, vecCol: String,
-                path: String, extraCols: Seq[String] = Nil): Unit = {
-    val nBits = readSrpNBits(newVecs.sparkSession, path)
-    pureIndexAppend(srpRows(newVecs, idCol, vecCol, nBits, extraCols),
-      path, "srpAppend", "srpAppendBatch")
-  }
-
-  /** [[bqAppendBatch]]'s contract on the SRP layout: the batch's
-    * signed rows overwrite their own `batch=<id>` subtree — replays
-    * rewrite, never double-append. */
-  def srpAppendBatch(batch: DataFrame, idCol: String, vecCol: String,
-                     path: String, batchId: Long,
-                     extraCols: Seq[String] = Nil): Unit =
-    srpAppendBatchWith(batch, idCol, vecCol, path, batchId, extraCols,
-      readSrpNBits(batch.sparkSession, path))
-
-  /** [[srpAppendBatch]] with the nBits already in hand — the
-    * streaming face reads the metadata ONCE per drain instead of one
-    * read job per micro-batch (the value is constant for the index's
-    * lifetime). Callers must pass the PERSISTED value. */
-  private[graft] def srpAppendBatchWith(batch: DataFrame, idCol: String,
-                                        vecCol: String, path: String,
-                                        batchId: Long,
-                                        extraCols: Seq[String],
-                                        nBits: Int): Unit =
-    pureIndexAppendBatch(srpRows(batch, idCol, vecCol, nBits, extraCols),
-      path, batchId, "srpAppendBatch", "srpAppend", "srpCompact")
-
-  /** [[bqDelete]]'s contract on the SRP layout: sibling tombstones,
-    * immediate exclusion on every indexed probe. */
-  def srpDelete(path: String, ids: DataFrame, idCol: String): Unit =
-    pureIndexDelete(path, ids, idCol)
-
-  /** [[bqCompact]]'s contract on the SRP layout: drop tombstoned rows,
-    * fold batches to `batch=-1` keeping each id's latest batch, clear
-    * the tombstone table. The `.srpmeta` sidecar is untouched — nBits
-    * never changes over a compact. */
-  def srpCompact(spark: org.apache.spark.sql.SparkSession,
-                 path: String): Unit =
-    pureIndexCompact(spark, path, clusterBy = Some("cell"))
-
-  /** Batch LSH-bucketed top-k over a [[buildSrpIndex]] layout — the
-    * at-rest probe: no SRP pack over the corpus in the query (paid
-    * once at ingest), query signatures derive from the PERSISTED
-    * nBits, candidates meet their queries on cell equality, exact
-    * cosine within the bucket. Per query IDENTICAL to [[srpTopKBatch]]
-    * at the same nBits (cells are pure in (vector, nBits) — law
-    * spec-pinned; gate `q_srp_indexed` reuses `q_srp_batch`'s oracle
-    * verbatim). Tombstoned ids never surface. */
-  def srpTopKIndexed(spark: org.apache.spark.sql.SparkSession,
-                     path: String, queries: DataFrame,
-                     queryIdCol: String, queryVecCol: String,
-                     k: Int): DataFrame =
-    srpIndexedCore(spark, path, queries, queryIdCol, queryVecCol, k,
-      None, "srpTopKIndexed")
-
-  /** Metadata-filtered [[srpTopKIndexed]] — the predicate (over the
-    * metadata riding the index rows, [[buildSrpIndex]]'s `extraCols`)
-    * runs on the scan BEFORE the bucket join and the per-query
-    * top-k. */
-  def srpTopKIndexedFiltered(spark: org.apache.spark.sql.SparkSession,
-                             path: String, queries: DataFrame,
-                             queryIdCol: String, queryVecCol: String,
-                             k: Int, predicate: Column): DataFrame =
-    srpIndexedCore(spark, path, queries, queryIdCol, queryVecCol, k,
-      Some(predicate), "srpTopKIndexedFiltered")
-
-  private def srpIndexedCore(spark: org.apache.spark.sql.SparkSession,
-                             path: String, queries: DataFrame,
-                             queryIdCol: String, queryVecCol: String,
-                             k: Int, pred: Option[Column],
-                             face: String): DataFrame = {
-    require(k > 0, s"$face: k must be positive: $k")
-    requireQueryIdNotReserved(queryIdCol, face)
-    val nBits = readSrpNBits(spark, path)
-    val q = broadcast(queries.select(col(queryIdCol).as("__qid"),
-      col(queryVecCol).as("__qv"),
-      srpSignature(col(queryVecCol), nBits).as("__qcell")))
-    val w = Window.partitionBy(col("__qid"))
-      .orderBy(col("cos_sim").desc, col("id"))
-    val idx = withoutTombstones(spark, path, spark.read.parquet(path))
-    pred.fold(idx)(idx.filter)
-      .join(q,
-        col("cell") === col("__qcell") && col("id") =!= col("__qid"))
-      .select(col("__qid"), col("id"),
-        round(cosine(col("v"), col("__qv")), 6).as("cos_sim"))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= k)
-      .select(col("__qid").as(queryIdCol), col("id"), col("cos_sim"))
-  }
-
-  /** [[srpNeighborPairs]] over a [[buildSrpIndex]] layout — the
+  /** [[srpNeighborPairs]] over an SRP [[VectorIndex]] — the
     * all-pairs near-dup sweep with the cells read at rest instead of
     * re-packed per call (the index was the r17 verdict's other
     * re-signing site). Identical pairs to the direct operator at the
@@ -2412,8 +1804,7 @@ object Similarity {
                               maxBucketSize: Int = 256,
                               capObservation: Option[org.apache.spark.sql.Observation] = None): DataFrame =
     srpPairsOf(
-      withoutTombstones(spark, path, spark.read.parquet(path))
-        .select(col("id"), col("v"), col("cell")),
+      VectorIndex.live(spark, path).select(col("id"), col("v"), col("cell")),
       minCos, maxBucketSize, capObservation)
 
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023, arXiv
@@ -2869,8 +2260,8 @@ object Similarity {
   /** Materialize the PQ-coded corpus: `(id, pq_code)` parquet — the
     * at-rest shape (encode once at ingest; every ANN scan after reads
     * `m` bytes per vector instead of `4d`). */
-  def writePqCorpus(df: DataFrame, idCol: String, vecCol: String,
-                    model: PqModel, path: String): Unit =
+  private def writePqCorpus(df: DataFrame, idCol: String, vecCol: String,
+                            model: PqModel, path: String): Unit =
     withPqCodes(df, vecCol, model)
       .select(col(idCol).as("id"), col("pq_code"))
       .write.mode("overwrite").parquet(path)
@@ -2929,13 +2320,13 @@ object Similarity {
 
   /** Per-query ADC lookup table: `lut(s)(c) = ||q_s - cen_s_c||²` for
     * the L2-normalized query. m x ksub doubles, built driver-side. */
-  def pqLut(query: Seq[Double], model: PqModel): Seq[Seq[Double]] = {
+  private def pqLut(query: Seq[Double], model: PqModel): Seq[Seq[Double]] = {
     val nrm = math.sqrt(query.map(x => x * x).sum)
     val qn = if (nrm > 0) query.map(_ / nrm) else query
     pqLut0(qn, model)
   }
 
-  /** ADC top-k over a [[writePqCorpus]] layout for the query vector of
+  /** ADC top-k over a [[writePqIndex]] codes layout for the query vector of
     * `queryId` (looked up in `queryDf`, one collected row): the scan
     * reads only (id, m-byte code), scores each row with m table
     * lookups, and `TakeOrderedAndProject` keeps the top-k — no shuffle

@@ -51,8 +51,8 @@ object VectorExpressions {
   *
   * The declarative fold allocates a 32-element sequence per word and
   * dispatches two lambdas per COMPONENT; at ingest rates (the
-  * [[graft.operators.Similarity]] buildBqIndex hot path — signatures
-  * are computed once per corpus row) this fuses to one branchy
+  * [[graft.operators.VectorIndex.build]] hot path of a binary index —
+  * signatures are computed once per corpus row) this fuses to one branchy
   * integer loop per row, no allocation beyond the output words. */
 case class BinarySignature(child: Expression)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
@@ -149,8 +149,8 @@ case class BinarySignature(child: Expression)
   *   - otherwise `sum over words of popcount(a[i] xor b[i])`.
   *
   * This is the binary tier's recurring per-(query, row) scorer: with
-  * signatures materialized at rest ([[graft.operators.Similarity
-  * .buildBqIndex]]), every probe pays exactly this expression over the
+  * signatures materialized at rest ([[graft.operators.VectorIndex
+  * .build]]), every probe pays exactly this expression over the
   * 32x-compressed scan — the declarative fold dispatched two lambdas
   * per WORD there (the [[CosineSim]]/[[BinarySignature]] hot-loop
   * pattern, applied once more). */

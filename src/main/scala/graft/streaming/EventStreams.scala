@@ -597,9 +597,9 @@ object EventStreams {
     * one-shot `buildIvfCentroidIndex` under the same model (the
     * execution gate `q_ivf_stream_exec`); later drains see only new
     * files and extend the index incrementally (spec-pinned). */
-  /** The shared AvailableNow drain skeleton of the five vector-index
-    * ingest faces (ivf / ivfPq / bq / int8 / srp — r18 review: five
-    * copy-paste variants is why a cross-cutting edit missed two
+  /** The shared AvailableNow drain skeleton of the three vector-index
+    * ingest faces (ivf / ivfPq / the model-free codecs — r18 review:
+    * copy-paste variants are why a cross-cutting edit missed two
     * tiers): one file source, `(id, __vec[, extras])` projection, a
     * replay-idempotent per-batch append, await. `extraCols` ride the
     * projection so every tier's FILTERED probes are reachable from
@@ -653,77 +653,28 @@ object EventStreams {
         batch, idCol, "__vec", indexPath, batchId, extraCols)
     }
 
-  /** [[ivfIndexAvailableNow]] on the BINARY-SIGNATURE index
-    * (r16 verdict #2): arriving embeddings are sign-packed by the
-    * native [[graft.plans.BinarySignature]] (a pure function — no
-    * model to init) into per-batch `batch=<id>` subtrees via
-    * [[graft.operators.Similarity.bqAppendBatch]] — replays rewrite
-    * identical rows, probes read signatures at rest. One drain probes
-    * exactly like a one-shot [[graft.operators.Similarity
-    * .buildBqIndex]] (the execution gate `q_bq_stream_exec`). */
-  def bqIndexAvailableNow(spark: SparkSession, vecsPath: String,
-                          idCol: String,
-                          vecExpr: org.apache.spark.sql.Column,
-                          indexPath: String,
-                          checkpointDir: String,
-                          extraCols: Seq[String] = Nil): Unit =
-    // extraCols ride each batch's signature rows (the buildBqIndex
-    // convention), so a STREAMED index serves bqTopKIndexedFiltered
-    // exactly like a one-shot build with metadata
+  /** [[ivfIndexAvailableNow]] on a model-free
+    * [[graft.operators.VectorIndex]]: arriving embeddings are encoded
+    * by `codec` (a pure per-vector function — binary signature, int8
+    * quantization or SRP cell) into per-batch `batch=<id>` subtrees, as
+    * [[graft.operators.VectorIndex.appendBatch]] does — replays rewrite
+    * identical rows, probes read the encoded rows at rest. An SRP root
+    * gets its width ensured (written when empty, never overwritten: a
+    * different width refuses loudly) and read ONCE per drain, never per
+    * micro-batch. One drain probes exactly like a one-shot
+    * [[graft.operators.VectorIndex.build]] (the execution gates
+    * `q_bq_stream_exec`, `q_int8_stream_exec`, `q_srp_stream_exec`);
+    * `extraCols` ride the rows, so a streamed index serves filtered
+    * probes like a one-shot build with metadata. */
+  def vectorIndexAvailableNow(spark: SparkSession, vecsPath: String,
+                              idCol: String,
+                              vecExpr: org.apache.spark.sql.Column,
+                              indexPath: String, checkpointDir: String,
+                              codec: graft.operators.VectorCodec,
+                              extraCols: Seq[String] = Nil): Unit =
     drainVectorIndex(spark, vecsPath, idCol, vecExpr, checkpointDir,
-      extraCols) { (batch, batchId) =>
-      graft.operators.Similarity.bqAppendBatch(
-        batch, idCol, "__vec", indexPath, batchId, extraCols)
-    }
-
-  /** [[bqIndexAvailableNow]] on the int8 layout: arriving embeddings
-    * quantize (pure per-vector function, no model) into per-batch
-    * `batch=<id>` subtrees via [[graft.operators.Similarity
-    * .int8AppendBatch]] — replays rewrite identical rows; probes read
-    * the 4x-compressed table at rest (the execution gate
-    * `q_int8_stream_exec`). */
-  def int8IndexAvailableNow(spark: SparkSession, vecsPath: String,
-                            idCol: String,
-                            vecExpr: org.apache.spark.sql.Column,
-                            indexPath: String,
-                            checkpointDir: String,
-                            extraCols: Seq[String] = Nil): Unit =
-    // extraCols ride the quantized rows so the streamed table serves
-    // int8TopKBatchPrequantizedFiltered (the writeInt8Corpus contract)
-    drainVectorIndex(spark, vecsPath, idCol, vecExpr, checkpointDir,
-      extraCols) { (batch, batchId) =>
-      graft.operators.Similarity.int8AppendBatch(
-        batch, idCol, "__vec", indexPath, batchId, extraCols)
-    }
-
-  /** [[bqIndexAvailableNow]] on the SRP layout (r17 verdict #2):
-    * arriving embeddings are SRP-signed under the index's PERSISTED
-    * nBits (written up front — the one piece of model metadata this
-    * tier carries; cells are pure in (vector, nBits), so replays
-    * rewrite identical rows) into per-batch `batch=<id>` subtrees via
-    * [[graft.operators.Similarity.srpAppendBatch]]. One drain probes
-    * exactly like a one-shot [[graft.operators.Similarity
-    * .buildSrpIndex]] (the execution gate `q_srp_stream_exec`). */
-  def srpIndexAvailableNow(spark: SparkSession, vecsPath: String,
-                           idCol: String,
-                           vecExpr: org.apache.spark.sql.Column,
-                           indexPath: String, checkpointDir: String,
-                           nBits: Int = 8,
-                           extraCols: Seq[String] = Nil): Unit = {
-    // ensure-never-overwrite: an existing index with a DIFFERENT
-    // nBits refuses loudly (a silent meta flip would strand its rows
-    // in unreachable buckets); the persisted value is then read ONCE
-    // and threaded through the drain — no per-micro-batch meta job
-    graft.operators.Similarity.initSrpIndex(spark, indexPath, nBits)
-    val persistedBits =
-      graft.operators.Similarity.readSrpNBits(spark, indexPath)
-    drainVectorIndex(spark, vecsPath, idCol, vecExpr, checkpointDir,
-      extraCols) { (batch, batchId) =>
-      graft.operators.Similarity.srpAppendBatchWith(
-        batch, idCol, "__vec", indexPath, batchId, extraCols,
-        persistedBits)
-    }
-  }
+      extraCols)(graft.operators.VectorIndex.batchWriter(spark, indexPath,
+      codec, idCol, "__vec", extraCols))
 
   /** Runs [[userRunningTotals]] (mapGroupsWithState — the arbitrary-
     * state API) through the incremental engine. Update mode: custom

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.Similarity
+import graft.operators.{Similarity, VectorIndex}
+import graft.operators.VectorCodec.{Binary, Int8, Srp}
 
 /** The persisted binary-signature index (r16 verdict #2): native
   * sign-pack == declarative spec, the at-rest lifecycle laws
@@ -106,10 +107,10 @@ class BqIndexSpec extends SparkSpec {
     val dir = tmp("bqlife") + "/idx"
     val a = emb.filter($"vec_id" < 300)
     val b = emb.filter($"vec_id" >= 300)
-    Similarity.buildBqIndex(a, "vec_id", "embedding", dir)
-    Similarity.bqAppend(b, "vec_id", "embedding", dir)
+    VectorIndex.build(a, "vec_id", "embedding", dir, Binary)
+    VectorIndex.append(b, "vec_id", "embedding", dir, Binary)
     val oneShot = tmp("bqone") + "/idx"
-    Similarity.buildBqIndex(emb, "vec_id", "embedding", oneShot)
+    VectorIndex.build(emb, "vec_id", "embedding", oneShot, Binary)
     val apRows = spark.read.parquet(dir)
       .select($"id", $"sig".cast("string")).as[(Long, String)]
       .collect().toSet
@@ -120,67 +121,71 @@ class BqIndexSpec extends SparkSpec {
     // indexed == direct probe
     val qs = emb.filter($"vec_id" < 3)
       .select($"vec_id".as("qid"), $"embedding".as("qv"))
-    val indexed = Similarity.bqTopKIndexed(spark, dir, qs, "qid", "qv",
+    val indexed = VectorIndex.probe(spark, dir, qs, "qid", "qv",
       k = 10).as[(Long, Long, Long)].collect().toSet
-    val direct = Similarity.bqTopKBatch(emb, "vec_id", "embedding",
-      qs, "qid", "qv", k = 10).as[(Long, Long, Long)].collect().toSet
+    val direct = VectorIndex.topKBatch(emb, "vec_id", "embedding",
+      qs, "qid", "qv", k = 10, Binary).as[(Long, Long, Long)].collect().toSet
     assert(indexed == direct)
     // delete: immediate exclusion, index untouched
     val victims = indexed.map(_._2).take(3).toSeq
-    Similarity.bqDelete(dir, victims.toDF("vec_id"), "vec_id")
-    val afterDel = Similarity.bqTopKIndexed(spark, dir, qs, "qid",
+    VectorIndex.delete(dir, victims.toDF("vec_id"), "vec_id")
+    val afterDel = VectorIndex.probe(spark, dir, qs, "qid",
       "qv", k = 10).as[(Long, Long, Long)].collect()
     assert(afterDel.forall(r => !victims.contains(r._2)))
     // compact: tombstones clear, probe == fresh build over survivors
-    Similarity.bqCompact(spark, dir)
+    VectorIndex.compact(spark, dir)
     assert(!new java.io.File(s"$dir.tombstones").exists())
-    val compacted = Similarity.bqTopKIndexed(spark, dir, qs, "qid",
+    val compacted = VectorIndex.probe(spark, dir, qs, "qid",
       "qv", k = 10).as[(Long, Long, Long)].collect().toSet
     val fresh = tmp("bqfresh") + "/idx"
-    Similarity.buildBqIndex(
+    VectorIndex.build(
       emb.filter(!$"vec_id".isin(victims: _*)), "vec_id", "embedding",
-      fresh)
-    val freshRes = Similarity.bqTopKIndexed(spark, fresh, qs, "qid",
+      fresh, Binary)
+    val freshRes = VectorIndex.probe(spark, fresh, qs, "qid",
       "qv", k = 10).as[(Long, Long, Long)].collect().toSet
     assert(compacted == freshRes)
     // layout guards: a flat index refuses the batch face and vice versa
     intercept[IllegalArgumentException] {
-      Similarity.bqAppendBatch(b, "vec_id", "embedding", dir, 0L)
+      VectorIndex.appendBatch(b, "vec_id", "embedding", dir, 0L, Binary)
     }
   }
 
   test("bq batch layout: replay-idempotent overwrite; compact folds " +
       "to batch=-1 keeping each id's latest batch; flat append refused") {
-    val dir = tmp("bqbatch") + "/idx"
-    Similarity.bqAppendBatch(emb.filter($"vec_id" < 200), "vec_id",
-      "embedding", dir, batchId = 0L)
-    // a re-embedded id arrives in batch 1 (same ids, the upsert case)
-    Similarity.bqAppendBatch(emb.filter($"vec_id" < 50), "vec_id",
-      "embedding", dir, batchId = 1L)
-    // replay of batch 1 rewrites identical rows — row count stable
-    val before = spark.read.parquet(dir).count()
-    Similarity.bqAppendBatch(emb.filter($"vec_id" < 50), "vec_id",
-      "embedding", dir, batchId = 1L)
-    assert(spark.read.parquet(dir).count() == before)
-    intercept[IllegalArgumentException] {
-      Similarity.bqAppend(emb, "vec_id", "embedding", dir)
+    // the same upsert-healing laws hold for every codec
+    Seq(Binary, Int8, Srp(4)).foreach { codec =>
+      val dir = tmp("batchheal") + "/idx"
+      VectorIndex.appendBatch(emb.filter($"vec_id" < 200), "vec_id",
+        "embedding", dir, batchId = 0L, codec)
+      // a re-embedded id arrives in batch 1 (same ids, the upsert case)
+      VectorIndex.appendBatch(emb.filter($"vec_id" < 50), "vec_id",
+        "embedding", dir, batchId = 1L, codec)
+      // replay of batch 1 rewrites identical rows — row count stable
+      val before = spark.read.parquet(dir).count()
+      VectorIndex.appendBatch(emb.filter($"vec_id" < 50), "vec_id",
+        "embedding", dir, batchId = 1L, codec)
+      assert(spark.read.parquet(dir).count() == before, codec.toString)
+      intercept[IllegalArgumentException] {
+        VectorIndex.append(emb, "vec_id", "embedding", dir, codec)
+      }
+      intercept[IllegalArgumentException] {
+        VectorIndex.appendBatch(emb, "vec_id", "embedding", dir, -1L, codec)
+      }
+      VectorIndex.compact(spark, dir)
+      val dirs = new java.io.File(dir).list().toSet
+        .filter(_.startsWith("batch="))
+      assert(dirs == Set("batch=-1"), s"$codec: $dirs")
+      // upsert healed: every id once
+      val ids = spark.read.parquet(dir).select($"id").as[Long].collect()
+      assert(ids.length == ids.distinct.length && ids.length == 200,
+        codec.toString)
     }
-    intercept[IllegalArgumentException] {
-      Similarity.bqAppendBatch(emb, "vec_id", "embedding", dir, -1L)
-    }
-    Similarity.bqCompact(spark, dir)
-    val dirs = new java.io.File(dir).list().toSet
-      .filter(_.startsWith("batch="))
-    assert(dirs == Set("batch=-1"), dirs.toString)
-    // upsert healed: every id once
-    val ids = spark.read.parquet(dir).select($"id").as[Long].collect()
-    assert(ids.length == ids.distinct.length && ids.length == 200)
   }
 
   test("bqTopKIndexedRerankedBatch at a real pool == the direct " +
       "rerank funnel over the indexed corpus") {
     val dir = tmp("bqrr") + "/idx"
-    Similarity.buildBqIndex(emb, "vec_id", "embedding", dir)
+    VectorIndex.build(emb, "vec_id", "embedding", dir, Binary)
     val qs = emb.filter($"vec_id" < 3)
       .select($"vec_id".as("qid"), $"embedding".as("qv"))
     val indexed = Similarity.bqTopKIndexedRerankedBatch(spark, dir,
@@ -196,12 +201,12 @@ class BqIndexSpec extends SparkSpec {
       "one-shot; delete excludes immediately; batch replay " +
       "idempotent; layout guards") {
     val dir = tmp("i8life") + "/corpus"
-    Similarity.writeInt8Corpus(emb.filter($"vec_id" < 300), "vec_id",
-      "embedding", dir)
-    Similarity.int8Append(emb.filter($"vec_id" >= 300), "vec_id",
-      "embedding", dir)
+    VectorIndex.build(emb.filter($"vec_id" < 300), "vec_id",
+      "embedding", dir, Int8)
+    VectorIndex.append(emb.filter($"vec_id" >= 300), "vec_id",
+      "embedding", dir, Int8)
     val oneShot = tmp("i8one") + "/corpus"
-    Similarity.writeInt8Corpus(emb, "vec_id", "embedding", oneShot)
+    VectorIndex.build(emb, "vec_id", "embedding", oneShot, Int8)
     val a = spark.read.parquet(dir)
       .select($"id", $"q_vec".cast("string")).as[(Long, String)]
       .collect().toSet
@@ -209,30 +214,30 @@ class BqIndexSpec extends SparkSpec {
       .select($"id", $"q_vec".cast("string")).as[(Long, String)]
       .collect().toSet
     assert(a == b, "int8 append must equal the one-shot build")
-    Similarity.int8Delete(dir, Seq(5L, 6L).toDF("vec_id"), "vec_id")
-    val probed = Similarity.int8TopKBatchPrequantized(spark, dir,
+    VectorIndex.delete(dir, Seq(5L, 6L).toDF("vec_id"), "vec_id")
+    val probed = VectorIndex.probe(spark, dir,
         emb.filter($"vec_id" === 5L)
           .select($"vec_id".as("qid"), $"embedding".as("qv")),
         "qid", "qv", k = 100000)
       .select($"id").as[Long].collect().toSet
     assert(!probed.contains(5L) && !probed.contains(6L) &&
       probed.contains(7L))
-    Similarity.int8Compact(spark, dir)
+    VectorIndex.compact(spark, dir)
     assert(!new java.io.File(s"$dir.tombstones").exists())
     assert(spark.read.parquet(dir).count() == 498L)
     intercept[IllegalArgumentException] {
-      Similarity.int8AppendBatch(emb, "vec_id", "embedding", dir, 0L)
+      VectorIndex.appendBatch(emb, "vec_id", "embedding", dir, 0L, Int8)
     }
     // batch face: replay idempotence on a fresh root
     val bdir = tmp("i8batch") + "/corpus"
-    Similarity.int8AppendBatch(emb.filter($"vec_id" < 50), "vec_id",
-      "embedding", bdir, 0L)
+    VectorIndex.appendBatch(emb.filter($"vec_id" < 50), "vec_id",
+      "embedding", bdir, 0L, Int8)
     val n0 = spark.read.parquet(bdir).count()
-    Similarity.int8AppendBatch(emb.filter($"vec_id" < 50), "vec_id",
-      "embedding", bdir, 0L)
+    VectorIndex.appendBatch(emb.filter($"vec_id" < 50), "vec_id",
+      "embedding", bdir, 0L, Int8)
     assert(spark.read.parquet(bdir).count() == n0)
     intercept[IllegalArgumentException] {
-      Similarity.int8Append(emb, "vec_id", "embedding", bdir)
+      VectorIndex.append(emb, "vec_id", "embedding", bdir, Int8)
     }
   }
 
@@ -270,12 +275,11 @@ class BqIndexSpec extends SparkSpec {
     val dir = tmp("srplife") + "/idx"
     val a = emb.filter($"vec_id" < 300)
     val b = emb.filter($"vec_id" >= 300)
-    Similarity.buildSrpIndex(a, "vec_id", "embedding", dir, nBits = 4)
-    assert(Similarity.readSrpNBits(spark, dir) == 4)
-    Similarity.srpAppend(b, "vec_id", "embedding", dir)
+    VectorIndex.build(a, "vec_id", "embedding", dir, Srp(4))
+    assert(VectorIndex.srpBits(spark, dir) == 4)
+    VectorIndex.append(b, "vec_id", "embedding", dir, Srp(4))
     val oneShot = tmp("srpone") + "/idx"
-    Similarity.buildSrpIndex(emb, "vec_id", "embedding", oneShot,
-      nBits = 4)
+    VectorIndex.build(emb, "vec_id", "embedding", oneShot, Srp(4))
     val apRows = spark.read.parquet(dir)
       .select($"id", $"cell").as[(Long, Long)].collect().toSet
     val osRows = spark.read.parquet(oneShot)
@@ -284,10 +288,10 @@ class BqIndexSpec extends SparkSpec {
     // indexed == direct batch at the SAME nBits (read from the meta)
     val qs = emb.filter($"vec_id" < 3)
       .select($"vec_id".as("qid"), $"embedding".as("qv"))
-    val indexed = Similarity.srpTopKIndexed(spark, dir, qs, "qid",
+    val indexed = VectorIndex.probe(spark, dir, qs, "qid",
       "qv", k = 10).as[(Long, Long, Double)].collect().toSet
-    val direct = Similarity.srpTopKBatch(emb, "vec_id", "embedding",
-        qs, "qid", "qv", k = 10, nBits = 4)
+    val direct = VectorIndex.topKBatch(emb, "vec_id", "embedding",
+        qs, "qid", "qv", k = 10, Srp(4))
       .as[(Long, Long, Double)].collect().toSet
     assert(indexed == direct)
     // neighbor pairs at rest == direct at the index's nBits
@@ -298,70 +302,69 @@ class BqIndexSpec extends SparkSpec {
     assert(pIdx == pDir)
     // delete excludes immediately; compact == fresh build over survivors
     val victims = indexed.map(_._2).take(3).toSeq
-    Similarity.srpDelete(dir, victims.toDF("vec_id"), "vec_id")
-    val afterDel = Similarity.srpTopKIndexed(spark, dir, qs, "qid",
+    VectorIndex.delete(dir, victims.toDF("vec_id"), "vec_id")
+    val afterDel = VectorIndex.probe(spark, dir, qs, "qid",
       "qv", k = 10).as[(Long, Long, Double)].collect()
     assert(afterDel.forall(r => !victims.contains(r._2)))
-    Similarity.srpCompact(spark, dir)
+    VectorIndex.compact(spark, dir)
     assert(!new java.io.File(s"$dir.tombstones").exists())
-    assert(Similarity.readSrpNBits(spark, dir) == 4,
+    assert(VectorIndex.srpBits(spark, dir) == 4,
       "compact must not touch the metadata sidecar")
-    val compacted = Similarity.srpTopKIndexed(spark, dir, qs, "qid",
+    val compacted = VectorIndex.probe(spark, dir, qs, "qid",
       "qv", k = 10).as[(Long, Long, Double)].collect().toSet
     val fresh = tmp("srpfresh") + "/idx"
-    Similarity.buildSrpIndex(
+    VectorIndex.build(
       emb.filter(!$"vec_id".isin(victims: _*)), "vec_id", "embedding",
-      fresh, nBits = 4)
-    assert(Similarity.srpTopKIndexed(spark, fresh, qs, "qid", "qv",
+      fresh, Srp(4))
+    assert(VectorIndex.probe(spark, fresh, qs, "qid", "qv",
       k = 10).as[(Long, Long, Double)].collect().toSet == compacted)
     // a root with no .srpmeta refuses loudly (probe AND append)
     val bare = tmp("srpbare") + "/idx"
     emb.limit(1).select($"vec_id".as("id"), lit(0L).as("cell"),
       $"embedding".as("v")).write.parquet(bare)
     interceptGuard("no SRP index metadata") {
-      Similarity.srpTopKIndexed(spark, bare, qs, "qid", "qv", k = 3)
+      VectorIndex.probe(spark, bare, qs, "qid", "qv", k = 3)
     }
     interceptGuard("no SRP index metadata") {
-      Similarity.srpAppend(emb.limit(1), "vec_id", "embedding", bare)
+      VectorIndex.append(emb.limit(1), "vec_id", "embedding", bare, Srp(4))
     }
-    // initSrpIndex is ensure-never-overwrite: idempotent at the same
-    // nBits, LOUD at a different one (a silent meta flip would strand
-    // the existing rows in unreachable buckets)
-    Similarity.initSrpIndex(spark, dir, nBits = 4)
+    // the SRP width is ensure-never-overwrite: an append at the same
+    // nBits proceeds, one at a different nBits is LOUD (a silent meta
+    // flip would strand the existing rows in unreachable buckets)
+    VectorIndex.append(emb.limit(0), "vec_id", "embedding", dir, Srp(4))
     interceptGuard("refusing to flip") {
-      Similarity.initSrpIndex(spark, dir, nBits = 8)
+      VectorIndex.append(emb.limit(1), "vec_id", "embedding", dir, Srp(8))
     }
-    assert(Similarity.readSrpNBits(spark, dir) == 4)
+    assert(VectorIndex.srpBits(spark, dir) == 4)
   }
 
   test("srp index: batch layout replays idempotently; filtered " +
       "probe runs pre-top-k; layout guards") {
     val dir = tmp("srpbatch") + "/idx"
-    Similarity.initSrpIndex(spark, dir, nBits = 4)
-    Similarity.srpAppendBatch(emb.filter($"vec_id" < 200), "vec_id",
-      "embedding", dir, batchId = 0L)
+    VectorIndex.appendBatch(emb.filter($"vec_id" < 200), "vec_id",
+      "embedding", dir, batchId = 0L, Srp(4))
     val n0 = spark.read.parquet(dir).count()
-    Similarity.srpAppendBatch(emb.filter($"vec_id" < 200), "vec_id",
-      "embedding", dir, batchId = 0L)
+    VectorIndex.appendBatch(emb.filter($"vec_id" < 200), "vec_id",
+      "embedding", dir, batchId = 0L, Srp(4))
     assert(spark.read.parquet(dir).count() == n0)
     intercept[IllegalArgumentException] {
-      Similarity.srpAppend(emb, "vec_id", "embedding", dir)
+      VectorIndex.append(emb, "vec_id", "embedding", dir, Srp(4))
     }
     // filtered face: predicate before the per-query top-k
     val fdir = tmp("srpfilt") + "/idx"
     val corpus = Tables.embeddings(spark, sfDir)
       .select($"vec_id", $"embedding", $"label")
-    Similarity.buildSrpIndex(corpus, "vec_id", "embedding", fdir,
-      nBits = 2, extraCols = Seq("label"))
+    VectorIndex.build(corpus, "vec_id", "embedding", fdir,
+      Srp(2), extraCols = Seq("label"))
     val qs = corpus.filter($"vec_id" < 2)
       .select($"vec_id".as("qid"), $"embedding".as("qv"))
     val lbl = corpus.select($"vec_id", $"label")
       .as[(Long, Int)].collect().toMap
-    val got = Similarity.srpTopKIndexedFiltered(spark, fdir, qs,
-        "qid", "qv", k = 5, $"label" === 1)
+    val got = VectorIndex.probe(spark, fdir, qs,
+        "qid", "qv", k = 5, Some($"label" === 1))
       .as[(Long, Long, Double)].collect()
     assert(got.nonEmpty && got.forall(r => lbl(r._2) == 1))
-    val deep = Similarity.srpTopKIndexed(spark, fdir, qs, "qid", "qv",
+    val deep = VectorIndex.probe(spark, fdir, qs, "qid", "qv",
         k = 100000)
       .as[(Long, Long, Double)].collect()
       .filter(r => lbl(r._2) == 1)
@@ -378,8 +381,8 @@ class BqIndexSpec extends SparkSpec {
     val qs = emb.filter($"vec_id" < 3)
       .select($"vec_id".as("qid"), $"embedding".as("qv"))
     // a deep Hamming ranking covers the corpus → every exact id hits
-    val full = Similarity.bqTopKBatch(emb, "vec_id", "embedding", qs,
-      "qid", "qv", k = 100000)
+    val full = VectorIndex.topKBatch(emb, "vec_id", "embedding", qs,
+      "qid", "qv", k = 100000, Binary)
     val rFull = Similarity.annRecallReport(emb, "vec_id", "embedding",
         qs, "qid", "qv", full, "qid", "id", k = 10)
       .as[(Long, Long, Long, Double)].collect()
@@ -390,8 +393,8 @@ class BqIndexSpec extends SparkSpec {
       .as[(Long, Long, Long, Double)].collect()
     assert(rNone.length == 3 && rNone.forall(_._4 == 0.0))
     // an approximate tier lands in [0, 1] with the right row count
-    val srp = Similarity.srpTopKBatch(emb, "vec_id", "embedding", qs,
-      "qid", "qv", k = 10, nBits = 8)
+    val srp = VectorIndex.topKBatch(emb, "vec_id", "embedding", qs,
+      "qid", "qv", k = 10, Srp(8))
     val rSrp = Similarity.annRecallReport(emb, "vec_id", "embedding",
         qs, "qid", "qv", srp, "qid", "id", k = 10)
       .as[(Long, Long, Long, Double)].collect()
@@ -409,18 +412,18 @@ class BqIndexSpec extends SparkSpec {
       .select($"vec_id".as("qid"), $"embedding".as("qv"))
     val lbl = corpus.select($"vec_id", $"label")
       .as[(Long, Int)].collect().toMap
-    graft.streaming.EventStreams.bqIndexAvailableNow(spark,
+    graft.streaming.EventStreams.vectorIndexAvailableNow(spark,
       s"$root/src", "vec_id", $"embedding", s"$root/bq",
-      s"$root/ckbq", extraCols = Seq("label"))
-    val bq = Similarity.bqTopKIndexedFiltered(spark, s"$root/bq", qs,
-        "qid", "qv", k = 5, $"label" === 1)
+      s"$root/ckbq", Binary, extraCols = Seq("label"))
+    val bq = VectorIndex.probe(spark, s"$root/bq", qs,
+        "qid", "qv", k = 5, Some($"label" === 1))
       .as[(Long, Long, Long)].collect()
     assert(bq.nonEmpty && bq.forall(r => lbl(r._2) == 1))
-    graft.streaming.EventStreams.srpIndexAvailableNow(spark,
+    graft.streaming.EventStreams.vectorIndexAvailableNow(spark,
       s"$root/src", "vec_id", $"embedding", s"$root/srp",
-      s"$root/cksrp", nBits = 2, extraCols = Seq("label"))
-    val srp = Similarity.srpTopKIndexedFiltered(spark, s"$root/srp",
-        qs, "qid", "qv", k = 5, $"label" === 1)
+      s"$root/cksrp", Srp(2), extraCols = Seq("label"))
+    val srp = VectorIndex.probe(spark, s"$root/srp",
+        qs, "qid", "qv", k = 5, Some($"label" === 1))
       .as[(Long, Long, Double)].collect()
     assert(srp.nonEmpty && srp.forall(r => lbl(r._2) == 1))
     // the IVF and IVF-PQ tiers too (r18 review: the first pass missed
@@ -452,42 +455,47 @@ class BqIndexSpec extends SparkSpec {
     val corpus = Tables.embeddings(spark, sfDir)
       .select($"vec_id", $"embedding", $"label")
     val dir = tmp("bqmismatch") + "/idx"
-    Similarity.buildBqIndex(corpus.filter($"vec_id" < 100), "vec_id",
-      "embedding", dir, extraCols = Seq("label"))
+    VectorIndex.build(corpus.filter($"vec_id" < 100), "vec_id",
+      "embedding", dir, Binary, extraCols = Seq("label"))
     // appending WITHOUT the metadata column refuses loudly
     interceptGuard("extraCols must match") {
-      Similarity.bqAppend(corpus.filter($"vec_id" >= 100), "vec_id",
-        "embedding", dir)
+      VectorIndex.append(corpus.filter($"vec_id" >= 100), "vec_id",
+        "embedding", dir, Binary)
     }
     // and with it, proceeds
-    Similarity.bqAppend(corpus.filter($"vec_id" >= 100), "vec_id",
-      "embedding", dir, extraCols = Seq("label"))
+    VectorIndex.append(corpus.filter($"vec_id" >= 100), "vec_id",
+      "embedding", dir, Binary, extraCols = Seq("label"))
     assert(spark.read.parquet(dir).count() == 500L)
+    // a codec that disagrees with the persisted rows names the path,
+    // the persisted codec and the requested one
+    interceptGuard(dir, "holds Binary rows", "refusing to flip it to Int8") {
+      VectorIndex.append(corpus.filter($"vec_id" >= 100), "vec_id",
+        "embedding", dir, Int8, extraCols = Seq("label"))
+    }
     // the batch face too, on the srp layout
     val sdir = tmp("srpmismatch") + "/idx"
-    Similarity.initSrpIndex(spark, sdir, nBits = 2)
-    Similarity.srpAppendBatch(corpus.filter($"vec_id" < 50), "vec_id",
-      "embedding", sdir, 0L, extraCols = Seq("label"))
+    VectorIndex.appendBatch(corpus.filter($"vec_id" < 50), "vec_id",
+      "embedding", sdir, 0L, Srp(2), extraCols = Seq("label"))
     interceptGuard("extraCols must match") {
-      Similarity.srpAppendBatch(corpus.filter($"vec_id" >= 50),
-        "vec_id", "embedding", sdir, 1L)
+      VectorIndex.appendBatch(corpus.filter($"vec_id" >= 50),
+        "vec_id", "embedding", sdir, 1L, Srp(2))
     }
     // a REPLAY of the same batch with the same columns still passes
-    Similarity.srpAppendBatch(corpus.filter($"vec_id" < 50), "vec_id",
-      "embedding", sdir, 0L, extraCols = Seq("label"))
+    VectorIndex.appendBatch(corpus.filter($"vec_id" < 50), "vec_id",
+      "embedding", sdir, 0L, Srp(2), extraCols = Seq("label"))
   }
 
-  test("guards name the invoked face: bqTopKIndexedFiltered and the " +
+  test("guards name the invoked face: VectorIndex.probe and the " +
       "matryoshka batch faces reject queryIdCol=\"id\" under their " +
       "own names (r17 advice)") {
     val dir = tmp("bqface") + "/idx"
-    Similarity.buildBqIndex(emb.filter($"vec_id" < 20), "vec_id",
-      "embedding", dir)
+    VectorIndex.build(emb.filter($"vec_id" < 20), "vec_id",
+      "embedding", dir, Binary)
     val badQs = emb.filter($"vec_id" < 2)
       .select($"vec_id".as("id"), $"embedding".as("qv"))
-    interceptGuard("bqTopKIndexedFiltered") {
-      Similarity.bqTopKIndexedFiltered(spark, dir, badQs, "id", "qv",
-        k = 3, lit(true))
+    interceptGuard("VectorIndex.probe") {
+      VectorIndex.probe(spark, dir, badQs, "id", "qv",
+        k = 3, Some(lit(true)))
     }
     interceptGuard("matryoshkaTopKBatch") {
       Similarity.matryoshkaTopKBatch(emb, "vec_id", "embedding",
@@ -499,24 +507,24 @@ class BqIndexSpec extends SparkSpec {
     }
   }
 
-  test("int8TopKBatchPrequantizedFiltered: predicate on the " +
+  test("int8 probe with a predicate: predicate on the " +
       "4x-compressed scan, before top-k; post-filtering a truncated " +
       "ranking demonstrably loses rows (r17 verdict #3)") {
     val dir = tmp("i8filt") + "/corpus"
     val corpus = Tables.embeddings(spark, sfDir)
       .select($"vec_id", $"embedding", $"label")
-    Similarity.writeInt8Corpus(corpus, "vec_id", "embedding", dir,
+    VectorIndex.build(corpus, "vec_id", "embedding", dir, Int8,
       extraCols = Seq("label"))
     val qs = corpus.filter($"vec_id" < 2)
       .select($"vec_id".as("qid"), $"embedding".as("qv"))
     val lbl = corpus.select($"vec_id", $"label")
       .as[(Long, Int)].collect().toMap
-    val got = Similarity.int8TopKBatchPrequantizedFiltered(spark, dir,
-        qs, "qid", "qv", k = 5, $"label" === 1)
+    val got = VectorIndex.probe(spark, dir,
+        qs, "qid", "qv", k = 5, Some($"label" === 1))
       .as[(Long, Long, Double)].collect()
     assert(got.nonEmpty && got.forall(r => lbl(r._2) == 1))
     // equals the direct ranking post-filtered BEFORE truncation
-    val deep = Similarity.int8TopKBatchPrequantized(spark, dir, qs,
+    val deep = VectorIndex.probe(spark, dir, qs,
         "qid", "qv", k = 100000)
       .as[(Long, Long, Double)].collect()
       .filter(r => lbl(r._2) == 1)
@@ -527,38 +535,38 @@ class BqIndexSpec extends SparkSpec {
     }
     // the failure mode the filtered face prevents: filtering an
     // already-truncated top-5 keeps fewer rows
-    val post = Similarity.int8TopKBatchPrequantized(spark, dir, qs,
+    val post = VectorIndex.probe(spark, dir, qs,
         "qid", "qv", k = 5)
       .as[(Long, Long, Double)].collect().count(r => lbl(r._2) == 1)
     assert(post < got.length,
       s"post-filter kept $post; pre-filter ${got.length}")
     // extras ride appends too (the lifecycle carries the metadata)
-    Similarity.int8Append(
+    VectorIndex.append(
       corpus.filter($"vec_id" === 0L)
         .select(($"vec_id" + 5000000L).as("vec_id"), $"embedding",
           $"label"),
-      "vec_id", "embedding", dir, extraCols = Seq("label"))
+      "vec_id", "embedding", dir, Int8, extraCols = Seq("label"))
     val cols = spark.read.parquet(dir).columns.toSet
     assert(cols == Set("id", "q_vec", "label"))
   }
 
-  test("bqTopKIndexedFiltered: predicate on the compressed scan, " +
+  test("binary probe with a predicate: predicate on the compressed scan, " +
       "before top-k") {
     val dir = tmp("bqfilt") + "/idx"
     val corpus = Tables.embeddings(spark, sfDir)
       .select($"vec_id", $"embedding", $"label")
-    Similarity.buildBqIndex(corpus, "vec_id", "embedding", dir,
+    VectorIndex.build(corpus, "vec_id", "embedding", dir, Binary,
       extraCols = Seq("label"))
     val qs = corpus.filter($"vec_id" < 2)
       .select($"vec_id".as("qid"), $"embedding".as("qv"))
     val lbl = corpus.select($"vec_id", $"label")
       .as[(Long, Int)].collect().toMap
-    val got = Similarity.bqTopKIndexedFiltered(spark, dir, qs, "qid",
-        "qv", k = 5, $"label" === 1)
+    val got = VectorIndex.probe(spark, dir, qs, "qid",
+        "qv", k = 5, Some($"label" === 1))
       .as[(Long, Long, Long)].collect()
     assert(got.nonEmpty && got.forall(r => lbl(r._2) == 1))
     // equals the direct ranking post-filtered BEFORE truncation
-    val deep = Similarity.bqTopKIndexed(spark, dir, qs, "qid", "qv",
+    val deep = VectorIndex.probe(spark, dir, qs, "qid", "qv",
         k = 100000)
       .as[(Long, Long, Long)].collect()
       .filter(r => lbl(r._2) == 1)

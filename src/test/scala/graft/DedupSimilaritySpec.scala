@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Dedup, Similarity, VectorCodec, VectorIndex}
 
 class DedupSimilaritySpec extends SparkSpec {
   import spark.implicits._
@@ -314,7 +314,7 @@ class DedupSimilaritySpec extends SparkSpec {
       .toString + "/corpus"
     try {
       val emb = Tables.embeddings(spark, sfDir)
-      Similarity.writeInt8Corpus(emb, "vec_id", "embedding", dir)
+      VectorIndex.build(emb, "vec_id", "embedding", dir, VectorCodec.Int8)
       val atRest = Similarity.int8TopKPrequantized(spark, dir, 3L, 15)
         .as[(Long, Double)].collect().toSeq
       val onTheFly = Similarity.int8TopK(emb, "vec_id", "embedding", 3L, 15)
@@ -1506,8 +1506,8 @@ class DedupSimilaritySpec extends SparkSpec {
         .select(($"vec_id" + 1000000L).as("vec_id"), $"embedding"))
     val queries = planted.filter($"vec_id" < 4)
       .select($"vec_id".as("qid"), $"embedding".as("qv"))
-    val batch = Similarity.bqTopKBatch(planted, "vec_id", "embedding",
-        queries, "qid", "qv", k = 8)
+    val batch = VectorIndex.topKBatch(planted, "vec_id", "embedding",
+        queries, "qid", "qv", k = 8, VectorCodec.Binary)
       .as[(Long, Long, Long)].collect()
       .groupBy(_._1).view
       .mapValues(_.map(r => (r._2, r._3))
@@ -1540,13 +1540,13 @@ class DedupSimilaritySpec extends SparkSpec {
       assert(small(qid) == (qid + 1000000L, 1.0d), small(qid).toString)
     }
     intercept[IllegalArgumentException] {
-      Similarity.bqTopKBatch(planted, "vec_id", "embedding", queries,
-        "qid", "qv", k = 0)
+      VectorIndex.topKBatch(planted, "vec_id", "embedding", queries,
+        "qid", "qv", k = 0, VectorCodec.Binary)
     }
     // plan shape: query signatures ride a broadcast and the per-query
     // cap compiles to WindowGroupLimit (per-partition k-heaps)
-    val plan = Similarity.bqTopKBatch(planted, "vec_id", "embedding",
-        queries, "qid", "qv", k = 8)
+    val plan = VectorIndex.topKBatch(planted, "vec_id", "embedding",
+        queries, "qid", "qv", k = 8, VectorCodec.Binary)
       .queryExecution.executedPlan.toString
     assert(plan.contains("Broadcast"), plan.take(600))
     assert(plan.contains("WindowGroupLimit"), plan.take(600))
@@ -1626,7 +1626,7 @@ class DedupSimilaritySpec extends SparkSpec {
       e("exact_dup_frac") == 0.0, e.toString)
   }
 
-  test("int8TopKBatch == per-query int8TopK") {
+  test("topKBatch(Int8) == per-query int8TopK") {
     val emb = Tables.embeddings(spark, sfDir)
       .select($"vec_id", $"embedding")
     val planted = emb.unionByName(
@@ -1634,8 +1634,8 @@ class DedupSimilaritySpec extends SparkSpec {
         .select(($"vec_id" + 1000000L).as("vec_id"), $"embedding"))
     val queries = planted.filter($"vec_id" < 3)
       .select($"vec_id".as("qid"), $"embedding".as("qv"))
-    val batch = Similarity.int8TopKBatch(planted, "vec_id",
-        "embedding", queries, "qid", "qv", k = 8)
+    val batch = VectorIndex.topKBatch(planted, "vec_id",
+        "embedding", queries, "qid", "qv", k = 8, VectorCodec.Int8)
       .as[(Long, Long, Double)].collect()
       .groupBy(_._1).view
       .mapValues(_.map(r => (r._2, r._3))
@@ -1648,8 +1648,8 @@ class DedupSimilaritySpec extends SparkSpec {
       assert(perq.head == (qid + 1000000L, 1.0d), perq.head.toString)
     }
     intercept[IllegalArgumentException] {
-      Similarity.int8TopKBatch(planted, "vec_id", "embedding",
-        queries, "qid", "qv", k = 0)
+      VectorIndex.topKBatch(planted, "vec_id", "embedding",
+        queries, "qid", "qv", k = 0, VectorCodec.Int8)
     }
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.{CorpusOps, Similarity}
+import graft.operators.{CorpusOps, Similarity, VectorCodec, VectorIndex}
 
 /** Filtered retrieval across the lexical, hybrid and composed-ANN
   * tiers (r16 verdict #1/#4): predicates run INSIDE each probe,
@@ -324,14 +324,14 @@ class FilteredRetrievalSpec extends SparkSpec {
       s"only finite-relevance candidates may rank: ${out.mkString(",")}")
   }
 
-  test("srpTopKBatch == per-query srpTopK (the LSH-bucketed tier's " +
+  test("topKBatch(Srp) == per-query srpTopK (the LSH-bucketed tier's " +
       "batch face)") {
     val emb = Tables.embeddings(spark, sfDir)
       .select($"vec_id", $"embedding")
     val qs = emb.filter($"vec_id" < 4)
       .select($"vec_id".as("qid"), $"embedding".as("qv"))
-    val batch = Similarity.srpTopKBatch(emb, "vec_id", "embedding",
-        qs, "qid", "qv", k = 10, nBits = 4)
+    val batch = VectorIndex.topKBatch(emb, "vec_id", "embedding",
+        qs, "qid", "qv", k = 10, VectorCodec.Srp(4))
       .as[(Long, Long, Double)].collect()
       .groupBy(_._1).view
       .mapValues(_.map(r => (r._2, r._3)).sortBy(r => (-r._2, r._1))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
-import graft.operators.{CorpusOps, Similarity}
+import graft.operators.{CorpusOps, Similarity, VectorCodec, VectorIndex}
 
 /** Index-maintenance contracts added in r17: the late-arrival folds
   * of the versioned publish paths (r16 advice, medium), the
@@ -321,8 +321,8 @@ class MaintenanceSpec extends SparkSpec {
     assert(mb(("bm25", "batch", "n_docs")).contains(50.0))
     // signature index
     val bq = s"$root/bq"
-    Similarity.buildBqIndex(emb, "vec_id", "embedding", bq)
-    Similarity.bqDelete(bq, Seq(3L).toDF("vec_id"), "vec_id")
+    VectorIndex.build(emb, "vec_id", "embedding", bq, VectorCodec.Binary)
+    VectorIndex.delete(bq, Seq(3L).toDF("vec_id"), "vec_id")
     val mq = metrics(bq)
     assert(mq(("bq", "flat", "n_vecs")).contains(500.0))
     assert(mq(("bq", "flat", "n_tombstones")).contains(1.0))
@@ -336,8 +336,8 @@ class MaintenanceSpec extends SparkSpec {
     assert(mq(("bq", "flat", "n_batches")).contains(0.0))
     // the int8 layout (q_vec array<tinyint>) is detected, not an error
     val i8 = s"$root/int8"
-    Similarity.writeInt8Corpus(emb, "vec_id", "embedding", i8)
-    Similarity.int8Delete(i8, Seq(9L).toDF("vec_id"), "vec_id")
+    VectorIndex.build(emb, "vec_id", "embedding", i8, VectorCodec.Int8)
+    VectorIndex.delete(i8, Seq(9L).toDF("vec_id"), "vec_id")
     val m8 = metrics(i8)
     assert(m8(("int8", "flat", "n_vecs")).contains(500.0))
     assert(m8(("int8", "flat", "n_tombstones")).contains(1.0))
@@ -353,8 +353,8 @@ class MaintenanceSpec extends SparkSpec {
     // SRP index (detected by the .srpmeta sidecar — BEFORE the raw
     // vector-table fallback, which would misread (id, cell, v))
     val srp = s"$root/srp"
-    Similarity.buildSrpIndex(emb, "vec_id", "embedding", srp, nBits = 4)
-    Similarity.srpDelete(srp, Seq(2L).toDF("vec_id"), "vec_id")
+    VectorIndex.build(emb, "vec_id", "embedding", srp, VectorCodec.Srp(4))
+    VectorIndex.delete(srp, Seq(2L).toDF("vec_id"), "vec_id")
     val ms = metrics(srp)
     assert(ms(("srp", "flat", "n_vecs")).contains(500.0))
     assert(ms(("srp", "flat", "n_bits")).contains(4.0))
