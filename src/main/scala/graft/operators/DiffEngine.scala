@@ -82,14 +82,21 @@ object DiffEngine {
     * @param newDf new quarter (probe side)
     * @param key   join key column name, present in both
     * @param ord   ordering column in oldDf defining "last" for dedup
+    * @param passThrough a newDf column carried, unchanged, onto each of
+    *              its row's output rows as the last column (for example
+    *              the sheet row the new-side row came from); None keeps
+    *              the plan and the columns as they are
     */
   def diff(oldDf: DataFrame, newDf: DataFrame, key: String, ord: String,
-           compareCols: Seq[String]): DataFrame = {
+           compareCols: Seq[String],
+           passThrough: Option[String] = None): DataFrame = {
     val old = keepLast(oldDf, key, ord)
       .select(col(key).as("__k") +: compareCols.map(c => toStr(col(c)).as(s"__old_$c")): _*)
+    val carried = passThrough.map(col).toSeq
     val neu = newDf
       .filter(length(trim(col(key))) > 0)
-      .select(col(key).as("__k") +: compareCols.map(c => toStr(col(c)).as(s"__new_$c")): _*)
+      .select((col(key).as("__k") +: carried) ++
+        compareCols.map(c => toStr(col(c)).as(s"__new_$c")): _*)
 
     val joined = neu.join(old, Seq("__k"), "left_outer")
       .withColumn("__is_new", col(s"__old_${compareCols.head}").isNull &&
@@ -106,11 +113,12 @@ object DiffEngine {
           col("__is_new")).as("status"))
     }
     joined
-      .select(col("__k").as("key"), explode(array(cells: _*)).as("cell"))
-      .select(col("key"), col("cell.column").as("column"),
+      .select((col("__k").as("key") +: carried) :+
+        explode(array(cells: _*)).as("cell"): _*)
+      .select(Seq(col("key"), col("cell.column").as("column"),
         col("cell.old_value").as("old_value"),
         col("cell.new_value").as("new_value"),
-        col("cell.status").as("status"))
+        col("cell.status").as("status")) ++ carried: _*)
   }
 
   /** [[diff]] as a typed Dataset. Requires a string-typed key (cast

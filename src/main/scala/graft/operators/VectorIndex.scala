@@ -93,21 +93,27 @@ object VectorCodec {
   * a probe or an append can never disagree with the build. */
 object VectorIndex {
 
-  /** Encode `df` once and write it at `path`, replacing what was there.
-    * SRP writes its width first and clusters the rows by cell (parquet
-    * min/max stats then skip row groups on single-cell probes). */
+  /** Encode `df` once and write it at `path`, replacing what was there,
+    * tombstones included (a delete of the old rows must not hide the
+    * new ones). SRP writes its width first and clusters the rows by cell
+    * (parquet min/max stats then skip row groups on single-cell
+    * probes). */
   def build(df: DataFrame, idCol: String, vecCol: String, path: String,
             codec: VectorCodec, extraCols: Seq[String] = Nil): Unit = {
     val spark = df.sparkSession
     val rows = codec.rows(df, idCol, vecCol, extraCols)
+    def remove(p: String): Unit = {
+      val hp = new org.apache.hadoop.fs.Path(p)
+      hp.getFileSystem(spark.sessionState.newHadoopConf()).delete(hp, true)
+    }
+    remove(s"$path.tombstones")
     codec match {
       case VectorCodec.Srp(nBits) =>
         writeSrpMeta(spark, path, nBits)
         rows.repartition(col("cell")).write.mode("overwrite").parquet(path)
       case _ =>
         // a root rebuilt under another codec must not keep an SRP width
-        val meta = new org.apache.hadoop.fs.Path(metaPath(path))
-        meta.getFileSystem(spark.sessionState.newHadoopConf()).delete(meta, true)
+        remove(metaPath(path))
         rows.write.mode("overwrite").parquet(path)
     }
   }

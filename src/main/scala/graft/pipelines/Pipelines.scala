@@ -33,7 +33,8 @@ object Pipelines {
       .withColumn("acctbal_pct",                      // S3 analog
         percent(col("c_acctbal") / lit(10000.0)))
       .drop("c_acctbal")
-      .orderBy(col("o_orderkey"))                     // O2 explicit order
+      // O2 explicit order, sorted inside the sink's one partition
+      .repartition(1).sortWithinPartitions(col("o_orderkey"))
 
     val out = templatePath match {
       case Some(t) => ExcelSink.cloneTemplate(t, outDir, segment, runDate) // SNK1
@@ -53,23 +54,28 @@ object Pipelines {
     Seq("BUILDING", "AUTOMOBILE", "MACHINERY", "HOUSEHOLD", "FURNITURE")
 
   /** Upload.py (SURVEY.md §3.2): read once -> filter (one segment |
-    * ALL) -> empty guard -> header-matched write in declaration order.
-    * Returns (outPath, rowsWritten). */
+    * ALL) -> header-matched write in declaration order -> empty guard.
+    * The guard reads the written row count, so it costs no job of its
+    * own; an empty segment leaves no workbook behind. Returns (outPath,
+    * rowsWritten). */
   def upload(spark: SparkSession, sfDir: String, segment: String,
              templatePath: String, outDir: String,
              runDate: LocalDate): (String, Long) = {
     val source = Tables.customer(spark, sfDir)        // read once (Upload.py:123)
+    // sorted inside the sink's one partition (see ExcelSink)
     val filtered =
       if (segment == "ALL")
         source.filter(col("c_mktsegment").isin(SegmentOrder: _*))  // F2
-          .orderBy(array_position(typedLit(SegmentOrder),          // O1
+          .repartition(1)
+          .sortWithinPartitions(array_position(typedLit(SegmentOrder), // O1
             col("c_mktsegment")), col("c_custkey"))
       else source.filter(col("c_mktsegment") === segment)          // F1
-        .orderBy(col("c_custkey"))
-    require(!filtered.isEmpty, s"no rows for segment $segment")    // F4
+        .repartition(1).sortWithinPartitions(col("c_custkey"))
     val out = ExcelSink.cloneTemplate(templatePath, outDir, segment, runDate)
     val n = ExcelSink.writeHeaderMatched(filtered, templatePath, out,
       headerRow = 5, startRow = 6)                    // Upload.py:157-158
+    if (n == 0) java.nio.file.Files.delete(java.nio.file.Paths.get(out))
+    require(n > 0, s"no rows for segment $segment")                // F4
     (out, n)
   }
 
@@ -78,13 +84,22 @@ object Pipelines {
     * result with word-diff runs for selected columns. */
   def compare(spark: SparkSession, q1Path: String, q2Path: String,
               keyCol: String, compareCols: Seq[String],
-              wordDiffCols: Set[String] = Set.empty): DataFrame = {
-    def readAllString(p: String): DataFrame =         // SRC2
-      spark.read.format("xlsx").option("headerRow", "1").load(p)
-    val q1 = readAllString(q1Path)
+              wordDiffCols: Set[String] = Set.empty): DataFrame =
+    diffOf(spark, q1Path, q2Path, keyCol, compareCols, wordDiffCols, None)
+
+  /** [[compare]]; with `sheetRow`, each diff row also carries, in a
+    * column of that name, the Q2 sheet row it came from. */
+  private def diffOf(spark: SparkSession, q1Path: String, q2Path: String,
+                     keyCol: String, compareCols: Seq[String],
+                     wordDiffCols: Set[String], sheetRow: Option[String]): DataFrame = {
+    def readAllString(p: String, rowCol: Option[String]): DataFrame = { // SRC2
+      val r = spark.read.format("xlsx").option("headerRow", "1")
+      rowCol.fold(r)(r.option("rowNumberColumn", _)).load(p)
+    }
+    val q1 = readAllString(q1Path, None)
       .withColumn("__ord", monotonically_increasing_id()) // explicit order
-    val q2 = readAllString(q2Path)
-    val diff = DiffEngine.diff(q1, q2, keyCol, "__ord", compareCols)
+    val q2 = readAllString(q2Path, sheetRow)
+    val diff = DiffEngine.diff(q1, q2, keyCol, "__ord", compareCols, sheetRow)
     if (wordDiffCols.isEmpty) diff
     else diff.withColumn("word_runs",
       when(col("column").isin(wordDiffCols.toSeq: _*) &&
@@ -94,14 +109,18 @@ object Pipelines {
 
   /** Compare + SNK5 presentation: also emits the styled
     * `<q2> (change highlighted).xlsx` copy (CHANGED blue, CLEARED pink,
-    * NEW whole-row yellow — reference Compare.py:212-220). */
+    * NEW whole-row yellow — reference Compare.py:212-220). The diff
+    * carries each row's Q2 sheet row into the sink, so the marks land on
+    * the row the diff probed and Q2 is parsed once, by the scan; the
+    * returned diff has [[compare]]'s columns. */
   def compareAndHighlight(spark: SparkSession, q1Path: String, q2Path: String,
                           keyCol: String, compareCols: Seq[String],
                           wordDiffCols: Set[String] = Set.empty)
       : (DataFrame, String) = {
-    val diff = compare(spark, q1Path, q2Path, keyCol, compareCols, wordDiffCols)
+    val diff = diffOf(spark, q1Path, q2Path, keyCol, compareCols, wordDiffCols,
+      Some(ExcelSink.SheetRowColumn))
     val highlighted = ExcelSink.writeHighlighted(
       q2Path, diff.filter(col("status") =!= "UNCHANGED"), keyCol)
-    (diff, highlighted)
+    (diff.drop(ExcelSink.SheetRowColumn), highlighted)
   }
 }

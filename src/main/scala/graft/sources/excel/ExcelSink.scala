@@ -22,8 +22,12 @@ import graft.operators.SchemaReconciler
   *
   * A workbook is one file, so the write funnels through a single
   * partition — Excel is a small-export sink by design (SURVEY.md §7.4);
-  * the scale path is parquet. `maxRows` guards against accidentally
-  * funneling a 100 TB relation into a workbook.
+  * the scale path is parquet. Callers that need sheet order sort locally
+  * inside that one partition (`repartition(1).sortWithinPartitions`)
+  * rather than globally: a global sort's range partitioning runs a
+  * sampling job over the whole upstream only to pick bounds for
+  * partitions the funnel then drains one by one anyway. `maxRows` guards
+  * against accidentally funneling a 100 TB relation into a workbook.
   */
 object ExcelSink {
 
@@ -129,6 +133,11 @@ object ExcelSink {
       metadata = Nil, maxRows = maxRows, extraCells = headerCells)
   }
 
+  /** The int column a diff carries to be marked by sheet row: the
+    * 1-based Q2 sheet row of each diff row, read by the xlsx source's
+    * `rowNumberColumn` option and passed through `DiffEngine.diff`. */
+  val SheetRowColumn = "__sheet_row"
+
   /** SNK5: styled change-highlight sink (reference Compare.py:212-220).
     * Copies the Q2 WORKBOOK PACKAGE into `<q2 stem> (change
     * highlighted).xlsx` with fills applied from a diff result (long
@@ -141,19 +150,33 @@ object ExcelSink {
     * opens Q2 with styles and saves a copy where only diff fills are
     * added). The diff is presentation-scale (it collects to the
     * driver) — the scalable artifact is the diff DataFrame itself.
+    *
+    * A diff carrying [[SheetRowColumn]] is marked at (that row, the
+    * column's header position), the row the diff probed (reference
+    * Compare.py:174, `df_idx = r - 2`), so each of a repeated key's rows
+    * keeps its own marks; Q2 is read only through its header row. A
+    * diff without it is marked by key: Q2 is read in full and each key
+    * maps to the LAST sheet row holding it.
     * Returns the written path. */
   def writeHighlighted(q2Path: String, diff: DataFrame, keyCol: String,
                        headerRow: Int = 1): String = {
-    val sheet = ExcelScan.loadSheet(q2Path, None)
+    val header = ExcelScan.loadSheet(q2Path, None, lastRow = headerRow)
     val opts = ExcelOptions(None, headerRow, headerRow + 1, useHeader = true,
       blankRunStop = 10, maxCols = 500)
-    val headerPos: Map[String, Int] = ExcelScan.probeHeaders(sheet, opts)
+    val headerPos: Map[String, Int] = ExcelScan.probeHeaders(header, opts)
       .zipWithIndex.map { case (h, i) => h -> (i + 1) }.toMap
-    val keyIdx = headerPos.getOrElse(keyCol,
-      throw new IllegalArgumentException(s"key column '$keyCol' not in header"))
-    val rowByKey: Map[String, Int] =
-      ((headerRow + 1) to sheet.maxRow)
-        .map(r => sheet(r, keyIdx) -> r).filter(_._1.nonEmpty).toMap
+    val byRow = diff.columns.contains(SheetRowColumn)
+    val rowOf: Row => Option[Int] =
+      if (byRow) r => Some(r.getInt(0))
+      else {
+        val keyIdx = headerPos.getOrElse(keyCol,
+          throw new IllegalArgumentException(s"key column '$keyCol' not in header"))
+        val sheet = ExcelScan.loadSheet(q2Path, None)
+        val rowByKey: Map[String, Int] =
+          ((headerRow + 1) to sheet.maxRow)
+            .map(r => sheet(r, keyIdx) -> r).filter(_._1.nonEmpty).toMap
+        r => rowByKey.get(r.getString(0))
+      }
 
     val fills = Seq("FFADD8E6" /*1 CHANGED*/ , "FFFFC0CB" /*2 CLEARED*/ ,
       "FFFFFF00" /*3 NEW*/ )
@@ -162,27 +185,21 @@ object ExcelSink {
       if (diff.columns.contains("col_name")) "col_name" else "column"
     val hasRuns = diff.columns.contains("word_runs")
     val collected = diff
-      .select((Seq(col("key").cast("string"),
+      .select((Seq(if (byRow) col(SheetRowColumn) else col("key").cast("string"),
         col(colField).cast("string"), col("status")) ++
         (if (hasRuns) Seq(col("word_runs")) else Nil)): _*)
       .collect()
     val marks: Map[(Int, Int), Int] = collected
       .flatMap { r =>
-        val (k, c, st) = (r.getString(0), r.getString(1), r.getString(2))
         for {
-          row <- rowByKey.get(k)
-          style <- styleOf.get(st)
-          colIdx <- headerPos.get(c)
+          row <- rowOf(r)
+          style <- styleOf.get(r.getString(2))
+          colIdx <- headerPos.get(r.getString(1))
         } yield (row, colIdx) -> style
       }.toMap
     // NEW rows get the whole row highlighted (reference Compare.py:179-185);
-    // the row-wide NEW fill takes precedence over any cell-level mark,
-    // matching the previous rebuild semantics
-    val newRows: Set[Int] = marks.collect {
-      case ((r, _), 3) => r
-    }.toSet
-    val allMarks: Map[(Int, Int), Int] = marks ++
-      (for (r <- newRows; c <- 1 to math.max(sheet.maxCol, 1)) yield (r, c) -> 3)
+    // the row-wide NEW fill takes precedence over any cell-level mark
+    val newRows: Map[Int, Int] = marks.collect { case ((r, _), 3) => r -> 3 }
     // rich-text word runs for CHANGED cells that carry them (S10) —
     // restricted to cells that actually produce a mark:
     // Xlsx.patchSheet only applies runs for marked cells, so a
@@ -194,16 +211,16 @@ object ExcelSink {
       else collected.flatMap { r =>
         if (r.isNullAt(3)) None
         else for {
-          row <- rowByKey.get(r.getString(0))
+          row <- rowOf(r)
           colIdx <- headerPos.get(r.getString(1))
-          if allMarks.contains((row, colIdx))
+          if marks.contains((row, colIdx)) || newRows.contains(row)
         } yield (row, colIdx) ->
           r.getSeq[Row](3).map(x => (x.getString(0), x.getBoolean(1)))
       }.toMap
 
     val outPath = q2Path.replaceAll("\\.xlsx$", "") + " (change highlighted).xlsx"
     val out = new java.io.BufferedOutputStream(new java.io.FileOutputStream(outPath))
-    try Xlsx.highlightCopy(q2Path, out, Some(sheet.name), fills, allMarks, runsAt)
+    try Xlsx.highlightCopy(q2Path, out, Some(header.name), fills, marks, runsAt, newRows)
     finally out.close()
     outPath
   }
@@ -214,10 +231,15 @@ object ExcelSink {
                         maxRows: Int,
                         extraCells: Seq[Xlsx.Cell] = Nil): Long = {
     // Single-file format -> single writer. toLocalIterator pulls ONE
-    // partition at a time through the driver (bounded memory) and
-    // preserves global order after an upstream orderBy (range-partitioned
-    // sort); the guard below refuses relations that don't belong in a
-    // workbook.
+    // partition at a time through the driver, in partition order. The
+    // callers that need a row order sort inside one partition
+    // (`repartition(1).sortWithinPartitions`), so the whole export is one
+    // fetched partition. Driver memory is the same as under the global
+    // range sort this replaced: AQE coalesced that sort's partitions into
+    // one for any export below its advisory partition size (every
+    // download's result job ran 1 task), and the range sort also paid a
+    // sampling job that re-ran the whole upstream. The guard below
+    // refuses relations that don't belong in a workbook.
     val rows: Iterator[Row] = df.toLocalIterator().asScala
     var n = 0L
     val cellIter: Iterator[Xlsx.Cell] =

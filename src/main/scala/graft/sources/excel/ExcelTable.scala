@@ -9,7 +9,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -23,7 +23,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Options: `path` (one .xlsx file), `sheet` (name, default first),
   * `headerRow` (1-based, default 1), `dataStartRow` (default headerRow+1),
-  * `header` ("false" -> synthetic _c1.. names).
+  * `header` ("false" -> synthetic _c1.. names), `rowNumberColumn` (a
+  * column name; off by default): appends a non-null int column of that
+  * name holding each data row's 1-based sheet row, so a consumer can
+  * address the cells a row came from (the Compare flow marks them).
   *
   * Scale note: a workbook is a single zip (no internal split points), so
   * parallelism is per-FILE — a directory of workbooks fans out one
@@ -55,7 +58,10 @@ class ExcelTableProvider extends TableProvider with DataSourceRegister {
     val sheet = ExcelScan.loadSheet(paths(options).head, opts.sheet,
       lastRow = opts.headerRow)
     val headers = ExcelScan.probeHeaders(sheet, opts)
-    StructType(headers.map(h => StructField(h, StringType, nullable = true)))
+    opts.rowNumberColumn.foreach(c => require(!headers.contains(c),
+      s"rowNumberColumn '$c' collides with a header of ${paths(options).head}"))
+    StructType(headers.map(h => StructField(h, StringType, nullable = true)) ++
+      opts.rowNumberColumn.map(StructField(_, IntegerType, nullable = false)))
   }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
@@ -67,7 +73,8 @@ class ExcelTableProvider extends TableProvider with DataSourceRegister {
 
 final case class ExcelOptions(sheet: Option[String], headerRow: Int,
                               dataStartRow: Int, useHeader: Boolean,
-                              blankRunStop: Int, maxCols: Int)
+                              blankRunStop: Int, maxCols: Int,
+                              rowNumberColumn: Option[String] = None)
 
 object ExcelOptions {
   def apply(o: CaseInsensitiveStringMap): ExcelOptions = {
@@ -79,7 +86,8 @@ object ExcelOptions {
         .getOrElse(headerRow + 1),
       useHeader = Option(o.get("header")).forall(_.toBoolean),
       blankRunStop = Option(o.get("blankRunStop")).map(_.toInt).getOrElse(10),
-      maxCols = Option(o.get("maxCols")).map(_.toInt).getOrElse(500))
+      maxCols = Option(o.get("maxCols")).map(_.toInt).getOrElse(500),
+      rowNumberColumn = Option(o.get("rowNumberColumn")))
   }
 }
 
@@ -121,10 +129,12 @@ class ExcelReaderFactory(fullSchema: StructType, required: StructType,
     val path = partition.asInstanceOf[ExcelInputPartition].path
     new PartitionReader[InternalRow] {
       private val sheet = ExcelScan.loadSheet(path, opts.sheet)
-      // column ordinal (1-based sheet position) for each required field
+      // column ordinal (1-based sheet position) for each required field;
+      // 0 for the row-number column
       private val colIndex: Array[Int] = {
         val full = fullSchema.fieldNames.zipWithIndex.toMap
-        required.fieldNames.map(n => full(n) + 1)
+        required.fieldNames.map(n =>
+          if (opts.rowNumberColumn.contains(n)) 0 else full(n) + 1)
       }
       private var row = opts.dataStartRow - 1
       private val lastRow = sheet.maxRow
@@ -133,8 +143,11 @@ class ExcelReaderFactory(fullSchema: StructType, required: StructType,
         val values = new Array[Any](colIndex.length)
         var i = 0
         while (i < colIndex.length) {
-          val v = sheet(row, colIndex(i))
-          if (v.nonEmpty) values(i) = UTF8String.fromString(v)
+          if (colIndex(i) == 0) values(i) = row
+          else {
+            val v = sheet(row, colIndex(i))
+            if (v.nonEmpty) values(i) = UTF8String.fromString(v)
+          }
           i += 1
         }
         new GenericInternalRow(values)
@@ -146,21 +159,12 @@ class ExcelReaderFactory(fullSchema: StructType, required: StructType,
 
 object ExcelScan {
   /** One sheet of the workbook at `path` (the first when `sheetName` is
-    * None), parsed through row `lastRow` ([[Xlsx.read]]). */
+    * None), parsed through row `lastRow`. The package is read with random
+    * access ([[Xlsx.readSheet]]): a `lastRow`-bounded probe inflates the
+    * sheet only through that row. */
   def loadSheet(path: String, sheetName: Option[String],
-                lastRow: Int = Int.MaxValue): Xlsx.Sheet = {
-    val in = new java.io.BufferedInputStream(
-      new java.io.FileInputStream(path.stripPrefix("file:")))
-    try {
-      val sheets = Xlsx.read(in, lastRow)
-      sheetName match {
-        case Some(n) => sheets.find(_.name == n).getOrElse(
-          throw new IllegalArgumentException(
-            s"sheet '$n' not found in $path (have: ${sheets.map(_.name).mkString(", ")})"))
-        case None => sheets.head
-      }
-    } finally in.close()
-  }
+                lastRow: Int = Int.MaxValue): Xlsx.Sheet =
+    Xlsx.readSheet(path.stripPrefix("file:"), sheetName, lastRow)
 
   /** SRC3 header probe (Upload.py:156-172): left-to-right scan of the
     * header row, stop after `blankRunStop` consecutive blanks, hard cap

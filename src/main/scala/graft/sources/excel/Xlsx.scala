@@ -4,25 +4,34 @@ import java.io.{InputStream, OutputStream}
 import java.util.zip.{ZipEntry, ZipInputStream, ZipOutputStream}
 import javax.xml.stream.{XMLInputFactory, XMLStreamConstants}
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
-/** Minimal xlsx codec built on `java.util.zip` + StAX — no external
-  * dependency (offline build; no POI in /opt/spark/jars). xlsx is a zip
-  * of XML parts; we emit inline strings (no sharedStrings table) and
-  * parse both inline and shared strings on read.
+import org.apache.commons.compress.archivers.zip.{ZipArchiveEntry, ZipArchiveOutputStream, ZipFile}
+
+/** Minimal xlsx codec built on `java.util.zip`, commons-compress (for
+  * raw part copies) and StAX — no spreadsheet library (no POI among the
+  * Spark jars). xlsx is a zip of XML parts; we emit inline strings (no
+  * sharedStrings table) and parse both inline and shared strings on read.
   *
-  * Read model: [[read]] parses each sheet part with one StAX pass into a
-  * row-major [[Sheet]] (an array of rows, each an array of values by
-  * column), tracking `maxRow`/`maxCol` as it goes. A `lastRow` bound
-  * stops the pass at the first cell past that row, so a header probe
-  * parses only the rows above and at its header. Shared strings are
-  * parsed lazily, only as far as the highest index a cell asks for.
+  * Read model: each sheet part is parsed with one StAX pass straight off
+  * its entry stream into a row-major [[Sheet]] (an array of rows, each an
+  * array of values by column), tracking `maxRow`/`maxCol` as it goes. A
+  * `lastRow` bound stops the pass at the first cell past that row, so a
+  * header probe parses only the rows above and at its header. Shared
+  * strings are parsed lazily, only as far as the highest index a cell
+  * asks for. A file is opened with random access ([[readSheet]], behind
+  * `ExcelScan.loadSheet`), so a part is inflated only as far as its
+  * parser reads it: a header probe inflates the header, not the package.
+  * [[read]] takes a stream, which has no index, and reads it to its end.
   * Cells and rows without an `r` attribute take their position from
   * document order.
   *
   * Patch model: [[highlightCopy]] rewrites one sheet part with two
   * linear index scans (no XML parse, no regex): the first finds which
-  * marked cells exist and their style indices, the second copies the
-  * XML verbatim between the edits it makes.
+  * marked cells exist, their style indices and the sheet's last column,
+  * the second copies the XML verbatim between the edits it makes. The
+  * sheet and styles are the only parts it inflates and re-deflates;
+  * every other part is copied with its compressed bytes unchanged.
   *
   * This is the byte-level core; Spark integration lives in
   * [[ExcelTable]] / [[ExcelSink]].
@@ -254,11 +263,15 @@ object Xlsx {
     * all survive), and cells in `runsAt` are additionally replaced by
     * bold-red rich-text runs. Every other byte of the package — shared
     * strings, merged cells, column widths, other sheets, themes —
-    * passes through untouched. This is the reference's mutate-and-save
-    * semantic (Compare.py:123-126 opens Q2 with styles and saves a copy
-    * where only the diff fills are added).
+    * passes through untouched: those parts are copied with their
+    * compressed bytes as they are, never inflated. This is the
+    * reference's mutate-and-save semantic (Compare.py:123-126 opens Q2
+    * with styles and saves a copy where only the diff fills are added).
     *
-    * `marks` values are 1-based indices into `fills`. Marks on cells
+    * `marks` values are 1-based indices into `fills`; `rowMarks` (row ->
+    * fill index) fill whole rows, from column 1 through the sheet's last
+    * column holding a cell element, and take precedence over `marks` in
+    * their rows. Marks on cells
     * with no element in the sheet XML are inserted at the end of their
     * row (ECMA-376 imposes no intra-row order; readers are tolerant);
     * marks in rows with no element become new rows, inserted before the
@@ -271,72 +284,70 @@ object Xlsx {
   def highlightCopy(srcPath: String, out: OutputStream,
                     sheetName: Option[String], fills: Seq[String],
                     marks: Map[(Int, Int), Int],
-                    runsAt: Map[(Int, Int), Seq[(String, Boolean)]] = Map.empty): Unit = {
-    val zin = new ZipInputStream(new java.io.BufferedInputStream(
-      new java.io.FileInputStream(srcPath)))
-    val parts = mutable.LinkedHashMap[String, Array[Byte]]()
-    var e = zin.getNextEntry
-    while (e != null) {
-      if (!e.isDirectory) parts(e.getName) = zin.readAllBytes()
-      e = zin.getNextEntry
-    }
-    zin.close()
+                    runsAt: Map[(Int, Int), Seq[(String, Boolean)]] = Map.empty,
+                    rowMarks: Map[Int, Int] = Map.empty): Unit = {
+    val zf = ZipFile.builder().setFile(srcPath).get()
+    try {
+      val names = zf.getEntries.asScala.map(_.getName).filter(readPart).toSet
+      val book = new Book(names, n => zf.getInputStream(zf.getEntry(n)))
+      // the sheet part resolves exactly as the reader resolves it: via
+      // workbook.xml r:id -> workbook.xml.rels Target, NOT by part
+      // numbering (Excel keeps part filenames stable when sheets are
+      // reordered or deleted, ADVICE r5)
+      val (_, sheetPart) = book.sheet(sheetName, srcPath)
+      require(book.contains("xl/styles.xml"),
+        s"$srcPath has no xl/styles.xml; highlightCopy patches existing styles")
 
-    // resolve the sheet PART via workbook.xml r:id -> workbook.xml.rels
-    // Target — NOT positionally: Excel keeps part filenames stable when
-    // sheets are reordered/deleted, so workbook.xml order need not match
-    // sheetN.xml numbering on externally-produced workbooks (ADVICE r5).
-    val sheetPart = resolveSheetPart(parts, sheetName)
-      .getOrElse {
-        // fallback for rels-free packages (our own writer always emits
-        // rels, so this only fires on hand-rolled minimal inputs)
-        val names = parts.get("xl/workbook.xml").map(parseSheetNames)
-          .getOrElse(Seq.empty)
-        val idx = sheetName.map(n => names.indexOf(n)).filter(_ >= 0).getOrElse(0)
-        s"xl/worksheets/sheet${idx + 1}.xml"
+      val sheetXml = book.text(sheetPart)
+      val (present, width) = markedCellStyles(sheetXml, marks, rowMarks.keySet)
+      val allMarks = marks ++
+        (for ((r, f) <- rowMarks; c <- 1 to width) yield (r, c) -> f)
+      val styleOf: ((Int, Int)) => Int = rc => present.getOrElse(rc, 0)
+      val combos: Seq[(Int, Int)] = allMarks.toSeq
+        .map { case (rc, f) => (styleOf(rc), f) }.distinct.sorted
+      val (patchedStyles, comboXf) =
+        patchStyles(book.text("xl/styles.xml"), fills, combos)
+      val patchedSheet = patchSheet(sheetXml,
+        rc => comboXf((styleOf(rc), allMarks(rc))), allMarks, present.keySet, runsAt)
+
+      val zout = new ZipArchiveOutputStream(out)
+      def deflated(name: String, content: String): Unit = {
+        zout.putArchiveEntry(new ZipArchiveEntry(name))
+        zout.write(content.getBytes("UTF-8"))
+        zout.closeArchiveEntry()
       }
-    require(parts.contains(sheetPart), s"missing $sheetPart in $srcPath")
-    require(parts.contains("xl/styles.xml"),
-      s"$srcPath has no xl/styles.xml; highlightCopy patches existing styles")
-
-    val sheetXml = new String(parts(sheetPart), "UTF-8")
-    val present = markedCellStyles(sheetXml, marks)
-    val styleOf: ((Int, Int)) => Int = rc => present.getOrElse(rc, 0)
-    val combos: Seq[(Int, Int)] = marks.toSeq
-      .map { case (rc, f) => (styleOf(rc), f) }.distinct.sorted
-    val (patchedStyles, comboXf) = patchStyles(
-      new String(parts("xl/styles.xml"), "UTF-8"), fills, combos)
-    val patchedSheet = patchSheet(sheetXml,
-      rc => comboXf((styleOf(rc), marks(rc))), marks, present.keySet, runsAt)
-
-    val zout = new ZipOutputStream(out)
-    parts.foreach { case (name, bytes) =>
-      zout.putNextEntry(new ZipEntry(name))
-      zout.write(name match {
-        case "xl/styles.xml" => patchedStyles.getBytes("UTF-8")
-        case `sheetPart` => patchedSheet.getBytes("UTF-8")
-        case _ => bytes
-      })
-      zout.closeEntry()
-    }
-    zout.finish()
+      zf.getEntriesInPhysicalOrder.asScala.filterNot(_.isDirectory).foreach { e =>
+        e.getName match {
+          case "xl/styles.xml" => deflated(e.getName, patchedStyles)
+          case `sheetPart` => deflated(e.getName, patchedSheet)
+          case _ => zout.addRawArchiveEntry(e, zf.getRawInputStream(e))
+        }
+      }
+      zout.finish()
+    } finally zf.close()
   }
 
-  /** The marked cells that have an element in the sheet XML, each with
-    * its style index (`s`; 0 when absent). */
-  private def markedCellStyles(xml: String,
-                               marks: Map[(Int, Int), Int]): Map[(Int, Int), Int] = {
+  /** One pass over a sheet's cells: the marked cells that have an element
+    * (marked by `marks` or lying in a `rows` row), each with its style
+    * index (`s`; 0 when absent), and the sheet's last column holding a
+    * cell element (at least 1). */
+  private def markedCellStyles(xml: String, marks: Map[(Int, Int), Int],
+                               rows: collection.Set[Int]): (Map[(Int, Int), Int], Int) = {
     val cur = new SheetCursor(xml)
     val out = mutable.Map[(Int, Int), Int]()
+    var width = 1
     var tok = cur.next()
     while (tok != Done) {
-      if (tok == CellElem && marks.contains((cur.row, cur.col))) {
-        val s = cur.attr("s")
-        out((cur.row, cur.col)) = if (s == null) 0 else s.toInt
+      if (tok == CellElem) {
+        if (cur.col > width) width = cur.col
+        if (rows.contains(cur.row) || marks.contains((cur.row, cur.col))) {
+          val s = cur.attr("s")
+          out((cur.row, cur.col)) = if (s == null) 0 else s.toInt
+        }
       }
       tok = cur.next()
     }
-    out.toMap
+    (out.toMap, width)
   }
 
   /** Append `fills` and one cellXf per (original xf, fill) combo to an
@@ -659,51 +670,113 @@ object Xlsx {
     * cell past that row, which is sound because ECMA-376 requires rows in
     * ascending order. Shared strings are parsed only as far as the
     * highest index a parsed cell asks for, so a header-only read touches
-    * a few `<si>` entries, not the whole table. */
+    * a few `<si>` entries, not the whole table. The stream is read to its
+    * end (a zip stream has no index); [[readSheet]] reads a file with
+    * random access instead. */
   def read(in: InputStream, lastRow: Int = Int.MaxValue): Seq[Sheet] = {
     val zin = new ZipInputStream(in)
     val parts = mutable.Map[String, Array[Byte]]()
     var e = zin.getNextEntry
     while (e != null) {
-      // collect ANY sheet part (worksheets AND chartsheets, any part
-      // name) so rels Targets with nonstandard filenames still resolve
-      if (e.getName == "xl/sharedStrings.xml" ||
-        e.getName == "xl/workbook.xml" ||
-        e.getName == "xl/styles.xml" ||
-        e.getName == "xl/_rels/workbook.xml.rels" ||
-        e.getName.matches("xl/(work|chart)sheets/[^/]+\\.xml"))
-        parts(e.getName) = zin.readAllBytes()
+      if (readPart(e.getName)) parts(e.getName) = zin.readAllBytes()
       e = zin.getNextEntry
     }
-    val shared = new SharedStrings(parts.get("xl/sharedStrings.xml"))
-    val numFmts: Array[Int] = parts.get("xl/styles.xml")
-      .map(parseCellXfNumFmts).getOrElse(Array.emptyIntArray)
-    // positional candidates: numbered worksheet parts in numeric order,
-    // then any other worksheet parts in name order
-    def partNum(p: String): Option[Int] =
-      p.stripPrefix("xl/worksheets/sheet").stripSuffix(".xml").toIntOption
-    val positional: Seq[String] = parts.keys
-      .filter(_.startsWith("xl/worksheets/")).toSeq
-      .sortBy(p => (partNum(p).isEmpty, partNum(p).getOrElse(0), p))
-    // name -> part association via r:id + rels (workbook order, same
-    // resolution as highlightCopy). When a declared sheet's rel is
-    // missing or its Target wasn't collected, fall back to the
-    // positional part at that sheet's workbook index rather than
-    // silently dropping the sheet (a partially-resolvable rels part
-    // must not shrink the result below what positional numbering gives)
-    val declared: Seq[(String, String)] = parts.get("xl/workbook.xml")
-      .map(parseSheetEntries).getOrElse(Seq.empty)
-    val rels: Map[String, String] = parts.get("xl/_rels/workbook.xml.rels")
-      .map(parseWorkbookRels).getOrElse(Map.empty)
-    def sheet(name: String, p: String) =
-      parseSheet(name, p, parts(p), shared, numFmts, lastRow)
-    if (declared.nonEmpty)
-      declared.zipWithIndex.flatMap { case ((name, rid), i) =>
-        rels.get(rid).filter(parts.contains).orElse(positional.lift(i))
-          .map(sheet(name, _))
+    val book = new Book(parts.keySet, n => new java.io.ByteArrayInputStream(parts(n)))
+    book.sheets.map { case (name, part) => book.parse(name, part, lastRow) }
+  }
+
+  /** One sheet (the first when `sheetName` is None) of the workbook file
+    * at `path`, parsed through row `lastRow`. The package is opened with
+    * random access and each part is inflated only as far as its parser
+    * reads it: the sheet stops at `lastRow`, shared strings at the
+    * highest index asked for, and no other sheet is touched. Closing
+    * the file closes every entry stream the parse opened. */
+  private[excel] def readSheet(path: String, sheetName: Option[String],
+                               lastRow: Int): Sheet = {
+    val zf = new java.util.zip.ZipFile(path)
+    try {
+      val names = zf.stream().iterator().asScala.map(_.getName)
+        .filter(readPart).toSet
+      val book = new Book(names, n => zf.getInputStream(zf.getEntry(n)))
+      val (name, part) = book.sheet(sheetName, path)
+      book.parse(name, part, lastRow)
+    } finally zf.close()
+  }
+
+  /** The parts a read uses: the workbook, its rels, styles, shared
+    * strings and ANY sheet part (worksheets AND chartsheets, any part
+    * name, so rels Targets with nonstandard filenames still resolve). */
+  private def readPart(name: String): Boolean =
+    name == "xl/sharedStrings.xml" || name == "xl/workbook.xml" ||
+      name == "xl/styles.xml" || name == "xl/_rels/workbook.xml.rels" ||
+      name.matches("xl/(work|chart)sheets/[^/]+\\.xml")
+
+  /** A workbook package's [[readPart]]s, each opened on demand. */
+  private final class Book(parts: collection.Set[String],
+                           open: String => InputStream) {
+    private def parsed[T](name: String)(f: InputStream => T): Option[T] =
+      if (!parts.contains(name)) None
+      else {
+        val in = open(name)
+        try Some(f(in)) finally in.close()
       }
-    else
-      positional.zipWithIndex.map { case (p, i) => sheet(s"Sheet${i + 1}", p) }
+
+    private val shared = new SharedStrings(
+      if (parts.contains("xl/sharedStrings.xml"))
+        Some(() => open("xl/sharedStrings.xml")) else None)
+    private lazy val numFmts: Array[Int] =
+      parsed("xl/styles.xml")(parseCellXfNumFmts).getOrElse(Array.emptyIntArray)
+
+    /** (sheet name, part) in workbook order. Names associate with parts
+      * through r:id + rels (the readers and [[highlightCopy]] share it).
+      * When a declared sheet's rel is missing or its Target is not a
+      * part here, the sheet falls back to the positional part at its
+      * workbook index rather than being dropped (a partially-resolvable
+      * rels part must not shrink the result below what positional
+      * numbering gives). */
+    def sheets: Seq[(String, String)] = {
+      // positional candidates: numbered worksheet parts in numeric order,
+      // then any other worksheet parts in name order
+      def partNum(p: String): Option[Int] =
+        p.stripPrefix("xl/worksheets/sheet").stripSuffix(".xml").toIntOption
+      val positional: Seq[String] = parts
+        .filter(_.startsWith("xl/worksheets/")).toSeq
+        .sortBy(p => (partNum(p).isEmpty, partNum(p).getOrElse(0), p))
+      val declared = parsed("xl/workbook.xml")(parseSheetEntries).getOrElse(Seq.empty)
+      val rels = parsed("xl/_rels/workbook.xml.rels")(parseWorkbookRels)
+        .getOrElse(Map.empty[String, String])
+      if (declared.nonEmpty)
+        declared.zipWithIndex.flatMap { case ((name, rid), i) =>
+          rels.get(rid).filter(parts.contains).orElse(positional.lift(i))
+            .map(name -> _)
+        }
+      else positional.zipWithIndex.map { case (p, i) => s"Sheet${i + 1}" -> p }
+    }
+
+    /** (name, part) of sheet `sheetName`, the first sheet when None. */
+    def sheet(sheetName: Option[String], path: String): (String, String) = {
+      val all = sheets
+      sheetName match {
+        case Some(n) => all.find(_._1 == n).getOrElse(
+          throw new IllegalArgumentException(
+            s"sheet '$n' not found in $path (have: ${all.map(_._1).mkString(", ")})"))
+        case None => all.headOption.getOrElse(
+          throw new IllegalArgumentException(s"no sheets in $path"))
+      }
+    }
+
+    /** Parse sheet `name` at `part` through row `lastRow`. */
+    def parse(name: String, part: String, lastRow: Int): Sheet = {
+      val in = open(part)
+      try parseSheet(name, part, in, shared, numFmts, lastRow) finally in.close()
+    }
+
+    /** Part `name` as UTF-8 text. */
+    def text(name: String): String =
+      parsed(name)(in => new String(in.readAllBytes(), "UTF-8"))
+        .getOrElse(throw new IllegalArgumentException(s"missing $name"))
+
+    def contains(name: String): Boolean = parts.contains(name)
   }
 
   private val xif: XMLInputFactory = {
@@ -714,10 +787,10 @@ object Xlsx {
   }
 
   /** `xl/sharedStrings.xml`, parsed only as far as the highest index
-    * asked for. Each `<si>` reads as the concatenation of its `<t>` texts. */
-  private final class SharedStrings(bytes: Option[Array[Byte]]) {
-    private val r = bytes.map(b =>
-      xif.createXMLStreamReader(new java.io.ByteArrayInputStream(b)))
+    * asked for, straight off the part's stream (opened on the first
+    * lookup). Each `<si>` reads as the concatenation of its `<t>` texts. */
+  private final class SharedStrings(open: Option[() => InputStream]) {
+    private lazy val r = open.map(o => xif.createXMLStreamReader(o()))
     private val parsed = mutable.ArrayBuffer[String]()
     private val cur = new java.lang.StringBuilder
     private var inSi = false
@@ -725,7 +798,7 @@ object Xlsx {
 
     /** Entry `i`, None when the table holds no such entry. */
     def lift(i: Int): Option[String] = {
-      r.foreach { r =>
+      if (parsed.length <= i) r.foreach { r =>
         while (parsed.length <= i && r.hasNext) {
           r.next() match {
             case XMLStreamConstants.START_ELEMENT =>
@@ -751,15 +824,12 @@ object Xlsx {
 
     /** Entries in the whole table; meaningful once a lookup missed. */
     def size: Int = parsed.length
-    def present: Boolean = r.nonEmpty
+    def present: Boolean = open.nonEmpty
   }
 
-  private def parseSheetNames(bytes: Array[Byte]): Seq[String] =
-    parseSheetEntries(bytes).map(_._1)
-
   /** workbook.xml sheet entries in workbook order: (name, r:id). */
-  private def parseSheetEntries(bytes: Array[Byte]): Seq[(String, String)] = {
-    val r = xif.createXMLStreamReader(new java.io.ByteArrayInputStream(bytes))
+  private def parseSheetEntries(in: InputStream): Seq[(String, String)] = {
+    val r = xif.createXMLStreamReader(in)
     val out = mutable.ArrayBuffer[(String, String)]()
     while (r.hasNext) {
       if (r.next() == XMLStreamConstants.START_ELEMENT && r.getLocalName == "sheet") {
@@ -780,8 +850,8 @@ object Xlsx {
   /** workbook.xml.rels: relationship Id -> resolved part name (Target
     * is workbook-relative, e.g. `worksheets/sheet3.xml`, or
     * package-absolute with a leading `/`). */
-  private def parseWorkbookRels(bytes: Array[Byte]): Map[String, String] = {
-    val r = xif.createXMLStreamReader(new java.io.ByteArrayInputStream(bytes))
+  private def parseWorkbookRels(in: InputStream): Map[String, String] = {
+    val r = xif.createXMLStreamReader(in)
     val out = mutable.Map[String, String]()
     while (r.hasNext) {
       if (r.next() == XMLStreamConstants.START_ELEMENT &&
@@ -797,22 +867,9 @@ object Xlsx {
     out.toMap
   }
 
-  /** The sheet part for `sheetName` (first sheet when None), resolved
-    * through the OOXML relationship chain; None when the package lacks
-    * workbook.xml or usable rels. */
-  private def resolveSheetPart(parts: collection.Map[String, Array[Byte]],
-                               sheetName: Option[String]): Option[String] =
-    for {
-      wb <- parts.get("xl/workbook.xml")
-      rels <- parts.get("xl/_rels/workbook.xml.rels").map(parseWorkbookRels)
-      entries = parseSheetEntries(wb)
-      entry <- sheetName.fold(entries.headOption)(n => entries.find(_._1 == n))
-      part <- rels.get(entry._2)
-    } yield part
-
   /** cellXfs -> numFmtId per xf index (for date-cell detection). */
-  private def parseCellXfNumFmts(bytes: Array[Byte]): Array[Int] = {
-    val r = xif.createXMLStreamReader(new java.io.ByteArrayInputStream(bytes))
+  private def parseCellXfNumFmts(in: InputStream): Array[Int] = {
+    val r = xif.createXMLStreamReader(in)
     val out = mutable.ArrayBuffer[Int]()
     var inCellXfs = false
     while (r.hasNext) {
@@ -843,10 +900,10 @@ object Xlsx {
     * its `r`; where `r` is absent (it is optional on both `<c>` and
     * `<row>`) it follows document order: a row is the previous row + 1,
     * a cell the previous cell's column + 1 within its row. */
-  private def parseSheet(name: String, part: String, bytes: Array[Byte],
-                         shared: SharedStrings, numFmts: Array[Int],
+  private def parseSheet(name: String, part: String, in: InputStream,
+                         shared: SharedStrings, numFmts: => Array[Int],
                          lastRow: Int): Sheet = {
-    val r = xif.createXMLStreamReader(new java.io.ByteArrayInputStream(bytes))
+    val r = xif.createXMLStreamReader(in)
     var rows = new Array[Array[String]](64)
     var maxRow, maxCol = 0
     def put(row: Int, col: Int, value: String): Unit = {
@@ -912,8 +969,10 @@ object Xlsx {
             case "c" if inCell =>
               inCell = false
               val raw = text.toString
-              val fmt = if (styleIdx >= 0 && styleIdx < numFmts.length)
-                numFmts(styleIdx) else 0
+              val fmt = if (styleIdx < 0) 0 else {
+                val f = numFmts
+                if (styleIdx < f.length) f(styleIdx) else 0
+              }
               val value = cellType match {
                 case "s" => sharedString(shared, raw, where)
                 case "b" => if (raw.trim == "1") "TRUE" else "FALSE"

@@ -141,4 +141,25 @@ class CompareGoldenSpec extends SparkSpec {
     // and it is the ONLY rich-text cell in the output
     assert("""<rPr>""".r.findAllIn(sheetXml).size == 1)
   }
+
+  test("golden: a key repeated in the new quarter keeps each row's own marks") {
+    // Q1 holds k1=a under id x1; Q2 holds x1 twice: row 2 with k1=b
+    // (CHANGED), row 3 with k1=a (UNCHANGED). The marks belong on the
+    // row the diff probed (reference Compare.py:174), not on the key's
+    // last row
+    writeWb(Seq(Seq("id", "k1"), Seq("x1", "a")), s"$dir/dup_q1.xlsx")
+    writeWb(Seq(Seq("id", "k1"), Seq("x1", "b"), Seq("x1", "a")), s"$dir/dup_q2.xlsx")
+    val (dupDiff, dupOut) = Pipelines.compareAndHighlight(spark,
+      s"$dir/dup_q1.xlsx", s"$dir/dup_q2.xlsx", "id", Seq("k1"))
+    assert(dupDiff.columns.toSeq == Seq("key", "column", "old_value", "new_value", "status"))
+    assert(dupDiff.collect().map(r => (r.getString(0), r.getString(1), r.getString(2),
+      r.getString(3), r.getString(4))).toSet == Set(
+      ("x1", "k1", "a", "b", "CHANGED"), ("x1", "k1", "a", "a", "UNCHANGED")))
+    val sheetXml = zipPart(dupOut, "xl/worksheets/sheet1.xml")
+    val stylesXml = zipPart(dupOut, "xl/styles.xml")
+    assert(fillOf(stylesXml, cellXf(sheetXml, "B2")) == Some("FFADD8E6"))
+    assert(fillOf(stylesXml, cellXf(sheetXml, "B3")).isEmpty)
+    assert(fillOf(stylesXml, cellXf(sheetXml, "A2")).isEmpty &&
+      fillOf(stylesXml, cellXf(sheetXml, "A3")).isEmpty)
+  }
 }

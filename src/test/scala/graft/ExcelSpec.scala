@@ -17,7 +17,7 @@ class ExcelSpec extends SparkSpec {
   private def tmpDir: String =
     Files.createTempDirectory("excel_spec").toString
 
-  import XlsxTestUtil.{cellXf, fillOf, zipPart}
+  import XlsxTestUtil.{cellXf, fillOf, rawParts, zipPart}
 
   test("xlsx write -> read round-trips strings, numbers, blanks") {
     val dir = tmpDir
@@ -394,9 +394,11 @@ class ExcelSpec extends SparkSpec {
   // --- partial rels resolution (ADVICE r6): nonstandard part names and
   // --- unresolvable targets must not silently drop sheets ---
 
-  private def rawZip(path: String, entries: Seq[(String, String)]): Unit = {
+  private def rawZip(path: String, entries: Seq[(String, String)],
+                     level: Int = java.util.zip.Deflater.DEFAULT_COMPRESSION): Unit = {
     val zout = new java.util.zip.ZipOutputStream(
       new java.io.FileOutputStream(path))
+    zout.setLevel(level)
     entries.foreach { case (name, xml) =>
       zout.putNextEntry(new java.util.zip.ZipEntry(name))
       zout.write(xml.getBytes("UTF-8"))
@@ -606,11 +608,12 @@ class ExcelSpec extends SparkSpec {
         """<cellXfs count="3"><xf/><xf numFmtId="14" applyNumberFormat="1"/><xf fontId="0" fillId="0"><alignment wrapText="1"/></xf></cellXfs>""" +
         """</styleSheet>"""
     val src = s"$tmpDir/edge.xlsx"
+    // deflated at level 0, so a part the copy re-deflated would differ
     rawZip(src, Seq(
       "xl/workbook.xml" -> wbXml("Edge"),
       "xl/_rels/workbook.xml.rels" -> relsXml("worksheets/sheet1.xml"),
       "xl/styles.xml" -> stylesXml,
-      "xl/worksheets/sheet1.xml" -> sheetXml))
+      "xl/worksheets/sheet1.xml" -> sheetXml), java.util.zip.Deflater.NO_COMPRESSION)
     val marks = Map((1, 3) -> 2, (2, 2) -> 1, (2, 3) -> 1, (3, 1) -> 3,
       (4, 3) -> 1, (5, 2) -> 3, (6, 2) -> 2, (6, 3) -> 1, (9, 1) -> 2)
     val runsAt = Map((2, 3) -> Seq(("alpha", false), ("gamma", true)),
@@ -635,6 +638,12 @@ class ExcelSpec extends SparkSpec {
     val patched = zipPart(hl, "xl/worksheets/sheet1.xml")
     assert(patched == expectedSheet)
     assert(zipPart(hl, "xl/styles.xml") == expectedStyles)
+    // every other part is copied with its compressed bytes as they are
+    val (srcRaw, hlRaw) = (rawParts(src), rawParts(hl))
+    assert(hlRaw.keySet == srcRaw.keySet)
+    val untouched = srcRaw.keySet - "xl/worksheets/sheet1.xml" - "xl/styles.xml"
+    assert(untouched.nonEmpty && untouched.forall(n => hlRaw(n) == srcRaw(n)),
+      untouched.filterNot(n => hlRaw(n) == srcRaw(n)).mkString(", "))
     val rows = """<row r="(\d+)"""".r.findAllMatchIn(patched)
       .map(_.group(1).toInt).toSeq
     assert(rows.nonEmpty && rows.zip(rows.tail).forall { case (a, b) => a < b },

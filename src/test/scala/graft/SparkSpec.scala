@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,5 +25,35 @@ trait SparkSpec extends AnyFunSuite {
       .takeWhile(_ != null).take(10)
       .map(t => Option(t.getMessage).getOrElse("")).mkString("\n")
     needles.foreach(n => assert(msgs.contains(n), s"'$n' not in:\n$msgs"))
+  }
+
+  /** The Spark jobs `body` launches from this thread. A fence job on the
+    * same thread runs last: the listener bus delivers events in order, so
+    * once the fence's start arrives every earlier job has been counted. */
+  def jobsLaunchedBy(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val key = "graft.sparkSpec.jobs"
+    val seen = new AtomicInteger
+    val fenced = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
+          case Some("body") => seen.incrementAndGet()
+          case Some("fence") => fenced.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, "body")
+      body
+      sc.setLocalProperty(key, "fence")
+      sc.parallelize(Seq(1), 1).count()
+      assert(fenced.await(60, TimeUnit.SECONDS), "the fence job never reached the listener")
+      seen.get
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
   }
 }

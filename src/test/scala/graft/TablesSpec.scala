@@ -1,10 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -17,37 +13,6 @@ class TablesSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-tables")
     TempDirs.deleteOnExit(dir.toFile)
     dir.toString
-  }
-
-  /** The Spark jobs `body` launches from this thread. A fence job on the
-    * same thread runs last: the listener bus delivers events in order, so
-    * once the fence's start arrives every earlier job has been counted. */
-  private def jobsLaunchedBy(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val key = "graft.tablesSpec"
-    val (tag, fence) = ("body", "fence")
-    val seen = new AtomicInteger
-    val fenced = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
-          case Some(`tag`) => seen.incrementAndGet()
-          case Some(`fence`) => fenced.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(key, tag)
-      body
-      sc.setLocalProperty(key, fence)
-      sc.parallelize(Seq(1), 1).count()
-      assert(fenced.await(60, TimeUnit.SECONDS), "the fence job never reached the listener")
-      seen.get
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(listener)
-    }
   }
 
   test("the first load of a table infers its schema; a second load of the unchanged file launches no job") {

@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -33,36 +32,6 @@ class VectorIndexSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory(p)
     TempDirs.deleteOnExit(dir.toFile)
     dir.toString
-  }
-
-  /** The Spark jobs `body` launches from this thread. A fence job on the
-    * same thread runs last: the listener bus delivers events in order, so
-    * once the fence's start arrives every earlier job has been counted. */
-  private def jobsLaunchedBy(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val key = "graft.vectorIndexSpec"
-    val seen = new AtomicInteger
-    val fenced = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
-          case Some("body") => seen.incrementAndGet()
-          case Some("fence") => fenced.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(key, "body")
-      body
-      sc.setLocalProperty(key, "fence")
-      sc.parallelize(Seq(1), 1).count()
-      assert(fenced.await(60, TimeUnit.SECONDS), "the fence job never reached the listener")
-      seen.get
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(listener)
-    }
   }
 
   /** How many queries `body` runs that scan a `.srpmeta` sidecar; a
@@ -121,6 +90,25 @@ class VectorIndexSpec extends SparkSpec {
         jobsLaunchedBy(VectorIndex.compact(spark, dir)))
       assert(got == prior, s"$codec: (build, append, probe, filtered, delete, " +
         "probe with tombstones, compact)")
+    }
+  }
+
+  test("a rebuild clears the tombstones of the index it replaces") {
+    // the query is id 7's own vector under another id: wherever 7 is
+    // live it is the best match, for every codec (SRP: the same cell)
+    val q = emb.filter($"vec_id" === 7L)
+      .select(lit(1000000L).as("qid"), $"embedding".as("qv"))
+    Seq[VectorCodec](Binary, Int8, Srp(4)).foreach { codec =>
+      val dir = tmp("virebuild") + "/idx"
+      val rows = emb.filter($"vec_id" < 300)
+      VectorIndex.build(rows, "vec_id", "embedding", dir, codec)
+      VectorIndex.delete(dir, Seq(7L).toDF("vec_id"), "vec_id")
+      def probed = VectorIndex.probe(spark, dir, q, "qid", "qv", k = 5)
+        .select("id").as[Long].collect().toSeq
+      assert(!probed.contains(7L), codec.toString)
+      VectorIndex.build(rows, "vec_id", "embedding", dir, codec)
+      assert(!new java.io.File(s"$dir.tombstones").exists, codec.toString)
+      assert(probed.contains(7L), s"$codec: $probed")
     }
   }
 

@@ -33,4 +33,18 @@ object XlsxTestUtil {
       try new String(in.readAllBytes(), "UTF-8") finally in.close()
     } finally zf.close()
   }
+
+  /** Each part of a workbook with its bytes as stored (compressed). */
+  def rawParts(path: String): Map[String, Seq[Byte]] = {
+    val zf = org.apache.commons.compress.archivers.zip.ZipFile.builder()
+      .setFile(path).get()
+    try {
+      val entries = zf.getEntries
+      Iterator.continually(entries).takeWhile(_.hasMoreElements)
+        .map(_.nextElement()).map { e =>
+          val in = zf.getRawInputStream(e)
+          try e.getName -> in.readAllBytes().toSeq finally in.close()
+        }.toMap
+    } finally zf.close()
+  }
 }
