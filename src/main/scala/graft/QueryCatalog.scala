@@ -3222,7 +3222,7 @@ object QueryCatalog {
             col("embedding"), lit(99).as("label"))
         // the semantic leg arrives ALREADY filtered (its filter runs
         // inside the probe that owns the metadata — at scale,
-        // ivfCentroidTopKBatchFiltered; here the exact brute twin)
+        // ivfProbe with a predicate; here the exact brute twin)
         val sem = Similarity.cosineTopKBatch(
           plantedEmb.filter(col("label") === 99), "vec_id", "embedding",
           emb.filter(col("vec_id") < 4)
@@ -3490,11 +3490,10 @@ object QueryCatalog {
         val lex = CorpusOps.bm25TopKIndexedFiltered(s, s"$root/bm25",
             qs, "query_id", "query_text", k = 50, col("lang") === "zz")
           .select(col("query_id"), col("id").as("doc_id"), col("bm25"))
-        val sem = Similarity.ivfCentroidTopKBatchFiltered(s,
-            s"$root/ivf",
+        val sem = Similarity.ivfProbe(s, s"$root/ivf",
             emb.filter(col("vec_id") < 4)
               .select(col("vec_id").as("qid"), col("embedding").as("qv")),
-            "qid", "qv", k = 50, col("label") === 99, probes = 1)
+            "qid", "qv", k = 50, probes = 1, Some(col("label") === 99))
           .select(col("qid").as("query_id"), col("id").as("doc_id"),
             col("cos_sim"))
         CorpusOps.rrfTopKGrouped(Map(
@@ -5820,11 +5819,11 @@ object QueryCatalog {
         Similarity.buildIvfPqIndex(corpus, "vec_id", "embedding", dir,
           nCells = 8, m = 8, nbits = 8, iters = 3,
           extraCols = Seq("label"))
-        Similarity.ivfPqTopKBatchFiltered(s, dir,
+        Similarity.ivfProbe(s, dir,
             emb.filter(col("vec_id") < 2)
               .select(col("vec_id").as("qid"),
                 col("embedding").as("qv")),
-            "qid", "qv", k = 20, col("label") === 99, probes = 1)
+            "qid", "qv", k = 20, probes = 1, Some(col("label") === 99))
           .select(col("qid"), col("id"))
       },
       Some("""SELECT q.qid, CAST(e.vec_id + 1000000 AS BIGINT) AS id
@@ -5926,7 +5925,7 @@ object QueryCatalog {
       // O(n²) baseline over a 200-vector slice so the oracle's
       // all-pairs cosine stays cheap; the per-row cap plans as
       // WindowGroupLimit (O(n x k) shuffle). Corpus-scale variants:
-      // srpNeighborPairs blocking or ivfPqTopK candidates + re-rank.
+      // srpNeighborPairs blocking or ivfProbe candidates + re-rank.
       (s, d) => Similarity.knnJoin(
         t(s, d, "embeddings").filter(col("vec_id") < 200),
         "vec_id", "embedding", k = 3),
@@ -8059,7 +8058,7 @@ object QueryCatalog {
         graft.streaming.EventStreams.ivfIndexAvailableNow(s,
           s"$dir/src", "vec_id", col("embedding"), s"$dir/idx",
           s"$dir/ckpt")
-        Similarity.ivfCentroidTopKBatch(s, s"$dir/idx",
+        Similarity.ivfProbe(s, s"$dir/idx",
             emb.filter(col("vec_id") < 4)
               .select(col("vec_id").as("qid"), col("embedding").as("qv")),
             "qid", "qv", k = 21, probes = 1)
@@ -8101,7 +8100,7 @@ object QueryCatalog {
         graft.streaming.EventStreams.ivfPqIndexAvailableNow(s,
           s"$dir/src", "vec_id", col("embedding"), s"$dir/idx",
           s"$dir/ckpt")
-        Similarity.ivfPqTopKBatch(s, s"$dir/idx",
+        Similarity.ivfProbe(s, s"$dir/idx",
             emb.filter(col("vec_id") < 4)
               .select(col("vec_id").as("qid"), col("embedding").as("qv")),
             "qid", "qv", k = 21, probes = 1)
@@ -8343,9 +8342,10 @@ object QueryCatalog {
         val emb = plantedEmbeddings(s, d)
         Similarity.buildIvfCentroidIndex(emb, "vec_id", "embedding", dir,
           k = 8, iters = 3)
-        val qVec = emb.filter(col("vec_id") === 0L)
-          .select(col("embedding")).collect()(0).getSeq[Float](0).toArray
-        Similarity.ivfCentroidTopK(s, dir, qVec, k = 21, probes = 1)
+        Similarity.ivfProbe(s, dir,
+            emb.filter(col("vec_id") === 0L)
+              .select(col("vec_id").as("qid"), col("embedding").as("qv")),
+            "qid", "qv", k = 21, probes = 1)
           .filter(col("id") =!= 0L)
           .agg(
             max_by(col("id"), struct(col("cos_sim"), -col("id")))
@@ -8380,10 +8380,10 @@ object QueryCatalog {
             .select((col("vec_id") + 1000000).as("vec_id"),
               col("embedding")),
           "vec_id", "embedding", dir)
-        val qVec = emb.filter(col("vec_id") === 0L)
-          .select(col("embedding")).collect()(0).getSeq[Float](0).toArray
-        val probe = Similarity.ivfCentroidTopK(s, dir, qVec, k = 21,
-            probes = 1)
+        val probe = Similarity.ivfProbe(s, dir,
+            emb.filter(col("vec_id") === 0L)
+              .select(col("vec_id").as("qid"), col("embedding").as("qv")),
+            "qid", "qv", k = 21, probes = 1)
           .filter(col("id") =!= 0L)
           .agg(
             max_by(col("id"), struct(col("cos_sim"), -col("id")))
@@ -8424,7 +8424,7 @@ object QueryCatalog {
             .select((col("vec_id") + 1000000).as("vec_id"),
               col("embedding")),
           "vec_id", "embedding", dir)
-        Similarity.ivfCentroidTopKBatch(s, dir,
+        Similarity.ivfProbe(s, dir,
             emb.filter(col("vec_id") < 4)
               .select(col("vec_id").as("qid"), col("embedding").as("qv")),
             "qid", "qv", k = 21, probes = 1)
@@ -8473,7 +8473,7 @@ object QueryCatalog {
           emb.filter(col("vec_id") < 4)
             .select((col("vec_id") + 1000000).as("vec_id")),
           "vec_id")
-        Similarity.ivfCentroidTopKBatch(s, dir,
+        Similarity.ivfProbe(s, dir,
             emb.filter(col("vec_id") < 4)
               .select(col("vec_id").as("qid"), col("embedding").as("qv")),
             "qid", "qv", k = 21, probes = 1)
@@ -8548,10 +8548,10 @@ object QueryCatalog {
           .agg(count(lit(1)).as("cell_diffs"))
         // a NEW-distribution query finds its exact copy, one probe
         // (its law-leg twin ties at cos 1.0; id order breaks the tie)
-        val qVec = shifted.filter(col("vec_id") === 1000000L)
-          .select(col("embedding")).collect()(0).getSeq[Float](0).toArray
-        val probe = Similarity.ivfCentroidTopK(s, dir, qVec, k = 1,
-            probes = 1)
+        val probe = Similarity.ivfProbe(s, dir,
+            shifted.filter(col("vec_id") === 1000000L)
+              .select(col("vec_id").as("qid"), col("embedding").as("qv")),
+            "qid", "qv", k = 1, probes = 1)
           .agg(max_by(col("id"), col("cos_sim")).as("top1_id"),
             max(col("cos_sim")).as("top1_cos"))
         val rows = a.agg(count(lit(1)).as("idx_rows"))
@@ -8610,10 +8610,10 @@ object QueryCatalog {
           .filter(col("cell").isNull || col("cell2").isNull ||
             col("cell") =!= col("cell2"))
           .agg(count(lit(1)).as("cell_diffs"))
-        val qVec = shifted.filter(col("vec_id") === 1000000L)
-          .select(col("embedding")).collect()(0).getSeq[Float](0).toArray
-        val probe = Similarity.ivfCentroidTopK(s, dir, qVec, k = 1,
-            probes = 1)
+        val probe = Similarity.ivfProbe(s, dir,
+            shifted.filter(col("vec_id") === 1000000L)
+              .select(col("vec_id").as("qid"), col("embedding").as("qv")),
+            "qid", "qv", k = 1, probes = 1)
           .agg(max_by(col("id"), col("cos_sim")).as("top1_id"),
             max(col("cos_sim")).as("top1_cos"))
         val rows = a.agg(count(lit(1)).as("idx_rows"))
@@ -8661,10 +8661,11 @@ object QueryCatalog {
               col("embedding"), lit(99).as("label")))
         Similarity.buildIvfCentroidIndex(corpus, "vec_id", "embedding",
           dir, k = 8, iters = 3, extraCols = Seq("label"))
-        val qVec = emb.filter(col("vec_id") === 0L)
-          .select(col("embedding")).collect()(0).getSeq[Float](0).toArray
-        Similarity.ivfCentroidTopKFiltered(s, dir, qVec, k = 20,
-          col("label") === 99, probes = 1)
+        Similarity.ivfProbe(s, dir,
+            emb.filter(col("vec_id") === 0L)
+              .select(col("vec_id").as("qid"), col("embedding").as("qv")),
+            "qid", "qv", k = 20, probes = 1, Some(col("label") === 99))
+          .select(col("id"), col("cos_sim"))
       },
       Some("""WITH q AS (
              |  SELECT list_transform(embedding, x -> CAST(x AS DOUBLE))
@@ -8728,10 +8729,10 @@ object QueryCatalog {
         Similarity.buildIvfPqIndex(corpus, "vec_id", "embedding", dir,
           nCells = 8, m = 8, nbits = 8, iters = 3,
           extraCols = Seq("label"))
-        val qVec = emb.filter(col("vec_id") === 0L)
-          .select(col("embedding")).collect()(0).getSeq[Float](0).toArray
-        Similarity.ivfPqTopKFiltered(s, dir, qVec, k = 20,
-            col("label") === 99, probes = 1)
+        Similarity.ivfProbe(s, dir,
+            emb.filter(col("vec_id") === 0L)
+              .select(col("vec_id").as("qid"), col("embedding").as("qv")),
+            "qid", "qv", k = 20, probes = 1, Some(col("label") === 99))
           .select(col("id"))
       },
       Some("""SELECT CAST(vec_id + 1000000 AS BIGINT) AS id
@@ -8757,9 +8758,10 @@ object QueryCatalog {
         if (!new java.io.File(s"$dir/codes", "_SUCCESS").exists())
           Similarity.buildIvfPqIndex(emb, "vec_id", "embedding", dir,
             nCells = 8, m = 8, nbits = 8, iters = 3)
-        val qVec = emb.filter(col("vec_id") === 0L)
-          .select(col("embedding")).collect()(0).getSeq[Float](0).toArray
-        Similarity.ivfPqTopK(s, dir, qVec, k = 21, probes = 1)
+        Similarity.ivfProbe(s, dir,
+            emb.filter(col("vec_id") === 0L)
+              .select(col("vec_id").as("qid"), col("embedding").as("qv")),
+            "qid", "qv", k = 21, probes = 1)
           .filter(col("id") =!= 0L)
           .agg(
             max_by(col("id"), struct(col("pq_cos"), -col("id")))
@@ -8795,9 +8797,10 @@ object QueryCatalog {
             .select((col("vec_id") + 1000000).as("vec_id"),
               col("embedding")),
           "vec_id", "embedding", dir)
-        val qVec = emb.filter(col("vec_id") === 0L)
-          .select(col("embedding")).collect()(0).getSeq[Float](0).toArray
-        Similarity.ivfPqTopK(s, dir, qVec, k = 21, probes = 1)
+        Similarity.ivfProbe(s, dir,
+            emb.filter(col("vec_id") === 0L)
+              .select(col("vec_id").as("qid"), col("embedding").as("qv")),
+            "qid", "qv", k = 21, probes = 1)
           .filter(col("id") =!= 0L)
           .agg(
             max_by(col("id"), struct(col("pq_cos"), -col("id")))
@@ -8836,7 +8839,7 @@ object QueryCatalog {
           emb.filter(col("vec_id") < 4)
             .select((col("vec_id") + 1000000).as("vec_id")),
           "vec_id")
-        Similarity.ivfPqTopKBatch(s, dir,
+        Similarity.ivfProbe(s, dir,
             emb.filter(col("vec_id") < 4)
               .select(col("vec_id").as("qid"), col("embedding").as("qv")),
             "qid", "qv", k = 21, probes = 1)
@@ -8907,8 +8910,8 @@ object QueryCatalog {
       // verdict #2): the query table ranks the persisted coarse
       // centroids per query, builds its per-cell residual lookup
       // table, and the code scan prunes to the union of probed cells
-      // — one partition-pruned job for the whole batch. Per-query ==
-      // ivfPqTopK law is BIT-pinned in PqSpec; the gate pins the
+      // — one partition-pruned job for the whole batch. Batch ==
+      // 1-row-probe law is BIT-pinned in PqSpec; the gate pins the
       // planted property through the SAME staged index as
       // q_ivfpq_topk (identical dir key, _SUCCESS-gated — staging is
       // idempotent and order-free): each query's rank-1 is its +1M
@@ -8922,7 +8925,7 @@ object QueryCatalog {
         if (!new java.io.File(s"$dir/codes", "_SUCCESS").exists())
           Similarity.buildIvfPqIndex(planted, "vec_id", "embedding", dir,
             nCells = 8, m = 8, nbits = 8, iters = 3)
-        Similarity.ivfPqTopKBatch(s, dir,
+        Similarity.ivfProbe(s, dir,
             planted.filter(col("vec_id") < 4)
               .select(col("vec_id").as("qid"), col("embedding").as("qv")),
             "qid", "qv", k = 21, probes = 1)

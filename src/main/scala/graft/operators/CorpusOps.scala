@@ -1933,7 +1933,7 @@ object CorpusOps {
     * [[rrfFuseGrouped]] plus the ranked truncation, as one public
     * surface so a retrieval stack composed from the INDEXED legs
     * ([[bm25TopKIndexed]], [[graft.operators.Similarity
-    * .ivfCentroidTopKBatch]]) — or from three-plus signals — fuses
+    * .ivfProbe]]) — or from three-plus signals — fuses
     * without [[searchPipelineBatch]]'s built-in direct-batch lexical
     * leg. Returns (`queryCol`, `idCol`, `n_signals`, `rrf_score`,
     * `rank` 1..k), <= k rows per query, ranked (rrf_score desc, id)
@@ -1998,10 +1998,10 @@ object CorpusOps {
     * the lexical candidates come from [[bm25TopKBatchFiltered]] (the
     * predicate restricts candidates inside the scoring pass, full-
     * corpus statistics), and `semantic` must be an ALREADY-FILTERED
-    * batch ranking — [[graft.operators.Similarity
-    * .ivfCentroidTopKBatchFiltered]] at scale, or a predicate-
-    * filtered [[graft.operators.Similarity.cosineTopKBatch]] as the
-    * exact baseline (the semantic leg's filter runs inside ITS probe,
+    * batch ranking — [[graft.operators.Similarity.ivfProbe]] with a
+    * predicate at scale, or a predicate-filtered
+    * [[graft.operators.Similarity.cosineTopKBatch]] as the exact
+    * baseline (the semantic leg's filter runs inside ITS probe,
     * where the index's metadata lives — this operator cannot reach
     * into an arbitrary score relation to re-filter it, so passing an
     * unfiltered ranking post-filters by fusion rank and LOSES recall;
@@ -2346,8 +2346,8 @@ object CorpusOps {
       queryTextCol, k, k1, b, None)
 
   /** Metadata-filtered batch BM25 — the LEXICAL leg of filtered
-    * retrieval (r16 verdict #1; [[graft.operators.Similarity
-    * .ivfCentroidTopKFiltered]]'s contract on this tier): the
+    * retrieval (r16 verdict #1; the filtered [[graft.operators.Similarity
+    * .ivfProbe]]'s contract on this tier): the
     * predicate (over `docs`' metadata columns) restricts WHICH
     * documents compete, BEFORE the per-query top-k — never a
     * post-filter of a truncated ranking, so a selective filter costs

@@ -356,12 +356,18 @@ object Similarity {
     * similarity and read only the top `probes` partition directories.
     * The centroid fit runs on a `maxFitRows`-bounded deterministic
     * sample (see [[kmeansCentroids]]); the assignment pass still labels
-    * every vector. Returns the centroids. */
+    * every vector. Returns the centroids. A rebuild replaces the index
+    * whole: the old `<path>.tombstones` go too (a delete of the old rows
+    * must not hide the new ones), and the overwrite of `path` takes any
+    * versioned generations and their pointer with it. */
   def buildIvfCentroidIndex(df: DataFrame, idCol: String, vecCol: String,
                             path: String, k: Int = 16, iters: Int = 4,
                             maxFitRows: Int = 100000,
                             extraCols: Seq[String] = Nil)
       : Seq[Seq[Double]] = {
+    val tombs = new org.apache.hadoop.fs.Path(s"$path.tombstones")
+    tombs.getFileSystem(df.sparkSession.sessionState.newHadoopConf())
+      .delete(tombs, true)
     val centroids = kmeansCentroids(df, idCol, vecCol, k, iters, maxFitRows)
     ivfAssigned(df, idCol, vecCol, centroids, extraCols)
       .write.mode("overwrite").partitionBy("cell").parquet(path)
@@ -371,7 +377,7 @@ object Similarity {
 
   /** The assignment projection of every centroid-index write: (id, v,
     * extra metadata columns, cell). `extraCols` ride INSIDE the index
-    * rows so a filtered probe ([[ivfCentroidTopKFiltered]]) evaluates
+    * rows so a filtered probe ([[ivfProbe]]) evaluates
     * its predicate straight off the pruned cell scan — no id-join
     * against a side table per probe. */
   private def ivfAssigned(df: DataFrame, idCol: String, vecCol: String,
@@ -598,12 +604,15 @@ object Similarity {
 
   private def ivfRoots(spark: org.apache.spark.sql.SparkSession,
                        indexPath: String): IvfRoots =
-    readIndexVersion(spark, indexPath) match {
-      case Some(n) => IvfRoots(s"$indexPath/.v$n/data",
-        s"$indexPath/.v$n/centroids", s"$indexPath/.v$n/tombstones")
-      case None => IvfRoots(indexPath, s"$indexPath.centroids",
-        s"$indexPath.tombstones")
-    }
+    ivfRootsOf(indexPath, readIndexVersion(spark, indexPath))
+
+  private def ivfRootsOf(indexPath: String,
+                         version: Option[Int]): IvfRoots = version match {
+    case Some(n) => IvfRoots(s"$indexPath/.v$n/data",
+      s"$indexPath/.v$n/centroids", s"$indexPath/.v$n/tombstones")
+    case None => IvfRoots(indexPath, s"$indexPath.centroids",
+      s"$indexPath.tombstones")
+  }
 
   /** The IVF-PQ analog of [[ivfRoots]]: the whole index (codes /
     * model / centroids / tombstones) lives under one root, so
@@ -646,208 +655,137 @@ object Similarity {
     if (n >= 2) legacyCleanup()
   }
 
-  /** Exact top-k within the `probes` centroid cells nearest the query
-    * vector, over a [[buildIvfCentroidIndex]] layout. The centroid
-    * model (k x dim) loads driver-side — it is the index metadata, not
-    * dataflow; the corpus scan is partition-pruned to the probed
-    * cells. */
-  def ivfCentroidTopK(spark: org.apache.spark.sql.SparkSession,
-                      indexPath: String, queryVec: Array[Float], k: Int,
-                      probes: Int = 1): DataFrame = {
-    val roots = ivfRoots(spark, indexPath)
-    val centroids = spark.read.parquet(roots.centroids)
-      .collect().map(r => r.getInt(0) -> r.getSeq[Double](1)).toMap
-    val qn = {
-      val n = math.sqrt(queryVec.map(x => x.toDouble * x).sum)
-      if (n > 0) queryVec.map(_ / n) else queryVec.map(_.toDouble)
-    }
-    val cells = centroids.toSeq
-      .map { case (ci, c) => ci -> c.zip(qn).map { case (a, b) => a * b }.sum }
-      .sortBy { case (ci, s) => (-s, ci) }
-      .take(math.max(1, probes)).map(_._1)
-    withoutTombstonesAt(spark, roots.tombstones,
-        spark.read.parquet(roots.data)
-          .filter(col("cell").isin(cells: _*))) // -> partition pruning
-      .select(col("id"),
-        round(cosine(col("v"), typedlit(queryVec.toSeq)), 6).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("id"))
-      .limit(k)
+  /** The one probe of the trained IVF tiers — the centroid index of
+    * [[buildIvfCentroidIndex]] and the composed index of
+    * [[buildIvfPqIndex]] — for a query TABLE; a single query is a
+    * 1-row table. The tier is read off the index: IVF-PQ when
+    * `<root>/model` exists, centroid IVF when its centroid model does,
+    * otherwise the call fails naming `path`. The generation
+    * (`.current` -> `.v<N>`, else the legacy layout) resolves ONCE, so
+    * every widening round reads the same data, tombstones and model.
+    *
+    * Each query ranks the persisted centroids by dot(unit query,
+    * centroid) and keeps its `probes` nearest cells (a |q| x nCells
+    * relation bounded by the MODEL, ties broken by cell); the index
+    * scan prunes to the UNION of probed cells (partition pruning — the
+    * cell list is model-sized metadata), drops tombstoned ids, and
+    * meets its queries in a BROADCAST join on the cell key; the
+    * per-query top-k compiles to WindowGroupLimit. Centroid IVF scores
+    * exact cosine and returns (`queryIdCol`, `id`, `cos_sim` rounded
+    * 6); IVF-PQ builds a lookup table per (query, probed cell) from the
+    * query-minus-centroid residual (the IVFADC asymmetry) and returns
+    * (`queryIdCol`, `id`, `pq_cos`). At most `k` rows per query, ranked
+    * (score desc, id).
+    *
+    * `predicate` (over the rows' `extraCols`) runs on the pruned scan
+    * BEFORE scoring and top-k, so a selective filter never shrinks the
+    * result the way post-filtering a top-k would; a query whose probed
+    * cells hold fewer than `k` matches WIDENS, doubling its probed
+    * cells in its own cell order until `k` rows match or every cell is
+    * scanned ([[filteredWideningLoop]]). */
+  def ivfProbe(spark: org.apache.spark.sql.SparkSession, path: String,
+               queries: DataFrame, queryIdCol: String, queryVecCol: String,
+               k: Int, probes: Int = 1,
+               predicate: Option[Column] = None): DataFrame = {
+    require(k > 0, s"ivfProbe: k must be positive: $k")
+    require(probes >= 1, s"ivfProbe: probes must be >= 1: $probes")
+    requireQueryIdNotReserved(queryIdCol, "ivfProbe")
+    val ix = trainedIvfAt(spark, path)
+    val q = queries.select(col(queryIdCol).as("qid"),
+      col(queryVecCol).as("__qv"))
+    def probe(qs: DataFrame, p: Int): DataFrame =
+      ivfProbeCore(spark, ix, qs, k, p, predicate)
+    predicate.fold(probe(q, probes))(_ =>
+        filteredWideningLoop(ix.centroids.size, probes, q, probe, k))
+      .select(col("qid").as(queryIdCol), col("id"), col(ix.score))
   }
 
-  /** Batch IVF probe — [[ivfCentroidTopK]] for a query TABLE in ONE
-    * job (the [[cosineTopKBatch]] principle applied to the INDEXED
-    * scale path): each query ranks the persisted model's cells by
-    * dot(unit query, centroid) and keeps its `probes` nearest — a
-    * |q| x k_cells relation, bounded by the MODEL, not the corpus,
-    * ranked by per-query windows with the single-query tie-break
-    * (score desc, cell asc) — then the index scan prunes to the UNION
-    * of probed cells (partition pruning; the cell list is model-sized
-    * metadata, so collecting it is the same driver cost every probe
-    * already pays for the centroids), candidates meet their queries in
-    * a BROADCAST join on the cell key (|q| x probes rows), and the
-    * per-query top-k compiles to WindowGroupLimit. Returns
-    * (`queryIdCol`, `id`, `cos_sim` rounded 6) with <= k rows per
-    * query, ranked (cos_sim desc, id) — per query IDENTICAL to
-    * [[ivfCentroidTopK]] at the same dials (law pinned in
-    * DedupSimilaritySpec; the driver-side query normalization there
-    * and [[l2normalize]] here perform the same IEEE ops in the same
-    * order, so cell rankings cannot diverge). */
-  def ivfCentroidTopKBatch(spark: org.apache.spark.sql.SparkSession,
-                           indexPath: String, queries: DataFrame,
-                           queryIdCol: String, queryVecCol: String,
-                           k: Int, probes: Int = 1): DataFrame = {
-    require(k > 0, s"k must be positive: $k")
-    require(probes >= 1, s"probes must be >= 1: $probes")
-    requireQueryIdNotReserved(queryIdCol, "ivfCentroidTopKBatch")
-    ivfBatchCore(spark, indexPath,
-      queries.select(col(queryIdCol).as("qid"),
-        col(queryVecCol).as("__qv")),
-      k, probes, None)
-      .select(col("qid").as(queryIdCol), col("id"), col("cos_sim"))
+  /** A trained IVF index resolved to one generation: its row table
+    * (centroid IVF's `(id, v, ...)` or IVF-PQ's `(id, pq_code, ...)`),
+    * tombstones, coarse centroids and — for IVF-PQ — the residual
+    * codebooks. */
+  private final case class TrainedIvf(data: String, tombstones: String,
+                                      centroids: Seq[Seq[Double]],
+                                      pq: Option[PqModel]) {
+    def score: String = if (pq.isDefined) "pq_cos" else "cos_sim"
   }
 
-  /** The one shared batch-probe dataflow ([[ivfCentroidTopKBatch]]
-    * documents the shape): takes (qid, __qv) queries, returns
-    * (qid, id, cos_sim). `pred`, when present, filters the pruned
-    * index scan BEFORE scoring and the per-query top-k — the filtered
-    * ANN contract ([[ivfCentroidTopKBatchFiltered]]). */
-  private def ivfBatchCore(spark: org.apache.spark.sql.SparkSession,
-                           indexPath: String, q: DataFrame, k: Int,
+  private def trainedIvfAt(spark: org.apache.spark.sql.SparkSession,
+                           path: String): TrainedIvf = {
+    val version = readIndexVersion(spark, path)
+    val pqRoot = version.fold(path)(n => s"$path/.v$n")
+    val roots = ivfRootsOf(path, version)
+    val model = new org.apache.hadoop.fs.Path(s"$pqRoot/model")
+    val fs = model.getFileSystem(spark.sessionState.newHadoopConf())
+    if (fs.exists(model))
+      TrainedIvf(s"$pqRoot/codes", s"$pqRoot/tombstones",
+        readCentroidsDir(spark, s"$pqRoot/centroids"),
+        Some(loadPqModel(spark, pqRoot)))
+    else if (fs.exists(new org.apache.hadoop.fs.Path(roots.centroids)))
+      TrainedIvf(roots.data, roots.tombstones,
+        readCentroidsDir(spark, roots.centroids), None)
+    else throw new IllegalArgumentException(
+      s"ivfProbe: $path holds no trained IVF index (neither " +
+        s"$pqRoot/model nor ${roots.centroids} exists)")
+  }
+
+  /** One probe round at width `probes` over (qid, __qv) queries;
+    * returns (qid, id, score). The two tiers differ only in the column
+    * the broadcast carries per (query, cell) and in the score. */
+  private def ivfProbeCore(spark: org.apache.spark.sql.SparkSession,
+                           ix: TrainedIvf, q: DataFrame, k: Int,
                            probes: Int,
                            pred: Option[Column]): DataFrame = {
-    val centroids = readCentroids(spark, indexPath)
-    val cellsLit = typedlit(centroids.zipWithIndex.map {
+    val cellsLit = typedlit(ix.centroids.zipWithIndex.map {
       case (c, i) => (i, c)
     })
     val wCell = Window.partitionBy(col("qid"))
       .orderBy(col("__s").desc, col("cell"))
-    val probed = q
+    val ranked = q
       .withColumn("__qn", l2normalize(col("__qv")))
       .select(col("qid"), col("__qv"), col("__qn"),
         explode(cellsLit).as("__c"))
-      .select(col("qid"), col("__qv"), col("__c._1").as("cell"),
+      .select(col("qid"), col("__qv"), col("__qn"),
+        col("__c._1").as("cell"), col("__c._2").as("__cen"),
         aggregate(zip_with(col("__qn"), col("__c._2"),
           (x, y) => x * y), lit(0.0d), (acc, x) => acc + x).as("__s"))
       .withColumn("__rn", row_number().over(wCell))
       .filter(col("__rn") <= probes)
-      .select(col("qid"), col("cell"), col("__qv"))
-    val allCells = probed.select(col("cell")).distinct()
+    val (carried, score) = ix.pq match {
+      case None =>
+        (col("__qv"), round(cosine(col("v"), col("__qv")), 6))
+      case Some(model) =>
+        (graft.plans.PqExpressions.pq_lut(
+          zip_with(col("__qn"), col("__cen"), (a, b) => a - b),
+          model.codebooks).as("__lut"), adcCosCol(col("__lut")))
+    }
+    val probed = ranked.select(col("qid"), col("cell"), carried)
+    val allCells = ranked.select(col("cell")).distinct()
       .collect().map(_.getInt(0)).toSeq
     val wTop = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("id"))
-    val roots = ivfRoots(spark, indexPath)
-    val pruned = withoutTombstonesAt(spark, roots.tombstones,
-      spark.read.parquet(roots.data)
+      .orderBy(col(ix.score).desc, col("id"))
+    val pruned = withoutTombstonesAt(spark, ix.tombstones,
+      spark.read.parquet(ix.data)
         .filter(col("cell").isin(allCells: _*))) // -> partition pruning
     pred.fold(pruned)(pruned.filter)
       .join(broadcast(probed), Seq("cell"))
-      .select(col("qid"), col("id"),
-        round(cosine(col("v"), col("__qv")), 6).as("cos_sim"))
+      .select(col("qid"), col("id"), score.as(ix.score))
       .withColumn("__rn", row_number().over(wTop))
       .filter(col("__rn") <= k)
-      .select(col("qid"), col("id"), col("cos_sim"))
+      .select(col("qid"), col("id"), col(ix.score))
   }
 
-  /** Metadata-filtered exact top-k over the probed cells — filtered
-    * ANN search (r15 verdict #4): the predicate (over the index's
-    * metadata columns, [[ivfAssigned]]'s `extraCols`) is evaluated on
-    * the pruned cell scan BEFORE scoring and top-k, so a selective
-    * filter can never silently shrink the result the way
-    * post-filtering a top-k would (that failure mode is spec-pinned).
-    * When the probed cells hold fewer than `k` matching rows, the
-    * probe WIDENS — doubling the probed-cell count (in the query's
-    * cell-similarity order, the multi-probe rule) until `k` rows
-    * match or every cell is scanned — so selectivity costs probes,
-    * not recall. Each widening round is one count action on a pruned
-    * scan, at most log2(nCells) rounds. */
-  def ivfCentroidTopKFiltered(spark: org.apache.spark.sql.SparkSession,
-                              indexPath: String, queryVec: Array[Float],
-                              k: Int, predicate: Column,
-                              probes: Int = 1): DataFrame = {
-    require(k > 0, s"k must be positive: $k")
-    require(probes >= 1, s"probes must be >= 1: $probes")
-    val centroids = readCentroids(spark, indexPath)
-    val qn = {
-      val n = math.sqrt(queryVec.map(x => x.toDouble * x).sum)
-      if (n > 0) queryVec.map(_ / n) else queryVec.map(_.toDouble)
-    }
-    val ranked = centroids.zipWithIndex
-      .map { case (c, ci) =>
-        ci -> c.zip(qn).map { case (a, b) => a * b }.sum }
-      .sortBy { case (ci, s) => (-s, ci) }
-      .map(_._1)
-    val roots = ivfRoots(spark, indexPath)
-    def probeAt(p: Int): DataFrame =
-      withoutTombstonesAt(spark, roots.tombstones,
-          spark.read.parquet(roots.data)
-            .filter(col("cell").isin(ranked.take(p): _*)))
-        .filter(predicate)
-        .select(col("id"),
-          round(cosine(col("v"), typedlit(queryVec.toSeq)), 6)
-            .as("cos_sim"))
-        .orderBy(col("cos_sim").desc, col("id"))
-        .limit(k)
-    // each round materializes eagerly (the batch form's rule): the
-    // count that decides widening and the rows the caller consumes
-    // must come from ONE execution — a lazy result would re-run the
-    // final probe plan and could diverge from the satisfaction
-    // decision under a concurrent index mutation
-    var p = math.min(ranked.size, probes)
-    var res = Materialize(probeAt(p), eager = true)
-    while (p < ranked.size && res.count() < k) {
-      p = math.min(ranked.size, p * 2)
-      res = Materialize(probeAt(p), eager = true)
-    }
-    res
-  }
-
-  /** [[ivfCentroidTopKFiltered]] for a query TABLE in one job per
-    * widening round: every query probes at the current width through
-    * the shared batch dataflow; queries that filled their `k` slots
-    * (or, once the width covers every cell, all of them) finalize,
-    * and only the unsatisfied remainder re-probes at double width —
-    * so one under-filled selective query never re-scans the whole
-    * batch's cells. Per-round results are materialized (the count
-    * that decides satisfaction must not recompute the probe), rounds
-    * are bounded by log2(nCells), and per query the output equals
-    * [[ivfCentroidTopKFiltered]] at the same dials (law pinned in
-    * DedupSimilaritySpec).
-    *
-    * Coordination is DATAFRAME-shaped (r16 verdict #4): satisfied
-    * qids are a small aggregate OVER the materialized round result,
-    * and finished/unfinished queries split by semi/anti-join against
-    * it — no per-round collect of the qid list, no `isin` literal
-    * plans, so a 100k-query batch never turns the driver (or codegen
-    * over giant IN-lists) into the widening bottleneck. The only
-    * per-round driver value is the one-boolean "any queries left"
-    * check (spec-pinned: no executed plan carries an IN-list over
-    * qids). */
-  def ivfCentroidTopKBatchFiltered(
-      spark: org.apache.spark.sql.SparkSession, indexPath: String,
-      queries: DataFrame, queryIdCol: String, queryVecCol: String,
-      k: Int, predicate: Column, probes: Int = 1): DataFrame = {
-    require(k > 0, s"k must be positive: $k")
-    require(probes >= 1, s"probes must be >= 1: $probes")
-    requireQueryIdNotReserved(queryIdCol, "ivfCentroidTopKBatchFiltered")
-    val nCells = readCentroids(spark, indexPath).size
-    filteredWideningLoop(nCells, probes,
-      queries.select(col(queryIdCol).as("qid"),
-        col(queryVecCol).as("__qv")),
-      (q, p) => ivfBatchCore(spark, indexPath, q, k, p,
-        Some(predicate)),
-      k)
-      .select(col("qid").as(queryIdCol), col("id"), col("cos_sim"))
-  }
-
-  /** The shared probe-widening coordinator of the batch filtered ANN
-    * probes ([[ivfCentroidTopKBatchFiltered]] /
-    * [[ivfPqTopKBatchFiltered]]): run `probe(remaining, p)` per round,
-    * finalize queries that filled `k` slots (all of them once `p`
-    * covers every cell), double `p`, and re-probe only the
-    * unsatisfied remainder. Rounds <= log2(nCells); every round's
-    * result is eagerly materialized so the satisfaction decision and
-    * the returned rows come from one execution; all query bookkeeping
-    * stays in DataFrames (semi/anti-joins on `qid`). */
+  /** The probe-widening coordinator of a filtered [[ivfProbe]]: run
+    * `probe(remaining, p)` per round, finalize queries that filled `k`
+    * slots (all of them once `p` covers every cell), double `p`, and
+    * re-probe only the unsatisfied remainder, so one under-filled
+    * selective query never re-scans the whole batch's cells. Rounds
+    * <= log2(nCells); every round's result is eagerly materialized so
+    * the satisfaction decision and the returned rows come from one
+    * execution. Query bookkeeping stays in DataFrames (semi/anti-joins
+    * on `qid`): no per-round collect of the qid list and no IN-list
+    * plans over qids (spec-pinned), so a large batch never turns the
+    * driver into the widening bottleneck. */
   private def filteredWideningLoop(nCells: Int, probes: Int,
                                    queries: DataFrame,
                                    probe: (DataFrame, Int) => DataFrame,
@@ -874,16 +812,10 @@ object Similarity {
     sys.error("unreachable")
   }
 
-  /** The persisted centroid model of a [[buildIvfCentroidIndex]]
-    * layout, as (cell index -> unit centroid). Index METADATA (k x dim
-    * doubles), loaded driver-side like every probe does. */
-  private def readCentroids(spark: org.apache.spark.sql.SparkSession,
-                            indexPath: String): Seq[Seq[Double]] =
-    readCentroidsDir(spark, ivfRoots(spark, indexPath).centroids)
-
-  /** [[readCentroids]] against an explicit (cell, centroid) table
-    * directory — shared with the IVF-PQ layout, whose coarse
-    * quantizer lives INSIDE the index root (`<path>/centroids`). */
+  /** A persisted centroid model — a (cell, centroid) table directory,
+    * `<path>.centroids` or `.v<N>/centroids` for centroid IVF and
+    * `<root>/centroids` for IVF-PQ — as the unit centroids in cell
+    * order. Index METADATA (k x dim doubles), loaded driver-side. */
   private def readCentroidsDir(spark: org.apache.spark.sql.SparkSession,
                                dir: String): Seq[Seq[Double]] = {
     val m = spark.read.parquet(dir)
@@ -903,7 +835,7 @@ object Similarity {
     * assignment is a pure function of (vector, centroid model), an
     * appended index is row-for-row IDENTICAL to one built in a single
     * pass with the same model (law pinned in DedupSimilaritySpec), so
-    * [[ivfCentroidTopK]] probes need no append-awareness.
+    * [[ivfProbe]] needs no append-awareness.
     *
     * What appending does NOT do is re-fit: centroids age as the
     * vector distribution drifts, recall decays silently. That is a
@@ -959,10 +891,9 @@ object Similarity {
     * repeats harmless), probes exclude them IMMEDIATELY, and the index
     * itself is untouched until [[ivfRetrain]] — which doubles as the
     * compaction: its rewrite drops tombstoned rows and clears the
-    * table. Covers the centroid-index family ([[ivfCentroidTopK]] /
-    * [[ivfCentroidTopKBatch]] / the retrain lifecycle); the SRP and
-    * IVF-PQ layouts are separate indexes with their own rebuild
-    * story. */
+    * table. Covers the centroid-index family ([[ivfProbe]] and the
+    * retrain lifecycle); the SRP and IVF-PQ layouts are separate
+    * indexes with their own rebuild story. */
   def ivfDelete(indexPath: String, ids: DataFrame,
                 idCol: String): Unit =
     ids.select(col(idCol).as("id")).distinct()
@@ -1952,7 +1883,7 @@ object Similarity {
     * (Spark 3.5+), so each map task keeps a k-heap per id before the
     * exchange — shuffle volume is O(n x k), not O(n²). At corpus
     * scale, block the same computation with [[srpNeighborPairs]]
-    * cells or generate candidates per-row with [[ivfPqTopK]] probes
+    * cells or generate candidates per-row with [[ivfProbe]] probes
     * and re-rank; this brute form is the correctness spec. */
   def knnJoin(df: DataFrame, idCol: String, vecCol: String,
               k: Int): DataFrame = {
@@ -2031,7 +1962,7 @@ object Similarity {
     * per-row cap compiles to WindowGroupLimit, so shuffle volume is
     * O(n x k), not O(n²) — same shape as [[knnJoin]]. At corpus scale,
     * generate candidates with [[srpNeighborPairs]] blocking or
-    * [[ivfPqTopK]] probes and apply the same label-and-`maxCos` filter
+    * [[ivfProbe]] probes and apply the same label-and-`maxCos` filter
     * before the top-k; this brute form is the correctness spec.
     *
     * The `maxCos` cut compares the ROUNDED cosine (house float rule:
@@ -2319,11 +2250,26 @@ object Similarity {
   }
 
   /** Per-query ADC lookup table: `lut(s)(c) = ||q_s - cen_s_c||²` for
-    * the L2-normalized query. m x ksub doubles, built driver-side. */
+    * the L2-normalized query, components past its length read as zero.
+    * m x ksub doubles, built driver-side; [[graft.plans.PqLut]] runs the
+    * same loop per row. */
   private def pqLut(query: Seq[Double], model: PqModel): Seq[Seq[Double]] = {
     val nrm = math.sqrt(query.map(x => x * x).sum)
     val qn = if (nrm > 0) query.map(_ / nrm) else query
-    pqLut0(qn, model)
+    model.codebooks.zipWithIndex.map { case (cents, s) =>
+      val base = s * model.dsub
+      cents.map { cen =>
+        var d2 = 0.0d
+        var i = 0
+        while (i < model.dsub) {
+          val x = if (base + i < qn.length) qn(base + i) else 0.0d
+          val t = x - cen(i)
+          d2 += t * t
+          i += 1
+        }
+        d2
+      }
+    }
   }
 
   /** ADC top-k over a [[writePqIndex]] codes layout for the query vector of
@@ -2399,12 +2345,22 @@ object Similarity {
     * code) hive-partitioned by cell, `model/` (PQ codebooks over
     * residuals), `centroids/` (the coarse quantizer). Returns the
     * centroids. Residual codebooks are fit driver-side on the same
-    * bounded hash-sample as [[kmeansCentroids]]. */
+    * bounded hash-sample as [[kmeansCentroids]]. A rebuild replaces the
+    * index whole: the old `tombstones/`, the `.current` pointer and the
+    * `.v<N>` generations of a versioned root are deleted first, so
+    * probes read what this build wrote. */
   def buildIvfPqIndex(df: DataFrame, idCol: String, vecCol: String,
                       path: String, nCells: Int = 16, m: Int = 8,
                       nbits: Int = 8, iters: Int = 4,
                       maxFitRows: Int = 65536,
                       extraCols: Seq[String] = Nil): Seq[Seq[Double]] = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(df.sparkSession.sessionState.newHadoopConf())
+    if (fs.exists(root))
+      fs.listStatus(root).map(_.getPath)
+        .filter(p => Set("tombstones", ".current")(p.getName) ||
+          p.getName.matches("\\.v\\d+"))
+        .foreach(fs.delete(_, true))
     val (centroids, model) = fitIvfPqModels(df, idCol, vecCol, path,
       nCells, m, nbits, iters, maxFitRows)
     // one distributed pass: assign cell, subtract its centroid, encode
@@ -2465,108 +2421,6 @@ object Similarity {
                      maxFitRows: Int = 65536): Seq[Seq[Double]] =
     fitIvfPqModels(seed, idCol, vecCol, path, nCells, m, nbits, iters,
       maxFitRows)._1
-
-  /** ADC top-k through the composed index: rank cells by
-    * query-centroid similarity, read only the top `probes` partition
-    * directories, score each with its OWN lookup table (the LUT is
-    * per-cell — the query residual differs per cell), union, top-k.
-    * Cost per query: `probes/nCells` of the corpus at m bytes per
-    * row. */
-  def ivfPqTopK(spark: org.apache.spark.sql.SparkSession, path: String,
-                queryVec: Array[Float], k: Int,
-                probes: Int = 1): DataFrame = {
-    val root = pqRoot(spark, path)
-    val model = loadPqModel(spark, root)
-    val centroids = spark.read.parquet(s"$root/centroids")
-      .collect().map(r => r.getInt(0) -> r.getSeq[Double](1)).toMap
-    val nrm = math.sqrt(queryVec.map(x => x.toDouble * x).sum)
-    val qn = if (nrm > 0) queryVec.map(_ / nrm) else queryVec.map(_.toDouble)
-    val cells = centroids.toSeq
-      .map { case (ci, c) =>
-        ci -> c.zip(qn).map { case (a, b) => a * b }.sum }
-      .sortBy { case (ci, s) => (-s, ci) }
-      .take(math.max(1, probes)).map(_._1)
-    // tombstoned vectors ([[ivfPqDelete]]) never surface; the
-    // anti-join rides the pruned cell scan
-    val codes = withoutTombstonesAt(spark, s"$root/tombstones",
-      spark.read.parquet(s"$root/codes"))
-    val perCell = cells.map { ci =>
-      val res = qn.zip(centroids(ci)).map { case (a, b) => a - b }
-      val lut = pqLut0(res, model)
-      codes.filter(col("cell") === ci) // -> partition pruning
-        .select(col("id"), adcCos(lut).as("pq_cos"))
-    }
-    perCell.reduce(_ unionByName _)
-      .orderBy(col("pq_cos").desc, col("id"))
-      .limit(k)
-  }
-
-  /** Metadata-filtered ADC top-k through the composed index — the
-    * [[ivfCentroidTopKFiltered]] contract on the IVF-PQ tier: the
-    * predicate (over metadata columns riding the code rows,
-    * [[buildIvfPqIndex]]'s `extraCols`) runs on the pruned cell scan
-    * BEFORE scoring and top-k, and the probe widens (doubling probed
-    * cells in query-centroid-similarity order) until `k` rows match
-    * or every cell is scanned. Scores are the ADC approximation, so
-    * rank quality matches [[ivfPqTopK]]'s — the filter changes WHICH
-    * rows compete, never how they score. */
-  def ivfPqTopKFiltered(spark: org.apache.spark.sql.SparkSession,
-                        path: String, queryVec: Array[Float], k: Int,
-                        predicate: Column,
-                        probes: Int = 1): DataFrame = {
-    require(k > 0, s"k must be positive: $k")
-    require(probes >= 1, s"probes must be >= 1: $probes")
-    val root = pqRoot(spark, path)
-    val model = loadPqModel(spark, root)
-    val centroids = readCentroidsDir(spark, root + "/centroids")
-    val nrm = math.sqrt(queryVec.map(x => x.toDouble * x).sum)
-    val qn = if (nrm > 0) queryVec.map(_ / nrm) else queryVec.map(_.toDouble)
-    val ranked = centroids.zipWithIndex
-      .map { case (c, ci) =>
-        ci -> c.zip(qn).map { case (a, b) => a * b }.sum }
-      .sortBy { case (ci, s) => (-s, ci) }
-      .map(_._1)
-    val codes = withoutTombstonesAt(spark, s"$root/tombstones",
-      spark.read.parquet(s"$root/codes"))
-    def probeAt(p: Int): DataFrame =
-      ranked.take(p).map { ci =>
-        val res = qn.zip(centroids(ci)).map { case (a, b) => a - b }
-        val lut = pqLut0(res, model)
-        codes.filter(col("cell") === ci) // -> partition pruning
-          .filter(predicate)
-          .select(col("id"), adcCos(lut).as("pq_cos"))
-      }.reduce(_ unionByName _)
-        .orderBy(col("pq_cos").desc, col("id"))
-        .limit(k)
-    // eager per-round materialization — the flat-IVF filtered probe's
-    // rule: the widening count and the returned rows come from one
-    // execution, never a re-run of the probe plan
-    var p = math.min(ranked.size, probes)
-    var res = Materialize(probeAt(p), eager = true)
-    while (p < ranked.size && res.count() < k) {
-      p = math.min(ranked.size, p * 2)
-      res = Materialize(probeAt(p), eager = true)
-    }
-    res
-  }
-
-  /** [[pqLut]] without re-normalizing (the input is already a residual
-    * in normalized space). */
-  private def pqLut0(res: Seq[Double], model: PqModel): Seq[Seq[Double]] =
-    model.codebooks.zipWithIndex.map { case (cents, s) =>
-      val base = s * model.dsub
-      cents.map { cen =>
-        var d2 = 0.0d
-        var i = 0
-        while (i < model.dsub) {
-          val x = if (base + i < res.length) res(base + i) else 0.0d
-          val t = x - cen(i)
-          d2 += t * t
-          i += 1
-        }
-        d2
-      }
-    }
 
   /** The one distributed assign-and-encode pass of the IVF-PQ layout
     * (normalize, nearest coarse centroid, encode the cell residual) —
@@ -2734,7 +2588,7 @@ object Similarity {
   /** Tombstone vectors out of an IVF-PQ index — the [[ivfDelete]]
     * contract on the composed layout: ids append to
     * `<path>/tombstones` (append-only; repeats harmless), every probe
-    * ([[ivfPqTopK]] / [[ivfPqTopKBatch]]) excludes them IMMEDIATELY,
+    * ([[ivfProbe]]) excludes them IMMEDIATELY,
     * and the codes are untouched until [[ivfPqCompact]] or
     * [[ivfPqRetrain]]. Unlike BM25's index there are no corpus
     * statistics to heal — scores of surviving vectors are unaffected
@@ -3020,108 +2874,5 @@ object Similarity {
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") <= k)
       .select(col("__qid").as(queryIdCol), col("id"), col("pq_cos"))
-  }
-
-  /** Batch ADC probe through the COMPOSED index — [[ivfPqTopK]] for a
-    * query table in ONE job (the [[ivfCentroidTopKBatch]] shape with
-    * [[graft.plans.PqAdcDistanceCol]] as the scorer): each query ranks
-    * the persisted coarse centroids and keeps its `probes` nearest
-    * cells (model-sized work, per-query windows, the single-query
-    * tie-break), builds its PER-CELL lookup table from the
-    * query-minus-centroid residual (the LUT differs per probed cell —
-    * that is what makes IVFADC asymmetric), and the code scan prunes
-    * to the UNION of probed cells before candidates meet their
-    * queries' tables in a broadcast join on the cell key. Per query
-    * IDENTICAL to [[ivfPqTopK]] at the same dials (law pinned in
-    * PqSpec — same normalization, residual, and LUT arithmetic in the
-    * same IEEE order on both paths). Cost: `|probed cells|/nCells` of
-    * the corpus at m bytes per row, once, for the whole batch. */
-  def ivfPqTopKBatch(spark: org.apache.spark.sql.SparkSession,
-                     path: String, queries: DataFrame,
-                     queryIdCol: String, queryVecCol: String, k: Int,
-                     probes: Int = 1): DataFrame = {
-    require(k > 0, s"k must be positive: $k")
-    require(probes >= 1, s"probes must be >= 1: $probes")
-    requireQueryIdNotReserved(queryIdCol, "ivfPqTopKBatch")
-    ivfPqBatchCore(spark, path,
-      queries.select(col(queryIdCol).as("qid"),
-        col(queryVecCol).as("__qv")),
-      k, probes, None)
-      .select(col("qid").as(queryIdCol), col("id"), col("pq_cos"))
-  }
-
-  /** The one shared batch ADC-probe dataflow ([[ivfPqTopKBatch]]
-    * documents the shape): takes (qid, __qv) queries, returns
-    * (qid, id, pq_cos). `pred`, when present, filters the pruned
-    * code scan BEFORE scoring and the per-query top-k — the filtered
-    * ANN contract on the composed index
-    * ([[ivfPqTopKBatchFiltered]]). */
-  private def ivfPqBatchCore(spark: org.apache.spark.sql.SparkSession,
-                             path: String, q: DataFrame, k: Int,
-                             probes: Int,
-                             pred: Option[Column]): DataFrame = {
-    val root = pqRoot(spark, path)
-    val model = loadPqModel(spark, root)
-    val centroids = readCentroidsDir(spark, s"$root/centroids")
-    val cellsLit = typedlit(centroids.zipWithIndex.map {
-      case (c, i) => (i, c)
-    })
-    val wCell = Window.partitionBy(col("__qid"))
-      .orderBy(col("__s").desc, col("cell"))
-    val probed = q
-      .select(col("qid").as("__qid"),
-        l2normalize(col("__qv")).as("__qn"))
-      .select(col("__qid"), col("__qn"), explode(cellsLit).as("__c"))
-      .select(col("__qid"), col("__qn"), col("__c._1").as("cell"),
-        col("__c._2").as("__cen"),
-        aggregate(zip_with(col("__qn"), col("__c._2"),
-          (x, y) => x * y), lit(0.0d), (acc, x) => acc + x).as("__s"))
-      .withColumn("__rn", row_number().over(wCell))
-      .filter(col("__rn") <= probes)
-      .select(col("__qid"), col("cell"),
-        graft.plans.PqExpressions.pq_lut(
-          zip_with(col("__qn"), col("__cen"), (a, b) => a - b),
-          model.codebooks).as("__lut"))
-    val allCells = probed.select(col("cell")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val wTop = Window.partitionBy(col("__qid"))
-      .orderBy(col("pq_cos").desc, col("id"))
-    val pruned = withoutTombstonesAt(spark, s"$root/tombstones",
-      spark.read.parquet(s"$root/codes")
-        .filter(col("cell").isin(allCells: _*))) // -> partition pruning
-    pred.fold(pruned)(pruned.filter)
-      .join(broadcast(probed), Seq("cell"))
-      .select(col("__qid"), col("id"),
-        adcCosCol(col("__lut")).as("pq_cos"))
-      .withColumn("__rn", row_number().over(wTop))
-      .filter(col("__rn") <= k)
-      .select(col("__qid").as("qid"), col("id"), col("pq_cos"))
-  }
-
-  /** [[ivfPqTopKFiltered]] for a query TABLE in one job per widening
-    * round — the composed-index twin of
-    * [[ivfCentroidTopKBatchFiltered]], sharing its DataFrame-shaped
-    * coordination ([[filteredWideningLoop]]): the metadata predicate
-    * runs on the pruned code scan BEFORE ADC scoring and the per-query
-    * top-k, queries that filled their `k` slots finalize, and only the
-    * unsatisfied remainder re-probes at double width. Scores are the
-    * ADC approximation ([[ivfPqTopK]]'s quality); the filter changes
-    * WHICH rows compete, never how they score. */
-  def ivfPqTopKBatchFiltered(spark: org.apache.spark.sql.SparkSession,
-                             path: String, queries: DataFrame,
-                             queryIdCol: String, queryVecCol: String,
-                             k: Int, predicate: Column,
-                             probes: Int = 1): DataFrame = {
-    require(k > 0, s"k must be positive: $k")
-    require(probes >= 1, s"probes must be >= 1: $probes")
-    requireQueryIdNotReserved(queryIdCol, "ivfPqTopKBatchFiltered")
-    val nCells =
-      readCentroidsDir(spark, s"${pqRoot(spark, path)}/centroids").size
-    filteredWideningLoop(nCells, probes,
-      queries.select(col(queryIdCol).as("qid"),
-        col(queryVecCol).as("__qv")),
-      (q, p) => ivfPqBatchCore(spark, path, q, k, p, Some(predicate)),
-      k)
-      .select(col("qid").as(queryIdCol), col("id"), col("pq_cos"))
   }
 }

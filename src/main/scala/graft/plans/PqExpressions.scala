@@ -146,10 +146,10 @@ case class PqAdcDistance(child: Expression, lut: Seq[Seq[Double]])
 }
 
 /** Build the per-query ADC lookup table FROM A COLUMN — the batch-probe
-  * face of the driver-side `Similarity.pqLut0`: for an input vector `v`
+  * face of the driver-side `Similarity.pqLut`: for an input vector `v`
   * (an L2-normalized query, or a query-minus-centroid cell residual),
   * `lut(s)(c) = ||v_s - cen_s_c||²` with components past `v`'s length
-  * read as zero — the EXACT loop `pqLut0` runs on the driver, in the
+  * read as zero — the EXACT loop `pqLut` runs on the driver, in the
   * same IEEE order, so a batch probe's scores are bit-identical to the
   * per-query path's (law pinned in PqSpec). One `m x ksub` double table
   * per row; queries are few by contract (the table rides a broadcast),

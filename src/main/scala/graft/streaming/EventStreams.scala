@@ -592,8 +592,8 @@ object EventStreams {
     * `batch=<id>/cell=<c>` subtree, so replays rewrite rather than
     * double-append and results are batching-invariant: assignment
     * reads no cross-batch state). After the drain the index is
-    * immediately probe-able by `ivfCentroidTopK` / the batch and
-    * filtered forms — one drain over a corpus probes exactly like a
+    * immediately probe-able by `Similarity.ivfProbe`, filtered or
+    * not — one drain over a corpus probes exactly like a
     * one-shot `buildIvfCentroidIndex` under the same model (the
     * execution gate `q_ivf_stream_exec`); later drains see only new
     * files and extend the index incrementally (spec-pinned). */

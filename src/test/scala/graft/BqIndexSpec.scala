@@ -434,8 +434,8 @@ class BqIndexSpec extends SparkSpec {
     graft.streaming.EventStreams.ivfIndexAvailableNow(spark,
       s"$root/src", "vec_id", $"embedding", s"$root/ivf",
       s"$root/ckivf", extraCols = Seq("label"))
-    val ivf = Similarity.ivfCentroidTopKBatchFiltered(spark,
-        s"$root/ivf", qs, "qid", "qv", k = 5, $"label" === 1)
+    val ivf = Similarity.ivfProbe(spark, s"$root/ivf", qs, "qid", "qv",
+        k = 5, predicate = Some($"label" === 1))
       .as[(Long, Long, Double)].collect()
     assert(ivf.nonEmpty && ivf.forall(r => lbl(r._2) == 1))
     Similarity.initIvfPqIndex(corpus, "vec_id", "embedding",
@@ -443,8 +443,8 @@ class BqIndexSpec extends SparkSpec {
     graft.streaming.EventStreams.ivfPqIndexAvailableNow(spark,
       s"$root/src", "vec_id", $"embedding", s"$root/ivfpq",
       s"$root/ckivfpq", extraCols = Seq("label"))
-    val ivfpq = Similarity.ivfPqTopKBatchFiltered(spark,
-        s"$root/ivfpq", qs, "qid", "qv", k = 5, $"label" === 1)
+    val ivfpq = Similarity.ivfProbe(spark, s"$root/ivfpq", qs, "qid",
+        "qv", k = 5, predicate = Some($"label" === 1))
       .as[(Long, Long, Double)].collect()
     assert(ivfpq.nonEmpty && ivfpq.forall(r => lbl(r._2) == 1))
   }
@@ -504,6 +504,31 @@ class BqIndexSpec extends SparkSpec {
     interceptGuard("matryoshkaRerankedBatch") {
       Similarity.matryoshkaRerankedBatch(emb, "vec_id", "embedding",
         badQs, "id", "qv", k = 3, pool = 5, dims = 16)
+    }
+    // the trained IVF probe: both tiers, every guard under its name
+    val ivf = tmp("ivfface") + "/idx"
+    Similarity.buildIvfCentroidIndex(emb.filter($"vec_id" < 40),
+      "vec_id", "embedding", ivf, k = 2, iters = 1)
+    val ivfpq = tmp("ivfpqface") + "/idx"
+    Similarity.buildIvfPqIndex(emb.filter($"vec_id" < 40), "vec_id",
+      "embedding", ivfpq, nCells = 2, m = 8, nbits = 2, iters = 1)
+    val qs = emb.filter($"vec_id" < 2)
+      .select($"vec_id".as("qid"), $"embedding".as("qv"))
+    Seq(ivf, ivfpq).foreach { path =>
+      interceptGuard("ivfProbe", "queryIdCol") {
+        Similarity.ivfProbe(spark, path, badQs, "id", "qv", k = 3)
+      }
+      interceptGuard("ivfProbe", "k must be positive") {
+        Similarity.ivfProbe(spark, path, qs, "qid", "qv", k = 0)
+      }
+      interceptGuard("ivfProbe", "probes must be >= 1") {
+        Similarity.ivfProbe(spark, path, qs, "qid", "qv", k = 3,
+          probes = 0)
+      }
+    }
+    // a root without a trained IVF index (here a model-free one)
+    interceptGuard("ivfProbe", dir, "no trained IVF index") {
+      Similarity.ivfProbe(spark, dir, qs, "qid", "qv", k = 3)
     }
   }
 

@@ -619,19 +619,20 @@ class DedupSimilaritySpec extends SparkSpec {
       k = 8, iters = 3)
     val queries = emb.filter($"vec_id" < 5)
       .select($"vec_id".as("qid"), $"embedding".as("qv"))
+    // a query's rows in the 5-query batch equal its rows from a 1-row
+    // probe (the batch prunes to the union of every query's cells)
+    def byQuery(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .groupBy(_.getLong(0))
+      .view.mapValues(_.map(r => (r.getLong(1), r.getDouble(2))).toSeq
+        .sortBy { case (id, c) => (-c, id) }).toMap
     Seq(1, 2).foreach { probes =>
-      val batch = Similarity.ivfCentroidTopKBatch(spark, dir, queries,
+      val batch = Similarity.ivfProbe(spark, dir, queries,
         "qid", "qv", k = 10, probes = probes)
-      val got = batch.collect()
-        .groupBy(_.getLong(0))
-        .view.mapValues(_.map(r => (r.getLong(1), r.getDouble(2))).toSeq
-          .sortBy { case (id, c) => (-c, id) }).toMap
+      val got = byQuery(batch)
       (0L until 5L).foreach { q =>
-        val qVec = emb.filter($"vec_id" === q)
-          .select($"embedding").collect()(0).getSeq[Float](0).toArray
-        val single = Similarity.ivfCentroidTopK(spark, dir, qVec,
-            k = 10, probes = probes)
-          .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+        val single = byQuery(Similarity.ivfProbe(spark, dir,
+          queries.filter($"qid" === q), "qid", "qv", k = 10,
+          probes = probes))(q)
         assert(got(q) == single,
           s"probes=$probes query $q: ${got(q)} vs $single")
       }
@@ -643,8 +644,42 @@ class DedupSimilaritySpec extends SparkSpec {
       assert(plan.contains("Broadcast"), plan.take(600))
     }
     intercept[IllegalArgumentException] {
-      Similarity.ivfCentroidTopKBatch(spark, dir, queries, "qid", "qv",
-        k = 0)
+      Similarity.ivfProbe(spark, dir, queries, "qid", "qv", k = 0)
+    }
+  }
+
+  // Jobs the replaced batch faces (ivfCentroidTopKBatch, ivfPqTopKBatch
+  // and their filtered forms) launched for the same calls on the same
+  // data, each call collected: (centroid IVF, IVF-PQ) unfiltered at
+  // probes = 2, then both filtered on the rare label 1 at probes = 1,
+  // for a 1-row and a 5-row query frame.
+  private val batchFaceJobs = Map(1 -> Seq(10, 12, 56, 62),
+    5 -> Seq(10, 12, 57, 63))
+
+  test("ivfProbe launches no more jobs than the batch faces it replaced") {
+    val emb = Tables.embeddings(spark, sfDir)
+      .select($"vec_id", $"embedding", $"label")
+    val root = java.nio.file.Files.createTempDirectory("ivfjobs").toString
+    Similarity.buildIvfCentroidIndex(emb, "vec_id", "embedding",
+      s"$root/ivf", k = 8, iters = 3, extraCols = Seq("label"))
+    Similarity.buildIvfPqIndex(emb, "vec_id", "embedding", s"$root/pq",
+      nCells = 8, m = 8, nbits = 8, iters = 3, extraCols = Seq("label"))
+    batchFaceJobs.foreach { case (n, prior) =>
+      val qs = emb.filter($"vec_id" < n)
+        .select($"vec_id".as("qid"), $"embedding".as("qv"))
+      def probe(tier: String, probes: Int,
+                pred: Option[org.apache.spark.sql.Column]) =
+        Similarity.ivfProbe(spark, s"$root/$tier", qs, "qid", "qv",
+          k = 10, probes, pred).collect()
+      probe("ivf", 2, None) // first loads stay outside the measured bodies
+      val got = Seq(
+        jobsLaunchedBy(probe("ivf", 2, None)),
+        jobsLaunchedBy(probe("pq", 2, None)),
+        jobsLaunchedBy(probe("ivf", 1, Some($"label" === 1))),
+        jobsLaunchedBy(probe("pq", 1, Some($"label" === 1))))
+      info(s"$n-row frame: $got jobs (batch faces: $prior)")
+      assert(got.zip(prior).forall { case (g, p) => g <= p },
+        s"$n-row frame: $got jobs, the batch faces launched $prior")
     }
   }
 
@@ -661,14 +696,13 @@ class DedupSimilaritySpec extends SparkSpec {
       "vec_id", "embedding", dir)
     val qVec = emb.filter($"vec_id" === 0L)
       .select($"embedding").collect()(0).getSeq[Float](0).toArray
-    def topIds(k: Int) = Similarity.ivfCentroidTopK(spark, dir, qVec,
-      k = k, probes = 8).collect().map(_.getLong(0)).toSet
+    def topIds(k: Int) = ivfTop(dir, qVec, k, probes = 8).map(_._1).toSet
     assert(topIds(3).contains(1000000L)) // present before the delete
     Similarity.ivfDelete(dir,
       Seq(1000000L).toDF("vec_id"), "vec_id")
     // immediate exclusion, single-query and batch probes alike
     assert(!topIds(25).contains(1000000L))
-    val batch = Similarity.ivfCentroidTopKBatch(spark, dir,
+    val batch = Similarity.ivfProbe(spark, dir,
         emb.filter($"vec_id" < 2)
           .select($"vec_id".as("qid"), $"embedding".as("qv")),
         "qid", "qv", k = 25, probes = 8)
@@ -704,8 +738,8 @@ class DedupSimilaritySpec extends SparkSpec {
     val qVec = emb.filter($"vec_id" === 0L)
       .select($"embedding").as[Array[Float]].collect()(0)
     // probing EVERY cell must equal exact brute-force top-k
-    val all = Similarity.ivfCentroidTopK(spark, dir, qVec, k = 11, probes = 8)
-      .filter($"id" =!= 0L).as[(Long, Double)].collect().toSeq.take(10)
+    val all = ivfTop(dir, qVec, k = 11, probes = 8)
+      .filter(_._1 != 0L).take(10)
     val brute = Similarity.cosineTopK(emb, "vec_id", "embedding", 0L, 10)
       .as[(Long, Double)].collect().toSeq
     assert(all == brute)
@@ -717,11 +751,14 @@ class DedupSimilaritySpec extends SparkSpec {
     val dir2 = java.nio.file.Files.createTempDirectory("ivfc2").toString + "/idx"
     Similarity.buildIvfCentroidIndex(planted, "vec_id", "embedding",
       dir2, k = 8, iters = 3)
-    val top1 = Similarity.ivfCentroidTopK(spark, dir2, qVec, k = 2, probes = 1)
-      .filter($"id" =!= 0L).as[(Long, Double)].collect().head
+    val top1 = ivfTop(dir2, qVec, k = 2, probes = 1)
+      .filter(_._1 != 0L).head
     assert(top1 == ((1000000L, 1.0)))
     // the probe's scan is partition-pruned to the probed cells
-    val probe = Similarity.ivfCentroidTopK(spark, dir, qVec, k = 10, probes = 2)
+    val probe = Similarity.ivfProbe(spark, dir,
+      emb.filter($"vec_id" === 0L)
+        .select($"vec_id".as("qid"), $"embedding".as("qv")),
+      "qid", "qv", k = 10, probes = 2)
     val scan = probe.queryExecution.executedPlan.collectLeaves()
       .map(_.toString).find(_.contains("PartitionFilters"))
     assert(scan.exists(_.contains("cell")), scan.toString.take(500))
@@ -757,8 +794,8 @@ class DedupSimilaritySpec extends SparkSpec {
       .select($"embedding").as[Array[Float]].collect()(0)
     // identical vectors land in the same centroid cell regardless of
     // which rows trained the model, so single-probe top-1 is exact
-    val top1 = Similarity.ivfCentroidTopK(spark, dir, qVec, k = 2, probes = 1)
-      .filter($"id" =!= 0L).as[(Long, Double)].collect().head
+    val top1 = ivfTop(dir, qVec, k = 2, probes = 1)
+      .filter(_._1 != 0L).head
     assert(top1 == ((1000000L, 1.0)))
   }
 
@@ -1279,9 +1316,7 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(flagged.getBoolean(4), flagged.toString)
     assert(!before.getBoolean(4), before.toString) // defaults: healthy
     // probes see appended members: 100 is in 0's cell at cos ~1
-    val q = Similarity.ivfCentroidTopK(spark, dir,
-      Array(1f, 0f, 0f, 0f), k = 3, probes = 1)
-      .collect().map(_.getLong(0))
+    val q = ivfTop(dir, Array(1f, 0f, 0f, 0f), k = 3).map(_._1)
     assert(q.contains(100L), q.mkString(","))
 
     // ---- ivfRetrain closes the loop on the same aged index ----
@@ -1316,9 +1351,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val re4 = Similarity.ivfRetrain(spark, dir, k = 4, iters = 4)
     assert(re4.size == 4)
     assert(spark.read.parquet(dir + ".centroids").count() == 4)
-    val q2 = Similarity.ivfCentroidTopK(spark, dir,
-      Array(1f, 0f, 0f, 0f), k = 3, probes = 1)
-      .collect().map(_.getLong(0))
+    val q2 = ivfTop(dir, Array(1f, 0f, 0f, 0f), k = 3).map(_._1)
     assert(q2.contains(100L), q2.mkString(","))
   }
 
@@ -1368,9 +1401,7 @@ class DedupSimilaritySpec extends SparkSpec {
       .select($"embedding").collect()(0).getSeq[Float](0).toArray
     // k > matches forces widening to full coverage -> the result IS
     // the brute-force ranking over the label-filtered corpus
-    val got = Similarity.ivfCentroidTopKFiltered(spark, dir, qVec,
-        k = 20, $"label" === 99, probes = 1)
-      .as[(Long, Double)].collect().toSeq
+    val got = ivfTop(dir, qVec, k = 20, predicate = Some($"label" === 99))
     val brute = corpus.filter($"label" === 99)
       .select($"vec_id".as("id"),
         round(Similarity.cosine($"embedding", typedlit(qVec.toSeq)), 6)
@@ -1381,37 +1412,33 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(got.size == 12)
     // the WRONG order — unfiltered top-k, then filter — surfaces only
     // the planted rows that crack the global top-20
-    val wrongN = Similarity.ivfCentroidTopK(spark, dir, qVec, k = 20,
-        probes = 8)
+    val wrongN = Similarity.ivfProbe(spark, dir,
+        emb.filter($"vec_id" === 0L)
+          .select($"vec_id".as("qid"), $"embedding".as("qv")),
+        "qid", "qv", k = 20, probes = 8)
       .join(corpus.select($"vec_id".as("id"), $"label"), Seq("id"))
       .filter($"label" === 99).count()
     assert(wrongN < got.size,
       s"post-filtering kept $wrongN rows; planted data should starve it")
     // a non-selective predicate satisfies at the initial width and
     // equals the unfiltered probe exactly
-    val all = Similarity.ivfCentroidTopKFiltered(spark, dir, qVec,
-        k = 10, $"label" >= 0, probes = 1)
-      .as[(Long, Double)].collect().toSeq
-    val unfiltered = Similarity.ivfCentroidTopK(spark, dir, qVec,
-        k = 10, probes = 1)
-      .as[(Long, Double)].collect().toSeq
+    val all = ivfTop(dir, qVec, k = 10, predicate = Some($"label" >= 0))
+    val unfiltered = ivfTop(dir, qVec, k = 10)
     assert(all == unfiltered)
-    // batch == single law, one selective query widening to full
-    // coverage and one satisfied early
+    // a query's rows in a batch equal its rows from a 1-row probe, one
+    // selective query widening to full coverage and one satisfied early
     val queries = emb.filter($"vec_id" < 2)
       .select($"vec_id".as("qid"), $"embedding".as("qv"))
-    val batch = Similarity.ivfCentroidTopKBatchFiltered(spark, dir,
-        queries, "qid", "qv", k = 20, $"label" === 99, probes = 1)
-      .as[(Long, Long, Double)].collect()
-      .groupBy(_._1).view
-      .mapValues(_.map(r => (r._2, r._3))
-        .sortBy(r => (-r._2, r._1)).toSeq).toMap
+    def byQuery(qs: org.apache.spark.sql.DataFrame) =
+      Similarity.ivfProbe(spark, dir, qs, "qid", "qv", k = 20,
+          predicate = Some($"label" === 99))
+        .as[(Long, Long, Double)].collect()
+        .groupBy(_._1).view
+        .mapValues(_.map(r => (r._2, r._3))
+          .sortBy(r => (-r._2, r._1)).toSeq).toMap
+    val batch = byQuery(queries)
     (0L until 2L).foreach { qid =>
-      val qv = emb.filter($"vec_id" === qid)
-        .select($"embedding").collect()(0).getSeq[Float](0).toArray
-      val single = Similarity.ivfCentroidTopKFiltered(spark, dir, qv,
-          k = 20, $"label" === 99, probes = 1)
-        .as[(Long, Double)].collect().toSeq
+      val single = byQuery(queries.filter($"qid" === qid))(qid)
       assert(batch(qid) == single, s"query $qid diverges")
     }
   }
@@ -1457,9 +1484,8 @@ class DedupSimilaritySpec extends SparkSpec {
       k = 2, iters = 4)
     def files() = Option(new java.io.File(dir).list())
       .map(_.toSet).getOrElse(Set.empty[String])
-    def top(k: Int) = Similarity.ivfCentroidTopK(spark, dir,
-      Array(1f, 0f, 0f, 0f), k = k, probes = 2)
-      .collect().map(_.getLong(0)).toSet
+    def top(k: Int) = ivfTop(dir, Array(1f, 0f, 0f, 0f), k, probes = 2)
+      .map(_._1).toSet
     // v1: pointer exists, legacy cell dirs RETAINED as reader grace
     Similarity.ivfRetrain(spark, dir, iters = 4, versioned = true)
     assert(files().contains(".current") && files().contains(".v1"),

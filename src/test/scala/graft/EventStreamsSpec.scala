@@ -512,9 +512,7 @@ class EventStreamsSpec extends SparkSpec {
     // probes read the batch layout identically to the flat one
     val qVec = emb.filter($"vec_id" === 0L)
       .select($"embedding").collect()(0).getSeq[Float](0).toArray
-    def probe(path: String) = Similarity
-      .ivfCentroidTopK(spark, path, qVec, k = 5, probes = 4)
-      .as[(Long, Double)].collect().toSeq
+    def probe(path: String) = ivfTop(path, qVec, k = 5, probes = 4)
     assert(probe(s"$root/idx") == probe(s"$root/ref"))
     // a second drain sees only the NEW file and extends the index
     half2.coalesce(1).write.mode("append").parquet(s"$root/in")
@@ -552,8 +550,8 @@ class EventStreamsSpec extends SparkSpec {
       emb.filter($"vec_id" === 0L)
         .select(($"vec_id" + 777000L).as("vec_id"), $"embedding"),
       "vec_id", "embedding", s"$root/idx", batchId = 5L)
-    val top = Similarity.ivfCentroidTopK(spark, s"$root/idx", qVec,
-      k = 2, probes = 4).collect().map(_.getLong(0)).toSet
+    val top = ivfTop(s"$root/idx", qVec, k = 2, probes = 4)
+      .map(_._1).toSet
     assert(top == Set(0L, 777000L), top.toString)
   }
 
@@ -620,8 +618,8 @@ class EventStreamsSpec extends SparkSpec {
       "vec_id", "embedding", s"$root/idx", batchId = 7L)
     val qVec = emb.filter($"vec_id" === 0L)
       .select($"embedding").collect()(0).getSeq[Float](0).toArray
-    val top = Similarity.ivfPqTopK(spark, s"$root/idx", qVec, k = 1,
-      probes = 4).collect().map(_.getLong(0)).toSet
+    val top = ivfTop(s"$root/idx", qVec, k = 1, probes = 4)
+      .map(_._1).toSet
     assert(top == Set(777000L), top.toString)
   }
 

@@ -359,21 +359,19 @@ class FilteredRetrievalSpec extends SparkSpec {
     Similarity.buildIvfPqIndex(corpus, "vec_id", "embedding", dir,
       nCells = 8, m = 8, nbits = 8, iters = 3,
       extraCols = Seq("label"))
-    val batch = Similarity.ivfPqTopKBatchFiltered(spark, dir,
-        emb.filter($"vec_id" < 2)
-          .select($"vec_id".as("qid"), $"embedding".as("qv")),
-        "qid", "qv", k = 20, $"label" === 99, probes = 1)
-      .as[(Long, Long, Double)].collect()
-      .groupBy(_._1).view
-      .mapValues(_.map(r => (r._2, r._3)).sortBy(r => (-r._2, r._1))
-        .toSeq).toMap
+    val queries = emb.filter($"vec_id" < 2)
+      .select($"vec_id".as("qid"), $"embedding".as("qv"))
+    def byQuery(qs: org.apache.spark.sql.DataFrame) =
+      Similarity.ivfProbe(spark, dir, qs, "qid", "qv", k = 20,
+          probes = 1, Some($"label" === 99))
+        .as[(Long, Long, Double)].collect()
+        .groupBy(_._1).view
+        .mapValues(_.map(r => (r._2, r._3)).sortBy(r => (-r._2, r._1))
+          .toSeq).toMap
+    val batch = byQuery(queries)
+    // a query's rows in the batch equal its rows from a 1-row probe
     (0L until 2L).foreach { qid =>
-      val qv = emb.filter($"vec_id" === qid)
-        .select($"embedding").collect()(0).getSeq[Float](0).toArray
-      val single = Similarity.ivfPqTopKFiltered(spark, dir, qv,
-          k = 20, $"label" === 99, probes = 1)
-        .as[(Long, Double)].collect().toSeq
-        .sortBy(r => (-r._2, r._1))
+      val single = byQuery(queries.filter($"qid" === qid))(qid)
       assert(batch(qid) == single, s"query $qid diverges")
       assert(single.map(_._1).toSet ==
         (10L to 21L).map(_ + 1000000L).toSet,

@@ -88,8 +88,8 @@ class MaintenanceSpec extends SparkSpec {
       // finalize leg and the anti-join re-probe leg execute
       val queries = emb.filter($"vec_id" < 6)
         .select($"vec_id".as("qid"), $"embedding".as("qv"))
-      val out = Similarity.ivfCentroidTopKBatchFiltered(spark, dir,
-        queries, "qid", "qv", k = 3, $"label" === 1, probes = 1)
+      val out = Similarity.ivfProbe(spark, dir,
+        queries, "qid", "qv", k = 3, probes = 1, Some($"label" === 1))
       assert(out.count() > 0)
       // listener delivery is async: poll until the captured set is
       // stable, then assert
@@ -228,32 +228,37 @@ class MaintenanceSpec extends SparkSpec {
 
   test("versioned swap: a probe in flight across a retrain completes " +
       "against its resolved generation; a fresh probe sees the new one") {
-    val dir = tmp("ivfswap") + "/idx"
-    val base = emb.filter($"vec_id" < 400)
-    Similarity.buildIvfCentroidIndex(base, "vec_id", "embedding", dir,
-      k = 4, iters = 2)
-    Similarity.ivfRetrain(spark, dir, iters = 2, versioned = true) // -> .v1
-    val qVec = emb.filter($"vec_id" === 0L)
-      .select($"embedding").collect()(0).getSeq[Float](0).toArray
-    // the in-flight probe: resolves .v1's file listing NOW
-    val inFlight = Similarity.ivfCentroidTopK(spark, dir, qVec,
-      k = 5, probes = 4)
-    // plant an exact copy of the query vector, then publish .v2
-    Similarity.ivfAppend(
-      emb.filter($"vec_id" === 0L)
-        .select(($"vec_id" + 5000000L).as("vec_id"), $"embedding"),
-      "vec_id", "embedding", dir)
-    Similarity.ivfRetrain(spark, dir, iters = 2, versioned = true) // -> .v2
-    // fresh probe: the planted copy ties at cos 1.0 and wins on id 0
-    val fresh = Similarity.ivfCentroidTopK(spark, dir, qVec,
-      k = 5, probes = 4).as[(Long, Double)].collect()
-    assert(fresh.exists(_._1 == 5000000L),
-      s"fresh probe must see the v2 content: ${fresh.mkString(",")}")
-    // the in-flight probe still completes against v1 (retained as
-    // reader grace) and cannot see the planted row
-    val old = inFlight.as[(Long, Double)].collect()
-    assert(old.nonEmpty && !old.exists(_._1 == 5000000L),
-      s"in-flight probe must stay pinned to v1: ${old.mkString(",")}")
+    // unfiltered, and through the widening rounds of a predicate
+    Seq(None, Some($"id" >= 0L)).foreach { predicate =>
+      val dir = tmp("ivfswap") + "/idx"
+      val base = emb.filter($"vec_id" < 400)
+      Similarity.buildIvfCentroidIndex(base, "vec_id", "embedding", dir,
+        k = 4, iters = 2)
+      Similarity.ivfRetrain(spark, dir, iters = 2, versioned = true) // -> .v1
+      val q = emb.filter($"vec_id" === 0L)
+        .select($"vec_id".as("qid"), $"embedding".as("qv"))
+      def probe() = Similarity.ivfProbe(spark, dir, q, "qid", "qv",
+        k = 5, probes = 4, predicate)
+      // the in-flight probe: resolves .v1's file listing NOW
+      val inFlight = probe()
+      // plant an exact copy of the query vector, then publish .v2
+      Similarity.ivfAppend(
+        emb.filter($"vec_id" === 0L)
+          .select(($"vec_id" + 5000000L).as("vec_id"), $"embedding"),
+        "vec_id", "embedding", dir)
+      Similarity.ivfRetrain(spark, dir, iters = 2, versioned = true) // -> .v2
+      // fresh probe: the planted copy ties at cos 1.0 and wins on id 0
+      val fresh = probe().as[(Long, Long, Double)].collect()
+      assert(fresh.exists(_._2 == 5000000L),
+        s"$predicate: fresh probe must see the v2 content: " +
+          fresh.mkString(","))
+      // the in-flight probe still completes against v1 (retained as
+      // reader grace) and cannot see the planted row
+      val old = inFlight.as[(Long, Long, Double)].collect()
+      assert(old.nonEmpty && !old.exists(_._2 == 5000000L),
+        s"$predicate: in-flight probe must stay pinned to v1: " +
+          old.mkString(","))
+    }
   }
 
   test("foldLateIvf: works on a VERSIONED generation root (explicit " +

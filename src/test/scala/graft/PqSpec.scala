@@ -146,9 +146,13 @@ class PqSpec extends SparkSpec {
       nCells = 8, m = 8, nbits = 8, iters = 3)
     val qVec = planted.filter($"vec_id" === 0L)
       .select($"embedding").collect()(0).getSeq[Float](0).toArray
-    val probe = Similarity.ivfPqTopK(spark, dir, qVec, k = 11, probes = 1)
+    val probe = Similarity.ivfProbe(spark, dir,
+        planted.filter($"vec_id" === 0L)
+          .select($"vec_id".as("qid"), $"embedding".as("qv")),
+        "qid", "qv", k = 11, probes = 1)
       .filter($"id" =!= 0L)
-    val rows = probe.as[(Long, Double)].collect()
+    val rows = probe.as[(Long, Long, Double)].collect()
+      .map(r => (r._2, r._3)).sortBy(r => (-r._2, r._1))
     assert(rows.head._1 == 1000000L, s"top1=${rows.head}")
     assert(rows.length == 10)
     // the single-probe scan is partition-pruned to ONE cell directory
@@ -158,11 +162,11 @@ class PqSpec extends SparkSpec {
     // exact neighbors (it degenerates to a full residual-PQ scan)
     val exact = Similarity.cosineTopK(planted, "vec_id", "embedding",
       queryId = 0L, k = 10).select($"id").as[Long].collect().toSet
-    def recall(df: org.apache.spark.sql.DataFrame): Int =
-      exact.intersect(df.filter($"id" =!= 0L).limit(10)
-        .select($"id").as[Long].collect().toSet).size
-    val r1 = recall(Similarity.ivfPqTopK(spark, dir, qVec, 11, probes = 1))
-    val r8 = recall(Similarity.ivfPqTopK(spark, dir, qVec, 11, probes = 8))
+    def recall(probes: Int): Int =
+      exact.intersect(ivfTop(dir, qVec, 11, probes)
+        .map(_._1).filter(_ != 0L).take(10).toSet).size
+    val r1 = recall(1)
+    val r8 = recall(8)
     assert(r8 >= r1, s"probes=8 recall $r8 < probes=1 recall $r1")
   }
 
@@ -202,15 +206,14 @@ class PqSpec extends SparkSpec {
     // delete: immediate exclusion on BOTH probe paths, codes untouched
     val qVec = emb.filter($"vec_id" === 0L)
       .select($"embedding").collect()(0).getSeq[Float](0).toArray
-    assert(Similarity.ivfPqTopK(spark, dir, qVec, k = 3, probes = 8)
-      .as[(Long, Double)].collect().map(_._1).contains(5000000L))
+    assert(ivfTop(dir, qVec, k = 3, probes = 8).map(_._1)
+      .contains(5000000L))
     val preDelete = codesAt(dir).filter($"id" =!= 5000000L)
       .as[(Long, Int, String)].collect().toSet
     Similarity.ivfPqDelete(dir, Seq(5000000L).toDF("vec_id"), "vec_id")
-    val single = Similarity.ivfPqTopK(spark, dir, qVec, k = 30,
-      probes = 8).as[(Long, Double)].collect().map(_._1)
+    val single = ivfTop(dir, qVec, k = 30, probes = 8).map(_._1)
     assert(!single.contains(5000000L) && single.nonEmpty)
-    val batchProbe = Similarity.ivfPqTopKBatch(spark, dir,
+    val batchProbe = Similarity.ivfProbe(spark, dir,
       emb.filter($"vec_id" === 0L)
         .select($"vec_id".as("qid"), $"embedding".as("qv")),
       "qid", "qv", k = 30, probes = 8)
@@ -275,18 +278,20 @@ class PqSpec extends SparkSpec {
       nCells = 8, m = 8, nbits = 8, iters = 3)
     val queries = emb.filter($"vec_id" < 4)
       .select($"vec_id".as("qid"), $"embedding".as("qv"))
-    val probe = Similarity.ivfPqTopKBatch(spark, dir, queries, "qid",
+    def byQuery(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Long, Double)].collect()
+        .groupBy(_._1).view
+        .mapValues(_.map(r => (r._2, r._3))
+          .sortBy(r => (-r._2, r._1)).toSeq).toMap
+    val probe = Similarity.ivfProbe(spark, dir, queries, "qid",
       "qv", k = 9, probes = 2)
-    val batch = probe.as[(Long, Long, Double)].collect()
-      .groupBy(_._1).view
-      .mapValues(_.map(r => (r._2, r._3))
-        .sortBy(r => (-r._2, r._1)).toSeq).toMap
+    val batch = byQuery(probe)
+    // a query's rows in the batch equal its rows from a 1-row probe,
+    // bit-exact (the batch prunes to the union of every query's cells)
     (0L until 4L).foreach { qid =>
-      val qVec = emb.filter($"vec_id" === qid)
-        .select($"embedding").collect()(0).getSeq[Float](0).toArray
-      val perq = Similarity.ivfPqTopK(spark, dir, qVec, k = 9,
-          probes = 2)
-        .as[(Long, Double)].collect().toSeq
+      val perq = byQuery(Similarity.ivfProbe(spark, dir,
+        queries.filter($"qid" === qid), "qid", "qv", k = 9,
+        probes = 2))(qid)
       assert(batch(qid) == perq, s"query $qid: ${batch(qid)} vs $perq")
     }
     // the code scan is partition-pruned to the probed cells and the
@@ -307,8 +312,7 @@ class PqSpec extends SparkSpec {
       .select($"embedding").collect()(0).getSeq[Float](0).toArray
     def files() = Option(new java.io.File(dir).list())
       .map(_.toSet).getOrElse(Set.empty[String])
-    def top(k: Int) = Similarity.ivfPqTopK(spark, dir, qVec, k = k,
-      probes = 8).collect().map(_.getLong(0)).toSet
+    def top(k: Int) = ivfTop(dir, qVec, k, probes = 8).map(_._1).toSet
     Similarity.ivfPqRetrain(base, "vec_id", "embedding", dir,
       iters = 3, versioned = true)
     assert(files().contains(".current") && files().contains(".v1"),
@@ -355,29 +359,30 @@ class PqSpec extends SparkSpec {
       .select($"embedding").collect()(0).getSeq[Float](0).toArray
     val planted = (10L to 21L).map(_ + 1000000L).toSet
     // widening to full coverage returns exactly the planted set
-    val got = Similarity.ivfPqTopKFiltered(spark, dir, qVec, k = 20,
-      $"label" === 99, probes = 1).collect().map(_.getLong(0)).toSet
+    val got = ivfTop(dir, qVec, k = 20, predicate = Some($"label" === 99))
+      .map(_._1).toSet
     assert(got == planted, got.toString)
     // the wrong order — unfiltered ADC top-20, then filter — keeps
     // only planted rows that crack the global top-20
-    val wrongN = Similarity.ivfPqTopK(spark, dir, qVec, k = 20,
-        probes = 8)
+    val wrongN = Similarity.ivfProbe(spark, dir,
+        embL.filter($"vec_id" === 0L)
+          .select($"vec_id".as("qid"), $"embedding".as("qv")),
+        "qid", "qv", k = 20, probes = 8)
       .join(corpus.select($"vec_id".as("id"), $"label"), Seq("id"))
       .filter($"label" === 99).count()
     assert(wrongN < planted.size,
       s"post-filtering kept $wrongN; planted data should starve it")
     // a non-selective predicate equals the unfiltered probe at the
     // same width
-    val all = Similarity.ivfPqTopKFiltered(spark, dir, qVec, k = 10,
-      $"label" >= 0, probes = 8).as[(Long, Double)].collect().toSeq
-    val unf = Similarity.ivfPqTopK(spark, dir, qVec, k = 10,
-      probes = 8).as[(Long, Double)].collect().toSeq
+    val all = ivfTop(dir, qVec, k = 10, probes = 8,
+      predicate = Some($"label" >= 0))
+    val unf = ivfTop(dir, qVec, k = 10, probes = 8)
     assert(all == unf)
     // metadata survives the retrain rewrite (vectors re-supply it)
     Similarity.ivfPqRetrain(corpus, "vec_id", "embedding", dir,
       iters = 3)
-    val post = Similarity.ivfPqTopKFiltered(spark, dir, qVec, k = 20,
-      $"label" === 99, probes = 1).collect().map(_.getLong(0)).toSet
+    val post = ivfTop(dir, qVec, k = 20, predicate = Some($"label" === 99))
+      .map(_._1).toSet
     assert(post == planted, post.toString)
     // and a retrain whose vectors LACK the metadata fails loudly
     intercept[IllegalArgumentException] {

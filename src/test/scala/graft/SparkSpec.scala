@@ -4,8 +4,10 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.operators.Similarity
 
 /** Shared test harness: one SparkSession per suite (lazy), from the
   * same factory as every main, at a small fixed local parallelism. */
@@ -26,6 +28,16 @@ trait SparkSpec extends AnyFunSuite {
       .map(t => Option(t.getMessage).getOrElse("")).mkString("\n")
     needles.foreach(n => assert(msgs.contains(n), s"'$n' not in:\n$msgs"))
   }
+
+  /** One query vector's [[Similarity.ivfProbe]] rows, probed as a
+    * 1-row query table, as (id, score) ranked (score desc, id). */
+  def ivfTop(path: String, qVec: Array[Float], k: Int, probes: Int = 1,
+             predicate: Option[Column] = None): Seq[(Long, Double)] =
+    Similarity.ivfProbe(spark, path,
+        spark.createDataFrame(Seq((0L, qVec.toSeq))).toDF("qid", "qv"),
+        "qid", "qv", k, probes, predicate)
+      .collect().map(r => (r.getLong(1), r.getDouble(2))).toSeq
+      .sortBy { case (id, s) => (-s, id) }
 
   /** The Spark jobs `body` launches from this thread. A fence job on the
     * same thread runs last: the listener bus delivers events in order, so

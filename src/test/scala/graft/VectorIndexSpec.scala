@@ -110,6 +110,34 @@ class VectorIndexSpec extends SparkSpec {
       assert(!new java.io.File(s"$dir.tombstones").exists, codec.toString)
       assert(probed.contains(7L), s"$codec: $probed")
     }
+    // the trained IVF tiers, probed over every cell: a rebuild drops the
+    // old tombstones, and a rebuild over a versioned root (its retrain
+    // published .v1 over 300 rows) serves the rebuilt 500 rows
+    def live(dir: String) = Similarity.ivfProbe(spark, dir, q, "qid", "qv",
+      k = 1000, probes = 4).select("id").as[Long].collect().toSet
+    Seq("ivf", "ivfpq").foreach { tier =>
+      val dir = tmp("ivfrebuild") + "/idx"
+      def build(n: Long): Unit = {
+        val rows = emb.filter($"vec_id" < n)
+        if (tier == "ivf")
+          Similarity.buildIvfCentroidIndex(rows, "vec_id", "embedding", dir,
+            k = 4, iters = 2)
+        else
+          Similarity.buildIvfPqIndex(rows, "vec_id", "embedding", dir,
+            nCells = 4, m = 8, nbits = 4, iters = 2)
+      }
+      build(300)
+      if (tier == "ivf") Similarity.ivfDelete(dir, Seq(7L).toDF("vec_id"), "vec_id")
+      else Similarity.ivfPqDelete(dir, Seq(7L).toDF("vec_id"), "vec_id")
+      assert(!live(dir).contains(7L), tier)
+      build(300)
+      assert(live(dir).contains(7L), s"$tier: the rebuild kept the tombstones")
+      if (tier == "ivf") Similarity.ivfRetrain(spark, dir, iters = 2, versioned = true)
+      else Similarity.ivfPqRetrain(emb.filter($"vec_id" < 300), "vec_id",
+        "embedding", dir, iters = 2, versioned = true)
+      build(500)
+      assert(live(dir).size == 500, s"$tier: the rebuild is not what probes read")
+    }
   }
 
   test("the written layout: codec columns, extraCols, sidecars and batch directories") {
