@@ -2986,11 +2986,11 @@ object QueryCatalog {
         val docs = t(s, d, "documents")
           .join(emb.select(col("vec_id").as("doc_id")), Seq("doc_id"),
             "left_semi")
-        CorpusOps.searchPipelineBatchDiversified(
+        CorpusOps.searchPipelineBatch(
             docs, "doc_id", "text", qs, "query_id",
-            "query_text", sem, "qid", "id", "cos_sim",
-            emb, "vec_id", "embedding", k = 3, lambda = 0.7,
-            candidates = 20)
+            "query_text", sem, "qid", "id", "cos_sim", k = 3,
+            candidates = 20,
+            mmr = Some(CorpusOps.Mmr(emb, "vec_id", "embedding", 0.7)))
           .select(col("query_id"), col("doc_id"),
             (round(col("mmr"), 6) + lit(0.0d)).as("mmr"), col("rank"))
       },
@@ -3155,8 +3155,8 @@ object QueryCatalog {
           (1L, "sort merge batch"),
           (2L, "dup stream"),
           (3L, "qqqnomatchqqq")).toDF("query_id", "query_text")
-        CorpusOps.bm25TopKBatchFiltered(corpus, "doc_id", "text",
-          qs, "query_id", "query_text", k = 10, col("lang") === "zz")
+        CorpusOps.bm25TopKBatch(corpus, "doc_id", "text",
+          qs, "query_id", "query_text", k = 10, Some(col("lang") === "zz"))
       },
       Some(bm25FilteredOracleSql)),
 
@@ -3187,8 +3187,8 @@ object QueryCatalog {
           (1L, "sort merge batch"),
           (2L, "dup stream"),
           (3L, "qqqnomatchqqq")).toDF("query_id", "query_text")
-        CorpusOps.bm25TopKIndexedFiltered(s, dir, qs, "query_id",
-            "query_text", k = 10, col("lang") === "zz")
+        CorpusOps.bm25TopKIndexed(s, dir, qs, "query_id",
+            "query_text", k = 10, Some(col("lang") === "zz"))
           .select(col("query_id"), col("id").as("doc_id"), col("bm25"),
             col("n_terms"))
       },
@@ -3228,9 +3228,9 @@ object QueryCatalog {
           emb.filter(col("vec_id") < 4)
             .select(col("vec_id").as("qid"), col("embedding").as("qv")),
           "qid", "qv", k = 50)
-        CorpusOps.searchPipelineBatchFiltered(corpus, "doc_id", "text",
-          qs, "query_id", "query_text", col("lang") === "zz",
-          sem, "qid", "id", "cos_sim", k = 10, candidates = 50)
+        CorpusOps.searchPipelineBatch(corpus, "doc_id", "text",
+          qs, "query_id", "query_text", sem, "qid", "id", "cos_sim",
+          k = 10, candidates = 50, predicate = Some(col("lang") === "zz"))
       },
       Some(searchFilteredOracleSql)),
 
@@ -3264,11 +3264,12 @@ object QueryCatalog {
           emb.filter(col("vec_id") < 4)
             .select(col("vec_id").as("qid"), col("embedding").as("qv")),
           "qid", "qv", k = 20)
-        CorpusOps.searchPipelineBatchFilteredDiversified(corpus,
+        CorpusOps.searchPipelineBatch(corpus,
             "doc_id", "text", qs, "query_id", "query_text",
-            col("lang") === "zz", sem, "qid", "id", "cos_sim",
-            plantedEmb, "vec_id", "embedding", k = 3, lambda = 0.7,
-            candidates = 20)
+            sem, "qid", "id", "cos_sim", k = 3, candidates = 20,
+            predicate = Some(col("lang") === "zz"),
+            mmr = Some(CorpusOps.Mmr(plantedEmb, "vec_id", "embedding",
+              0.7)))
           .select(col("query_id"), col("doc_id"),
             (round(col("mmr"), 6) + lit(0.0d)).as("mmr"), col("rank"))
       },
@@ -3416,7 +3417,7 @@ object QueryCatalog {
              |  CAST(3 AS BIGINT) FROM p3""".stripMargin)),
 
     Q("q_search_filtered_single", // the SINGLE-query filtered hybrid
-      // face (r17 verdict #7 — API symmetry beside searchPipeline):
+      // call (searchPipeline with a predicate, r17 verdict #7): it
       // delegates to the batch operator with a one-row query table,
       // so per query it IS q_search_filtered's result for query 0 —
       // the oracle is that query's slice of the shared filtered-
@@ -3437,10 +3438,10 @@ object QueryCatalog {
           emb.filter(col("vec_id") === 0L)
             .select(col("vec_id").as("qid"), col("embedding").as("qv")),
           "qid", "qv", k = 50)
-        CorpusOps.searchPipelineFiltered(corpus, "doc_id", "text",
-          Seq("hash", "join", "window", "scan"), col("lang") === "zz",
+        CorpusOps.searchPipeline(corpus, "doc_id", "text",
+          Seq("hash", "join", "window", "scan"),
           sem.select(col("id"), col("cos_sim")), "id", "cos_sim",
-          k = 10, candidates = 50)
+          k = 10, candidates = 50, predicate = Some(col("lang") === "zz"))
       },
       Some(s"""SELECT doc_id, n_signals, rrf_score, rank
               |FROM ($searchFilteredOracleSql) t
@@ -3487,8 +3488,8 @@ object QueryCatalog {
           (1L, "sort merge batch"),
           (2L, "dup stream"),
           (3L, "qqqnomatchqqq")).toDF("query_id", "query_text")
-        val lex = CorpusOps.bm25TopKIndexedFiltered(s, s"$root/bm25",
-            qs, "query_id", "query_text", k = 50, col("lang") === "zz")
+        val lex = CorpusOps.bm25TopKIndexed(s, s"$root/bm25",
+            qs, "query_id", "query_text", k = 50, Some(col("lang") === "zz"))
           .select(col("query_id"), col("id").as("doc_id"), col("bm25"))
         val sem = Similarity.ivfProbe(s, s"$root/ivf",
             emb.filter(col("vec_id") < 4)

@@ -1896,48 +1896,81 @@ object CorpusOps {
     * `(score desc, id)` truncation below — so the single-partition
     * fuse sees <= 2 x candidates rows, never the corpus), and the
     * final top-k is one more TakeOrderedAndProject. The `rank` column
-    * is a window over the already-limited k rows, never the corpus. */
+    * is a window over the already-limited k rows, never the corpus.
+    *
+    * `queryTerms` must be a non-empty list of single tokens (each
+    * non-blank, with no whitespace), whatever the predicate.
+    *
+    * With a `predicate` ("hybrid search WHERE label = X"), the call is
+    * [[searchPipelineBatch]] over a one-row query table, with the
+    * output cut back to this face's columns: the lexical candidates
+    * are filtered before the top-k, and `semantic` must be an
+    * ALREADY-FILTERED ranking ([[searchPipelineBatch]]'s contract). */
   def searchPipeline(docs: DataFrame, idCol: String, textCol: String,
                      queryTerms: Seq[String], semantic: DataFrame,
                      semanticIdCol: String, semanticScoreCol: String,
                      k: Int, candidates: Int = 100,
-                     rrfK: Int = 60): DataFrame = {
+                     rrfK: Int = 60,
+                     predicate: Option[Column] = None): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     require(candidates >= k,
       s"candidates ($candidates) must be >= k ($k)")
-    val lex = bm25TopK(docs, idCol, textCol, queryTerms, candidates)
-      .select(col(idCol), col("bm25"))
-    // defensive candidate bound (ADVICE r19): the semantic leg is
-    // caller-supplied, and an oversized frame would funnel the whole
-    // relation through rrfFuseBounded's single-partition window. The
-    // (score desc, id) truncation is a TakeOrderedAndProject — cheap —
-    // and a no-op for a contract-abiding candidates-deep leg (RRF only
-    // reads the top `candidates` ranks of each signal anyway, so for
-    // an OVERSIZED leg it also restores the documented semantics).
-    val sem = semantic
-      .select(col(semanticIdCol).as(idCol),
-        col(semanticScoreCol).as("__sem"))
-      .orderBy(col("__sem").desc, col(idCol))
-      .limit(candidates)
-    val fused = rrfFuseBounded(Map(
-        "lexical" -> ((lex, "bm25")),
-        "semantic" -> ((sem, "__sem"))), idCol, k = rrfK)
-      .orderBy(col("rrf_score").desc, col(idCol))
-      .limit(k)
-    fused.withColumn("rank",
-      row_number().over(Window.orderBy(col("rrf_score").desc,
-        col(idCol))).cast("long"))
+    require(queryTerms.nonEmpty, "searchPipeline: empty query")
+    queryTerms.find(t => !t.matches("\\S+")).foreach { t =>
+      throw new IllegalArgumentException(s"searchPipeline: query term " +
+        s"'$t' is not one token (blank, or holds whitespace)")
+    }
+    predicate match {
+      case Some(_) =>
+        val spark = docs.sparkSession
+        import spark.implicits._
+        val qs = Seq((0L, queryTerms.mkString(" ")))
+          .toDF("__query_id", "__query_text")
+        val sem = semantic.select(lit(0L).as("__sqid"),
+          col(semanticIdCol).as("__sid"), col(semanticScoreCol).as("__sem"))
+        searchPipelineBatch(docs, idCol, textCol, qs, "__query_id",
+            "__query_text", sem, "__sqid", "__sid", "__sem", k = k,
+            candidates = candidates, rrfK = rrfK, predicate = predicate)
+          .select(col(idCol), col("n_signals"), col("rrf_score"),
+            col("rank"))
+      case None =>
+        val lex = bm25TopK(docs, idCol, textCol, queryTerms, candidates)
+          .select(col(idCol), col("bm25"))
+        // defensive candidate bound (ADVICE r19): the semantic leg is
+        // caller-supplied, and an oversized frame would funnel the whole
+        // relation through rrfFuseBounded's single-partition window. The
+        // (score desc, id) truncation is a TakeOrderedAndProject — cheap
+        // — and a no-op for a contract-abiding candidates-deep leg (RRF
+        // only reads the top `candidates` ranks of each signal anyway, so
+        // for an OVERSIZED leg it also restores the documented semantics).
+        val sem = semantic
+          .select(col(semanticIdCol).as(idCol),
+            col(semanticScoreCol).as("__sem"))
+          .orderBy(col("__sem").desc, col(idCol))
+          .limit(candidates)
+        rrfFuseBounded(Map(
+            "lexical" -> ((lex, "bm25")),
+            "semantic" -> ((sem, "__sem"))), idCol, k = rrfK)
+          .orderBy(col("rrf_score").desc, col(idCol))
+          .limit(k)
+          .withColumn("rank",
+            row_number().over(Window.orderBy(col("rrf_score").desc,
+              col(idCol))).cast("long"))
+    }
   }
 
   /** Per-query fused top-k over ANY set of batch ranking signals —
     * [[rrfFuseGrouped]] plus the ranked truncation, as one public
     * surface so a retrieval stack composed from the INDEXED legs
     * ([[bm25TopKIndexed]], [[graft.operators.Similarity
-    * .ivfProbe]]) — or from three-plus signals — fuses
-    * without [[searchPipelineBatch]]'s built-in direct-batch lexical
-    * leg. Returns (`queryCol`, `idCol`, `n_signals`, `rrf_score`,
-    * `rank` 1..k), <= k rows per query, ranked (rrf_score desc, id)
-    * within each query. */
+    * .ivfProbe]], each with or without a predicate) — or from
+    * three-plus signals — fuses without [[searchPipelineBatch]]'s
+    * built-in direct-batch lexical leg. Returns (`queryCol`, `idCol`,
+    * `n_signals`, `rrf_score`, `rank` 1..k), <= k rows per query,
+    * ranked (rrf_score desc, id) within each query. Every signal row
+    * fuses: it makes no candidate cut of its own, so pass legs that
+    * are already as deep as they should count ([[searchPipelineBatch]]
+    * cuts its semantic leg to `candidates` per query first). */
   def rrfTopKGrouped(signals: Map[String, (DataFrame, String)],
                      queryCol: String, idCol: String, k: Int,
                      rrfK: Int = 60): DataFrame = {
@@ -1949,6 +1982,13 @@ object CorpusOps {
       .filter(col("rank") <= k)
   }
 
+  /** The MMR stage of [[searchPipelineBatch]]: the corpus vector table
+    * (`vectors`, ids in `vecIdCol`, embeddings in `vecCol`) and the
+    * relevance / diversity trade-off `lambda` of
+    * [[graft.operators.Similarity.mmrRerankBatch]]. */
+  final case class Mmr(vectors: DataFrame, vecIdCol: String,
+                       vecCol: String, lambda: Double)
+
   /** Batch hybrid retrieval — [[searchPipeline]] for a query TABLE,
     * in ONE job (the [[bm25TopKBatch]] principle; a retrieval workload
     * is n queries, and one Spark job per query is the driver-side
@@ -1956,13 +1996,41 @@ object CorpusOps {
     * candidates fused per query with a batch SEMANTIC ranking (any
     * (query, id, score) relation — [[graft.operators.Similarity
     * .cosineTopKBatch]] as the exact baseline, per-query IVF/PQ probes
-    * at scale) through [[rrfFuseGrouped]]. Returns (`queryIdCol`,
+    * at scale) through [[rrfTopKGrouped]]. Returns (`queryIdCol`,
     * `idCol`, `n_signals`, `rrf_score`, `rank` 1..k) with <= k rows
     * per query, ranked (rrf_score desc, id) within each query.
     *
-    * A query found by only one leg still fuses (`n_signals` = 1); a
-    * query matching NOTHING in either leg contributes no rows (the
-    * [[bm25TopKBatch]] convention).
+    * Each leg fuses its own `candidates`-deep ranking per query: the
+    * lexical leg by [[bm25TopKBatch]]'s own limit, the semantic leg by
+    * a per-query (score desc, id) cut — so a query's rows equal
+    * [[searchPipeline]]'s for that query, whatever the depth of the
+    * leg the caller passes. A query found by only one leg still fuses
+    * (`n_signals` = 1); a query matching NOTHING in either leg
+    * contributes no rows (the [[bm25TopKBatch]] convention).
+    *
+    * `predicate` ("hybrid search WHERE label = X") filters the lexical
+    * candidates inside the scoring pass ([[bm25TopKBatch]]'s filter
+    * contract: full-corpus statistics, restricted before the top-k).
+    * `semantic` must then be an ALREADY-FILTERED batch ranking —
+    * [[graft.operators.Similarity.ivfProbe]] with a predicate at scale,
+    * or a predicate-filtered [[graft.operators.Similarity
+    * .cosineTopKBatch]] as the exact baseline. The semantic leg's
+    * filter runs inside ITS probe, where the index's metadata lives;
+    * this operator cannot re-filter an arbitrary score relation, so an
+    * unfiltered ranking post-filters by fusion rank and LOSES recall
+    * (spec-pinned).
+    *
+    * `mmr` adds a maximal-marginal-relevance stage: the fused per-query
+    * pool (top `candidates` by rrf_score) is re-ranked by
+    * [[graft.operators.Similarity.mmrRerankBatch]], so near-duplicate
+    * candidates stop crowding out coverage. The pool is broadcast onto
+    * `vectors` (the corpus is never shuffled). Returns (`queryIdCol`,
+    * `idCol`, `mmr`, `rank` 1..k) in greedy selection order; `lambda =
+    * 1` IS the plain ranking (spec-pinned; `q_search_diversified`'s
+    * unrolled greedy oracle gates lambda < 1). Both id columns must be
+    * integral (the MMR group key — rejected loudly otherwise), and
+    * `vectors` must carry ONE row per candidate id (a missing vector
+    * fails loudly; a duplicated id trips the pool's duplicate guard).
     *
     * Scale shape: both legs are one-job batch retrievers; fusion
     * operates on <= 2 x candidates rows PER QUERY through
@@ -1976,164 +2044,32 @@ object CorpusOps {
                           semanticIdCol: String,
                           semanticScoreCol: String, k: Int,
                           candidates: Int = 100,
-                          rrfK: Int = 60): DataFrame = {
+                          rrfK: Int = 60,
+                          predicate: Option[Column] = None,
+                          mmr: Option[Mmr] = None): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     require(candidates >= k,
       s"candidates ($candidates) must be >= k ($k)")
     val lex = bm25TopKBatch(docs, idCol, textCol, queries, queryIdCol,
-        queryTextCol, candidates)
+        queryTextCol, candidates, predicate)
       .select(col(queryIdCol), col(idCol), col("bm25"))
     val sem = semantic.select(
-      col(semanticQueryCol).as(queryIdCol),
-      col(semanticIdCol).as(idCol),
-      col(semanticScoreCol).as("__sem"))
-    rrfTopKGrouped(Map(
+        col(semanticQueryCol).as(queryIdCol),
+        col(semanticIdCol).as(idCol),
+        col(semanticScoreCol).as("__sem"))
+      .withColumn("__sr", row_number().over(
+        Window.partitionBy(col(queryIdCol))
+          .orderBy(col("__sem").desc, col(idCol))))
+      .filter(col("__sr") <= candidates)
+      .drop("__sr")
+    val fused = rrfTopKGrouped(Map(
         "lexical" -> ((lex, "bm25")),
-        "semantic" -> ((sem, "__sem"))), queryIdCol, idCol, k = k,
-      rrfK = rrfK)
+        "semantic" -> ((sem, "__sem"))), queryIdCol, idCol,
+      k = if (mmr.isDefined) candidates else k, rrfK = rrfK)
+    mmr.fold(fused)(m => diversifyFused(fused, queryIdCol, idCol, m, k))
   }
 
-  /** FILTERED batch hybrid retrieval — "hybrid-search WHERE label = X"
-    * in one call, with BOTH legs filtered PRE-top-k (r16 verdict #1):
-    * the lexical candidates come from [[bm25TopKBatchFiltered]] (the
-    * predicate restricts candidates inside the scoring pass, full-
-    * corpus statistics), and `semantic` must be an ALREADY-FILTERED
-    * batch ranking — [[graft.operators.Similarity.ivfProbe]] with a
-    * predicate at scale, or a predicate-filtered
-    * [[graft.operators.Similarity.cosineTopKBatch]] as the exact
-    * baseline (the semantic leg's filter runs inside ITS probe,
-    * where the index's metadata lives — this operator cannot reach
-    * into an arbitrary score relation to re-filter it, so passing an
-    * unfiltered ranking post-filters by fusion rank and LOSES recall;
-    * that contract is spec-pinned). Fusion and output contract are
-    * [[searchPipelineBatch]]'s. */
-  def searchPipelineBatchFiltered(docs: DataFrame, idCol: String,
-                                  textCol: String, queries: DataFrame,
-                                  queryIdCol: String,
-                                  queryTextCol: String,
-                                  predicate: Column,
-                                  semantic: DataFrame,
-                                  semanticQueryCol: String,
-                                  semanticIdCol: String,
-                                  semanticScoreCol: String, k: Int,
-                                  candidates: Int = 100,
-                                  rrfK: Int = 60): DataFrame = {
-    require(k >= 1, s"k must be >= 1: $k")
-    require(candidates >= k,
-      s"candidates ($candidates) must be >= k ($k)")
-    val lex = bm25TopKBatchFiltered(docs, idCol, textCol, queries,
-        queryIdCol, queryTextCol, candidates, predicate)
-      .select(col(queryIdCol), col(idCol), col("bm25"))
-    val sem = semantic.select(
-      col(semanticQueryCol).as(queryIdCol),
-      col(semanticIdCol).as(idCol),
-      col(semanticScoreCol).as("__sem"))
-    rrfTopKGrouped(Map(
-        "lexical" -> ((lex, "bm25")),
-        "semantic" -> ((sem, "__sem"))), queryIdCol, idCol, k = k,
-      rrfK = rrfK)
-  }
-
-  /** FILTERED single-query hybrid retrieval — the missing API-symmetry
-    * face beside [[searchPipeline]] (r17 verdict #7): delegates to
-    * [[searchPipelineBatchFiltered]] with a one-row query table (the
-    * batch operator IS the implementation — equivalence spec-pinned),
-    * then restores the single-query output contract (`idCol`,
-    * `n_signals`, `rrf_score`, `rank`). `semantic` must be an
-    * ALREADY-FILTERED single-query ranking (`semanticIdCol`,
-    * `semanticScoreCol`) — the [[searchPipelineBatchFiltered]]
-    * contract: the semantic leg's filter runs inside ITS probe, where
-    * the index's metadata lives. */
-  def searchPipelineFiltered(docs: DataFrame, idCol: String,
-                             textCol: String, queryTerms: Seq[String],
-                             predicate: Column, semantic: DataFrame,
-                             semanticIdCol: String,
-                             semanticScoreCol: String, k: Int,
-                             candidates: Int = 100,
-                             rrfK: Int = 60): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val qs = Seq((0L, queryTerms.mkString(" ")))
-      .toDF("__query_id", "__query_text")
-    val sem = semantic.select(lit(0L).as("__sqid"),
-      col(semanticIdCol).as("__sid"), col(semanticScoreCol).as("__sem"))
-    searchPipelineBatchFiltered(docs, idCol, textCol, qs, "__query_id",
-        "__query_text", predicate, sem, "__sqid", "__sid", "__sem",
-        k = k, candidates = candidates, rrfK = rrfK)
-      .select(col(idCol), col("n_signals"), col("rrf_score"),
-        col("rank"))
-  }
-
-  /** Diversified batch hybrid retrieval — [[searchPipelineBatch]]
-    * with [[graft.operators.Similarity.mmrRerankBatch]] threaded in as
-    * the final stage (r17 verdict #4): the fused per-query candidate
-    * pool (top `candidates` by rrf_score) is re-ranked by maximal
-    * marginal relevance, so near-duplicate candidates stop crowding
-    * out coverage in one call. `vectors` supplies the candidate
-    * embeddings by id (the corpus vector table — the pool is
-    * broadcast back onto it, the [[graft.operators.Similarity]]
-    * exactRerankStage shape, so the join never shuffles the corpus).
-    * Returns (`queryIdCol`, `idCol`, `mmr`, `rank` 1..k) in greedy
-    * selection order; `lambda = 1` IS the undiversified pipeline's
-    * ranking (law spec-pinned; the non-degenerate lambda<1 case is
-    * gated by `q_search_diversified`'s unrolled greedy oracle).
-    *
-    * Contract: both id columns must be integral (the MMR group key —
-    * rejected loudly otherwise), `vectors` must carry ONE row per
-    * candidate id (a missing vector fails loudly in-pass; a
-    * duplicated id is caught by the pool's duplicate guard), and
-    * `candidates >= k` (the sibling pipelines' rule). */
-  def searchPipelineBatchDiversified(docs: DataFrame, idCol: String,
-                                     textCol: String, queries: DataFrame,
-                                     queryIdCol: String,
-                                     queryTextCol: String,
-                                     semantic: DataFrame,
-                                     semanticQueryCol: String,
-                                     semanticIdCol: String,
-                                     semanticScoreCol: String,
-                                     vectors: DataFrame, vecIdCol: String,
-                                     vecCol: String, k: Int,
-                                     lambda: Double,
-                                     candidates: Int = 100,
-                                     rrfK: Int = 60): DataFrame = {
-    require(candidates >= k,
-      s"candidates ($candidates) must be >= k ($k)")
-    diversifyFused(
-      searchPipelineBatch(docs, idCol, textCol, queries, queryIdCol,
-        queryTextCol, semantic, semanticQueryCol, semanticIdCol,
-        semanticScoreCol, k = candidates, candidates = candidates,
-        rrfK = rrfK),
-      queryIdCol, idCol, vectors, vecIdCol, vecCol, k, lambda,
-      "searchPipelineBatchDiversified")
-  }
-
-  /** [[searchPipelineBatchDiversified]] on the FILTERED pipeline —
-    * both retrieval legs filtered pre-top-k
-    * ([[searchPipelineBatchFiltered]]'s contract), then the MMR stage
-    * over the filtered pool. `vectors` only needs to cover the
-    * candidate ids (the filtered corpus suffices); same id-type /
-    * one-row-per-id / `candidates >= k` contract as
-    * [[searchPipelineBatchDiversified]]. */
-  def searchPipelineBatchFilteredDiversified(
-      docs: DataFrame, idCol: String, textCol: String,
-      queries: DataFrame, queryIdCol: String, queryTextCol: String,
-      predicate: Column, semantic: DataFrame, semanticQueryCol: String,
-      semanticIdCol: String, semanticScoreCol: String,
-      vectors: DataFrame, vecIdCol: String, vecCol: String, k: Int,
-      lambda: Double, candidates: Int = 100,
-      rrfK: Int = 60): DataFrame = {
-    require(candidates >= k,
-      s"candidates ($candidates) must be >= k ($k)")
-    diversifyFused(
-      searchPipelineBatchFiltered(docs, idCol, textCol, queries,
-        queryIdCol, queryTextCol, predicate, semantic,
-        semanticQueryCol, semanticIdCol, semanticScoreCol,
-        k = candidates, candidates = candidates, rrfK = rrfK),
-      queryIdCol, idCol, vectors, vecIdCol, vecCol, k, lambda,
-      "searchPipelineBatchFilteredDiversified")
-  }
-
-  /** The shared MMR stage of the diversified pipelines: attach the
+  /** The MMR stage of [[searchPipelineBatch]]: attach the
     * candidate vectors (pool broadcast onto the vector table — the
     * corpus is never shuffled), greedy-select with rrf_score as the
     * relevance, restore the caller's id column name. A fused
@@ -2143,11 +2079,9 @@ object CorpusOps {
     * vector id is caught by [[graft.operators.Similarity
     * .mmrRerankBatch]]'s per-pool duplicate guard. */
   private def diversifyFused(fused: DataFrame, queryIdCol: String,
-                             idCol: String, vectors: DataFrame,
-                             vecIdCol: String, vecCol: String, k: Int,
-                             lambda: Double, face: String): DataFrame = {
+                             idCol: String, m: Mmr, k: Int): DataFrame = {
     graft.operators.Similarity.requireIntegralIds(fused,
-      Seq(queryIdCol, idCol), face)
+      Seq(queryIdCol, idCol), "searchPipelineBatch")
     val cands = fused.select(col(queryIdCol), col(idCol),
       col("rrf_score"))
     // ONE corpus pass (inner broadcast join — an outer join preserving
@@ -2156,7 +2090,7 @@ object CorpusOps {
     // rows, and everything after — the coverage check and the greedy
     // stage — works off the cached copy
     val pool = graft.operators.Materialize(
-      vectors.select(col(vecIdCol).as(idCol), col(vecCol).as("__mmrv"))
+      m.vectors.select(col(m.vecIdCol).as(idCol), col(m.vecCol).as("__mmrv"))
         .join(broadcast(cands), Seq(idCol)),
       eager = true)
     val missing = cands.select(col(queryIdCol), col(idCol))
@@ -2164,13 +2098,13 @@ object CorpusOps {
         Seq(queryIdCol, idCol), "left_anti")
       .limit(3).collect()
     require(missing.isEmpty,
-      s"$face: fused candidate ids " +
+      "searchPipelineBatch: fused candidate ids " +
         missing.map(_.get(1)).mkString("[", ", ", "]") +
         " have no row in the vector table — `vectors` must cover " +
         "every candidate id (a silent drop would return fewer than " +
         "k rows per query)")
     val picked = graft.operators.Similarity.mmrRerankBatch(pool,
-      queryIdCol, idCol, "rrf_score", "__mmrv", k, lambda)
+      queryIdCol, idCol, "rrf_score", "__mmrv", k, m.lambda)
     if (idCol == "id") picked
     else picked.withColumnRenamed("id", idCol)
   }
@@ -2337,52 +2271,26 @@ object CorpusOps {
     * exchanges are the (doc, term) tf aggregation and the
     * (query, doc) score aggregation — both on well-distributed
     * composite keys, so hot terms shared by many queries fan out in
-    * the map side of the score agg, not into one task. */
+    * the map side of the score agg, not into one task.
+    *
+    * `predicate` (over `docs`' metadata columns) is the LEXICAL leg of
+    * filtered retrieval: it restricts WHICH documents compete, BEFORE
+    * the per-query top-k — never a post-filter of a truncated ranking,
+    * so a selective filter costs nothing in recall (that failure mode
+    * is spec-pinned). Corpus statistics keep the Lucene filter-context
+    * semantics: idf (df), N and avgdl come from the FULL corpus — the
+    * filter names a candidate subset, it does not re-weigh the
+    * collection — so a document's score is IDENTICAL to its unfiltered
+    * score (spec-pinned). The predicate is one boolean riding the
+    * tokenize pass (evaluated once per doc, carried through the tf
+    * aggregation): no extra join, no second corpus scan. Identical
+    * arithmetic on the indexed probe ([[bm25TopKIndexed]] with the same
+    * predicate — equivalence law spec-pinned). */
   def bm25TopKBatch(docs: DataFrame, idCol: String, textCol: String,
                     queries: DataFrame, queryIdCol: String,
                     queryTextCol: String, k: Int,
-                    k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    bm25BatchCore(docs, idCol, textCol, queries, queryIdCol,
-      queryTextCol, k, k1, b, None)
-
-  /** Metadata-filtered batch BM25 — the LEXICAL leg of filtered
-    * retrieval (r16 verdict #1; the filtered [[graft.operators.Similarity
-    * .ivfProbe]]'s contract on this tier): the
-    * predicate (over `docs`' metadata columns) restricts WHICH
-    * documents compete, BEFORE the per-query top-k — never a
-    * post-filter of a truncated ranking, so a selective filter costs
-    * nothing in recall (that failure mode is spec-pinned). Corpus
-    * statistics keep the Lucene filter-context semantics: idf (df),
-    * N and avgdl come from the FULL corpus — the filter names a
-    * candidate subset, it does not re-weigh the collection — so a
-    * document's score is IDENTICAL to its unfiltered score
-    * (spec-pinned), and the filtered top-k is exactly the unfiltered
-    * scoring relation post-filtered BEFORE truncation. Identical
-    * arithmetic on the indexed probe ([[bm25TopKIndexedFiltered]] —
-    * equivalence law spec-pinned).
-    *
-    * Scale shape: [[bm25TopKBatch]]'s, plus one boolean riding the
-    * tokenize pass (evaluated once per doc, carried through the tf
-    * aggregation) — no extra join, no second corpus scan. */
-  def bm25TopKBatchFiltered(docs: DataFrame, idCol: String,
-                            textCol: String, queries: DataFrame,
-                            queryIdCol: String, queryTextCol: String,
-                            k: Int, predicate: Column,
-                            k1: Double = 1.2,
-                            b: Double = 0.75): DataFrame =
-    bm25BatchCore(docs, idCol, textCol, queries, queryIdCol,
-      queryTextCol, k, k1, b, Some(predicate))
-
-  /** The one shared batch-BM25 dataflow ([[bm25TopKBatch]] documents
-    * the shape). `docPredicate`, when present, is evaluated on the
-    * doc rows during the tokenize pass and restricts the candidate
-    * rows AFTER df/stats are aggregated (full-corpus statistics) and
-    * BEFORE scoring and the per-query top-k. */
-  private def bm25BatchCore(docs: DataFrame, idCol: String,
-                            textCol: String, queries: DataFrame,
-                            queryIdCol: String, queryTextCol: String,
-                            k: Int, k1: Double, b: Double,
-                            docPredicate: Option[Column]): DataFrame = {
+                    predicate: Option[Column] = None,
+                    k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(k > 0, s"k must be positive: $k")
     require(k1 >= 0 && b >= 0 && b <= 1,
       s"BM25 params out of range: k1=$k1 b=$b")
@@ -2391,23 +2299,23 @@ object CorpusOps {
       .distinct()
     val base = docs.filter(nonBlank(col(textCol)))
       .select(col(idCol) +: tokens(col(textCol)).as("__tk") +:
-        docPredicate.map(_.as("__keep")).toSeq: _*)
+        predicate.map(_.as("__keep")).toSeq: _*)
     val stats = base.agg(count(lit(1)).cast("double").as("__n"),
       avg(size(col("__tk"))).as("__avgdl"))
     val tf = base
       .select(col(idCol) +: size(col("__tk")).as("__dl") +:
         explode(col("__tk")).as("__t") +:
-        docPredicate.map(_ => col("__keep")).toSeq: _*)
+        predicate.map(_ => col("__keep")).toSeq: _*)
       .join(broadcast(qterms.select(col("__t")).distinct()), Seq("__t"),
         "left_semi")
       .groupBy(col(idCol), col("__t"))
       .agg(count(lit(1)).as("__tf"),
         max(col("__dl")).as("__dl") +:
-          docPredicate.map(_ => max(col("__keep")).as("__keep")).toSeq: _*)
+          predicate.map(_ => max(col("__keep")).as("__keep")).toSeq: _*)
     // df over the UNFILTERED (vocabulary-pruned) tf — full-corpus idf
     val df = tf.groupBy(col("__t")).agg(count(lit(1)).as("__df"))
     // the candidate restriction: after df, before scoring and top-k
-    docPredicate.fold(tf)(_ => tf.filter(col("__keep")))
+    predicate.fold(tf)(_ => tf.filter(col("__keep")))
       .join(broadcast(df), Seq("__t"))
       .crossJoin(broadcast(stats))
       .select(col(idCol), col("__t"),
@@ -2533,7 +2441,7 @@ object CorpusOps {
     val statsMode = if (mode == "overwrite") "overwrite" else "append"
     // extraCols ride INSIDE the posting rows (the [[graft.operators
     // .Similarity]] ivfAssigned convention) so a filtered probe
-    // ([[bm25TopKIndexedFiltered]]) evaluates its predicate straight
+    // ([[bm25TopKIndexed]] with a predicate) evaluates it straight
     // off the pruned posting scan — no id-join per probe; constancy
     // per doc id is ASSERTED in the aggregation ([[bm25PostingRows]])
     val base = docs.filter(nonBlank(col(textCol)))
@@ -2967,42 +2875,22 @@ object CorpusOps {
     * then prunes rows to the exact vocabulary with a broadcast
     * semi-join. Returns (`queryIdCol`, `id`, `bm25` rounded 4,
     * `n_terms`), <= k rows per query via WindowGroupLimit; blank
-    * queries and queries matching nothing contribute no rows. */
-  def bm25TopKIndexed(spark: org.apache.spark.sql.SparkSession,
-                      path: String, queries: DataFrame,
-                      queryIdCol: String, queryTextCol: String, k: Int,
-                      k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    bm25IndexedCore(spark, path, queries, queryIdCol, queryTextCol,
-      k, k1, b, None)
-
-  /** Metadata-filtered probe of a persisted BM25 index — the INDEXED
-    * face of [[bm25TopKBatchFiltered]] (r16 verdict #1): the
-    * predicate evaluates over the metadata columns riding the posting
+    * queries and queries matching nothing contribute no rows.
+    *
+    * `predicate` evaluates over the metadata columns riding the posting
     * rows ([[buildBm25Index]]'s `extraCols`) on the already-pruned
     * posting slice — BEFORE scoring and the per-query top-k, never as
     * a post-filter of a truncated ranking. Statistics keep the
-    * filter-context semantics (df table and stats rows as built —
-    * full corpus), so per query the result is IDENTICAL to
-    * [[bm25TopKBatchFiltered]] over the indexed corpus with the same
-    * predicate (equivalence law spec-pinned). The filter's cost
-    * scales with the query's pruned postings, not the index. */
-  def bm25TopKIndexedFiltered(spark: org.apache.spark.sql.SparkSession,
-                              path: String, queries: DataFrame,
-                              queryIdCol: String, queryTextCol: String,
-                              k: Int, predicate: Column,
-                              k1: Double = 1.2,
-                              b: Double = 0.75): DataFrame =
-    bm25IndexedCore(spark, path, queries, queryIdCol, queryTextCol,
-      k, k1, b, Some(predicate))
-
-  /** The one shared indexed-probe dataflow ([[bm25TopKIndexed]]
-    * documents the shape); `pred` filters the pruned posting slice
-    * before scoring — the filtered-probe contract. */
-  private def bm25IndexedCore(spark: org.apache.spark.sql.SparkSession,
-                              path: String, queries: DataFrame,
-                              queryIdCol: String, queryTextCol: String,
-                              k: Int, k1: Double, b: Double,
-                              pred: Option[Column]): DataFrame = {
+    * filter-context semantics (df table and stats rows as built — full
+    * corpus), so per query the result is IDENTICAL to
+    * [[bm25TopKBatch]] over the indexed corpus with the same predicate
+    * (equivalence law spec-pinned). The filter's cost scales with the
+    * query's pruned postings, not the index. */
+  def bm25TopKIndexed(spark: org.apache.spark.sql.SparkSession,
+                      path: String, queries: DataFrame,
+                      queryIdCol: String, queryTextCol: String, k: Int,
+                      predicate: Option[Column] = None,
+                      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(k > 0, s"k must be positive: $k")
     require(k1 >= 0 && b >= 0 && b <= 1,
       s"BM25 params out of range: k1=$k1 b=$b")
@@ -3028,7 +2916,7 @@ object CorpusOps {
         Seq("term"), "left_semi")
     // the filtered-probe contract: the metadata predicate runs on the
     // pruned slice, before scoring and top-k (df/stats stay as built)
-    val pruned = pred.fold(prunedAll)(prunedAll.filter)
+    val pruned = predicate.fold(prunedAll)(prunedAll.filter)
     // tombstoned docs ([[bm25IndexDelete]]) never surface — the
     // anti-join runs on the already-pruned posting slice, so its cost
     // scales with the query's postings, not the index

@@ -26,8 +26,15 @@ import org.apache.spark.sql.DataFrame
 object Materialize {
   /** Materialize `df` for multi-branch reuse. `eager = true` runs the
     * upstream plan NOW (a job barrier — callers use it when the subtree
-    * is large and every downstream reference would re-run it); `eager =
-    * false` fills blocks during the first consuming stage. */
+    * is large and every downstream reference would re-run it): one job
+    * per shuffle stage of `df`'s plan, plus one that fills the blocks.
+    * `eager = false` is lazy only past the last exchange: building the
+    * share still runs every shuffle stage of `df`'s plan (one job each,
+    * so a plan with a `groupBy` is executed up to its final stage right
+    * here), and the first consuming job runs that final stage and fills
+    * the blocks, which later uses read back. A plan with no exchange
+    * launches nothing until it is consumed. MaterializeSpec pins these
+    * counts. */
   def apply(df: DataFrame, eager: Boolean): DataFrame = {
     val spark = df.sparkSession
     val reliable = spark.conf.getOption("spark.graft.reliableCheckpoint")

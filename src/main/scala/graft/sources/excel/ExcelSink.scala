@@ -155,8 +155,9 @@ object ExcelSink {
     * column's header position), the row the diff probed (reference
     * Compare.py:174, `df_idx = r - 2`), so each of a repeated key's rows
     * keeps its own marks; Q2 is read only through its header row. A
-    * diff without it is marked by key: Q2 is read in full and each key
-    * maps to the LAST sheet row holding it.
+    * diff without it is marked by key: Q2 is read in full to map each
+    * key to its sheet row, and a key that repeats in Q2 fails the call
+    * (its rows cannot be told apart by key).
     * Returns the written path. */
   def writeHighlighted(q2Path: String, diff: DataFrame, keyCol: String,
                        headerRow: Int = 1): String = {
@@ -172,9 +173,19 @@ object ExcelSink {
         val keyIdx = headerPos.getOrElse(keyCol,
           throw new IllegalArgumentException(s"key column '$keyCol' not in header"))
         val sheet = ExcelScan.loadSheet(q2Path, None)
-        val rowByKey: Map[String, Int] =
-          ((headerRow + 1) to sheet.maxRow)
-            .map(r => sheet(r, keyIdx) -> r).filter(_._1.nonEmpty).toMap
+        val rowByKey = ((headerRow + 1) to sheet.maxRow)
+          .map(r => sheet(r, keyIdx) -> r).filter(_._1.nonEmpty)
+          .foldLeft(Map.empty[String, Int]) { case (m, (key, r)) =>
+            m.get(key).foreach { first =>
+              throw new IllegalArgumentException(s"writeHighlighted: key " +
+                s"'$key' repeats in $q2Path (sheet rows $first and $r), so " +
+                "a diff marked by key cannot tell its rows apart; mark by " +
+                "sheet row instead: Pipelines.compareAndHighlight, or read " +
+                "Q2 with the xlsx source's rowNumberColumn option and pass " +
+                s"that column through the diff as $SheetRowColumn")
+            }
+            m.updated(key, r)
+          }
         r => rowByKey.get(r.getString(0))
       }
 

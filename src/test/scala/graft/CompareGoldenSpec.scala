@@ -6,7 +6,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 import graft.pipelines.Pipelines
-import graft.sources.excel.{ExcelScan, Xlsx}
+import graft.sources.excel.{ExcelScan, ExcelSink, Xlsx}
 import XlsxTestUtil.{cellXf, fillOf, zipPart}
 
 /** Golden end-to-end for the full Compare -> highlight pipeline
@@ -161,5 +161,20 @@ class CompareGoldenSpec extends SparkSpec {
     assert(fillOf(stylesXml, cellXf(sheetXml, "B3")).isEmpty)
     assert(fillOf(stylesXml, cellXf(sheetXml, "A2")).isEmpty &&
       fillOf(stylesXml, cellXf(sheetXml, "A3")).isEmpty)
+    // the same pair through the sink's keyed path (a diff without sheet
+    // rows): a key cannot name one of its two Q2 rows, so the sink
+    // refuses instead of painting the key's last row
+    val keyed = Pipelines.compare(spark, s"$dir/dup_q1.xlsx",
+      s"$dir/dup_q2.xlsx", "id", Seq("k1"))
+    assert(!keyed.columns.contains(ExcelSink.SheetRowColumn))
+    new java.io.File(dupOut).delete()
+    val e = intercept[IllegalArgumentException] {
+      ExcelSink.writeHighlighted(s"$dir/dup_q2.xlsx",
+        keyed.filter(col("status") =!= "UNCHANGED"), "id")
+    }
+    assert(e.getMessage.contains("'x1'") &&
+      e.getMessage.contains("compareAndHighlight") &&
+      e.getMessage.contains("rowNumberColumn"), e.getMessage)
+    assert(!new java.io.File(dupOut).exists())
   }
 }

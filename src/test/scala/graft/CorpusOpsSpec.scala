@@ -1140,6 +1140,19 @@ class CorpusOpsSpec extends SparkSpec {
       CorpusOps.searchPipeline(docs, "doc_id", "text", Seq("a"),
         sem, "id", "cos", k = 5, candidates = 3)
     }
+    // one query-term rule with and without a predicate: a non-empty list
+    // of single tokens, refused by name before either path runs
+    Seq(None, Some(col("doc_id") > 0)).foreach { pred =>
+      Seq(Seq.empty[String], Seq("a", ""), Seq(" "), Seq("a c"),
+          Seq("a", "b\tc")).foreach { terms =>
+        val e = intercept[IllegalArgumentException] {
+          CorpusOps.searchPipeline(docs, "doc_id", "text", terms, sem,
+            "id", "cos", k = 3, candidates = 10, predicate = pred)
+        }
+        assert(e.getMessage.contains("searchPipeline"),
+          s"$terms, predicate $pred: ${e.getMessage}")
+      }
+    }
   }
 
   test("searchPipeline bounds an OVERSIZED semantic leg to candidates " +
@@ -1433,6 +1446,26 @@ class CorpusOpsSpec extends SparkSpec {
     // every one of its fused rows carries exactly one signal
     assert(batch(2L).nonEmpty && batch(2L).forall(_._2 == 1L),
       batch(2L).toString)
+    // an OVERSIZED semantic leg (6 rows against candidates = 3): doc 2
+    // is lexical-top for "a c" but the semantic leg's last row, so both
+    // faces fuse only the leg's top-3 ranks and doc 2 carries one signal
+    val small = Seq((1L, "a b a"), (2L, "a c"), (3L, "c c c c"),
+      (4L, "b b")).toDF("doc_id", "text")
+    val semBig = Seq((3L, 0.9), (4L, 0.8), (9L, 0.7), (10L, 0.6),
+      (11L, 0.5), (2L, 0.4)).toDF("id", "cos")
+    val bigBatch = CorpusOps.searchPipelineBatch(small, "doc_id", "text",
+        Seq((0L, "a c")).toDF("query_id", "query_text"), "query_id",
+        "query_text", semBig.withColumn("qid", lit(0L)), "qid", "id", "cos",
+        k = 3, candidates = 3)
+      .collect().map(r => (r.getLong(1), r.getLong(2), r.getDouble(3),
+        r.getLong(4))).toSet
+    val bigSingle = CorpusOps.searchPipeline(small, "doc_id", "text",
+        Seq("a", "c"), semBig, "id", "cos", k = 3, candidates = 3)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
+        r.getLong(3))).toSet
+    assert(bigBatch == bigSingle, s"batch $bigBatch vs single $bigSingle")
+    assert(bigBatch.find(_._1 == 2L).exists(_._2 == 1L),
+      s"doc 2 sits below the semantic cut: $bigBatch")
   }
 
   private def got(m: Map[Long, Set[(Long, Long, Double, Long)]],

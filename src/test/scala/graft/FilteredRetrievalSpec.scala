@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.operators.{CorpusOps, Similarity, VectorCodec, VectorIndex}
 
@@ -33,9 +33,9 @@ class FilteredRetrievalSpec extends SparkSpec {
       "score equals its unfiltered score), candidates restricted " +
       "pre-top-k; post-filtering demonstrably loses rows") {
     val corpus = plantedDocs
-    val filtered = CorpusOps.bm25TopKBatchFiltered(corpus, "doc_id",
+    val filtered = CorpusOps.bm25TopKBatch(corpus, "doc_id",
         "text", queries, "query_id", "query_text", k = 10,
-        $"lang" === "zz")
+        Some($"lang" === "zz"))
       .as[(Long, Long, Double, Long)].collect()
     assert(filtered.nonEmpty)
     assert(filtered.forall(_._2 >= 1000000L),
@@ -67,18 +67,18 @@ class FilteredRetrievalSpec extends SparkSpec {
       .toString + "/idx"
     CorpusOps.buildBm25Index(corpus, "doc_id", "text", dir,
       extraCols = Seq("lang"))
-    val direct = CorpusOps.bm25TopKBatchFiltered(corpus, "doc_id",
+    val direct = CorpusOps.bm25TopKBatch(corpus, "doc_id",
         "text", queries, "query_id", "query_text", k = 10,
-        $"lang" === "zz")
+        Some($"lang" === "zz"))
       .as[(Long, Long, Double, Long)].collect().toSet
-    val indexed = CorpusOps.bm25TopKIndexedFiltered(spark, dir,
-        queries, "query_id", "query_text", k = 10, $"lang" === "zz")
+    val indexed = CorpusOps.bm25TopKIndexed(spark, dir,
+        queries, "query_id", "query_text", k = 10, Some($"lang" === "zz"))
       .as[(Long, Long, Double, Long)].collect().toSet
     assert(indexed == direct)
     // and with a predicate nothing matches, no rows — never a fallback
     // to the unfiltered ranking
-    assert(CorpusOps.bm25TopKIndexedFiltered(spark, dir, queries,
-      "query_id", "query_text", k = 10, $"lang" === "qq").isEmpty)
+    assert(CorpusOps.bm25TopKIndexed(spark, dir, queries,
+      "query_id", "query_text", k = 10, Some($"lang" === "qq")).isEmpty)
   }
 
   test("searchPipelineBatchFiltered: both legs filtered pre-top-k; " +
@@ -93,9 +93,10 @@ class FilteredRetrievalSpec extends SparkSpec {
       .select($"vec_id".as("qid"), $"embedding".as("qv"))
     val semFiltered = Similarity.cosineTopKBatch(plantedEmb, "vec_id",
       "embedding", qvecs, "qid", "qv", k = 50)
-    val fused = CorpusOps.searchPipelineBatchFiltered(corpus, "doc_id",
-        "text", queries, "query_id", "query_text", $"lang" === "zz",
-        semFiltered, "qid", "id", "cos_sim", k = 10, candidates = 50)
+    val fused = CorpusOps.searchPipelineBatch(corpus, "doc_id",
+        "text", queries, "query_id", "query_text",
+        semFiltered, "qid", "id", "cos_sim", k = 10, candidates = 50,
+        predicate = Some($"lang" === "zz"))
       .as[(Long, Long, Long, Double, Long)].collect()
     assert(fused.nonEmpty)
     assert(fused.forall(_._2 >= 1000000L), "only planted ids surface")
@@ -110,9 +111,10 @@ class FilteredRetrievalSpec extends SparkSpec {
     val semUnfiltered = Similarity.cosineTopKBatch(
       emb.unionByName(plantedEmb), "vec_id", "embedding", qvecs,
       "qid", "qv", k = 50)
-    val wrong = CorpusOps.searchPipelineBatchFiltered(corpus, "doc_id",
-        "text", queries, "query_id", "query_text", $"lang" === "zz",
-        semUnfiltered, "qid", "id", "cos_sim", k = 10, candidates = 50)
+    val wrong = CorpusOps.searchPipelineBatch(corpus, "doc_id",
+        "text", queries, "query_id", "query_text",
+        semUnfiltered, "qid", "id", "cos_sim", k = 10, candidates = 50,
+        predicate = Some($"lang" === "zz"))
       .as[(Long, Long, Long, Double, Long)].collect()
     assert(wrong.count(_._3 == 2L) < fused.count(_._3 == 2L),
       "an unfiltered semantic leg must lose two-signal fusions")
@@ -180,17 +182,17 @@ class FilteredRetrievalSpec extends SparkSpec {
     // the semantic leg, filtered inside its own probe (the contract)
     val semBatch = Similarity.cosineTopKBatch(plantedEmb, "vec_id",
       "embedding", qv, "qid", "qv", k = 50)
-    val single = CorpusOps.searchPipelineFiltered(corpus, "doc_id",
+    val single = CorpusOps.searchPipeline(corpus, "doc_id",
         "text", Seq("hash", "join", "window", "scan"),
-        $"lang" === "zz",
         semBatch.select($"id", $"cos_sim"), "id", "cos_sim",
-        k = 10, candidates = 50)
+        k = 10, candidates = 50, predicate = Some($"lang" === "zz"))
       .as[(Long, Long, Double, Long)].collect().toSet
-    val batch = CorpusOps.searchPipelineBatchFiltered(corpus, "doc_id",
+    val batch = CorpusOps.searchPipelineBatch(corpus, "doc_id",
         "text", Seq((0L, "hash join window scan"))
           .toDF("query_id", "query_text"),
-        "query_id", "query_text", $"lang" === "zz",
-        semBatch, "qid", "id", "cos_sim", k = 10, candidates = 50)
+        "query_id", "query_text",
+        semBatch, "qid", "id", "cos_sim", k = 10, candidates = 50,
+        predicate = Some($"lang" === "zz"))
       .select($"doc_id", $"n_signals", $"rrf_score", $"rank")
       .as[(Long, Long, Double, Long)].collect().toSet
     assert(single == batch && single.nonEmpty)
@@ -215,10 +217,10 @@ class FilteredRetrievalSpec extends SparkSpec {
       .orderBy($"query_id", $"rank")
       .select($"query_id", $"doc_id", $"rank")
       .as[(Long, Long, Long)].collect().toSeq
-    val div = CorpusOps.searchPipelineBatchDiversified(docs, "doc_id",
+    val div = CorpusOps.searchPipelineBatch(docs, "doc_id",
         "text", queries, "query_id", "query_text", sem, "qid", "id",
-        "cos_sim", emb, "vec_id", "embedding", k = 5, lambda = 1.0,
-        candidates = 20)
+        "cos_sim", k = 5, candidates = 20,
+        mmr = Some(CorpusOps.Mmr(emb, "vec_id", "embedding", 1.0)))
       .orderBy($"query_id", $"rank")
       .select($"query_id", $"doc_id", $"rank")
       .as[(Long, Long, Long)].collect().toSeq
@@ -229,11 +231,11 @@ class FilteredRetrievalSpec extends SparkSpec {
       .select(($"vec_id" + 1000000L).as("vec_id"), $"embedding")
     val semFiltered = Similarity.cosineTopKBatch(plantedEmb, "vec_id",
       "embedding", qvecs, "qid", "qv", k = 20)
-    val fdiv = CorpusOps.searchPipelineBatchFilteredDiversified(corpus,
+    val fdiv = CorpusOps.searchPipelineBatch(corpus,
         "doc_id", "text", queries, "query_id", "query_text",
-        $"lang" === "zz", semFiltered, "qid", "id", "cos_sim",
-        plantedEmb, "vec_id", "embedding", k = 5, lambda = 0.5,
-        candidates = 20)
+        semFiltered, "qid", "id", "cos_sim", k = 5, candidates = 20,
+        predicate = Some($"lang" === "zz"),
+        mmr = Some(CorpusOps.Mmr(plantedEmb, "vec_id", "embedding", 0.5)))
       .as[(Long, Long, Double, Long)].collect()
     assert(fdiv.nonEmpty && fdiv.forall(_._2 >= 1000000L),
       "only planted 'zz' ids may surface in the filtered diversified " +
@@ -243,22 +245,93 @@ class FilteredRetrievalSpec extends SparkSpec {
     // silently shrinking the pool; a duplicated vector id is caught
     // by the pool's duplicate guard
     intercept[IllegalArgumentException] {
-      CorpusOps.searchPipelineBatchDiversified(docs, "doc_id", "text",
+      CorpusOps.searchPipelineBatch(docs, "doc_id", "text",
         queries, "query_id", "query_text", sem, "qid", "id",
-        "cos_sim", emb, "vec_id", "embedding", k = 50, lambda = 1.0,
-        candidates = 20)
+        "cos_sim", k = 50, candidates = 20,
+        mmr = Some(CorpusOps.Mmr(emb, "vec_id", "embedding", 1.0)))
     }
     interceptGuard("no row in the vector table") {
-      CorpusOps.searchPipelineBatchDiversified(docs, "doc_id", "text",
+      CorpusOps.searchPipelineBatch(docs, "doc_id", "text",
         queries, "query_id", "query_text", sem, "qid", "id",
-        "cos_sim", emb.filter($"vec_id" > 100), "vec_id", "embedding",
-        k = 5, lambda = 1.0, candidates = 20)
+        "cos_sim", k = 5, candidates = 20,
+        mmr = Some(CorpusOps.Mmr(emb.filter($"vec_id" > 100), "vec_id",
+          "embedding", 1.0)))
     }
     interceptGuard("duplicate candidate id") {
-      CorpusOps.searchPipelineBatchDiversified(docs, "doc_id", "text",
+      CorpusOps.searchPipelineBatch(docs, "doc_id", "text",
         queries, "query_id", "query_text", sem, "qid", "id",
-        "cos_sim", emb.unionByName(emb), "vec_id", "embedding",
-        k = 5, lambda = 1.0, candidates = 20).collect()
+        "cos_sim", k = 5, candidates = 20,
+        mmr = Some(CorpusOps.Mmr(emb.unionByName(emb), "vec_id",
+          "embedding", 1.0))).collect()
+    }
+  }
+
+  // Spark jobs the faces these calls replaced launched on the same calls
+  // and data (the `…Filtered` / `…Diversified` faces, for the calls with a
+  // predicate / an mmr stage), each call collected after a warm-up run.
+  private val replacedFaceJobs = Map(
+    "bm25TopKBatch, predicate" -> 13,
+    "bm25TopKIndexed, predicate" -> 16,
+    "searchPipelineBatch" -> 15,
+    "searchPipelineBatch, predicate" -> 15,
+    "searchPipelineBatch, mmr" -> 35,
+    "searchPipelineBatch, predicate, mmr" -> 35,
+    "searchPipeline" -> 10,
+    "searchPipeline, predicate" -> 18)
+
+  test("the unified retrieval faces launch no more jobs than the " +
+      "faces they replaced") {
+    val corpus = plantedDocs
+    val docs = Tables.documents(spark, sfDir).select($"doc_id", $"text")
+    val zz = Some($"lang" === "zz")
+    val emb = Tables.embeddings(spark, sfDir)
+      .select($"vec_id", $"embedding")
+    val plantedEmb = emb.filter($"vec_id".between(10, 21))
+      .select(($"vec_id" + 1000000L).as("vec_id"), $"embedding")
+    val qvecs = emb.filter($"vec_id" < 4)
+      .select($"vec_id".as("qid"), $"embedding".as("qv"))
+    val sem = Similarity.cosineTopKBatch(emb, "vec_id", "embedding",
+      qvecs, "qid", "qv", k = 20)
+    val semF = Similarity.cosineTopKBatch(plantedEmb, "vec_id",
+      "embedding", qvecs, "qid", "qv", k = 20)
+    val dir = java.nio.file.Files.createTempDirectory("bm25jobs")
+      .toString + "/idx"
+    CorpusOps.buildBm25Index(corpus, "doc_id", "text", dir,
+      extraCols = Seq("lang"))
+    def batch(d: DataFrame, s: DataFrame, pred: Option[Column],
+              mmr: Option[CorpusOps.Mmr]) =
+      CorpusOps.searchPipelineBatch(d, "doc_id", "text", queries,
+        "query_id", "query_text", s, "qid", "id", "cos_sim", k = 5,
+        candidates = 20, predicate = pred, mmr = mmr).collect()
+    def single(d: DataFrame, s: DataFrame, pred: Option[Column]) =
+      CorpusOps.searchPipeline(d, "doc_id", "text",
+        Seq("hash", "join", "window", "scan"),
+        s.filter($"qid" === 0L).select($"id", $"cos_sim"), "id",
+        "cos_sim", k = 5, candidates = 20, predicate = pred).collect()
+    val calls: Seq[(String, () => Any)] = Seq(
+      "bm25TopKBatch, predicate" -> (() => CorpusOps.bm25TopKBatch(corpus,
+        "doc_id", "text", queries, "query_id", "query_text", k = 10,
+        zz).collect()),
+      "bm25TopKIndexed, predicate" -> (() => CorpusOps.bm25TopKIndexed(
+        spark, dir, queries, "query_id", "query_text", k = 10, zz)
+        .collect()),
+      "searchPipelineBatch" -> (() => batch(docs, sem, None, None)),
+      "searchPipelineBatch, predicate" -> (() => batch(corpus, semF, zz,
+        None)),
+      "searchPipelineBatch, mmr" -> (() => batch(docs, sem, None,
+        Some(CorpusOps.Mmr(emb, "vec_id", "embedding", 0.7)))),
+      "searchPipelineBatch, predicate, mmr" -> (() => batch(corpus,
+        semF, zz, Some(CorpusOps.Mmr(plantedEmb, "vec_id", "embedding",
+          0.7)))),
+      "searchPipeline" -> (() => single(docs, sem, None)),
+      "searchPipeline, predicate" -> (() => single(corpus, semF, zz)))
+    calls.foreach { case (_, call) => call() } // first loads stay outside
+    val got = calls.map { case (face, call) => face -> jobsLaunchedBy(call()) }
+    info(s"jobs: ${got.mkString(", ")}")
+    got.foreach { case (face, n) =>
+      assert(n <= replacedFaceJobs(face),
+        s"$face launched $n jobs, the face it replaced " +
+          s"${replacedFaceJobs(face)}")
     }
   }
 
@@ -302,9 +375,9 @@ class FilteredRetrievalSpec extends SparkSpec {
       .toString + "/idx"
     CorpusOps.buildBm25Index(ok, "doc_id", "text", dir2,
       extraCols = Seq("lang"))
-    val probed = CorpusOps.bm25TopKIndexedFiltered(spark, dir2,
+    val probed = CorpusOps.bm25TopKIndexed(spark, dir2,
         Seq((0L, "common")).toDF("query_id", "query_text"),
-        "query_id", "query_text", k = 10, $"lang" === "en")
+        "query_id", "query_text", k = 10, Some($"lang" === "en"))
       .select($"id").as[Long].collect().toSet
     assert(probed == Set(1L))
   }
