@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
-import graft.operators.{CorpusOps, Dedup, DiffEngine, Multimodal, Similarity, TextAnalysis, TimeSeries, VectorCodec, VectorIndex}
+import graft.operators.{CorpusOps, Dedup, DiffEngine, IvfTier, Multimodal, Similarity, TextAnalysis, TimeSeries, VectorCodec, VectorIndex}
 
 /** The operator inventory (SURVEY.md §2 Tier A + §7.1 Tier B), one entry
   * per operator: a Spark implementation and, where ANSI-SQL-expressible,
@@ -3480,9 +3480,8 @@ object QueryCatalog {
           CorpusOps.buildBm25Index(corpus, "doc_id", "text",
             s"$root/bm25", extraCols = Seq("lang"))
         if (!new java.io.File(s"$root/ivf", "_SUCCESS").exists())
-          Similarity.buildIvfCentroidIndex(corpusEmb, "vec_id",
-            "embedding", s"$root/ivf", k = 8, iters = 3,
-            extraCols = Seq("label"))
+          Similarity.ivfBuild(corpusEmb, "vec_id", "embedding", s"$root/ivf",
+            nCells = 8, iters = 3, extraCols = Seq("label"))
         val qs = Seq(
           (0L, "hash join window scan"),
           (1L, "sort merge batch"),
@@ -5194,8 +5193,8 @@ object QueryCatalog {
         if (!new java.io.File(s"$root/bm25", "_SUCCESS").exists())
           CorpusOps.buildBm25Index(docs, "doc_id", "text", s"$root/bm25")
         if (!new java.io.File(s"$root/ivf", "_SUCCESS").exists())
-          Similarity.buildIvfCentroidIndex(emb, "vec_id", "embedding",
-            s"$root/ivf", k = 8, iters = 3)
+          Similarity.ivfBuild(emb, "vec_id", "embedding", s"$root/ivf",
+            nCells = 8, iters = 3)
         if (!new java.io.File(s"$root/bq", "_SUCCESS").exists())
           VectorIndex.build(emb, "vec_id", "embedding", s"$root/bq",
             VectorCodec.Binary)
@@ -5817,8 +5816,8 @@ object QueryCatalog {
           .unionByName(emb.filter(col("vec_id").between(10, 21))
             .select((col("vec_id") + 1000000).as("vec_id"),
               col("embedding"), lit(99).as("label")))
-        Similarity.buildIvfPqIndex(corpus, "vec_id", "embedding", dir,
-          nCells = 8, m = 8, nbits = 8, iters = 3,
+        Similarity.ivfBuild(corpus, "vec_id", "embedding", dir,
+          IvfTier.Pq(m = 8, nbits = 8), nCells = 8, iters = 3,
           extraCols = Seq("label"))
         Similarity.ivfProbe(s, dir,
             emb.filter(col("vec_id") < 2)
@@ -8054,8 +8053,8 @@ object QueryCatalog {
         val dir = scratchDir("graft-stream-ivf")
         val emb = plantedEmbeddings(s, d)
         emb.write.parquet(s"$dir/src")
-        Similarity.initIvfCentroidIndex(emb, "vec_id", "embedding",
-          s"$dir/idx", k = 8, iters = 3)
+        Similarity.ivfInit(emb, "vec_id", "embedding", s"$dir/idx", nCells = 8,
+          iters = 3)
         graft.streaming.EventStreams.ivfIndexAvailableNow(s,
           s"$dir/src", "vec_id", col("embedding"), s"$dir/idx",
           s"$dir/ckpt")
@@ -8086,7 +8085,7 @@ object QueryCatalog {
       // COMPOSED index: the planted corpus drains through the
       // incremental engine into the IVF-PQ layout (coarse centroids +
       // residual codebooks initialized up front on a seed read;
-      // per-batch codes/batch=<id> subtrees via ivfPqAppendBatch),
+      // per-batch codes/batch=<id> subtrees via ivfAppendBatch),
       // then the 4-query batch ADC probe hits the FRESH index.
       // Assignment AND encoding are pure functions of (vector,
       // models), so one drain probes exactly like a one-shot build —
@@ -8096,9 +8095,9 @@ object QueryCatalog {
         val dir = scratchDir("graft-stream-ivfpq")
         val emb = plantedEmbeddings(s, d)
         emb.write.parquet(s"$dir/src")
-        Similarity.initIvfPqIndex(emb, "vec_id", "embedding",
-          s"$dir/idx", nCells = 8, m = 8, nbits = 8, iters = 3)
-        graft.streaming.EventStreams.ivfPqIndexAvailableNow(s,
+        Similarity.ivfInit(emb, "vec_id", "embedding", s"$dir/idx",
+          IvfTier.Pq(m = 8, nbits = 8), nCells = 8, iters = 3)
+        graft.streaming.EventStreams.ivfIndexAvailableNow(s,
           s"$dir/src", "vec_id", col("embedding"), s"$dir/idx",
           s"$dir/ckpt")
         Similarity.ivfProbe(s, s"$dir/idx",
@@ -8341,8 +8340,8 @@ object QueryCatalog {
           s"${d.replaceAll("[^A-Za-z0-9]", "_")}/idx"
         TempDirs.deleteOnExit(new java.io.File(dir).getParentFile)
         val emb = plantedEmbeddings(s, d)
-        Similarity.buildIvfCentroidIndex(emb, "vec_id", "embedding", dir,
-          k = 8, iters = 3)
+        Similarity.ivfBuild(emb, "vec_id", "embedding", dir, nCells = 8,
+          iters = 3)
         Similarity.ivfProbe(s, dir,
             emb.filter(col("vec_id") === 0L)
               .select(col("vec_id").as("qid"), col("embedding").as("qv")),
@@ -8374,8 +8373,8 @@ object QueryCatalog {
           s"${d.replaceAll("[^A-Za-z0-9]", "_")}/idx"
         TempDirs.deleteOnExit(new java.io.File(dir).getParentFile)
         val emb = t(s, d, "embeddings")
-        Similarity.buildIvfCentroidIndex(emb, "vec_id", "embedding", dir,
-          k = 8, iters = 3)
+        Similarity.ivfBuild(emb, "vec_id", "embedding", dir, nCells = 8,
+          iters = 3)
         Similarity.ivfAppend(
           emb.filter(col("vec_id") < 10)
             .select((col("vec_id") + 1000000).as("vec_id"),
@@ -8418,8 +8417,8 @@ object QueryCatalog {
           s"${d.replaceAll("[^A-Za-z0-9]", "_")}/idx"
         TempDirs.deleteOnExit(new java.io.File(dir).getParentFile)
         val emb = t(s, d, "embeddings")
-        Similarity.buildIvfCentroidIndex(emb, "vec_id", "embedding", dir,
-          k = 8, iters = 3)
+        Similarity.ivfBuild(emb, "vec_id", "embedding", dir, nCells = 8,
+          iters = 3)
         Similarity.ivfAppend(
           emb.filter(col("vec_id") < 10)
             .select((col("vec_id") + 1000000).as("vec_id"),
@@ -8463,8 +8462,8 @@ object QueryCatalog {
           s"${d.replaceAll("[^A-Za-z0-9]", "_")}/idx"
         TempDirs.deleteOnExit(new java.io.File(dir).getParentFile)
         val emb = t(s, d, "embeddings")
-        Similarity.buildIvfCentroidIndex(emb, "vec_id", "embedding", dir,
-          k = 8, iters = 3)
+        Similarity.ivfBuild(emb, "vec_id", "embedding", dir, nCells = 8,
+          iters = 3)
         Similarity.ivfAppend(
           emb.filter(col("vec_id") < 4)
             .select((col("vec_id") + 1000000).as("vec_id"),
@@ -8526,8 +8525,8 @@ object QueryCatalog {
           transform(col("embedding"), (x, i) =>
             when(i === 0, x + lit(2.0d)).otherwise(x + lit(0.0d)))
             .cast("array<float>").as("embedding"))
-        Similarity.buildIvfCentroidIndex(emb, "vec_id", "embedding", dir,
-          k = 8, iters = 3)
+        Similarity.ivfBuild(emb, "vec_id", "embedding", dir, nCells = 8,
+          iters = 3)
         Similarity.ivfAppend(shifted, "vec_id", "embedding", dir)
         val centroids = Similarity.ivfRetrain(s, dir, iters = 3)
         // law leg: the same combined vectors, ids offset, re-assigned
@@ -8589,8 +8588,8 @@ object QueryCatalog {
           transform(col("embedding"), (x, i) =>
             when(i === 0, x + lit(2.0d)).otherwise(x + lit(0.0d)))
             .cast("array<float>").as("embedding"))
-        Similarity.buildIvfCentroidIndex(emb, "vec_id", "embedding", dir,
-          k = 8, iters = 3)
+        Similarity.ivfBuild(emb, "vec_id", "embedding", dir, nCells = 8,
+          iters = 3)
         Similarity.ivfAppend(shifted, "vec_id", "embedding", dir)
         val centroids = Similarity.ivfRetrain(s, dir, iters = 3,
           versioned = true)
@@ -8660,8 +8659,8 @@ object QueryCatalog {
           .unionByName(emb.filter(col("vec_id").between(10, 21))
             .select((col("vec_id") + 1000000).as("vec_id"),
               col("embedding"), lit(99).as("label")))
-        Similarity.buildIvfCentroidIndex(corpus, "vec_id", "embedding",
-          dir, k = 8, iters = 3, extraCols = Seq("label"))
+        Similarity.ivfBuild(corpus, "vec_id", "embedding", dir, nCells = 8,
+          iters = 3, extraCols = Seq("label"))
         Similarity.ivfProbe(s, dir,
             emb.filter(col("vec_id") === 0L)
               .select(col("vec_id").as("qid"), col("embedding").as("qv")),
@@ -8727,8 +8726,8 @@ object QueryCatalog {
           .unionByName(emb.filter(col("vec_id").between(10, 21))
             .select((col("vec_id") + 1000000).as("vec_id"),
               col("embedding"), lit(99).as("label")))
-        Similarity.buildIvfPqIndex(corpus, "vec_id", "embedding", dir,
-          nCells = 8, m = 8, nbits = 8, iters = 3,
+        Similarity.ivfBuild(corpus, "vec_id", "embedding", dir,
+          IvfTier.Pq(m = 8, nbits = 8), nCells = 8, iters = 3,
           extraCols = Seq("label"))
         Similarity.ivfProbe(s, dir,
             emb.filter(col("vec_id") === 0L)
@@ -8757,8 +8756,8 @@ object QueryCatalog {
         TempDirs.deleteOnExit(new java.io.File(dir).getParentFile)
         val emb = plantedEmbeddings(s, d)
         if (!new java.io.File(s"$dir/codes", "_SUCCESS").exists())
-          Similarity.buildIvfPqIndex(emb, "vec_id", "embedding", dir,
-            nCells = 8, m = 8, nbits = 8, iters = 3)
+          Similarity.ivfBuild(emb, "vec_id", "embedding", dir,
+            IvfTier.Pq(m = 8, nbits = 8), nCells = 8, iters = 3)
         Similarity.ivfProbe(s, dir,
             emb.filter(col("vec_id") === 0L)
               .select(col("vec_id").as("qid"), col("embedding").as("qv")),
@@ -8778,7 +8777,7 @@ object QueryCatalog {
     Q("q_ivfpq_append", // IVF-PQ index lifecycle, append leg (r15
       // verdict #1): build the composed index on the raw corpus, then
       // APPEND +1M copies of vecs 0..9 routed through the PERSISTED
-      // coarse centroids and codebooks (ivfPqAppend). Cell assignment
+      // coarse centroids and codebooks (ivfAppend). Cell assignment
       // and residual encoding are pure functions of (vector, model),
       // so the appended copy of query vector 0 shares the query's
       // cell AND encodes to the query's own code — single-probe
@@ -8791,9 +8790,9 @@ object QueryCatalog {
           s"${d.replaceAll("[^A-Za-z0-9]", "_")}/idx"
         TempDirs.deleteOnExit(new java.io.File(dir).getParentFile)
         val emb = t(s, d, "embeddings")
-        Similarity.buildIvfPqIndex(emb, "vec_id", "embedding", dir,
-          nCells = 8, m = 8, nbits = 8, iters = 3)
-        Similarity.ivfPqAppend(
+        Similarity.ivfBuild(emb, "vec_id", "embedding", dir,
+          IvfTier.Pq(m = 8, nbits = 8), nCells = 8, iters = 3)
+        Similarity.ivfAppend(
           emb.filter(col("vec_id") < 10)
             .select((col("vec_id") + 1000000).as("vec_id"),
               col("embedding")),
@@ -8817,7 +8816,7 @@ object QueryCatalog {
     Q("q_ivfpq_delete", // IVF-PQ index lifecycle, delete leg (r15
       // verdict #1): append exact copies of vectors 0..3 (each its
       // query's guaranteed ADC rank-1 — the q_ivfpq_append property),
-      // then TOMBSTONE them (ivfPqDelete). Probes must exclude the
+      // then TOMBSTONE them (ivfDelete). Probes must exclude the
       // copies IMMEDIATELY, per query all 20 post-self-exclusion
       // slots refill from survivors. Compact-rewrites-survivors-
       // verbatim and retrain-as-compaction are spec-pinned in PqSpec
@@ -8829,14 +8828,14 @@ object QueryCatalog {
           s"${d.replaceAll("[^A-Za-z0-9]", "_")}/idx"
         TempDirs.deleteOnExit(new java.io.File(dir).getParentFile)
         val emb = t(s, d, "embeddings")
-        Similarity.buildIvfPqIndex(emb, "vec_id", "embedding", dir,
-          nCells = 8, m = 8, nbits = 8, iters = 3)
-        Similarity.ivfPqAppend(
+        Similarity.ivfBuild(emb, "vec_id", "embedding", dir,
+          IvfTier.Pq(m = 8, nbits = 8), nCells = 8, iters = 3)
+        Similarity.ivfAppend(
           emb.filter(col("vec_id") < 4)
             .select((col("vec_id") + 1000000).as("vec_id"),
               col("embedding")),
           "vec_id", "embedding", dir)
-        Similarity.ivfPqDelete(dir,
+        Similarity.ivfDelete(dir,
           emb.filter(col("vec_id") < 4)
             .select((col("vec_id") + 1000000).as("vec_id")),
           "vec_id")
@@ -8924,8 +8923,8 @@ object QueryCatalog {
         TempDirs.deleteOnExit(new java.io.File(dir).getParentFile)
         val planted = plantedEmbeddings(s, d)
         if (!new java.io.File(s"$dir/codes", "_SUCCESS").exists())
-          Similarity.buildIvfPqIndex(planted, "vec_id", "embedding", dir,
-            nCells = 8, m = 8, nbits = 8, iters = 3)
+          Similarity.ivfBuild(planted, "vec_id", "embedding", dir,
+            IvfTier.Pq(m = 8, nbits = 8), nCells = 8, iters = 3)
         Similarity.ivfProbe(s, dir,
             planted.filter(col("vec_id") < 4)
               .select(col("vec_id").as("qid"), col("embedding").as("qv")),

@@ -28,6 +28,10 @@ object IndexOps {
     *     tombstone_frac (occupancy from the code rows — residual
     *     drift is unmeasurable from lossy codes; watch the flat-IVF
     *     twin or re-probe recall instead, the SCALE.md drift recipe);
+    *     both trained kinds are resolved as every face of their
+    *     lifecycle resolves them ([[Similarity.ivfRootAt]]), and a root
+    *     with a model but no rows yet — [[Similarity.ivfInit]] before
+    *     the first drain — reports zero counts and null ratios;
     *   - `bm25`: [[CorpusOps.bm25IndexStats]]'s row unpivoted
     *     (n_builds, n_batches, n_tombstones, n_docs, sum_dl, avgdl) —
     *     df_rows growth and n_batches are the "compact due" dials;
@@ -94,32 +98,51 @@ object IndexOps {
     def skew(occ: org.apache.spark.sql.Row): java.lang.Double =
       if (occ.isNullAt(2)) null else round6(occ.getDouble(2))
 
-    if (exists(s"$genRoot/codes") && exists(s"$genRoot/model")) {
-      // ---- IVF-PQ: occupancy skew + pending deletes off the codes.
-      // An EMPTY codes tree (everything tombstoned then compacted, or
-      // a crashed build) must report zeros and a null skew — the
+    val ivf = Similarity.ivfRootAt(spark, root)
+    if (ivf.exists(ix => Similarity.listDataFiles(spark, ix.data).isEmpty)) {
+      // ---- a trained IVF root with no rows yet: a model-only root
+      // (ivfInit, before the first drain) or a crashed build. The
       // report is exactly what an operator runs to find out why an
-      // index looks wrong (the bm25IndexStats hardening rule). A codes
-      // dir with NO data files at all would trip parquet schema
-      // inference, so guard with a listing first (r17 advice).
-      if (Similarity.listDataFiles(spark, s"$genRoot/codes").isEmpty)
-        emit("ivfpq", "flat", Seq(
-          "n_cells" -> d(0.0), "n_vecs" -> d(0.0),
-          "count_skew" -> null, "n_tombstones" -> d(0.0),
-          "tombstone_frac" -> d(0.0)))
-      else {
-        val codes = spark.read.parquet(s"$genRoot/codes")
-        val occ = occupancy(codes)
-        val nVecs = occ.getLong(1)
-        val nTomb = tombstoneCount(s"$genRoot/tombstones",
-          codes.select(col("id")))
-        emit("ivfpq", layoutOf(s"$genRoot/codes"), Seq(
-          "n_cells" -> d(occ.getLong(0).toDouble),
-          "n_vecs" -> d(nVecs.toDouble),
-          "count_skew" -> skew(occ),
-          "n_tombstones" -> d(nTomb.toDouble),
-          "tombstone_frac" -> frac(nTomb, nVecs)))
-      }
+      // index looks wrong, so it reports zeros and null ratios rather
+      // than tripping parquet schema inference (r17 advice)
+      val pq = ivf.get.pq
+      emit(if (pq) "ivfpq" else "ivf", "flat",
+        Seq("n_cells" -> d(0.0), "n_vecs" -> d(0.0), "count_skew" -> null) ++
+          (if (pq) Nil
+           else Seq("mean_residual" -> null, "retrain_recommended" -> null)) ++
+          Seq("n_tombstones" -> d(0.0), "tombstone_frac" -> d(0.0)))
+    } else if (ivf.exists(_.pq)) {
+      // ---- IVF-PQ: occupancy skew + pending deletes off the codes. An
+      // EMPTY codes table (everything tombstoned then compacted) reports
+      // zeros and a null skew (the bm25IndexStats hardening rule)
+      val ix = ivf.get
+      val codes = spark.read.parquet(ix.data)
+      val occ = occupancy(codes)
+      val nVecs = occ.getLong(1)
+      val nTomb = tombstoneCount(ix.tombstones, codes.select(col("id")))
+      emit("ivfpq", layoutOf(ix.data), Seq(
+        "n_cells" -> d(occ.getLong(0).toDouble),
+        "n_vecs" -> d(nVecs.toDouble),
+        "count_skew" -> skew(occ),
+        "n_tombstones" -> d(nTomb.toDouble),
+        "tombstone_frac" -> frac(nTomb, nVecs)))
+    } else if (ivf.isDefined) {
+      // ---- centroid IVF: the drift summary unpivoted. A zero-vector
+      // index aggregates to null n_vecs/skew/residual (sum/max/avg of
+      // no rows) — null-safe getters, not primitive NPEs (r17 advice)
+      val r = Similarity.ivfDriftSummary(spark, root).collect()(0)
+      def od(i: Int): java.lang.Double =
+        if (r.isNullAt(i)) null else d(r.getDouble(i))
+      emit("ivf", layoutOf(ivf.get.data), Seq(
+        "n_cells" -> d(r.getLong(0).toDouble),
+        "n_vecs" -> (if (r.isNullAt(1)) d(0.0)
+          else d(r.getLong(1).toDouble)),
+        "count_skew" -> od(2),
+        "mean_residual" -> od(3),
+        "retrain_recommended" -> (if (r.isNullAt(4)) null
+          else d(if (r.getBoolean(4)) 1.0 else 0.0)),
+        "n_tombstones" -> d(r.getLong(5).toDouble),
+        "tombstone_frac" -> od(6)))
     } else if (exists(s"$genRoot/postings") || exists(s"$root.df") ||
         hasDir(root, "tmod=")) {
       // ---- BM25: the stats report unpivoted (no posting-leaf scan)
@@ -131,25 +154,6 @@ object IndexOps {
         "n_docs" -> d(r.getLong(4).toDouble),
         "sum_dl" -> d(r.getLong(5).toDouble),
         "avgdl" -> (if (r.isNullAt(6)) null else d(r.getDouble(6)))))
-    } else if (exists(s"$genRoot/centroids") ||
-        exists(s"$root.centroids")) {
-      // ---- centroid IVF: the drift summary unpivoted. A zero-vector
-      // index aggregates to null n_vecs/skew/residual (sum/max/avg of
-      // no rows) — null-safe getters, not primitive NPEs (r17 advice)
-      val r = Similarity.ivfDriftSummary(spark, root).collect()(0)
-      val dataDir = if (gen.isDefined) s"$genRoot/data" else root
-      def od(i: Int): java.lang.Double =
-        if (r.isNullAt(i)) null else d(r.getDouble(i))
-      emit("ivf", layoutOf(dataDir), Seq(
-        "n_cells" -> d(r.getLong(0).toDouble),
-        "n_vecs" -> (if (r.isNullAt(1)) d(0.0)
-          else d(r.getLong(1).toDouble)),
-        "count_skew" -> od(2),
-        "mean_residual" -> od(3),
-        "retrain_recommended" -> (if (r.isNullAt(4)) null
-          else d(if (r.getBoolean(4)) 1.0 else 0.0)),
-        "n_tombstones" -> d(r.getLong(5).toDouble),
-        "tombstone_frac" -> od(6)))
     } else {
       // ---- a model-free vector index (its codec read off the
       // `.srpmeta` sidecar or the row schema, [[VectorIndex]]) — the

@@ -299,26 +299,33 @@ object VectorIndex {
       else Some(spark.read.parquet(path).schema)
     val persisted = codecAt(spark, path, schema, persistedBits)
     persisted.foreach(requireCodec(face, path, _, codec))
-    // extraCols that differ from the build's would silently corrupt
-    // filtered probes: a later batch without the metadata column reads
-    // it as null and never matches, and a compact can erase the column
-    // for the whole index. The `batch` partition column is layout.
-    schema.foreach { s =>
-      val existing = s.fieldNames.toSet - "batch"
-      val incoming = rows.columns.toSet
-      require(existing == incoming,
-        s"$face: the index at $path carries columns " +
-          existing.toSeq.sorted.mkString("(", ", ", ")") +
-          " but the appended rows carry " +
-          incoming.toSeq.sorted.mkString("(", ", ", ")") +
-          " — extraCols must match the build's exactly")
-    }
+    schema.foreach(requireColumns(face, path, _, rows))
     (persisted, codec) match {
       case (None, VectorCodec.Srp(nBits)) => writeSrpMeta(spark, path, nBits)
       case _ =>
     }
     batchId.fold(rows.write.mode("append").parquet(path))(b =>
       rows.write.mode("overwrite").parquet(s"$path/batch=$b"))
+  }
+
+  /** Refuse `rows` whose columns differ from the index's (`schema`, as
+    * read from its rows). extraCols that differ from the build's would
+    * silently corrupt filtered probes: a later batch without the
+    * metadata column reads it as null and never matches, and a compact
+    * can erase the column for the whole index. The `batch` partition
+    * column is layout. Shared with the trained IVF tiers
+    * ([[Similarity.ivfAppend]]). */
+  private[operators] def requireColumns(face: String, path: String,
+                                        schema: StructType,
+                                        rows: DataFrame): Unit = {
+    val existing = schema.fieldNames.toSet - "batch"
+    val incoming = rows.columns.toSet
+    require(existing == incoming,
+      s"$face: the index at $path carries columns " +
+        existing.toSeq.sorted.mkString("(", ", ", ")") +
+        " but the appended rows carry " +
+        incoming.toSeq.sorted.mkString("(", ", ", ")") +
+        " — extraCols must match the build's exactly")
   }
 
   private def requireCodec(face: String, path: String,

@@ -583,22 +583,8 @@ object EventStreams {
     q.awaitTermination()
   }
 
-  /** Streaming ANN-index ingest — the vector-side twin of
-    * [[bm25IndexAvailableNow]]: every arriving embedding lands in the
-    * persisted centroid-IVF layout via [[graft.operators.Similarity
-    * .ivfAppendBatch]] (assignment by the PERSISTED model — init the
-    * model first with [[graft.operators.Similarity
-    * .initIvfCentroidIndex]] — with each batch overwriting its own
-    * `batch=<id>/cell=<c>` subtree, so replays rewrite rather than
-    * double-append and results are batching-invariant: assignment
-    * reads no cross-batch state). After the drain the index is
-    * immediately probe-able by `Similarity.ivfProbe`, filtered or
-    * not — one drain over a corpus probes exactly like a
-    * one-shot `buildIvfCentroidIndex` under the same model (the
-    * execution gate `q_ivf_stream_exec`); later drains see only new
-    * files and extend the index incrementally (spec-pinned). */
-  /** The shared AvailableNow drain skeleton of the three vector-index
-    * ingest faces (ivf / ivfPq / the model-free codecs — r18 review:
+  /** The shared AvailableNow drain skeleton of the two vector-index
+    * ingest faces (trained IVF / the model-free codecs — r18 review:
     * copy-paste variants are why a cross-cutting edit missed two
     * tiers): one file source, `(id, __vec[, extras])` projection, a
     * replay-idempotent per-batch append, await. `extraCols` ride the
@@ -621,6 +607,20 @@ object EventStreams {
     q.awaitTermination()
   }
 
+  /** Streaming ANN-index ingest — the vector-side twin of
+    * [[bm25IndexAvailableNow]]: every arriving embedding lands in the
+    * persisted trained IVF index at `indexPath`, of either tier, via
+    * [[graft.operators.Similarity.ivfAppendBatch]] (assignment — and
+    * for IVF-PQ residual encoding — by the PERSISTED model; fit it first
+    * with [[graft.operators.Similarity.ivfInit]]). Each batch overwrites
+    * its own `batch=<id>/cell=<c>` subtree, so replays rewrite rather
+    * than double-append and results are batching-invariant: assignment
+    * reads no cross-batch state. After the drain the index is
+    * immediately probe-able by `Similarity.ivfProbe`, filtered or not —
+    * one drain over a corpus probes exactly like a one-shot
+    * `Similarity.ivfBuild` under the same model (the execution gates
+    * `q_ivf_stream_exec` and `q_ivfpq_stream_exec`); later drains see
+    * only new files and extend the index incrementally (spec-pinned). */
   def ivfIndexAvailableNow(spark: SparkSession, vecsPath: String,
                            idCol: String,
                            vecExpr: org.apache.spark.sql.Column,
@@ -630,26 +630,6 @@ object EventStreams {
     drainVectorIndex(spark, vecsPath, idCol, vecExpr, checkpointDir,
       extraCols) { (batch, batchId) =>
       graft.operators.Similarity.ivfAppendBatch(
-        batch, idCol, "__vec", indexPath, batchId, extraCols)
-    }
-
-  /** [[ivfIndexAvailableNow]] on the COMPOSED IVF-PQ index: arriving
-    * embeddings are assigned and residual-encoded by the PERSISTED
-    * models (init them first with [[graft.operators.Similarity
-    * .initIvfPqIndex]]) into per-batch `codes/batch=<id>` subtrees
-    * via [[graft.operators.Similarity.ivfPqAppendBatch]] — replays
-    * rewrite, probes prune on `cell` unchanged. One drain probes
-    * exactly like a one-shot build under the same models (the
-    * execution gate `q_ivfpq_stream_exec`). */
-  def ivfPqIndexAvailableNow(spark: SparkSession, vecsPath: String,
-                             idCol: String,
-                             vecExpr: org.apache.spark.sql.Column,
-                             indexPath: String,
-                             checkpointDir: String,
-                             extraCols: Seq[String] = Nil): Unit =
-    drainVectorIndex(spark, vecsPath, idCol, vecExpr, checkpointDir,
-      extraCols) { (batch, batchId) =>
-      graft.operators.Similarity.ivfPqAppendBatch(
         batch, idCol, "__vec", indexPath, batchId, extraCols)
     }
 

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.{Similarity, VectorIndex}
+import graft.operators.{IvfTier, Similarity, VectorIndex}
 import graft.operators.VectorCodec.{Binary, Int8, Srp}
 
 /** The persisted binary-signature index (r16 verdict #2): native
@@ -429,8 +429,8 @@ class BqIndexSpec extends SparkSpec {
     // the IVF and IVF-PQ tiers too (r18 review: the first pass missed
     // them) — model-first init, extras through the drain, filtered
     // probe sees only predicate-matching ids
-    Similarity.initIvfCentroidIndex(corpus, "vec_id", "embedding",
-      s"$root/ivf", k = 4, iters = 2)
+    Similarity.ivfInit(corpus, "vec_id", "embedding", s"$root/ivf", nCells = 4,
+      iters = 2)
     graft.streaming.EventStreams.ivfIndexAvailableNow(spark,
       s"$root/src", "vec_id", $"embedding", s"$root/ivf",
       s"$root/ckivf", extraCols = Seq("label"))
@@ -438,9 +438,9 @@ class BqIndexSpec extends SparkSpec {
         k = 5, predicate = Some($"label" === 1))
       .as[(Long, Long, Double)].collect()
     assert(ivf.nonEmpty && ivf.forall(r => lbl(r._2) == 1))
-    Similarity.initIvfPqIndex(corpus, "vec_id", "embedding",
-      s"$root/ivfpq", nCells = 4, m = 8, nbits = 8, iters = 2)
-    graft.streaming.EventStreams.ivfPqIndexAvailableNow(spark,
+    Similarity.ivfInit(corpus, "vec_id", "embedding", s"$root/ivfpq",
+      IvfTier.Pq(m = 8, nbits = 8), nCells = 4, iters = 2)
+    graft.streaming.EventStreams.ivfIndexAvailableNow(spark,
       s"$root/src", "vec_id", $"embedding", s"$root/ivfpq",
       s"$root/ckivfpq", extraCols = Seq("label"))
     val ivfpq = Similarity.ivfProbe(spark, s"$root/ivfpq", qs, "qid",
@@ -507,11 +507,11 @@ class BqIndexSpec extends SparkSpec {
     }
     // the trained IVF probe: both tiers, every guard under its name
     val ivf = tmp("ivfface") + "/idx"
-    Similarity.buildIvfCentroidIndex(emb.filter($"vec_id" < 40),
-      "vec_id", "embedding", ivf, k = 2, iters = 1)
+    Similarity.ivfBuild(emb.filter($"vec_id" < 40), "vec_id", "embedding", ivf,
+      nCells = 2, iters = 1)
     val ivfpq = tmp("ivfpqface") + "/idx"
-    Similarity.buildIvfPqIndex(emb.filter($"vec_id" < 40), "vec_id",
-      "embedding", ivfpq, nCells = 2, m = 8, nbits = 2, iters = 1)
+    Similarity.ivfBuild(emb.filter($"vec_id" < 40), "vec_id", "embedding",
+      ivfpq, IvfTier.Pq(m = 8, nbits = 2), nCells = 2, iters = 1)
     val qs = emb.filter($"vec_id" < 2)
       .select($"vec_id".as("qid"), $"embedding".as("qv"))
     Seq(ivf, ivfpq).foreach { path =>

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, Similarity, VectorCodec, VectorIndex}
+import graft.operators.{Dedup, IvfTier, Similarity, VectorCodec, VectorIndex}
 
 class DedupSimilaritySpec extends SparkSpec {
   import spark.implicits._
@@ -615,8 +615,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sfDir)
     val dir = java.nio.file.Files.createTempDirectory("ivfb").toString +
       "/idx"
-    Similarity.buildIvfCentroidIndex(emb, "vec_id", "embedding", dir,
-      k = 8, iters = 3)
+    Similarity.ivfBuild(emb, "vec_id", "embedding", dir, nCells = 8, iters = 3)
     val queries = emb.filter($"vec_id" < 5)
       .select($"vec_id".as("qid"), $"embedding".as("qv"))
     // a query's rows in the 5-query batch equal its rows from a 1-row
@@ -660,10 +659,11 @@ class DedupSimilaritySpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sfDir)
       .select($"vec_id", $"embedding", $"label")
     val root = java.nio.file.Files.createTempDirectory("ivfjobs").toString
-    Similarity.buildIvfCentroidIndex(emb, "vec_id", "embedding",
-      s"$root/ivf", k = 8, iters = 3, extraCols = Seq("label"))
-    Similarity.buildIvfPqIndex(emb, "vec_id", "embedding", s"$root/pq",
-      nCells = 8, m = 8, nbits = 8, iters = 3, extraCols = Seq("label"))
+    Similarity.ivfBuild(emb, "vec_id", "embedding", s"$root/ivf", nCells = 8,
+      iters = 3, extraCols = Seq("label"))
+    Similarity.ivfBuild(emb, "vec_id", "embedding", s"$root/pq",
+      IvfTier.Pq(m = 8, nbits = 8), nCells = 8, iters = 3,
+      extraCols = Seq("label"))
     batchFaceJobs.foreach { case (n, prior) =>
       val qs = emb.filter($"vec_id" < n)
         .select($"vec_id".as("qid"), $"embedding".as("qv"))
@@ -687,8 +687,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sfDir)
     val dir = java.nio.file.Files.createTempDirectory("ivfdel")
       .toString + "/idx"
-    Similarity.buildIvfCentroidIndex(emb, "vec_id", "embedding", dir,
-      k = 8, iters = 3)
+    Similarity.ivfBuild(emb, "vec_id", "embedding", dir, nCells = 8, iters = 3)
     // append an exact copy of vector 0, then tombstone it
     Similarity.ivfAppend(
       emb.filter($"vec_id" === 0L)
@@ -711,14 +710,13 @@ class DedupSimilaritySpec extends SparkSpec {
     // the retrain compacts: tombstones drop from the rewrite, the
     // table clears, and the result equals a one-shot build over the
     // SURVIVORS (same rows -> same hash sample -> same model)
-    Similarity.ivfRetrain(spark, dir, k = 8, iters = 3)
+    Similarity.ivfRetrain(spark, dir, nCells = 8, iters = 3)
     assert(!new java.io.File(s"$dir.tombstones").exists())
     assert(!topIds(25).contains(1000000L))
     val fresh = java.nio.file.Files.createTempDirectory("ivfdel2")
       .toString + "/idx"
-    Similarity.buildIvfCentroidIndex(
-      emb.select($"vec_id".as("id"), $"embedding".as("v")), "id", "v",
-      fresh, k = 8, iters = 3)
+    Similarity.ivfBuild(emb.select($"vec_id".as("id"), $"embedding".as("v")),
+      "id", "v", fresh, nCells = 8, iters = 3)
     val a = spark.read.parquet(dir)
       .collect().map(r => (r.getLong(0), r.getInt(2))).toSet
     val b = spark.read.parquet(fresh)
@@ -729,8 +727,8 @@ class DedupSimilaritySpec extends SparkSpec {
   test("centroid IVF: all-cells probe equals brute force; pruned probe") {
     val emb = Tables.embeddings(spark, sfDir)
     val dir = java.nio.file.Files.createTempDirectory("ivfc").toString + "/idx"
-    val cents = Similarity.buildIvfCentroidIndex(emb, "vec_id", "embedding",
-      dir, k = 8, iters = 3)
+    val cents = Similarity.ivfBuild(emb, "vec_id", "embedding", dir,
+      nCells = 8, iters = 3)
     assert(cents.size == 8)
     // centroids are unit-norm (spherical k-means)
     cents.foreach { c =>
@@ -749,8 +747,8 @@ class DedupSimilaritySpec extends SparkSpec {
       emb.filter($"vec_id" === 0L).select(($"vec_id" + 1000000).as("vec_id"),
         $"embedding"))
     val dir2 = java.nio.file.Files.createTempDirectory("ivfc2").toString + "/idx"
-    Similarity.buildIvfCentroidIndex(planted, "vec_id", "embedding",
-      dir2, k = 8, iters = 3)
+    Similarity.ivfBuild(planted, "vec_id", "embedding", dir2, nCells = 8,
+      iters = 3)
     val top1 = ivfTop(dir2, qVec, k = 2, probes = 1)
       .filter(_._1 != 0L).head
     assert(top1 == ((1000000L, 1.0)))
@@ -788,8 +786,8 @@ class DedupSimilaritySpec extends SparkSpec {
         $"embedding"))
     val dir = java.nio.file.Files.createTempDirectory("ivfcs").toString + "/idx"
     // fit on ~a quarter of the corpus; assignment still labels everything
-    Similarity.buildIvfCentroidIndex(planted, "vec_id", "embedding", dir,
-      k = 8, iters = 3, maxFitRows = math.max(8, (planted.count() / 4).toInt))
+    Similarity.ivfBuild(planted, "vec_id", "embedding", dir, nCells = 8,
+      iters = 3, maxFitRows = Some(math.max(8, (planted.count() / 4).toInt)))
     val qVec = emb.filter($"vec_id" === 0L)
       .select($"embedding").as[Array[Float]].collect()(0)
     // identical vectors land in the same centroid cell regardless of
@@ -1270,8 +1268,8 @@ class DedupSimilaritySpec extends SparkSpec {
       (i.toLong, Array(1f, jig(i), 0f, 0f))) ++
       (10 until 20).map(i => (i.toLong, Array(jig(i), 1f, 0f, 0f)))
     val baseDf = base.toDF("vec_id", "embedding")
-    Similarity.buildIvfCentroidIndex(baseDf, "vec_id", "embedding", dir,
-      k = 2, iters = 4)
+    Similarity.ivfBuild(baseDf, "vec_id", "embedding", dir, nCells = 2,
+      iters = 4)
     val before = Similarity.ivfDriftSummary(spark, dir).collect()(0)
     assert(before.getLong(0) == 2 && before.getLong(1) == 20, before)
     // delta: two more cluster members + two off-model vectors between
@@ -1348,7 +1346,7 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(!parent.list().exists(_.contains(".retrain")),
       parent.list().mkString(","))
     // explicit k overrides the width and still probes coherently
-    val re4 = Similarity.ivfRetrain(spark, dir, k = 4, iters = 4)
+    val re4 = Similarity.ivfRetrain(spark, dir, nCells = 4, iters = 4)
     assert(re4.size == 4)
     assert(spark.read.parquet(dir + ".centroids").count() == 4)
     val q2 = ivfTop(dir, Array(1f, 0f, 0f, 0f), k = 3).map(_._1)
@@ -1395,8 +1393,8 @@ class DedupSimilaritySpec extends SparkSpec {
           lit(99).as("label")))
     val dir = java.nio.file.Files.createTempDirectory("ivff")
       .toString + "/idx"
-    Similarity.buildIvfCentroidIndex(corpus, "vec_id", "embedding",
-      dir, k = 8, iters = 3, extraCols = Seq("label"))
+    Similarity.ivfBuild(corpus, "vec_id", "embedding", dir, nCells = 8,
+      iters = 3, extraCols = Seq("label"))
     val qVec = emb.filter($"vec_id" === 0L)
       .select($"embedding").collect()(0).getSeq[Float](0).toArray
     // k > matches forces widening to full coverage -> the result IS
@@ -1448,8 +1446,7 @@ class DedupSimilaritySpec extends SparkSpec {
       .select($"vec_id", $"embedding")
     val dir = java.nio.file.Files.createTempDirectory("ivfts")
       .toString + "/idx"
-    Similarity.buildIvfCentroidIndex(emb, "vec_id", "embedding", dir,
-      k = 4, iters = 3)
+    Similarity.ivfBuild(emb, "vec_id", "embedding", dir, nCells = 4, iters = 3)
     val n = emb.count()
     def summary() = Similarity.ivfDriftSummary(spark, dir).collect()(0)
     val clean = summary()
@@ -1480,8 +1477,8 @@ class DedupSimilaritySpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     val dir = java.nio.file.Files.createTempDirectory("ivfver")
       .toString + "/idx"
-    Similarity.buildIvfCentroidIndex(base, "vec_id", "embedding", dir,
-      k = 2, iters = 4)
+    Similarity.ivfBuild(base, "vec_id", "embedding", dir, nCells = 2,
+      iters = 4)
     def files() = Option(new java.io.File(dir).list())
       .map(_.toSet).getOrElse(Set.empty[String])
     def top(k: Int) = ivfTop(dir, Array(1f, 0f, 0f, 0f), k, probes = 2)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.streaming.EventStreams
-import graft.operators.Similarity
+import graft.operators.{IvfTier, Similarity}
 
 /** Streaming specs: the sf0.001 events parquet drives each streaming
   * query synchronously (file source -> memory sink,
@@ -500,9 +500,8 @@ class EventStreamsSpec extends SparkSpec {
     // ONE model, fit up front, shared by the streaming index and the
     // flat reference — assignment is a pure function of (vector,
     // model), so the layouts must agree row-for-row
-    val cents = Similarity.initIvfCentroidIndex(emb, "vec_id",
-      "embedding", s"$root/idx", k = 4, iters = 3)
-    Similarity.writeIvfCentroids(spark, cents, s"$root/ref")
+    Seq("idx", "ref").foreach(ix => Similarity.ivfInit(emb, "vec_id",
+      "embedding", s"$root/$ix", nCells = 4, iters = 3))
     def cellsOf(path: String) = spark.read.parquet(path)
       .select($"id", $"cell").as[(Long, Int)].collect().toSet
     EventStreams.ivfIndexAvailableNow(spark, s"$root/in", "vec_id",
@@ -566,53 +565,53 @@ class EventStreamsSpec extends SparkSpec {
     half1.coalesce(1).write.parquet(s"$root/in")
     // ONE model pair (coarse + codebooks), fit up front, shared by
     // the streaming index and a flat-append reference
-    Similarity.initIvfPqIndex(emb, "vec_id", "embedding",
-      s"$root/idx", nCells = 4, m = 8, nbits = 8, iters = 3)
-    Similarity.initIvfPqIndex(emb, "vec_id", "embedding",
-      s"$root/ref", nCells = 4, m = 8, nbits = 8, iters = 3)
+    Similarity.ivfInit(emb, "vec_id", "embedding", s"$root/idx",
+      IvfTier.Pq(m = 8, nbits = 8), nCells = 4, iters = 3)
+    Similarity.ivfInit(emb, "vec_id", "embedding", s"$root/ref",
+      IvfTier.Pq(m = 8, nbits = 8), nCells = 4, iters = 3)
     def codesOf(path: String) = spark.read.parquet(s"$path/codes")
       .select($"id", $"cell", hex($"pq_code").as("c"))
       .as[(Long, Int, String)].collect().toSet
-    EventStreams.ivfPqIndexAvailableNow(spark, s"$root/in", "vec_id",
+    EventStreams.ivfIndexAvailableNow(spark, s"$root/in", "vec_id",
       col("embedding"), s"$root/idx", s"$root/ckpt")
-    Similarity.ivfPqAppend(half1, "vec_id", "embedding", s"$root/ref")
+    Similarity.ivfAppend(half1, "vec_id", "embedding", s"$root/ref")
     assert(codesOf(s"$root/idx") == codesOf(s"$root/ref"))
     // second drain extends with only the new file
     half2.coalesce(1).write.mode("append").parquet(s"$root/in")
-    EventStreams.ivfPqIndexAvailableNow(spark, s"$root/in", "vec_id",
+    EventStreams.ivfIndexAvailableNow(spark, s"$root/in", "vec_id",
       col("embedding"), s"$root/idx", s"$root/ckpt")
-    Similarity.ivfPqAppend(half2, "vec_id", "embedding", s"$root/ref")
+    Similarity.ivfAppend(half2, "vec_id", "embedding", s"$root/ref")
     assert(codesOf(s"$root/idx") == codesOf(s"$root/ref"))
     // replay idempotence
     val before = codesOf(s"$root/idx")
-    Similarity.ivfPqAppendBatch(half2, "vec_id", "embedding",
+    Similarity.ivfAppendBatch(half2, "vec_id", "embedding",
       s"$root/idx", batchId = 1L)
     assert(codesOf(s"$root/idx") == before)
     // layout guards on the composed index
     intercept[IllegalArgumentException] {
-      Similarity.ivfPqAppend(half2, "vec_id", "embedding", s"$root/idx")
+      Similarity.ivfAppend(half2, "vec_id", "embedding", s"$root/idx")
     }
     intercept[IllegalArgumentException] {
-      Similarity.ivfPqAppendBatch(half2, "vec_id", "embedding",
+      Similarity.ivfAppendBatch(half2, "vec_id", "embedding",
         s"$root/ref", batchId = 2L)
     }
     intercept[IllegalArgumentException] {
-      Similarity.ivfPqAppendBatch(half2, "vec_id", "embedding",
+      Similarity.ivfAppendBatch(half2, "vec_id", "embedding",
         s"$root/idx", batchId = -1L)
     }
     // delete + compact: fold lands in codes/batch=-1 (layout
     // preserved), tombstones clear, survivors verbatim, and a LIVE
     // increment still lands beside the fold and probes
-    Similarity.ivfPqDelete(s"$root/idx",
+    Similarity.ivfDelete(s"$root/idx",
       Seq(0L).toDF("vec_id"), "vec_id")
     val survivors = before.filter(_._1 != 0L)
-    Similarity.ivfPqCompact(spark, s"$root/idx")
+    Similarity.ivfCompact(spark, s"$root/idx")
     assert(codesOf(s"$root/idx") == survivors)
     assert(new java.io.File(s"$root/idx/codes", "batch=-1").isDirectory &&
       !new java.io.File(s"$root/idx/codes", "batch=0").exists(),
       new java.io.File(s"$root/idx/codes").list().mkString(","))
     assert(!new java.io.File(s"$root/idx/tombstones").exists())
-    Similarity.ivfPqAppendBatch(
+    Similarity.ivfAppendBatch(
       emb.filter($"vec_id" === 0L)
         .select(($"vec_id" + 777000L).as("vec_id"), $"embedding"),
       "vec_id", "embedding", s"$root/idx", batchId = 7L)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.operators.{CorpusOps, Similarity, VectorCodec, VectorIndex}
+import graft.operators.{CorpusOps, IvfTier, Similarity, VectorCodec, VectorIndex}
 
 /** Filtered retrieval across the lexical, hybrid and composed-ANN
   * tiers (r16 verdict #1/#4): predicates run INSIDE each probe,
@@ -429,8 +429,8 @@ class FilteredRetrievalSpec extends SparkSpec {
           lit(99).as("label")))
     val dir = java.nio.file.Files.createTempDirectory("ivfpqbf")
       .toString + "/idx"
-    Similarity.buildIvfPqIndex(corpus, "vec_id", "embedding", dir,
-      nCells = 8, m = 8, nbits = 8, iters = 3,
+    Similarity.ivfBuild(corpus, "vec_id", "embedding", dir,
+      IvfTier.Pq(m = 8, nbits = 8), nCells = 8, iters = 3,
       extraCols = Seq("label"))
     val queries = emb.filter($"vec_id" < 2)
       .select($"vec_id".as("qid"), $"embedding".as("qv"))

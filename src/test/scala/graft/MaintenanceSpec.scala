@@ -4,7 +4,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
-import graft.operators.{CorpusOps, Similarity, VectorCodec, VectorIndex}
+import graft.operators.{CorpusOps, IvfTier, Similarity, VectorCodec, VectorIndex}
+import graft.operators.Similarity.RefitCorpus
+import graft.streaming.EventStreams
 
 /** Index-maintenance contracts added in r17: the late-arrival folds
   * of the versioned publish paths (r16 advice, medium), the
@@ -53,8 +55,7 @@ class MaintenanceSpec extends SparkSpec {
   test("ivfDriftSummary: tombstones of never-indexed ids never " +
       "overstate the reclaimable fraction") {
     val dir = tmp("ivftomb") + "/idx"
-    Similarity.buildIvfCentroidIndex(emb, "vec_id", "embedding", dir,
-      k = 4, iters = 2)
+    Similarity.ivfBuild(emb, "vec_id", "embedding", dir, nCells = 4, iters = 2)
     // 2 real deletions + 5 ids the index never held
     Similarity.ivfDelete(dir,
       emb.filter($"vec_id" < 2).select($"vec_id"), "vec_id")
@@ -71,8 +72,8 @@ class MaintenanceSpec extends SparkSpec {
     val corpus = emb.select($"vec_id", $"embedding",
         (($"vec_id" % 100L) === 0L).cast("int").as("label"))
     val dir = tmp("ivfnoin") + "/idx"
-    Similarity.buildIvfCentroidIndex(corpus, "vec_id", "embedding",
-      dir, k = 8, iters = 2, extraCols = Seq("label"))
+    Similarity.ivfBuild(corpus, "vec_id", "embedding", dir, nCells = 8,
+      iters = 2, extraCols = Seq("label"))
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution,
@@ -112,8 +113,8 @@ class MaintenanceSpec extends SparkSpec {
     val root = tmp("ivffold")
     val dir = s"$root/idx"
     val base = emb.filter($"vec_id" < 300)
-    val centroids = Similarity.buildIvfCentroidIndex(base, "vec_id",
-      "embedding", dir, k = 4, iters = 2)
+    val centroids = Similarity.ivfBuild(base, "vec_id", "embedding", dir,
+      nCells = 4, iters = 2)
     val snapshot = Similarity.listDataFiles(spark, dir)
     // "concurrent" appends + a delete landing after the snapshot
     Similarity.ivfAppend(
@@ -149,9 +150,9 @@ class MaintenanceSpec extends SparkSpec {
     val dir = s"$root/idx"
     val corpus = Tables.embeddings(spark, sfDir)
       .select($"vec_id", $"embedding", $"label")
-    val centroids = Similarity.buildIvfCentroidIndex(
-      corpus.filter($"vec_id" < 300), "vec_id", "embedding", dir,
-      k = 4, iters = 2, extraCols = Seq("label"))
+    val centroids = Similarity.ivfBuild(corpus.filter($"vec_id" < 300),
+      "vec_id", "embedding", dir, nCells = 4, iters = 2,
+      extraCols = Seq("label"))
     val snapshot = Similarity.listDataFiles(spark, dir)
     Similarity.ivfAppend(corpus.filter($"vec_id".between(300, 319)),
       "vec_id", "embedding", dir, extraCols = Seq("label"))
@@ -171,9 +172,8 @@ class MaintenanceSpec extends SparkSpec {
       "same batch id (replay stays idempotent)") {
     val root = tmp("ivffoldb")
     val dir = s"$root/idx"
-    val centroids = Similarity.initIvfCentroidIndex(
-      emb.filter($"vec_id" < 200), "vec_id", "embedding", dir,
-      k = 4, iters = 2)
+    val centroids = Similarity.ivfInit(emb.filter($"vec_id" < 200), "vec_id",
+      "embedding", dir, nCells = 4, iters = 2)
     Similarity.ivfAppendBatch(emb.filter($"vec_id" < 100),
       "vec_id", "embedding", dir, batchId = 0L)
     val snapshot = Similarity.listDataFiles(spark, dir)
@@ -232,8 +232,8 @@ class MaintenanceSpec extends SparkSpec {
     Seq(None, Some($"id" >= 0L)).foreach { predicate =>
       val dir = tmp("ivfswap") + "/idx"
       val base = emb.filter($"vec_id" < 400)
-      Similarity.buildIvfCentroidIndex(base, "vec_id", "embedding", dir,
-        k = 4, iters = 2)
+      Similarity.ivfBuild(base, "vec_id", "embedding", dir, nCells = 4,
+        iters = 2)
       Similarity.ivfRetrain(spark, dir, iters = 2, versioned = true) // -> .v1
       val q = emb.filter($"vec_id" === 0L)
         .select($"vec_id".as("qid"), $"embedding".as("qv"))
@@ -265,8 +265,8 @@ class MaintenanceSpec extends SparkSpec {
       "late files under the hidden .vN ancestor read correctly)") {
     val root = tmp("ivffoldv")
     val dir = s"$root/idx"
-    Similarity.buildIvfCentroidIndex(emb.filter($"vec_id" < 300),
-      "vec_id", "embedding", dir, k = 4, iters = 2)
+    Similarity.ivfBuild(emb.filter($"vec_id" < 300), "vec_id", "embedding",
+      dir, nCells = 4, iters = 2)
     val centroids = Similarity.ivfRetrain(spark, dir, iters = 2,
       versioned = true) // live generation: $dir/.v1
     val genData = s"$dir/.v1/data"
@@ -296,8 +296,7 @@ class MaintenanceSpec extends SparkSpec {
           (if (r.isNullAt(3)) None else Some(r.getDouble(3)))).toMap
     // versioned IVF: generation resolves through the pointer
     val ivf = s"$root/ivf"
-    Similarity.buildIvfCentroidIndex(emb, "vec_id", "embedding", ivf,
-      k = 4, iters = 2)
+    Similarity.ivfBuild(emb, "vec_id", "embedding", ivf, nCells = 4, iters = 2)
     Similarity.ivfRetrain(spark, ivf, iters = 2, versioned = true)
     val mi = metrics(ivf)
     assert(mi(("ivf", "flat", "generation")).contains(1.0))
@@ -306,11 +305,11 @@ class MaintenanceSpec extends SparkSpec {
     assert(mi.contains(("ivf", "flat", "mean_residual")))
     // batch-layout IVF-PQ with tombstones
     val pq = s"$root/pq"
-    Similarity.initIvfPqIndex(emb, "vec_id", "embedding", pq,
-      nCells = 4, m = 8, nbits = 8, iters = 2)
-    Similarity.ivfPqAppendBatch(emb.filter($"vec_id" < 100), "vec_id",
+    Similarity.ivfInit(emb, "vec_id", "embedding", pq,
+      IvfTier.Pq(m = 8, nbits = 8), nCells = 4, iters = 2)
+    Similarity.ivfAppendBatch(emb.filter($"vec_id" < 100), "vec_id",
       "embedding", pq, batchId = 0L)
-    Similarity.ivfPqDelete(pq, Seq(0L, 1L, 777777L).toDF("vec_id"),
+    Similarity.ivfDelete(pq, Seq(0L, 1L, 777777L).toDF("vec_id"),
       "vec_id")
     val mp = metrics(pq)
     assert(mp(("ivfpq", "batch", "n_vecs")).contains(100.0))
@@ -374,6 +373,21 @@ class MaintenanceSpec extends SparkSpec {
     val mbare = metrics(barePq)
     assert(mbare(("ivfpq", "flat", "n_vecs")).contains(0.0))
     assert(mbare(("ivfpq", "flat", "count_skew")).isEmpty)
+    // a model-only root (ivfInit, before the first drain) reports its
+    // tier with zero counts, for both tiers
+    val initIvf = s"$root/initivf"
+    Similarity.ivfInit(emb, "vec_id", "embedding", initIvf, nCells = 4,
+      iters = 2)
+    val mii = metrics(initIvf)
+    assert(mii(("ivf", "flat", "n_vecs")).contains(0.0))
+    assert(mii(("ivf", "flat", "n_cells")).contains(0.0))
+    assert(mii(("ivf", "flat", "count_skew")).isEmpty)
+    val initPq = s"$root/initpq"
+    Similarity.ivfInit(emb, "vec_id", "embedding", initPq, IvfTier.Pq(),
+      nCells = 4, iters = 2)
+    val mip = metrics(initPq)
+    assert(mip(("ivfpq", "flat", "n_vecs")).contains(0.0))
+    assert(mip(("ivfpq", "flat", "count_skew")).isEmpty)
     // a zero-vector centroid-IVF index aggregates to null
     // n_vecs/skew/residual — null-safe report, no NPE (r17 advice)
     val zeroIvf = s"$root/zeroivf"
@@ -399,32 +413,32 @@ class MaintenanceSpec extends SparkSpec {
     val dir = tmp("pqquiesce") + "/idx"
     val corpus = emb.filter($"vec_id" < 300)
       .select($"vec_id", $"embedding")
-    Similarity.buildIvfPqIndex(corpus, "vec_id", "embedding", dir,
-      nCells = 4, m = 8, nbits = 8, iters = 2)
+    Similarity.ivfBuild(corpus, "vec_id", "embedding", dir,
+      IvfTier.Pq(m = 8, nbits = 8), nCells = 4, iters = 2)
     // manual quiesce: every ingest face refuses with the remediation
-    Similarity.quiesceIvfPq(spark, dir)
+    Similarity.ivfQuiesce(spark, dir)
     interceptGuard("QUIESCED") {
-      Similarity.ivfPqAppend(emb.filter($"vec_id" === 301L), "vec_id",
+      Similarity.ivfAppend(emb.filter($"vec_id" === 301L), "vec_id",
         "embedding", dir)
     }
     interceptGuard("QUIESCED") {
-      Similarity.ivfPqDelete(dir, Seq(1L).toDF("vec_id"), "vec_id")
+      Similarity.ivfDelete(dir, Seq(1L).toDF("vec_id"), "vec_id")
     }
     // double-quiesce refuses (single maintenance actor)
     intercept[IllegalArgumentException] {
-      Similarity.quiesceIvfPq(spark, dir)
+      Similarity.ivfQuiesce(spark, dir)
     }
-    Similarity.resumeIvfPqIngest(spark, dir)
+    Similarity.ivfResume(spark, dir)
     // the full recipe: appended rows before the window are refit in;
     // ingest works again after the publish
-    Similarity.ivfPqAppend(
+    Similarity.ivfAppend(
       emb.filter($"vec_id".between(300, 319))
         .select($"vec_id", $"embedding"),
       "vec_id", "embedding", dir)
     val refitCorpus = emb.filter($"vec_id" < 320)
       .select($"vec_id", $"embedding")
-    Similarity.ivfPqRetrainQuiesced(refitCorpus, "vec_id", "embedding",
-      dir, iters = 2, versioned = true)
+    Similarity.ivfRetrainQuiesced(spark, dir, iters = 2, versioned = true,
+      corpus = Some(RefitCorpus(refitCorpus, "vec_id", "embedding")))
     assert(!new java.io.File(s"$dir/.quiesce").exists(),
       "the marker must lift with the publish")
     def liveGen: Int = scala.io.Source.fromFile(
@@ -433,22 +447,23 @@ class MaintenanceSpec extends SparkSpec {
     val ids = spark.read.parquet(s"$dir/.v1/codes")
       .select($"id").as[Long].collect().toSet
     assert(ids == (0L until 320L).toSet, s"zero lost rows: ${ids.size}")
-    Similarity.ivfPqAppend(
+    Similarity.ivfAppend(
       emb.filter($"vec_id" === 320L).select($"vec_id", $"embedding"),
       "vec_id", "embedding", dir)
     assert(spark.read.parquet(s"$dir/.v1/codes").count() == 321L)
     // a FAILED retrain still resumes ingest (finally) and leaves the
     // live generation untouched
     intercept[Exception] {
-      Similarity.ivfPqRetrainQuiesced(
-        refitCorpus.select($"vec_id", $"embedding",
-          lit(1).as("label")),
-        "vec_id", "embedding", dir, m = 7, iters = 2) // 64 % 7 != 0
+      Similarity.ivfRetrainQuiesced(spark, dir, iters = 2,
+        maxFitRows = Some(2), // cannot seed the index's 4 cells
+        corpus = Some(RefitCorpus(
+          refitCorpus.select($"vec_id", $"embedding", lit(1).as("label")),
+          "vec_id", "embedding")))
     }
     assert(!new java.io.File(s"$dir/.quiesce").exists(),
       "a failed retrain must still lift the marker")
     assert(liveGen == 1)
-    Similarity.ivfPqAppend(
+    Similarity.ivfAppend(
       emb.filter($"vec_id" === 321L).select($"vec_id", $"embedding"),
       "vec_id", "embedding", dir)
   }
@@ -461,8 +476,8 @@ class MaintenanceSpec extends SparkSpec {
     // interleaved schedule itself is covered by the foldLateIvf unit
     // contracts above
     val dir = tmp("ivffolde2e") + "/idx"
-    Similarity.buildIvfCentroidIndex(emb.filter($"vec_id" < 300),
-      "vec_id", "embedding", dir, k = 4, iters = 2)
+    Similarity.ivfBuild(emb.filter($"vec_id" < 300), "vec_id", "embedding",
+      dir, nCells = 4, iters = 2)
     Similarity.ivfRetrain(spark, dir, iters = 2, versioned = true)
     Similarity.ivfAppend(
       emb.filter($"vec_id" === 1L)
@@ -472,5 +487,205 @@ class MaintenanceSpec extends SparkSpec {
     val ids = spark.read.parquet(s"$dir/.v2/data")
       .select($"id").as[Long].collect().toSet
     assert(ids.contains(7000001L), "appended row survives the publish")
+  }
+
+  private val tiers = Seq[IvfTier](IvfTier.Centroid, IvfTier.Pq())
+
+  /** Every id a probe of the whole index (all 4 cells) returns. */
+  private def probedIds(dir: String,
+                        predicate: Option[org.apache.spark.sql.Column] = None)
+      : Set[Long] =
+    Similarity.ivfProbe(spark, dir,
+        emb.filter($"vec_id" === 7L)
+          .select($"vec_id".as("qid"), $"embedding".as("qv")),
+        "qid", "qv", k = 1000, probes = 4, predicate)
+      .select($"id").as[Long].collect().toSet
+
+  test("ivfDelete: on either tier's root the deleted id leaves the " +
+      "probe at once") {
+    tiers.foreach { tier =>
+      val dir = tmp("ivfdeltier") + "/idx"
+      Similarity.ivfBuild(emb.filter($"vec_id" < 300), "vec_id",
+        "embedding", dir, tier, nCells = 4, iters = 2)
+      assert(probedIds(dir).contains(7L), tier.toString)
+      Similarity.ivfDelete(dir, Seq(7L).toDF("vec_id"), "vec_id")
+      val after = probedIds(dir)
+      assert(!after.contains(7L) && after.size == 299, s"$tier: $after")
+    }
+  }
+
+  test("ivfAppend / ivfAppendBatch: either tier refuses rows without " +
+      "the build's extraCols") {
+    val corpus = Tables.embeddings(spark, sfDir)
+      .select($"vec_id", $"embedding", $"label")
+    val label1 = corpus.filter($"label" === 1).count()
+    tiers.foreach { tier =>
+      val flat = tmp("ivfxflat") + "/idx"
+      Similarity.ivfBuild(corpus.filter($"vec_id" < 250), "vec_id",
+        "embedding", flat, tier, nCells = 4, iters = 2,
+        extraCols = Seq("label"))
+      interceptGuard("ivfAppend", "extraCols must match") {
+        Similarity.ivfAppend(emb.filter($"vec_id" >= 250), "vec_id",
+          "embedding", flat)
+      }
+      // rows with the metadata append, and a filtered probe sees them all
+      Similarity.ivfAppend(corpus.filter($"vec_id" >= 250), "vec_id",
+        "embedding", flat, Seq("label"))
+      assert(probedIds(flat, Some($"label" === 1)).size == label1,
+        tier.toString)
+      val batch = tmp("ivfxbatch") + "/idx"
+      Similarity.ivfInit(emb, "vec_id", "embedding", batch, tier,
+        nCells = 4, iters = 2)
+      Similarity.ivfAppendBatch(corpus.filter($"vec_id" < 250), "vec_id",
+        "embedding", batch, 0L, Seq("label"))
+      interceptGuard("ivfAppendBatch", "extraCols must match") {
+        Similarity.ivfAppendBatch(emb.filter($"vec_id" >= 250), "vec_id",
+          "embedding", batch, 1L)
+      }
+    }
+  }
+
+  test("ivfCompact: either tier rewrites its survivors verbatim, " +
+      "extraCols and a quiesce marker included, and clears tombstones") {
+    val corpus = Tables.embeddings(spark, sfDir)
+      .select($"vec_id", $"embedding", $"label")
+    tiers.foreach { tier =>
+      val dir = tmp("ivfcompact") + "/idx"
+      Similarity.ivfBuild(corpus.filter($"vec_id" < 300), "vec_id",
+        "embedding", dir, tier, nCells = 4, iters = 2,
+        extraCols = Seq("label"))
+      Similarity.ivfAppend(corpus.filter($"vec_id".between(300, 349)),
+        "vec_id", "embedding", dir, Seq("label"))
+      val (rowDir, tombDir) =
+        if (tier == IvfTier.Centroid) (dir, s"$dir.tombstones")
+        else (s"$dir/codes", s"$dir/tombstones")
+      def rows = {
+        val df = spark.read.parquet(rowDir)
+        df.select($"id", to_json(struct(df.columns.sorted.map(col): _*)))
+          .as[(Long, String)].collect().toSet
+      }
+      val before = rows
+      val gone = Set(1L, 2L, 300L)
+      Similarity.ivfDelete(dir, gone.toSeq.toDF("vec_id"), "vec_id")
+      Similarity.ivfQuiesce(spark, dir)
+      Similarity.ivfCompact(spark, dir)
+      assert(new java.io.File(s"$dir/.quiesce").exists(), tier.toString)
+      Similarity.ivfResume(spark, dir)
+      assert(rows == before.filterNot(r => gone(r._1)), tier.toString)
+      assert(!new java.io.File(tombDir).exists(), tier.toString)
+      assert(probedIds(dir, Some($"label" >= 0)).size == 347,
+        tier.toString)
+    }
+  }
+
+  test("ivfRetrain: an IVF-PQ refit keeps the persisted m and nbits, " +
+      "and needs its float corpus") {
+    val dir = tmp("pqshape") + "/idx"
+    Similarity.ivfBuild(emb, "vec_id", "embedding", dir,
+      IvfTier.Pq(m = 8, nbits = 4), nCells = 4, iters = 2)
+    def shape = {
+      val model = Similarity.loadPqModel(spark, dir)
+      (model.m, model.codebooks.map(_.size).distinct)
+    }
+    assert(shape == ((8, Seq(16))))
+    interceptGuard("ivfRetrain", "corpus = Some(RefitCorpus") {
+      Similarity.ivfRetrain(spark, dir, iters = 2)
+    }
+    Similarity.ivfRetrain(spark, dir, iters = 2,
+      corpus = Some(RefitCorpus(emb, "vec_id", "embedding")))
+    assert(shape == ((8, Seq(16))), "the refit lost the persisted shape")
+  }
+
+  // Jobs each replaced face launched for the same call on the same
+  // index state, measured at the parent commit of the unified faces, as
+  // (centroid IVF, IVF-PQ); -1 where that tier had no such face. The
+  // calls are buildIvfCentroidIndex / buildIvfPqIndex, the init faces,
+  // ivfAppend / ivfPqAppend, ivfAppendBatch / ivfPqAppendBatch,
+  // ivfDelete / ivfPqDelete, ivfPqCompact, ivfRetrain / ivfPqRetrain,
+  // quiesceIvfPq, resumeIvfPqIngest, ivfPqRetrainQuiesced and the two
+  // drains.
+  private val replacedFaceJobs = Map(
+    "ivfBuild" -> (9, 16), "ivfInit" -> (8, 14),
+    "ivfAppend" -> (3, 5), "ivfAppendBatch" -> (3, 5),
+    "ivfDelete" -> (2, 2), "ivfCompact" -> (-1, 6),
+    "ivfRetrain" -> (15, 24), "ivfRetrain versioned" -> (12, 21),
+    "ivfQuiesce" -> (-1, 0), "ivfResume" -> (-1, 0),
+    "ivfRetrainQuiesced" -> (-1, 21), "ivfIndexAvailableNow" -> (4, 6))
+  // The faces with no centroid-IVF predecessor, pinned at their own
+  // count.
+  private val newFaceJobs = Map("ivfCompact" -> 5, "ivfQuiesce" -> 0,
+    "ivfResume" -> 0, "ivfRetrainQuiesced" -> 12)
+  // The one allowed excess: an append to a root that already holds rows
+  // reads its schema once for the extraCols check (+1 job: ivfAppend
+  // 4 and 6, ivfAppendBatch 4 and 6). The IVF-PQ build, init and
+  // retrains launch one job fewer than before (15, 13, 23, 20, 20):
+  // their centroid table is written through a coalesce, not a shuffle.
+  private val schemaRead = Set("ivfAppend", "ivfAppendBatch")
+
+  test("the trained IVF lifecycle launches no more jobs than the faces " +
+      "it replaced") {
+    val corpus = Tables.embeddings(spark, sfDir)
+      .select($"vec_id", $"embedding", $"label")
+    val labels = Seq("label")
+    val root = tmp("ivflcjobs")
+    emb.filter($"vec_id" < 250).coalesce(1).write.parquet(s"$root/src")
+    def ids(xs: Long*) = xs.toDF("vec_id")
+    tiers.zipWithIndex.foreach { case (tier, t) =>
+      val got = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+      def pin(face: String)(body: => Any): Unit =
+        got(face) = jobsLaunchedBy(body)
+      def build(df: DataFrame, p: String, extras: Seq[String] = Nil) =
+        Similarity.ivfBuild(df, "vec_id", "embedding", p, tier,
+          nCells = 4, iters = 2, extraCols = extras)
+      def init(p: String) = Similarity.ivfInit(emb, "vec_id", "embedding",
+        p, tier, nCells = 4, iters = 2)
+      def refit(df: DataFrame) =
+        if (tier == IvfTier.Centroid) None
+        else Some(RefitCorpus(df, "vec_id", "embedding"))
+      build(emb.filter($"vec_id" < 50), s"$root/warm$t") // first loads
+      val flat = s"$root/flat$t"
+      pin("ivfBuild")(build(corpus.filter($"vec_id" < 300), flat, labels))
+      pin("ivfAppend")(Similarity.ivfAppend(
+        corpus.filter($"vec_id".between(300, 399)), "vec_id", "embedding",
+        flat, labels))
+      pin("ivfDelete")(Similarity.ivfDelete(flat, ids(1, 2, 300), "vec_id"))
+      pin("ivfRetrain")(Similarity.ivfRetrain(spark, flat, iters = 2,
+        corpus = refit(corpus.filter($"vec_id" < 400))))
+      val ver = s"$root/ver$t"
+      build(corpus.filter($"vec_id" < 300), ver, labels)
+      pin("ivfRetrain versioned")(Similarity.ivfRetrain(spark, ver,
+        iters = 2, versioned = true,
+        corpus = refit(corpus.filter($"vec_id" < 300))))
+      val batch = s"$root/batch$t"
+      pin("ivfInit")(init(batch))
+      Similarity.ivfAppendBatch(emb.filter($"vec_id" < 100), "vec_id",
+        "embedding", batch, 0L)
+      pin("ivfAppendBatch")(Similarity.ivfAppendBatch(
+        emb.filter($"vec_id".between(100, 199)), "vec_id", "embedding",
+        batch, 1L))
+      Similarity.ivfDelete(batch, ids(5, 150), "vec_id")
+      pin("ivfCompact")(Similarity.ivfCompact(spark, batch))
+      val quiesced = s"$root/quiesced$t"
+      build(emb.filter($"vec_id" < 300), quiesced)
+      pin("ivfQuiesce")(Similarity.ivfQuiesce(spark, quiesced))
+      pin("ivfResume")(Similarity.ivfResume(spark, quiesced))
+      pin("ivfRetrainQuiesced")(Similarity.ivfRetrainQuiesced(spark,
+        quiesced, iters = 2, corpus = refit(emb.filter($"vec_id" < 300))))
+      val drained = s"$root/drained$t"
+      init(drained)
+      pin("ivfIndexAvailableNow")(EventStreams.ivfIndexAvailableNow(spark,
+        s"$root/src", "vec_id", col("embedding"), drained,
+        s"$root/ckpt$t"))
+      info(s"$tier: $got")
+      got.foreach { case (face, n) =>
+        val (c, pq) = replacedFaceJobs(face)
+        val prior = if (t == 0) c else pq
+        val bound =
+          if (prior < 0) newFaceJobs(face)
+          else prior + (if (schemaRead(face)) 1 else 0)
+        assert(n <= bound, s"$tier $face: $n jobs, bound $bound " +
+          s"(the replaced face launched $prior)")
+      }
+    }
   }
 }

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Similarity
+import graft.operators.{IvfTier, Similarity}
+import graft.operators.Similarity.RefitCorpus
 
 /** Product-quantization ANN ([[Similarity.trainPq]] / native
   * [[graft.plans.PqEncode]] / [[graft.plans.PqAdcDistance]]).
@@ -142,8 +143,8 @@ class PqSpec extends SparkSpec {
       emb.filter($"vec_id" === 0L)
         .select(lit(1000000L).as("vec_id"), $"embedding"))
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq").toString
-    Similarity.buildIvfPqIndex(planted, "vec_id", "embedding", dir,
-      nCells = 8, m = 8, nbits = 8, iters = 3)
+    Similarity.ivfBuild(planted, "vec_id", "embedding", dir,
+      IvfTier.Pq(m = 8, nbits = 8), nCells = 8, iters = 3)
     val qVec = planted.filter($"vec_id" === 0L)
       .select($"embedding").collect()(0).getSeq[Float](0).toArray
     val probe = Similarity.ivfProbe(spark, dir,
@@ -181,12 +182,12 @@ class PqSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_lc")
       .toString + "/idx"
     val base = emb.select($"vec_id", $"embedding")
-    Similarity.buildIvfPqIndex(base, "vec_id", "embedding", dir,
-      nCells = 8, m = 8, nbits = 8, iters = 3)
+    Similarity.ivfBuild(base, "vec_id", "embedding", dir,
+      IvfTier.Pq(m = 8, nbits = 8), nCells = 8, iters = 3)
     // append purity: the same vectors with offset ids, routed through
     // the PERSISTED model by the public append path, land
     // cell-for-cell and code-for-code where the build put them
-    Similarity.ivfPqAppend(
+    Similarity.ivfAppend(
       base.select(($"vec_id" + 5000000L).as("vec_id"), $"embedding"),
       "vec_id", "embedding", dir)
     def codesAt(d: String) = spark.read.parquet(s"$d/codes")
@@ -210,7 +211,7 @@ class PqSpec extends SparkSpec {
       .contains(5000000L))
     val preDelete = codesAt(dir).filter($"id" =!= 5000000L)
       .as[(Long, Int, String)].collect().toSet
-    Similarity.ivfPqDelete(dir, Seq(5000000L).toDF("vec_id"), "vec_id")
+    Similarity.ivfDelete(dir, Seq(5000000L).toDF("vec_id"), "vec_id")
     val single = ivfTop(dir, qVec, k = 30, probes = 8).map(_._1)
     assert(!single.contains(5000000L) && single.nonEmpty)
     val batchProbe = Similarity.ivfProbe(spark, dir,
@@ -220,10 +221,10 @@ class PqSpec extends SparkSpec {
     assert(!batchProbe.select($"id").as[Long].collect()
       .contains(5000000L))
     // a repeated delete is absorbed (append-only tombstones)
-    Similarity.ivfPqDelete(dir, Seq(5000000L).toDF("vec_id"), "vec_id")
+    Similarity.ivfDelete(dir, Seq(5000000L).toDF("vec_id"), "vec_id")
     // compact: survivors rewrite VERBATIM (model unchanged, no stats
     // to heal), tombstone table clears
-    Similarity.ivfPqCompact(spark, dir)
+    Similarity.ivfCompact(spark, dir)
     val post = codesAt(dir).as[(Long, Int, String)].collect().toSet
     assert(post == preDelete, "compact changed surviving codes")
     assert(!new java.io.File(s"$dir/tombstones").exists())
@@ -234,10 +235,10 @@ class PqSpec extends SparkSpec {
     val currentVecs = base.unionByName(
       base.filter($"vec_id" =!= 0L)
         .select(($"vec_id" + 5000000L).as("vec_id"), $"embedding"))
-    Similarity.ivfPqRetrain(currentVecs, "vec_id", "embedding", dir,
-      iters = 3)
+    Similarity.ivfRetrain(spark, dir, iters = 3,
+      corpus = Some(RefitCorpus(currentVecs, "vec_id", "embedding")))
     assert(!new java.io.File(dir + ".retrain").exists())
-    Similarity.ivfPqAppend(
+    Similarity.ivfAppend(
       currentVecs.select(($"vec_id" + 20000000L).as("vec_id"),
         $"embedding"),
       "vec_id", "embedding", dir)
@@ -274,8 +275,8 @@ class PqSpec extends SparkSpec {
   test("ivfPqTopKBatch == per-query ivfPqTopK, bit-exact; pruned scan") {
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_b")
       .toString + "/idx"
-    Similarity.buildIvfPqIndex(emb, "vec_id", "embedding", dir,
-      nCells = 8, m = 8, nbits = 8, iters = 3)
+    Similarity.ivfBuild(emb, "vec_id", "embedding", dir,
+      IvfTier.Pq(m = 8, nbits = 8), nCells = 8, iters = 3)
     val queries = emb.filter($"vec_id" < 4)
       .select($"vec_id".as("qid"), $"embedding".as("qv"))
     def byQuery(df: org.apache.spark.sql.DataFrame) =
@@ -306,22 +307,22 @@ class PqSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_v")
       .toString + "/idx"
     val base = emb.select($"vec_id", $"embedding")
-    Similarity.buildIvfPqIndex(base, "vec_id", "embedding", dir,
-      nCells = 8, m = 8, nbits = 8, iters = 3)
+    Similarity.ivfBuild(base, "vec_id", "embedding", dir,
+      IvfTier.Pq(m = 8, nbits = 8), nCells = 8, iters = 3)
     val qVec = emb.filter($"vec_id" === 0L)
       .select($"embedding").collect()(0).getSeq[Float](0).toArray
     def files() = Option(new java.io.File(dir).list())
       .map(_.toSet).getOrElse(Set.empty[String])
     def top(k: Int) = ivfTop(dir, qVec, k, probes = 8).map(_._1).toSet
-    Similarity.ivfPqRetrain(base, "vec_id", "embedding", dir,
-      iters = 3, versioned = true)
+    Similarity.ivfRetrain(spark, dir, iters = 3, versioned = true,
+      corpus = Some(RefitCorpus(base, "vec_id", "embedding")))
     assert(files().contains(".current") && files().contains(".v1"),
       files().toString)
     assert(files().contains("codes"), "legacy grace gone")
     assert(top(2).contains(0L))
     // appends land in the live generation; the planted copy is
     // immediately findable and the legacy codes are untouched
-    Similarity.ivfPqAppend(
+    Similarity.ivfAppend(
       base.filter($"vec_id" === 0L)
         .select(($"vec_id" + 900000L).as("vec_id"), $"embedding"),
       "vec_id", "embedding", dir)
@@ -330,12 +331,12 @@ class PqSpec extends SparkSpec {
       .as[Long].collect().contains(900000L),
       "append leaked into the legacy layout")
     // delete tombstones the live generation
-    Similarity.ivfPqDelete(dir, Seq(900000L).toDF("vec_id"), "vec_id")
+    Similarity.ivfDelete(dir, Seq(900000L).toDF("vec_id"), "vec_id")
     assert(!top(30).contains(900000L))
     // second retrain: sticky versioning, v2 live, legacy layout gone,
     // v1 retained as the new grace, tombstoned row stays gone
-    Similarity.ivfPqRetrain(base, "vec_id", "embedding", dir,
-      iters = 3)
+    Similarity.ivfRetrain(spark, dir, iters = 3,
+      corpus = Some(RefitCorpus(base, "vec_id", "embedding")))
     assert(files().contains(".v2") && files().contains(".v1") &&
       !files().contains("codes"), files().toString)
     assert(top(2).contains(0L) && !top(30).contains(900000L))
@@ -352,8 +353,8 @@ class PqSpec extends SparkSpec {
       embL.filter($"vec_id".between(10, 21))
         .select(($"vec_id" + 1000000L).as("vec_id"), $"embedding",
           lit(99).as("label")))
-    Similarity.buildIvfPqIndex(corpus, "vec_id", "embedding", dir,
-      nCells = 8, m = 8, nbits = 8, iters = 3,
+    Similarity.ivfBuild(corpus, "vec_id", "embedding", dir,
+      IvfTier.Pq(m = 8, nbits = 8), nCells = 8, iters = 3,
       extraCols = Seq("label"))
     val qVec = embL.filter($"vec_id" === 0L)
       .select($"embedding").collect()(0).getSeq[Float](0).toArray
@@ -379,15 +380,16 @@ class PqSpec extends SparkSpec {
     val unf = ivfTop(dir, qVec, k = 10, probes = 8)
     assert(all == unf)
     // metadata survives the retrain rewrite (vectors re-supply it)
-    Similarity.ivfPqRetrain(corpus, "vec_id", "embedding", dir,
-      iters = 3)
+    Similarity.ivfRetrain(spark, dir, iters = 3,
+      corpus = Some(RefitCorpus(corpus, "vec_id", "embedding")))
     val post = ivfTop(dir, qVec, k = 20, predicate = Some($"label" === 99))
       .map(_._1).toSet
     assert(post == planted, post.toString)
     // and a retrain whose vectors LACK the metadata fails loudly
     intercept[IllegalArgumentException] {
-      Similarity.ivfPqRetrain(corpus.drop("label"), "vec_id",
-        "embedding", dir, iters = 3)
+      Similarity.ivfRetrain(spark, dir, iters = 3,
+        corpus = Some(RefitCorpus(corpus.drop("label"), "vec_id",
+          "embedding")))
     }
   }
 

@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
-import graft.operators.{Similarity, VectorCodec, VectorIndex}
+import graft.operators.{IvfTier, Similarity, VectorCodec, VectorIndex}
 import graft.operators.VectorCodec.{Binary, Int8, Srp}
 
 /** The one model-free [[VectorIndex]] lifecycle keeps the per-tier
@@ -120,21 +120,21 @@ class VectorIndexSpec extends SparkSpec {
       def build(n: Long): Unit = {
         val rows = emb.filter($"vec_id" < n)
         if (tier == "ivf")
-          Similarity.buildIvfCentroidIndex(rows, "vec_id", "embedding", dir,
-            k = 4, iters = 2)
+          Similarity.ivfBuild(rows, "vec_id", "embedding", dir, nCells = 4,
+            iters = 2)
         else
-          Similarity.buildIvfPqIndex(rows, "vec_id", "embedding", dir,
-            nCells = 4, m = 8, nbits = 4, iters = 2)
+          Similarity.ivfBuild(rows, "vec_id", "embedding", dir,
+            IvfTier.Pq(m = 8, nbits = 4), nCells = 4, iters = 2)
       }
       build(300)
-      if (tier == "ivf") Similarity.ivfDelete(dir, Seq(7L).toDF("vec_id"), "vec_id")
-      else Similarity.ivfPqDelete(dir, Seq(7L).toDF("vec_id"), "vec_id")
+      Similarity.ivfDelete(dir, Seq(7L).toDF("vec_id"), "vec_id")
       assert(!live(dir).contains(7L), tier)
       build(300)
       assert(live(dir).contains(7L), s"$tier: the rebuild kept the tombstones")
       if (tier == "ivf") Similarity.ivfRetrain(spark, dir, iters = 2, versioned = true)
-      else Similarity.ivfPqRetrain(emb.filter($"vec_id" < 300), "vec_id",
-        "embedding", dir, iters = 2, versioned = true)
+      else Similarity.ivfRetrain(spark, dir, iters = 2, versioned = true,
+        corpus = Some(Similarity.RefitCorpus(emb.filter($"vec_id" < 300),
+          "vec_id", "embedding")))
       build(500)
       assert(live(dir).size == 500, s"$tier: the rebuild is not what probes read")
     }
