@@ -3,9 +3,11 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 
 import graft.functions.TextFunctions._
 import graft.operators.{CorpusOps, Dedup, DiffEngine, IvfTier, Multimodal, Similarity, TextAnalysis, TimeSeries, VectorCodec, VectorIndex}
+import graft.streaming.EventStreams
 
 /** The operator inventory (SURVEY.md §2 Tier A + §7.1 Tier B), one entry
   * per operator: a Spark implementation and, where ANSI-SQL-expressible,
@@ -1093,7 +1095,7 @@ object QueryCatalog {
       // so both incremental-vs-batch divergence AND checkpoint-recovery
       // faults (lost state halves counts, replayed files double them)
       // go red here every round.
-      (s, d) => graft.streaming.EventStreams.tumblingRestartDrain(
+      (s, d) => EventStreams.tumblingRestartDrain(
           s, s"$d/events.parquet", scratchDir("graft-stream-ckpt"))
         .select(col("w_start"), col("event_type"), col("n"),
           col("sum_value")),
@@ -1106,14 +1108,26 @@ object QueryCatalog {
       // each micro-batch appending per-(hour, type) theta sketches of
       // its user_ids; then answer "distinct users per window" by
       // MERGING the persisted per-batch sketch rows — never rescanning
-      // events. Theta is exact-mode at test-SF distinct counts, so the
+      // events, at 100 TB the difference between answering from
+      // metadata and re-shuffling history. A replayed batch rewrites
+      // ITS OWN batch=<id> directory deterministically (same events,
+      // same sketch bytes); several sketches for one (window, type)
+      // across batches are fine by construction — theta unions are the
+      // merge. Theta is exact-mode at test-SF distinct counts, so the
       // merged estimates hash-match the exact DISTINCT oracle (the
       // at-scale behavior degrades to ~1.6% RSE, q_theta_overlap's
       // documented envelope).
       (s, d) => {
         val dir = scratchDir("graft-sketch-stream")
-        graft.streaming.EventStreams.sketchAvailableNow(
-          s, s"$d/events.parquet", s"$dir/sk", s"$dir/ckpt")
+        val ckpt = s"$dir/ckpt"
+        val events = EventStreams.rawEventSource(s, s"$d/events.parquet", ckpt)
+        EventStreams.drainBatches(
+          events.select(date_trunc("hour", col("ts")).as("w_start"),
+            col("event_type"), col("user_id")), ckpt) { (b, batchId) =>
+          b.groupBy(col("w_start"), col("event_type"))
+            .agg(theta_sketch_agg(col("user_id"), 12).as("theta"))
+            .write.mode("overwrite").parquet(s"$dir/sk/batch=$batchId")
+        }
         val sk = s.read.parquet(s"$dir/sk/batch=*")
         sk.groupBy(col("w_start"), col("event_type"))
           .agg(theta_union_agg(col("theta"), 12).as("theta"))
@@ -1164,8 +1178,12 @@ object QueryCatalog {
       // are continuous (sub-second, zero exact-1800s gaps measured), so
       // the two conventions agree on real data; the oracle mirrors the
       // engine's convention so the gate can never go red on a tie.
-      (s, d) => graft.streaming.EventStreams.sessionsAvailableNow(
-          s, s"$d/events.parquet", scratchDir("graft-stream-sess-ckpt"))
+      (s, d) => {
+        val ckpt = scratchDir("graft-stream-sess-ckpt")
+        val events = EventStreams.rawEventSource(s, s"$d/events.parquet", ckpt)
+        EventStreams.drain(s, EventStreams.sessionWindow(events), ckpt,
+          "graft_stream_sessions")
+      }
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_sessions"),
           sum(col("n_events")).cast("long").as("n_events")),
@@ -3585,7 +3603,7 @@ object QueryCatalog {
         val model = CorpusOps.trainNbQuality(
           docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", "lang",
           numBuckets = 4096, alpha = 1.0)
-        graft.streaming.EventStreams.nbScoreAvailableNow(
+        EventStreams.nbScoreAvailableNow(
           s, s"$d/documents.parquet", "doc_id", col("text"), model,
           s"$dir/out", s"$dir/ckpt")
       },
@@ -4924,7 +4942,7 @@ object QueryCatalog {
         val dir = scratchDir("graft-stream-srp")
         val planted = plantedEmbeddings(s, d)
         planted.write.parquet(s"$dir/src")
-        graft.streaming.EventStreams.vectorIndexAvailableNow(s,
+        EventStreams.vectorIndexAvailableNow(s,
           s"$dir/src", "vec_id", col("embedding"), s"$dir/idx",
           s"$dir/ckpt", VectorCodec.Srp(4))
         VectorIndex.probe(s, s"$dir/idx",
@@ -5474,7 +5492,7 @@ object QueryCatalog {
         val dir = scratchDir("graft-stream-bq")
         val planted = plantedEmbeddings(s, d)
         planted.write.parquet(s"$dir/src")
-        graft.streaming.EventStreams.vectorIndexAvailableNow(s,
+        EventStreams.vectorIndexAvailableNow(s,
           s"$dir/src", "vec_id", col("embedding"), s"$dir/idx",
           s"$dir/ckpt", VectorCodec.Binary)
         VectorIndex.probe(s, s"$dir/idx",
@@ -5664,7 +5682,7 @@ object QueryCatalog {
         val dir = scratchDir("graft-stream-int8")
         val planted = plantedEmbeddings(s, d)
         planted.write.parquet(s"$dir/src")
-        graft.streaming.EventStreams.vectorIndexAvailableNow(s,
+        EventStreams.vectorIndexAvailableNow(s,
           s"$dir/src", "vec_id", col("embedding"), s"$dir/idx",
           s"$dir/ckpt", VectorCodec.Int8)
         VectorIndex.probe(s, s"$dir/idx",
@@ -6385,8 +6403,12 @@ object QueryCatalog {
       // engine's state rows — the state-growth shape the other two
       // gates don't exercise; divergence between the incremental
       // multi-window state and the batch plan goes red here.
-      (s, d) => graft.streaming.EventStreams.slidingAvailableNow(
-          s, s"$d/events.parquet", scratchDir("graft-stream-slide-ckpt")),
+      (s, d) => {
+        val ckpt = scratchDir("graft-stream-slide-ckpt")
+        val events = EventStreams.rawEventSource(s, s"$d/events.parquet", ckpt)
+        EventStreams.drain(s, EventStreams.slidingWindow(events), ckpt,
+          "graft_stream_sliding")
+      },
       Some("""SELECT time_bucket(INTERVAL 15 minute, ts)
              |         - (k * INTERVAL 15 minute) AS w_start,
              |       event_type, count(*) AS n
@@ -6396,25 +6418,47 @@ object QueryCatalog {
     Q("q_dedup_stream_exec", // STREAMING EXECUTION gate #4: watermark-
       // bounded dropDuplicates state through the incremental engine,
       // keyed on (user_id, event_type). Only the key columns are
-      // emitted (which physical row survives a key is a partition race;
-      // exactly-one-per-key is the contract) — so the drained output is
-      // exactly SELECT DISTINCT. Append mode: dedup rows emit on
-      // admission, nothing is watermark-held; single-file source → one
-      // micro-batch → no mid-drain state eviction (see
-      // EventStreams.dedupAvailableNow).
-      (s, d) => graft.streaming.EventStreams.dedupAvailableNow(
-          s, s"$d/events.parquet", scratchDir("graft-stream-dedup-ckpt"),
-          Seq("user_id", "event_type")),
+      // emitted: WHICH physical row survives a key is a race between
+      // partitions inside a micro-batch, but that exactly one row per
+      // key survives is the state contract under test, and the key
+      // columns are its deterministic projection. Append mode: dedup
+      // rows emit on admission, nothing is watermark-held (and
+      // dropDuplicates does not support Complete). The driver's table
+      // is a single file → one micro-batch → no key's state can be
+      // watermark-evicted mid-drain, so the drained output is one row
+      // per distinct key, exactly SELECT DISTINCT.
+      (s, d) => {
+        val ckpt = scratchDir("graft-stream-dedup-ckpt")
+        val keys = Seq("user_id", "event_type")
+        val events = EventStreams.rawEventSource(s, s"$d/events.parquet", ckpt)
+        EventStreams.drain(s,
+          EventStreams.dedupStream(events, keys = keys)
+            .select(keys.map(col): _*),
+          ckpt, "graft_stream_dedup", OutputMode.Append())
+      },
       Some("SELECT DISTINCT user_id, event_type FROM events")),
 
     Q("q_state_stream_exec", // STREAMING EXECUTION gate #5: ARBITRARY
       // state (mapGroupsWithState) through the incremental engine —
-      // per-user running totals drained in update mode; the per-user
-      // event count from custom GroupState must equal the batch GROUP
-      // BY (float total excluded by design: rounding flavor, not state
-      // correctness — see EventStreams.totalsAvailableNow).
-      (s, d) => graft.streaming.EventStreams.totalsAvailableNow(
-          s, s"$d/events.parquet", scratchDir("graft-stream-state-ckpt")),
+      // per-user running totals drained in update mode (complete mode
+      // is not supported for mapGroupsWithState); the single-file
+      // source drains in one micro-batch, so the sink holds exactly one
+      // final row per user. The per-user event count from custom
+      // GroupState must equal the batch GROUP BY. The float total is
+      // deliberately excluded: the stateful count is the machinery
+      // under test, and a JVM-rounded running double vs the oracle's
+      // round(sum(value), 2) differ in rounding flavor, which would
+      // gate rounding trivia, not state correctness (total_value
+      // equality with batch is spec-pinned in EventStreamsSpec).
+      (s, d) => {
+        import s.implicits._
+        val ckpt = scratchDir("graft-stream-state-ckpt")
+        val events = EventStreams.rawEventSource(s, s"$d/events.parquet", ckpt)
+        EventStreams.drain(s,
+          EventStreams.userRunningTotals(s, events.as[EventStreams.Event])
+            .toDF().select(col("user_id"), col("n_events")),
+          ckpt, "graft_stream_totals", OutputMode.Update())
+      },
       Some("SELECT user_id, count(*) AS n_events FROM events GROUP BY user_id")),
 
     Q("q_join_stream_exec", // STREAMING EXECUTION gate #6: stream-stream
@@ -6425,8 +6469,14 @@ object QueryCatalog {
       // and hash-compares exactly against the batch self-join oracle.
       // `value` passes through untouched from the same parquet both
       // engines read, so no float-arithmetic hazard.
-      (s, d) => graft.streaming.EventStreams.joinAvailableNow(
-          s, s"$d/events.parquet", scratchDir("graft-stream-join-ckpt")),
+      // The watermarks still matter: they let the engine EVICT each
+      // side's state once the other side's watermark passes the horizon.
+      (s, d) => {
+        val ckpt = scratchDir("graft-stream-join-ckpt")
+        val events = EventStreams.rawEventSource(s, s"$d/events.parquet", ckpt)
+        EventStreams.drain(s, EventStreams.signupPurchaseJoin(events), ckpt,
+          "graft_stream_join", OutputMode.Append())
+      },
       Some("""SELECT s.user_id, s.ts AS signup_ts, p.ts AS purchase_ts,
              |       p.value
              |FROM events s JOIN events p
@@ -6443,8 +6493,15 @@ object QueryCatalog {
       // batch funnel result, so the oracle is q_funnel_ordered's iterative
       // min-after-previous SQL verbatim (timestamps compare exactly;
       // no float anywhere).
-      (s, d) => graft.streaming.EventStreams.funnelAvailableNow(
-        s, s"$d/events.parquet", scratchDir("graft-stream-funnel-ckpt")),
+      // Update mode, mapGroupsWithState's only fit-for-purpose mode.
+      (s, d) => {
+        import s.implicits._
+        val ckpt = scratchDir("graft-stream-funnel-ckpt")
+        val events = EventStreams.rawEventSource(s, s"$d/events.parquet", ckpt)
+        EventStreams.drain(s,
+          EventStreams.funnelStream(s, events.as[EventStreams.Event]).toDF(),
+          ckpt, "graft_stream_funnel", OutputMode.Update())
+      },
       Some("""WITH t1 AS (
              |  SELECT user_id, min(ts) AS t_signup FROM events
              |  WHERE event_type = 'signup' AND ts IS NOT NULL GROUP BY 1),
@@ -7919,12 +7976,29 @@ object QueryCatalog {
 
     Q("q_url_dedup_stream_exec", // STREAMING EXECUTION gate: the crawl
       // frontier — canonicalize + dropDuplicates on arrival through the
-      // incremental engine; drained output is exactly the DISTINCT
-      // canonical set (NULL canonicals passed over — a frontier can't
-      // key on unparseable).
-      (s, d) => graft.streaming.EventStreams.urlDedupAvailableNow(
-        s, s"$d/documents.parquet", syntheticUrl,
-        scratchDir("graft-stream-urldedup-ckpt")),
+      // incremental engine, so a fetcher fed from this stream never
+      // re-downloads a resource already seen under another spelling;
+      // drained output is exactly the DISTINCT canonical set. NULL
+      // canonicals are passed over: a frontier cannot key on NULL
+      // (batch CorpusOps.urlDedup keeps them, the right call when
+      // ACCOUNTING rather than fetching). Only the canonical is emitted:
+      // which physical row survives it is a partition race,
+      // exactly-one-per-canonical is the contract. Append mode, as for
+      // q_dedup_stream_exec. State is one entry per distinct canonical:
+      // a production frontier bounds it with a watermark on crawl time
+      // + dropDuplicatesWithinWatermark; this drain over a snapshot has
+      // no time column, and its state is bounded by the snapshot's
+      // distinct count.
+      (s, d) => {
+        val ckpt = scratchDir("graft-stream-urldedup-ckpt")
+        val (docs, _) =
+          EventStreams.fileSource(s, s"$d/documents.parquet", ckpt)
+        EventStreams.drain(s,
+          docs.select(CorpusOps.canonicalUrl(syntheticUrl).as("canonical_url"))
+            .filter(col("canonical_url").isNotNull)
+            .dropDuplicates("canonical_url"),
+          ckpt, "graft_stream_urldedup", OutputMode.Append())
+      },
       Some(s"""WITH $urlCanonCtes
               |SELECT DISTINCT canonical_url FROM c
               |WHERE canonical_url IS NOT NULL""".stripMargin)),
@@ -7938,7 +8012,7 @@ object QueryCatalog {
       // spec-pinned in EventStreamsSpec.
       (s, d) => {
         val dir = scratchDir("graft-stream-paradedup")
-        graft.streaming.EventStreams.paraDedupAvailableNow(
+        EventStreams.paraDedupAvailableNow(
           s, s"$d/documents.parquet", "doc_id",
           regexp_replace(col("text"), " the ", "\n"),
           s"$dir/seen", s"$dir/out", s"$dir/ckpt")
@@ -7969,9 +8043,12 @@ object QueryCatalog {
              |FROM m GROUP BY doc_id""".stripMargin)),
 
     Q("q_bm25_stream_exec", // STREAMING EXECUTION gate: BM25-index
-      // ingest — the documents table drains through the incremental
-      // engine into the persisted posting layout (per-batch dirs on
-      // postings/df/stats), then the standard 4-query batch probes the
+      // ingest, the crawl-to-searchable-index pipeline — the documents
+      // table drains through the incremental engine into the persisted
+      // posting layout via bm25IndexIncrement (per-batch dirs on
+      // postings/df/stats, so replays rewrite rather than
+      // double-append; no cross-batch state is read, so results are
+      // batching-invariant), then the standard 4-query batch probes the
       // FRESH index. One drain must probe exactly like a one-shot
       // build, so the oracle is q_bm25_batch's verbatim (k=10);
       // incremental extension and replay idempotence are spec-pinned
@@ -7979,9 +8056,14 @@ object QueryCatalog {
       (s, d) => {
         import s.implicits._
         val dir = scratchDir("graft-stream-bm25")
-        graft.streaming.EventStreams.bm25IndexAvailableNow(
-          s, s"$d/documents.parquet", "doc_id", col("text"),
-          s"$dir/idx", s"$dir/ckpt")
+        val ckpt = s"$dir/ckpt"
+        val (docs, _) =
+          EventStreams.fileSource(s, s"$d/documents.parquet", ckpt)
+        EventStreams.drainBatches(
+            docs.select(col("doc_id"), col("text").as("__text")), ckpt) {
+          (b, batchId) => CorpusOps.bm25IndexIncrement(b, "doc_id",
+            "__text", s"$dir/idx", batchId)
+        }
         val qs = Seq(
           (0L, "hash join window scan"),
           (1L, "sort merge batch"),
@@ -8055,7 +8137,7 @@ object QueryCatalog {
         emb.write.parquet(s"$dir/src")
         Similarity.ivfInit(emb, "vec_id", "embedding", s"$dir/idx", nCells = 8,
           iters = 3)
-        graft.streaming.EventStreams.ivfIndexAvailableNow(s,
+        EventStreams.ivfIndexAvailableNow(s,
           s"$dir/src", "vec_id", col("embedding"), s"$dir/idx",
           s"$dir/ckpt")
         Similarity.ivfProbe(s, s"$dir/idx",
@@ -8097,7 +8179,7 @@ object QueryCatalog {
         emb.write.parquet(s"$dir/src")
         Similarity.ivfInit(emb, "vec_id", "embedding", s"$dir/idx",
           IvfTier.Pq(m = 8, nbits = 8), nCells = 8, iters = 3)
-        graft.streaming.EventStreams.ivfIndexAvailableNow(s,
+        EventStreams.ivfIndexAvailableNow(s,
           s"$dir/src", "vec_id", col("embedding"), s"$dir/idx",
           s"$dir/ckpt")
         Similarity.ivfProbe(s, s"$dir/idx",
@@ -8146,7 +8228,7 @@ object QueryCatalog {
             length(col("body_text")).cast("long").as("__n"))
           .groupBy(col("host"))
           .agg(count(lit(1)).as("n_docs"), sum(col("__n")).as("n_chars"))
-        graft.streaming.EventStreams.drainToMemory(s, agg,
+        EventStreams.drain(s, agg,
           s"$dir/ckpt", "graft_warc_stream")
       },
       Some("""SELECT lower('www.' || source || '.org') AS host,

@@ -938,7 +938,7 @@ object CorpusOps {
     * batch drops everything the first batch saw (spec-pinned).
     *
     * REPLAY-IDEMPOTENT by the house per-batch-directory contract
-    * ([[graft.streaming.EventStreams.etlAvailableNow]]): each batch
+    * ([[graft.streaming.EventStreams.drainBatches]]): each batch
     * OVERWRITES its own `batch=<id>` directory on both tables, and the
     * seen probe EXCLUDES rows the current batch id wrote — so a batch
     * replayed after a mid-write crash (even one that already published
@@ -2479,7 +2479,7 @@ object CorpusOps {
     * ingest). Each batch's posting, df and stats rows OVERWRITE their
     * own `batch=<id>` subtree of the respective table — the house
     * per-batch-directory replay contract ([[graft.streaming
-    * .EventStreams.etlAvailableNow]]): postings are a pure function of
+    * .EventStreams.drainBatches]]): postings are a pure function of
     * the batch (no cross-batch state is read), so a crashed-and-
     * replayed batch rewrites identical rows instead of
     * double-appending. [[bm25TopKIndexed]] probes a batch-incremental
@@ -2561,8 +2561,8 @@ object CorpusOps {
     *
     * The rewrite PRESERVES the input's layout: a flat one-shot index
     * ([[buildBm25Index]] + appends) compacts in place as before, and a
-    * batch-incremental index ([[bm25IndexIncrement]] /
-    * [[graft.streaming.EventStreams.bm25IndexAvailableNow]]) folds
+    * batch-incremental index ([[bm25IndexIncrement]], per micro-batch
+    * of a [[graft.streaming.EventStreams.drainBatches]]) folds
     * every `batch=<id>` subtree into a single reserved `batch=-1`
     * subtree on all three tables — NEVER into the flat layout, which
     * would sit beside the next stream increment's `batch=<id>`

@@ -971,8 +971,8 @@ object Similarity {
     * model-only root). */
   def ivfAppend(newVecs: DataFrame, idCol: String, vecCol: String,
                 indexPath: String, extraCols: Seq[String] = Nil): Unit =
-    ivfWrite(newVecs, idCol, vecCol, indexPath, extraCols, None,
-      "ivfAppend")
+    ivfWriter(newVecs.sparkSession, indexPath, idCol, vecCol, extraCols,
+      batched = false, "ivfAppend")(newVecs, None)
 
   /** The replay-idempotent micro-batch face of [[ivfAppend]] — the
     * streaming ANN ingest contract ([[graft.operators.CorpusOps
@@ -987,33 +987,79 @@ object Similarity {
   def ivfAppendBatch(batch: DataFrame, idCol: String, vecCol: String,
                      indexPath: String, batchId: Long,
                      extraCols: Seq[String] = Nil): Unit =
-    ivfWrite(batch, idCol, vecCol, indexPath, extraCols, Some(batchId),
-      "ivfAppendBatch")
+    ivfBatchWriter(batch.sparkSession, indexPath, idCol, vecCol,
+      extraCols)(batch, batchId)
 
-  /** The one ingest path of rows, for both append faces. */
-  private def ivfWrite(df: DataFrame, idCol: String, vecCol: String,
-                       path: String, extraCols: Seq[String],
-                       batchId: Option[Long], face: String): Unit = {
-    batchId.foreach(b => require(b >= 0,
-      s"batchId must be >= 0 (batch=-1 is the reserved fold target of " +
-        s"ivfCompact and ivfRetrain): $b"))
-    val spark = df.sparkSession
-    val ix = ivfIngestRoot(spark, path, face)
+  /** [[ivfAppendBatch]] for a whole streaming drain, the twin of
+    * [[VectorIndex.batchWriter]]: the root resolves, the model loads
+    * and the extraCols check reads the rows' schema ONCE, here, not per
+    * micro-batch. */
+  private[graft] def ivfBatchWriter(spark: org.apache.spark.sql.SparkSession,
+                                    path: String, idCol: String,
+                                    vecCol: String, extraCols: Seq[String]
+                                   ): (DataFrame, Long) => Unit = {
+    val write = ivfWriter(spark, path, idCol, vecCol, extraCols,
+      batched = true, "ivfAppendBatch")
+    (batch, batchId) => write(batch, Some(batchId))
+  }
+
+  /** The one ingest body of rows, for both append faces and the drain
+    * writer. Opening resolves the root, refuses the other layout, reads
+    * the rows' schema for the extraCols check (skipped on a model-only
+    * root) and loads the model. Every call still refuses a quiesced root
+    * and re-reads the model's stamp ([[ivfModelStamp]]) — file reads
+    * that launch no Spark job — and opens again when it moved: a
+    * retrain published between micro-batches never has rows assigned by
+    * its retired model or written into its retired generation. */
+  private def ivfWriter(spark: org.apache.spark.sql.SparkSession,
+                        path: String, idCol: String, vecCol: String,
+                        extraCols: Seq[String], batched: Boolean,
+                        face: String): (DataFrame, Option[Long]) => Unit = {
     val (other, layout, use) =
-      if (batchId.isDefined) ("cell=", "flat one-shot", "ivfAppend")
+      if (batched) ("cell=", "flat one-shot", "ivfAppend")
       else ("batch=", "streaming batch", "ivfAppendBatch")
-    require(!ivfHasDirs(spark, ix.data, other),
-      s"$face: $path has the $layout layout — use $use (mixing " +
-        "layouts breaks partition discovery)")
-    val rows = ivfRows(df, idCol, vecCol, loadIvfModel(spark, ix),
-      extraCols)
-    if (listDataFiles(spark, ix.data).nonEmpty)
-      VectorIndex.requireColumns(face, path,
-        spark.read.parquet(ix.data).schema, rows)
-    batchId.fold(
-      rows.write.mode("append").partitionBy("cell").parquet(ix.data))(b =>
-      rows.write.mode("overwrite").partitionBy("cell")
-        .parquet(s"${ix.data}/batch=$b"))
+    def open(): (IvfRoot, (Option[Int], Long), IvfModel) = {
+      val ix = ivfIngestRoot(spark, path, face)
+      require(!ivfHasDirs(spark, ix.data, other),
+        s"$face: $path has the $layout layout — use $use (mixing " +
+          "layouts breaks partition discovery)")
+      if (listDataFiles(spark, ix.data).nonEmpty)
+        VectorIndex.requireColumns(face, path,
+          spark.read.parquet(ix.data).schema,
+          (ix.layoutCols - "batch").toSeq ++ extraCols)
+      // stamped before the load: a model swapped in between is seen as
+      // moved on the next call and loaded then
+      (ix, ivfModelStamp(spark, ix), loadIvfModel(spark, ix))
+    }
+    var (ix, stamp, model) = open()
+    (df, batchId) => {
+      batchId.foreach(b => require(b >= 0,
+        s"batchId must be >= 0 (batch=-1 is the reserved fold target of " +
+          s"ivfCompact and ivfRetrain): $b"))
+      requireIngest(spark, path, face)
+      if (ivfModelStamp(spark,
+          ix.copy(generation = readIndexVersion(spark, path))) != stamp) {
+        val (nix, nstamp, nmodel) = open()
+        ix = nix; stamp = nstamp; model = nmodel
+      }
+      val rows = ivfRows(df, idCol, vecCol, model, extraCols)
+      batchId.fold(
+        rows.write.mode("append").partitionBy("cell").parquet(ix.data))(b =>
+        rows.write.mode("overwrite").partitionBy("cell")
+          .parquet(s"${ix.data}/batch=$b"))
+    }
+  }
+
+  /** What names the model of the trained index root `ix` without
+    * reading it: its generation, and the modification time of its model
+    * table (an unversioned [[ivfRetrain]] swaps the table in place).
+    * File reads only. */
+  private def ivfModelStamp(spark: org.apache.spark.sql.SparkSession,
+                            ix: IvfRoot): (Option[Int], Long) = {
+    val m = new org.apache.hadoop.fs.Path(ix.centroids)
+    val fs = m.getFileSystem(spark.sessionState.newHadoopConf())
+    (ix.generation,
+      if (fs.exists(m)) fs.getFileStatus(m).getModificationTime else -1L)
   }
 
   /** Tombstone vectors out of a trained index — the takedown path (the
@@ -1265,13 +1311,19 @@ object Similarity {
   /** The root an ingest face writes to: refused while quiesced. */
   private def ivfIngestRoot(spark: org.apache.spark.sql.SparkSession,
                             path: String, face: String): IvfRoot = {
+    requireIngest(spark, path, face)
+    ivfRoot(spark, path, face)
+  }
+
+  /** Refuse ingest on a quiesced root: one file existence check. */
+  private def requireIngest(spark: org.apache.spark.sql.SparkSession,
+                            path: String, face: String): Unit = {
     val p = quiescePath(path)
     require(!p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p),
       s"$face: ingest on $path is QUIESCED for maintenance (a retrain " +
         "is in flight, and an IVF-PQ retrain cannot fold lossy codes " +
         "across a refit) — retry after the maintenance actor publishes " +
         "and resumes ingest (ivfResume)")
-    ivfRoot(spark, path, face)
   }
 
   /** Run `body`, which may rewrite the directory holding the quiesce

@@ -299,7 +299,7 @@ object VectorIndex {
       else Some(spark.read.parquet(path).schema)
     val persisted = codecAt(spark, path, schema, persistedBits)
     persisted.foreach(requireCodec(face, path, _, codec))
-    schema.foreach(requireColumns(face, path, _, rows))
+    schema.foreach(requireColumns(face, path, _, rows.columns.toSeq))
     (persisted, codec) match {
       case (None, VectorCodec.Srp(nBits)) => writeSrpMeta(spark, path, nBits)
       case _ =>
@@ -314,12 +314,13 @@ object VectorIndex {
     * metadata column reads it as null and never matches, and a compact
     * can erase the column for the whole index. The `batch` partition
     * column is layout. Shared with the trained IVF tiers
-    * ([[Similarity.ivfAppend]]). */
+    * ([[Similarity.ivfAppend]]), which check the columns their rows
+    * will carry before the first batch arrives. */
   private[operators] def requireColumns(face: String, path: String,
                                         schema: StructType,
-                                        rows: DataFrame): Unit = {
+                                        rowCols: Seq[String]): Unit = {
     val existing = schema.fieldNames.toSet - "batch"
-    val incoming = rows.columns.toSet
+    val incoming = rowCols.toSet
     require(existing == incoming,
       s"$face: the index at $path carries columns " +
         existing.toSeq.sorted.mkString("(", ", ", ")") +

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming coverage over the `events` table (engine scope —
@@ -163,68 +163,6 @@ object EventStreams {
       .select(col("user_id"), col("signup_ts"), col("purchase_ts"), col("value"))
   }
 
-  /** Incremental ETL: drain whatever is in the source now
-    * (Trigger.AvailableNow), transform, land parquet partitioned by
-    * event_type via an idempotent foreachBatch (batchId-keyed overwrite:
-    * re-running a failed batch replaces, never duplicates). Blocks until
-    * the drain completes; returns the written path. Checkpoint makes
-    * successive calls process only NEW files. */
-  def etlAvailableNow(spark: SparkSession, srcDir: String, outDir: String,
-                      checkpointDir: String): String = {
-    val q = readEventStream(spark, srcDir)
-      .withColumn("k_val",
-        org.apache.spark.sql.functions.get_json_object(
-          org.apache.spark.sql.functions.col("props"), "$.k").cast("long"))
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        batch.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("event_type")
-          .parquet(s"$outDir/batch=$batchId")
-      }
-      .start()
-    q.awaitTermination()
-    outDir
-  }
-
-  /** Streaming maintenance of a mergeable sketch table — the streaming
-    * face of [[graft.operators.Sketches]]: each micro-batch appends
-    * per-(hour, event_type) THETA sketches of the batch's user_ids to
-    * `sketchDir/batch=<id>`, so ingest keeps the sketch table current
-    * and any later distinct-count / set-overlap question merges
-    * KB-sized sketch rows ([[graft.operators.Sketches.thetaUnionBy]])
-    * instead of rescanning events — at 100 TB the difference between
-    * answering from metadata and re-shuffling history.
-    *
-    * Idempotence without a table format: a replayed batch rewrites ITS
-    * OWN `batch=<id>` directory deterministically (same events → same
-    * sketch bytes), the same per-batch-directory contract as
-    * [[etlAvailableNow]]. Multiple sketches for one (window, type)
-    * across batches are fine BY CONSTRUCTION — theta unions are the
-    * merge, that is the whole point of a mergeable sketch table.
-    * Returns `sketchDir`. */
-  def sketchAvailableNow(spark: SparkSession, eventsPath: String,
-                         sketchDir: String, checkpointDir: String,
-                         lgK: Int = 12): String = {
-    import org.apache.spark.sql.functions._
-    val q = rawEventSource(spark, eventsPath)
-      .select(date_trunc("hour", col("ts")).as("w_start"),
-        col("event_type"), col("user_id"))
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        batch.groupBy(col("w_start"), col("event_type"))
-          .agg(theta_sketch_agg(col("user_id"), lgK).as("theta"))
-          .write.mode("overwrite").parquet(s"$sketchDir/batch=$batchId")
-      }
-      .start()
-    q.awaitTermination()
-    sketchDir
-  }
-
   /** Incremental SCD Type-2 maintenance: drain a stream of dimension
     * UPDATES (parquet files landing in `updatesDir`) and fold each
     * micro-batch into a VERSIONED history table at `dimPath` with
@@ -268,26 +206,21 @@ object EventStreams {
         .find(v => fs.exists(
           new org.apache.hadoop.fs.Path(s"$dimPath/v=$v/_SUCCESS")))
     }
-    val q = spark.readStream.schema(updateSchema).parquet(updatesDir)
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val base = newestVersion(upTo = Some(batchId)).getOrElse(sys.error(
-          s"scd2AvailableNow: no complete base version <= $batchId under " +
-            s"$dimPath — seed v=0 with the initial snapshot"))
-        val dim = spark.read.parquet(s"$dimPath/v=$base")
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col(key))
-          .orderBy((col(tsCol).desc +: attrs.map(col(_).desc)): _*)
-        val collapsed = batch
-          .withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1).drop("__rn")
-        graft.operators.Merge.scd2Apply(dim, collapsed, key, attrs, tsCol)
-          .write.mode("overwrite").parquet(s"$dimPath/v=${batchId + 1}")
-      }
-      .start()
-    q.awaitTermination()
+    drainBatches(spark.readStream.schema(updateSchema).parquet(updatesDir),
+        checkpointDir) { (batch, batchId) =>
+      val base = newestVersion(upTo = Some(batchId)).getOrElse(sys.error(
+        s"scd2AvailableNow: no complete base version <= $batchId under " +
+          s"$dimPath — seed v=0 with the initial snapshot"))
+      val dim = spark.read.parquet(s"$dimPath/v=$base")
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col(key))
+        .orderBy((col(tsCol).desc +: attrs.map(col(_).desc)): _*)
+      val collapsed = batch
+        .withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") === 1).drop("__rn")
+      graft.operators.Merge.scd2Apply(dim, collapsed, key, attrs, tsCol)
+        .write.mode("overwrite").parquet(s"$dimPath/v=${batchId + 1}")
+    }
     newestVersion(upTo = None).getOrElse(0L)
   }
 
@@ -306,28 +239,37 @@ object EventStreams {
     * branch the batch loader uses ([[graft.Tables.normalizedTs]]), which
     * keeps the two paths incapable of diverging.
     *
-    * The file-stream source lists a DIRECTORY; the driver's table is a
-    * single parquet file, so stage it behind a hardlink (zero-copy; copy
-    * as the cross-device fallback) in a scratch dir registered for
-    * JVM-exit deletion. */
-  def rawEventSource(spark: SparkSession, eventsPath: String): DataFrame = {
-    val (src, probed) = fileSource(spark, eventsPath)
+    * The driver's table is a single parquet file, which [[fileSource]]
+    * stages under `checkpointDir`: pass the checkpoint of the drain that
+    * reads this source. */
+  def rawEventSource(spark: SparkSession, eventsPath: String,
+                     checkpointDir: String): DataFrame = {
+    val (src, probed) = fileSource(spark, eventsPath, checkpointDir)
     src.withColumn("ts", graft.Tables.normalizedTs(probed("ts").dataType))
   }
 
-  /** Schema-probed file-stream source over a parquet file or directory
-    * (the file-source API wants a directory; a single file is staged
-    * into a scratch dir by hard link, copy as the cross-device
-    * fallback). Returns the streaming frame plus the probed schema —
-    * a hard-coded stream schema silently MISREADS re-encoded data (the
-    * r9 events lesson), so every streaming face probes. */
-  private[graft] def fileSource(spark: SparkSession,
-                                path: String): (DataFrame, StructType) = {
+  /** Schema-probed file-stream source over a parquet file or directory.
+    * Returns the streaming frame plus the probed schema — a hard-coded
+    * stream schema silently MISREADS re-encoded data (the r9 events
+    * lesson), so every streaming face probes.
+    *
+    * The file-source API wants a directory, so a single file is staged
+    * into `<checkpointDir>/input` by hard link (copy as the
+    * cross-device fallback). The checkpoint's file log names each file
+    * it has read by full path, so the staging dir must be the same on
+    * every drain of one checkpoint: under a fresh scratch dir per call
+    * a second drain failed on the logged path ("Wrong basePath"), and
+    * no drain of a single file could resume. The link is remade on
+    * every call, so the staged name reads the file as it is now. */
+  private[graft] def fileSource(spark: SparkSession, path: String,
+                                checkpointDir: String)
+      : (DataFrame, StructType) = {
     val f = new java.io.File(path)
     val srcDir = if (f.isFile) {
-      val dir = java.nio.file.Files.createTempDirectory("graft-stream-src")
-      graft.TempDirs.deleteOnExit(dir.toFile)
+      val dir = java.nio.file.Paths.get(checkpointDir, "input")
+      java.nio.file.Files.createDirectories(dir)
       val staged = dir.resolve(f.getName)
+      java.nio.file.Files.deleteIfExists(staged)
       try java.nio.file.Files.createLink(staged, f.toPath)
       catch { case _: Exception =>
         java.nio.file.Files.copy(f.toPath, staged); ()
@@ -338,36 +280,22 @@ object EventStreams {
     (spark.readStream.schema(probed).parquet(srcDir), probed)
   }
 
-  /** Runs [[eventTimeWindow]] as a REAL Structured Streaming query over
-    * the raw events parquet: `readStream` file source →
-    * `Trigger.AvailableNow` (drain everything currently in the source,
-    * then stop) → complete-mode in-memory sink, blocking until the drain
-    * finishes, and returns the sink's contents — the execution gate that
-    * proves the streaming twin doesn't just compile but produces the
-    * batch answer through the incremental engine (mode rationale on
-    * [[drainToMemory]]). */
-  def tumblingAvailableNow(spark: SparkSession, eventsPath: String,
-                           checkpointDir: String,
-                           sinkName: String = "graft_stream_tumbling"): DataFrame =
-    drainToMemory(spark, eventTimeWindow(rawEventSource(spark, eventsPath)),
-      checkpointDir, sinkName)
-
-  /** Kill-and-restart execution gate: [[tumblingAvailableNow]] split
-    * into TWO AvailableNow runs sharing one checkpoint. Half the source
-    * rows land as one file, the first drain runs to completion and
-    * STOPS (a graceful kill — the query object is gone, the JVM could
-    * die here), the other half lands, and a brand-new query RESUMES
-    * from the checkpoint. The final complete-mode table must equal the
-    * single-run answer: recovery faults are arithmetically visible —
-    * lost state store halves the counts, a failed file-source-log
-    * recovery doubles the first file's contribution. Until r12 every
-    * `*_stream_exec` gate drained in one run, so checkpoint recovery
-    * was claimed but never exercised; this is the exercised form
-    * (q_event_stream_exec gates it against the DuckDB oracle every
-    * round). Halves split by event_id parity, so their time ranges
-    * fully interleave — the restart must also accept events earlier
-    * than the recovered watermark (complete mode keeps all window
-    * state; nothing is droppable). */
+  /** Kill-and-restart execution gate: [[eventTimeWindow]] over the raw
+    * events parquet, [[drain]]ed in TWO AvailableNow runs sharing one
+    * checkpoint. Half the source rows land as one file, the first drain
+    * runs to completion and STOPS (a graceful kill — the query object is
+    * gone, the JVM could die here), the other half lands, and a
+    * brand-new query RESUMES from the checkpoint. The final
+    * complete-mode table must equal the single-run answer: recovery
+    * faults are arithmetically visible — lost state store halves the
+    * counts, a failed file-source-log recovery doubles the first file's
+    * contribution. Until r12 every `*_stream_exec` gate drained in one
+    * run, so checkpoint recovery was claimed but never exercised; this
+    * is the exercised form (q_event_stream_exec gates it against the
+    * DuckDB oracle every round). Halves split by event_id parity, so
+    * their time ranges fully interleave — the restart must also accept
+    * events earlier than the recovered watermark (complete mode keeps
+    * all window state; nothing is droppable). */
   def tumblingRestartDrain(spark: SparkSession, eventsPath: String,
                            checkpointDir: String,
                            sinkName: String = "graft_stream_tumbling_restart")
@@ -378,92 +306,19 @@ object EventStreams {
     val src = srcDir.toString
     raw.filter(pmod(col("event_id"), lit(2)) === 0)
       .coalesce(1).write.mode("append").parquet(src)
-    drainToMemory(spark, eventTimeWindow(rawEventSource(spark, src)),
+    drain(spark, eventTimeWindow(rawEventSource(spark, src, checkpointDir)),
       checkpointDir, sinkName)
     raw.filter(pmod(col("event_id"), lit(2)) === 1)
       .coalesce(1).write.mode("append").parquet(src)
-    drainToMemory(spark, eventTimeWindow(rawEventSource(spark, src)),
+    drain(spark, eventTimeWindow(rawEventSource(spark, src, checkpointDir)),
       checkpointDir, sinkName)
-  }
-
-  /** Runs [[sessionWindow]] (built-in gap-based `session_window` state)
-    * through the real incremental engine the same way
-    * [[tumblingAvailableNow]] does: `readStream` over the raw events
-    * parquet → AvailableNow drain → complete-mode memory sink. Returns
-    * the per-(session, user) rows; the catalog gate rolls them up to the
-    * per-user (n_sessions, n_events) shape of the q_event_sessions
-    * oracle — a plain batch aggregation over the sink table, so the
-    * stateful part under test is exactly the session-merge logic. */
-  def sessionsAvailableNow(spark: SparkSession, eventsPath: String,
-                           checkpointDir: String,
-                           sinkName: String = "graft_stream_sessions"): DataFrame =
-    drainToMemory(spark, sessionWindow(rawEventSource(spark, eventsPath)),
-      checkpointDir, sinkName)
-
-  /** Runs [[slidingWindow]] through the incremental engine the same way
-    * — overlapping windows multiply state rows (4 windows per event at
-    * 1h/15min), which is exactly the state-growth shape worth pinning
-    * against the batch oracle. */
-  def slidingAvailableNow(spark: SparkSession, eventsPath: String,
-                          checkpointDir: String,
-                          sinkName: String = "graft_stream_sliding"): DataFrame =
-    drainToMemory(spark, slidingWindow(rawEventSource(spark, eventsPath)),
-      checkpointDir, sinkName)
-
-  /** Runs [[dedupStream]] (watermark-bounded `dropDuplicates` state)
-    * through the incremental engine, keyed on `keys`, returning only the
-    * key columns: WHICH physical row survives for a key is a race
-    * between partitions inside a micro-batch, but that exactly one row
-    * per key survives is the state contract under test — key columns
-    * are the deterministic projection of it. Append mode: dedup emits
-    * rows the moment they are admitted (no window to finalize), so
-    * unlike the aggregation gates nothing is held back by the trailing
-    * watermark. The driver's table is a single file → a single
-    * micro-batch, so no key's state can be watermark-evicted mid-drain
-    * and the output is one row per distinct key, i.e. SELECT DISTINCT. */
-  def dedupAvailableNow(spark: SparkSession, eventsPath: String,
-                        checkpointDir: String, keys: Seq[String],
-                        sinkName: String = "graft_stream_dedup"): DataFrame =
-    drainToMemory(spark,
-      dedupStream(rawEventSource(spark, eventsPath), keys = keys)
-        .select(keys.map(col): _*),
-      checkpointDir, sinkName, OutputMode.Append())
-
-  /** STREAMING URL-level dedup through the incremental engine — the
-    * crawl-frontier shape: URLs canonicalize and dedup AS THEY ARRIVE,
-    * so a fetcher fed from this stream never re-downloads a resource
-    * already seen under another spelling. `urlExpr` derives the raw
-    * URL from the source's columns; rows whose URL fails to
-    * canonicalize are passed over (a frontier cannot key on NULL —
-    * batch [[graft.operators.CorpusOps.urlDedup]] keeps them, which is
-    * the right call when ACCOUNTING rather than fetching). Emits the
-    * canonical only: which physical row survives a canonical is a
-    * partition race, exactly-one-per-canonical is the contract (same
-    * rule as [[dedupAvailableNow]]).
-    *
-    * State = one entry per distinct canonical — a production frontier
-    * bounds it with `withWatermark` on crawl time + dropDuplicates
-    * within the watermark; this AvailableNow drain over a staged
-    * snapshot has no time column, and its state is bounded by the
-    * snapshot's distinct count. */
-  def urlDedupAvailableNow(spark: SparkSession, docsPath: String,
-                           urlExpr: org.apache.spark.sql.Column,
-                           checkpointDir: String,
-                           sinkName: String = "graft_stream_urldedup"): DataFrame = {
-    val (src, _) = fileSource(spark, docsPath)
-    drainToMemory(spark,
-      src.select(graft.operators.CorpusOps.canonicalUrl(urlExpr)
-          .as("canonical_url"))
-        .filter(col("canonical_url").isNotNull)
-        .dropDuplicates("canonical_url"),
-      checkpointDir, sinkName, OutputMode.Append())
   }
 
   /** Streaming keep-first paragraph dedup — the ingest-time face of
     * [[graft.operators.CorpusOps.dropRepeatedParagraphs]], built like
     * the URL crawl frontier but with DURABLE state: each micro-batch
     * runs [[graft.operators.CorpusOps.dropRepeatedParagraphsIncrement]]
-    * via foreachBatch, anti-joining against the persisted
+    * via [[drainBatches]], anti-joining against the persisted
     * first-occurrence table at `seenPath` and appending cleaned docs to
     * `outPath` (disk state rather than dropDuplicates streaming state
     * because the table must outlive the query — a crawl ingests for
@@ -480,17 +335,12 @@ object EventStreams {
                             textExpr: org.apache.spark.sql.Column,
                             seenPath: String, outPath: String,
                             checkpointDir: String): DataFrame = {
-    val (src, _) = fileSource(spark, docsPath)
-    val q = src.select(col(idCol), textExpr.as("__text"))
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.CorpusOps.dropRepeatedParagraphsIncrement(
-          batch, idCol, "__text", seenPath, outPath, batchId)
-      }
-      .start()
-    q.awaitTermination()
+    val (src, _) = fileSource(spark, docsPath, checkpointDir)
+    drainBatches(src.select(col(idCol), textExpr.as("__text")),
+        checkpointDir) { (batch, batchId) =>
+      graft.operators.CorpusOps.dropRepeatedParagraphsIncrement(
+        batch, idCol, "__text", seenPath, outPath, batchId)
+    }
     readDrained(spark, outPath,
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType(Seq(src.schema(idCol),
@@ -521,117 +371,72 @@ object EventStreams {
     * given the broadcast model, so results are identical under any
     * batching (spec-pinned), and each batch's (id, pred_label,
     * nb_log_score) rows OVERWRITE their own `outPath/batch=<id>`
-    * directory — the house replay-idempotence contract
-    * ([[etlAvailableNow]]): a crashed-and-replayed batch rewrites
-    * identical rows instead of double-appending. Returns a batch read
-    * of `outPath` after the drain (partition column dropped). */
+    * directory — the replay-idempotence contract of [[drainBatches]]:
+    * a crashed-and-replayed batch rewrites identical rows instead of
+    * double-appending. Returns a batch read of `outPath` after the
+    * drain (partition column dropped). */
   def nbScoreAvailableNow(spark: SparkSession, docsPath: String,
                           idCol: String,
                           textExpr: org.apache.spark.sql.Column,
                           model: DataFrame, outPath: String,
                           checkpointDir: String): DataFrame = {
-    val (src, _) = fileSource(spark, docsPath)
-    val q = src.select(col(idCol), textExpr.as("__text"))
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.CorpusOps
-          .nbScore(batch, model, idCol, "__text")
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    val (src, _) = fileSource(spark, docsPath, checkpointDir)
+    val docs = src.select(col(idCol), textExpr.as("__text"))
+    drainBatches(docs, checkpointDir) { (batch, batchId) =>
+      graft.operators.CorpusOps
+        .nbScore(batch, model, idCol, "__text")
+        .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+    }
     readDrained(spark, outPath, {
       // an empty static frame through the same scorer yields the exact
       // output schema without touching the (never-created) outPath
       val emptyBatch = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        src.select(col(idCol), textExpr.as("__text")).schema)
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], docs.schema)
       graft.operators.CorpusOps.nbScore(emptyBatch, model, idCol, "__text")
     })
   }
 
-  /** Streaming BM25-index ingest — the crawl-to-searchable-index
-    * pipeline: every arriving document's postings land in the
-    * persisted [[graft.operators.CorpusOps.buildBm25Index]]-style
-    * layout via [[graft.operators.CorpusOps.bm25IndexIncrement]]
-    * (per-batch directories on all three tables — postings, df,
-    * stats — so replays rewrite rather than double-append; no
-    * cross-batch state is read, so results are batching-invariant).
-    * After the drain the index is immediately probe-able by
-    * [[graft.operators.CorpusOps.bm25TopKIndexed]] — one drain over
-    * the whole corpus probes exactly like a one-shot build (the
-    * execution gate); later drains see only new files and extend the
-    * index incrementally (spec-pinned). */
-  def bm25IndexAvailableNow(spark: SparkSession, docsPath: String,
-                            idCol: String,
-                            textExpr: org.apache.spark.sql.Column,
-                            indexPath: String,
-                            checkpointDir: String): Unit = {
-    val (src, _) = fileSource(spark, docsPath)
-    val q = src.select(col(idCol), textExpr.as("__text"))
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.CorpusOps.bm25IndexIncrement(
-          batch, idCol, "__text", indexPath, batchId)
-      }
-      .start()
-    q.awaitTermination()
-  }
+  /** The `(id, __vec[, extraCols])` rows both vector-index drains hand
+    * their writer, written once because per-tier copies are how a
+    * cross-cutting edit once missed two tiers. `extraCols` ride along,
+    * so every tier's FILTERED probes are reachable from streaming
+    * ingest. */
+  private def vectorSource(spark: SparkSession, vecsPath: String,
+                           idCol: String,
+                           vecExpr: org.apache.spark.sql.Column,
+                           checkpointDir: String,
+                           extraCols: Seq[String]): DataFrame =
+    fileSource(spark, vecsPath, checkpointDir)._1
+      .select(col(idCol) +: vecExpr.as("__vec") +: extraCols.map(col): _*)
 
-  /** The shared AvailableNow drain skeleton of the two vector-index
-    * ingest faces (trained IVF / the model-free codecs — r18 review:
-    * copy-paste variants are why a cross-cutting edit missed two
-    * tiers): one file source, `(id, __vec[, extras])` projection, a
-    * replay-idempotent per-batch append, await. `extraCols` ride the
-    * projection so every tier's FILTERED probes are reachable from
-    * streaming ingest. */
-  private def drainVectorIndex(spark: SparkSession, vecsPath: String,
-                               idCol: String,
-                               vecExpr: org.apache.spark.sql.Column,
-                               checkpointDir: String,
-                               extraCols: Seq[String])(
-      append: (DataFrame, Long) => Unit): Unit = {
-    val (src, _) = fileSource(spark, vecsPath)
-    val q = src.select(col(idCol) +: vecExpr.as("__vec") +:
-        extraCols.map(col): _*)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch(append)
-      .start()
-    q.awaitTermination()
-  }
-
-  /** Streaming ANN-index ingest — the vector-side twin of
-    * [[bm25IndexAvailableNow]]: every arriving embedding lands in the
-    * persisted trained IVF index at `indexPath`, of either tier, via
-    * [[graft.operators.Similarity.ivfAppendBatch]] (assignment — and
+  /** Streaming ANN-index ingest — the vector-side twin of the BM25
+    * ingest drain ([[graft.operators.CorpusOps.bm25IndexIncrement]]):
+    * every arriving embedding lands in the persisted trained IVF index
+    * at `indexPath`, of either tier, through
+    * [[graft.operators.Similarity.ivfBatchWriter]] (assignment — and
     * for IVF-PQ residual encoding — by the PERSISTED model; fit it first
-    * with [[graft.operators.Similarity.ivfInit]]). Each batch overwrites
-    * its own `batch=<id>/cell=<c>` subtree, so replays rewrite rather
-    * than double-append and results are batching-invariant: assignment
-    * reads no cross-batch state. After the drain the index is
-    * immediately probe-able by `Similarity.ivfProbe`, filtered or not —
-    * one drain over a corpus probes exactly like a one-shot
-    * `Similarity.ivfBuild` under the same model (the execution gates
-    * `q_ivf_stream_exec` and `q_ivfpq_stream_exec`); later drains see
-    * only new files and extend the index incrementally (spec-pinned). */
+    * with [[graft.operators.Similarity.ivfInit]]). The writer resolves
+    * the root and loads the model once per drain, and again only when a
+    * retrain publishes a new generation between micro-batches. Each
+    * batch overwrites its own `batch=<id>/cell=<c>` subtree, so replays
+    * rewrite rather than double-append and results are
+    * batching-invariant: assignment reads no cross-batch state. After
+    * the drain the index is immediately probe-able by
+    * `Similarity.ivfProbe`, filtered or not — one drain over a corpus
+    * probes exactly like a one-shot `Similarity.ivfBuild` under the same
+    * model (the execution gates `q_ivf_stream_exec` and
+    * `q_ivfpq_stream_exec`); later drains see only new files and extend
+    * the index incrementally (spec-pinned). */
   def ivfIndexAvailableNow(spark: SparkSession, vecsPath: String,
                            idCol: String,
                            vecExpr: org.apache.spark.sql.Column,
                            indexPath: String,
                            checkpointDir: String,
                            extraCols: Seq[String] = Nil): Unit =
-    drainVectorIndex(spark, vecsPath, idCol, vecExpr, checkpointDir,
-      extraCols) { (batch, batchId) =>
-      graft.operators.Similarity.ivfAppendBatch(
-        batch, idCol, "__vec", indexPath, batchId, extraCols)
-    }
+    drainBatches(vectorSource(spark, vecsPath, idCol, vecExpr,
+        checkpointDir, extraCols), checkpointDir)(
+      graft.operators.Similarity.ivfBatchWriter(spark, indexPath, idCol,
+        "__vec", extraCols))
 
   /** [[ivfIndexAvailableNow]] on a model-free
     * [[graft.operators.VectorIndex]]: arriving embeddings are encoded
@@ -652,85 +457,69 @@ object EventStreams {
                               indexPath: String, checkpointDir: String,
                               codec: graft.operators.VectorCodec,
                               extraCols: Seq[String] = Nil): Unit =
-    drainVectorIndex(spark, vecsPath, idCol, vecExpr, checkpointDir,
-      extraCols)(graft.operators.VectorIndex.batchWriter(spark, indexPath,
-      codec, idCol, "__vec", extraCols))
+    drainBatches(vectorSource(spark, vecsPath, idCol, vecExpr,
+        checkpointDir, extraCols), checkpointDir)(
+      graft.operators.VectorIndex.batchWriter(spark, indexPath, codec,
+        idCol, "__vec", extraCols))
 
-  /** Runs [[userRunningTotals]] (mapGroupsWithState — the arbitrary-
-    * state API) through the incremental engine. Update mode: custom
-    * state emits the function's return per touched group per batch
-    * (complete mode is not supported for mapGroupsWithState); the
-    * single-file source drains in one batch, so the sink holds exactly
-    * one final row per user. The gate projects (user_id, n_events)
-    * — the float total is deliberately excluded: the stateful count is
-    * the machinery under test, and a JVM-rounded running double vs the
-    * oracle's round(sum(value),2) differ in rounding flavor, which
-    * would gate rounding trivia, not state correctness (total_value
-    * equality with batch is spec-pinned in EventStreamsSpec). */
-  def totalsAvailableNow(spark: SparkSession, eventsPath: String,
-                         checkpointDir: String,
-                         sinkName: String = "graft_stream_totals"): DataFrame = {
-    import spark.implicits._
-    val src = rawEventSource(spark, eventsPath).as[Event]
-    drainToMemory(spark,
-      userRunningTotals(spark, src).toDF()
-        .select(col("user_id"), col("n_events")),
-      checkpointDir, sinkName, OutputMode.Update())
-  }
-
-  /** Runs [[funnelStream]] (custom funnel GroupState) through the
-    * incremental engine. Update mode (mapGroupsWithState's only
-    * fit-for-purpose mode); the single-file source drains in ONE
-    * micro-batch, so every user's fold sees its full history sorted —
-    * the drained sink holds exactly the batch funnel result and
-    * hash-compares against the same iterative-min oracle as
-    * q_funnel_ordered. */
-  def funnelAvailableNow(spark: SparkSession, eventsPath: String,
-                         checkpointDir: String,
-                         sinkName: String = "graft_stream_funnel"): DataFrame = {
-    import spark.implicits._
-    val src = rawEventSource(spark, eventsPath).as[Event]
-    drainToMemory(spark, funnelStream(spark, src).toDF(),
-      checkpointDir, sinkName, OutputMode.Update())
-  }
-
-  /** Runs [[signupPurchaseJoin]] (stream-stream interval join) through
-    * the incremental engine. INNER join rows emit as soon as both sides
-    * match — append mode holds nothing back (watermark holdback applies
-    * to outer joins and aggregations, which must wait to declare
-    * no-match/finality) — so an AvailableNow drain yields the complete
-    * batch join result and can be oracle-gated exactly. The watermarks
-    * still matter: they are what lets the engine EVICT each side's
-    * state once the other side's watermark passes the horizon. */
-  def joinAvailableNow(spark: SparkSession, eventsPath: String,
-                       checkpointDir: String,
-                       sinkName: String = "graft_stream_join"): DataFrame =
-    drainToMemory(spark,
-      signupPurchaseJoin(rawEventSource(spark, eventsPath)),
-      checkpointDir, sinkName, OutputMode.Append())
-
-  /** Shared drain: memory sink + AvailableNow trigger, blocking until
-    * the source is exhausted. The aggregation gates use Complete mode
-    * (not append): at drain time the watermark still trails max event
-    * time, so append would hold back the final window(s); complete
-    * emits the full state, which is exactly the batch-equivalence
-    * property the gates pin. The dedup gate uses Append (its rows emit
-    * immediately; dropDuplicates does not support Complete). The memory
-    * sink is bounded by the group/key count, not the event count; the
-    * production path for unbounded output is [[etlAvailableNow]]'s
-    * foreachBatch → parquet. */
-  private[graft] def drainToMemory(spark: SparkSession, transformed: DataFrame,
-                            checkpointDir: String, sinkName: String,
-                            mode: OutputMode = OutputMode.Complete()): DataFrame = {
-    val q = transformed
-      .writeStream
-      .outputMode(mode)
-      .format("memory")
-      .queryName(sinkName)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+  /** Drain `source` through the incremental engine into the in-memory
+    * table `sinkName` and return that table: every row the source holds
+    * now (Trigger.AvailableNow), blocking until the drain completes.
+    * Each catalog `*_stream_exec` gate composes its batch operator over
+    * a [[rawEventSource]] here, so "streaming twin == batch answer" is
+    * checked through the real incremental engine.
+    *
+    * The mode follows the operator:
+    *   - aggregations use Complete (the default): at drain time the
+    *     watermark still trails max event time, so Append would hold
+    *     back the final window(s), while Complete emits the full state,
+    *     which is exactly the batch answer;
+    *   - dedup and INNER stream-stream joins use Append: their rows emit
+    *     on admission and nothing waits on the watermark (holdback
+    *     applies to outer joins and aggregations, which must wait to
+    *     declare no-match or finality), and dropDuplicates does not
+    *     support Complete;
+    *   - mapGroupsWithState uses Update, its only fit-for-purpose mode
+    *     (Complete is unsupported): each touched group emits the
+    *     function's return per micro-batch, so a single-file source,
+    *     drained in one micro-batch, leaves one final row per group.
+    *
+    * The memory sink is bounded by the group/key count, not the event
+    * count; unbounded output goes to storage through [[drainBatches]].
+    * It resumes a checkpoint only in Complete mode: Spark refuses a
+    * second Append or Update drain on one checkpoint. */
+  def drain(spark: SparkSession, source: DataFrame, checkpointDir: String,
+            sinkName: String,
+            mode: OutputMode = OutputMode.Complete()): DataFrame = {
+    availableNow(source, checkpointDir)(
+      _.outputMode(mode).format("memory").queryName(sinkName))
     spark.table(sinkName)
   }
+
+  /** Drain `source` through the incremental engine, handing each
+    * micro-batch and its id to `write` (foreachBatch), blocking until
+    * the drain completes. The checkpoint makes a later drain process
+    * only the files earlier drains did not.
+    *
+    * `write` must be replay-idempotent: a micro-batch whose drain failed
+    * before the batch committed is handed to the next drain on the same
+    * checkpoint again, with the same id and the same rows (spec-pinned).
+    * The house contract is a per-batch directory: batch `b` OVERWRITES
+    * its own `<out>/batch=<b>`, so a replay replaces its output and
+    * never duplicates it. Whatever `write` must open once per drain — a
+    * model, a resolved root, an SRP width — its factory opens before
+    * the drain starts ([[graft.operators.VectorIndex.batchWriter]]). */
+  def drainBatches(source: DataFrame, checkpointDir: String)(
+      write: (DataFrame, Long) => Unit): Unit =
+    availableNow(source, checkpointDir)(_.foreachBatch(write))
+
+  /** The one AvailableNow run under [[drain]] and [[drainBatches]]:
+    * `sink` picks the output, the run blocks until the source is
+    * exhausted and rethrows a failed micro-batch's error. */
+  private def availableNow(source: DataFrame, checkpointDir: String)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit =
+    sink(source.writeStream
+        .trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", checkpointDir))
+      .start().awaitTermination()
 }

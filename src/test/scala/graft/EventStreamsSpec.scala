@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 import graft.streaming.EventStreams
 import graft.operators.{IvfTier, Similarity}
 
@@ -51,15 +52,17 @@ class EventStreamsSpec extends SparkSpec {
     val half = ev.filter(pmod($"event_id", lit(2)) === 0)
     half.coalesce(1).write.mode("append").parquet(src)
     // run 1: drain the first half, then the query object is GONE
-    val mid = EventStreams.drainToMemory(spark,
-      EventStreams.eventTimeWindow(EventStreams.rawEventSource(spark, src)),
+    val mid = EventStreams.drain(spark,
+      EventStreams.eventTimeWindow(
+        EventStreams.rawEventSource(spark, src, ckpt)),
       ckpt, "restart_mid")
     assert(mid.agg(sum($"n")).as[Long].head() == half.count())
     // run 2: land the other half, resume a brand-new query from ckpt
     ev.filter(pmod($"event_id", lit(2)) === 1)
       .coalesce(1).write.mode("append").parquet(src)
-    val fin = EventStreams.drainToMemory(spark,
-      EventStreams.eventTimeWindow(EventStreams.rawEventSource(spark, src)),
+    val fin = EventStreams.drain(spark,
+      EventStreams.eventTimeWindow(
+        EventStreams.rawEventSource(spark, src, ckpt)),
       ckpt, "restart_fin")
       .select("w_start", "event_type", "n", "sum_value")
       .as[(java.sql.Timestamp, String, Long, Double)].collect().toSet
@@ -104,11 +107,20 @@ class EventStreamsSpec extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("etl_ckpt").toString
     val ev = Tables.events(spark, sfDir)
     ev.limit(400).write.mode("append").parquet(src)
-    EventStreams.etlAvailableNow(spark, src, out, ckpt)
+    def etl(): Unit = EventStreams.drainBatches(
+        EventStreams.readEventStream(spark, src).withColumn("k_val",
+          get_json_object(col("props"), "$.k").cast("long")), ckpt) {
+      (batch, batchId) =>
+        batch.write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("event_type")
+          .parquet(s"$out/batch=$batchId")
+    }
+    etl()
     val first = spark.read.parquet(s"$out/batch=*").count()
     assert(first == 400)
     // second drain with no new files: no new rows land
-    EventStreams.etlAvailableNow(spark, src, out, ckpt)
+    etl()
     assert(spark.read.parquet(s"$out/batch=*").count() == first)
     // partitioned by event_type on disk
     val batchDir = new java.io.File(out).listFiles().head
@@ -207,8 +219,9 @@ class EventStreamsSpec extends SparkSpec {
     // over the driver's events.parquet, AvailableNow trigger, complete-
     // mode memory sink (q_event_stream_exec runs this in Verify)
     val ckpt = java.nio.file.Files.createTempDirectory("an_ckpt").toString
-    val streamed = EventStreams.tumblingAvailableNow(
-        spark, s"$sfDir/events.parquet", ckpt, sinkName = "an_tumbling")
+    val streamed = EventStreams.drain(spark,
+        EventStreams.eventTimeWindow(EventStreams.rawEventSource(
+          spark, s"$sfDir/events.parquet", ckpt)), ckpt, "an_tumbling")
       .select("w_start", "event_type", "n", "sum_value")
       .as[(java.sql.Timestamp, String, Long, Double)].collect().toSet
     val batch = Tables.events(spark, sfDir)
@@ -464,8 +477,13 @@ class EventStreamsSpec extends SparkSpec {
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getLong(3))).toSet
-    EventStreams.bm25IndexAvailableNow(spark, s"$root/in", "doc_id",
-      col("text"), s"$root/idx", s"$root/ckpt")
+    def ingest(): Unit = EventStreams.drainBatches(
+        EventStreams.fileSource(spark, s"$root/in", s"$root/ckpt")._1
+          .select($"doc_id", $"text".as("__text")), s"$root/ckpt") {
+      (batch, batchId) => graft.operators.CorpusOps.bm25IndexIncrement(
+        batch, "doc_id", "__text", s"$root/idx", batchId)
+    }
+    ingest()
     // one drain over a fresh index probes exactly like a one-shot build
     graft.operators.CorpusOps.buildBm25Index(docs1, "doc_id", "text",
       s"$root/oneshot")
@@ -474,8 +492,7 @@ class EventStreamsSpec extends SparkSpec {
     // probing now equals a one-shot build over the union
     val docs2 = Seq((3L, "gamma gamma delta")).toDF("doc_id", "text")
     docs2.coalesce(1).write.mode("append").parquet(s"$root/in")
-    EventStreams.bm25IndexAvailableNow(spark, s"$root/in", "doc_id",
-      col("text"), s"$root/idx", s"$root/ckpt")
+    ingest()
     graft.operators.CorpusOps.buildBm25Index(
       docs1.unionByName(docs2), "doc_id", "text", s"$root/oneshot2")
     val extended = probe(s"$root/idx")
@@ -673,5 +690,45 @@ class EventStreamsSpec extends SparkSpec {
       .select("__fp").collect().map(_.getString(0)).toSeq
     assert(seenAfter.sorted == Seq("A", "B", "C", "D"),
       s"replay duplicated seen rows: $seenAfter")
+  }
+
+  test("a second drain of a single parquet file on the same checkpoint " +
+      "sees no new rows") {
+    // every catalog gate's input is one file, not a directory: the
+    // checkpoint's file log names the staged copy, so a drain that
+    // resumes the checkpoint must find it at the same path
+    val ckpt = java.nio.file.Files.createTempDirectory("single_ckpt").toString
+    def rowsDrained(): Long = {
+      val n = new java.util.concurrent.atomic.AtomicLong
+      EventStreams.drainBatches(EventStreams.rawEventSource(
+          spark, s"$sfDir/events.parquet", ckpt), ckpt) { (batch, _) =>
+        n.addAndGet(batch.count()); ()
+      }
+      n.get
+    }
+    assert(rowsDrained() == Tables.events(spark, sfDir).count())
+    assert(rowsDrained() == 0L)
+  }
+
+  test("drainBatches: a failed micro-batch surfaces, and the next drain " +
+      "on the checkpoint hands the writer the same batch id and rows") {
+    // the replay contract every per-batch directory relies on
+    val root = java.nio.file.Files.createTempDirectory("replay").toString
+    Seq((1L, "a"), (2L, "b")).toDF("id", "s").coalesce(1)
+      .write.parquet(s"$root/in")
+    val src = spark.readStream.schema("id BIGINT, s STRING")
+      .parquet(s"$root/in")
+    val calls = new java.util.concurrent.atomic.AtomicInteger
+    val handed =
+      new java.util.concurrent.ConcurrentLinkedQueue[(Long, Set[(Long, String)])]
+    def drain(): Unit = EventStreams.drainBatches(src, s"$root/ckpt") {
+      (batch, batchId) =>
+        handed.add(batchId -> batch.as[(Long, String)].collect().toSet)
+        if (calls.incrementAndGet() == 1) sys.error("planted writer failure")
+    }
+    interceptGuard("planted writer failure")(drain())
+    drain()
+    val got = handed.asScala.toSeq
+    assert(got == Seq.fill(2)(0L -> Set((1L, "a"), (2L, "b"))), got.toString)
   }
 }

@@ -158,13 +158,16 @@ class EventsEncodingSpec extends SparkSpec {
     import graft.streaming.EventStreams
     val ntzDir = writeSparkVariant(TimestampNTZType)
     val nanosDir = writeNanosVariant()
-    def drain(dir: String, sink: String) =
-      EventStreams.tumblingAvailableNow(spark, s"$dir/events.parquet",
-          scratch("graft-enc-ckpt"), sink)
+    def drain(dir: String, sink: String) = {
+      val ckpt = scratch("graft-enc-ckpt")
+      EventStreams.drain(spark, EventStreams.eventTimeWindow(
+          EventStreams.rawEventSource(spark, s"$dir/events.parquet", ckpt)),
+          ckpt, sink)
         .select(unix_micros(col("w_start")).as("w_us"), col("event_type"),
           col("n"), col("sum_value"))
         .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
           r.getDouble(3))).sortBy(t => (t._1, t._2)).toSeq
+    }
     val fromNtz = drain(ntzDir, "graft_enc_ntz")
     val fromNanos = drain(nanosDir, "graft_enc_nanos")
     assert(fromNtz == fromNanos)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
+import scala.jdk.CollectionConverters._
 import graft.operators.{CorpusOps, IvfTier, Similarity, VectorCodec, VectorIndex}
 import graft.operators.Similarity.RefitCorpus
 import graft.streaming.EventStreams
@@ -686,6 +687,76 @@ class MaintenanceSpec extends SparkSpec {
         assert(n <= bound, s"$tier $face: $n jobs, bound $bound " +
           s"(the replaced face launched $prior)")
       }
+    }
+  }
+
+  test("ivfBatchWriter: a two-micro-batch drain loads the model once, " +
+      "so the second micro-batch launches only its write's jobs") {
+    val root = tmp("ivfwriterjobs")
+    // two files and one file per trigger: two micro-batches
+    emb.filter($"vec_id" < 100).coalesce(1).write.parquet(s"$root/src")
+    emb.filter($"vec_id".between(100, 199)).coalesce(1)
+      .write.mode("append").parquet(s"$root/src")
+    // measured per micro-batch at the parent commit of the writer,
+    // whose drain resolved the root and reloaded the model every time
+    val parentJobs = Seq(4, 6)
+    tiers.zipWithIndex.foreach { case (tier, t) =>
+      val idx = s"$root/idx$t"
+      Similarity.ivfInit(emb, "vec_id", "embedding", idx, tier, nCells = 4,
+        iters = 2)
+      val src = spark.readStream.schema(emb.schema)
+        .option("maxFilesPerTrigger", "1").parquet(s"$root/src")
+      var write: (DataFrame, Long) => Unit = null
+      val opened = jobsLaunchedBy {
+        write = Similarity.ivfBatchWriter(spark, idx, "vec_id", "embedding",
+          Nil)
+      }
+      val jobs = new java.util.concurrent.ConcurrentHashMap[Long, Int]
+      EventStreams.drainBatches(src, s"$root/ckpt$t") { (batch, batchId) =>
+        jobs.put(batchId, jobsLaunchedBy(write(batch, batchId)))
+        ()
+      }
+      assert(jobs.keySet.asScala == Set(0L, 1L), jobs.toString)
+      assert(opened > 0, s"$tier: the writer must load the model up front")
+      assert(jobs.get(1L) == 1, s"$tier: the second micro-batch launched " +
+        s"${jobs.get(1L)} jobs, the model loaded up front in $opened; the " +
+        s"parent launched ${parentJobs(t)} per micro-batch")
+      assert(spark.read.parquet(if (t == 0) idx else s"$idx/codes")
+        .count() == 200L)
+    }
+  }
+
+  test("ivfBatchWriter: a versioned retrain between micro-batches sends " +
+      "the next batch to the new generation, assigned by its model") {
+    tiers.zipWithIndex.foreach { case (tier, t) =>
+      val idx = tmp("ivfwritergen") + "/idx"
+      Similarity.ivfInit(emb, "vec_id", "embedding", idx, tier, nCells = 4,
+        iters = 2)
+      val write = Similarity.ivfBatchWriter(spark, idx, "vec_id",
+        "embedding", Nil)
+      write(emb.filter($"vec_id" < 200), 0L)
+      Similarity.ivfQuiesce(spark, idx)
+      Similarity.ivfRetrain(spark, idx, iters = 3, versioned = true,
+        corpus = if (t == 0) None
+          else Some(RefitCorpus(emb.filter($"vec_id" < 200), "vec_id",
+            "embedding")))
+      Similarity.ivfResume(spark, idx)
+      write(emb.filter($"vec_id".between(200, 249)), 1L)
+      val rows = if (t == 0) "data" else "codes"
+      assert(spark.read.parquet(s"$idx/.v1/$rows").filter($"batch" === 1)
+        .select($"id").as[Long].collect().toSet == (200L to 249L).toSet,
+        s"$tier: batch 1 is not in the live generation")
+      val retired = if (t == 0) s"$idx/batch=1" else s"$idx/codes/batch=1"
+      assert(!new java.io.File(retired).exists(),
+        s"$tier: batch 1 landed in the retired generation")
+      // one probed cell finds each new row only when the new model
+      // assigned it
+      val qs = emb.filter($"vec_id".between(200, 209))
+        .select($"vec_id".as("qid"), $"embedding".as("qv"))
+      val found = Similarity.ivfProbe(spark, idx, qs, "qid", "qv", k = 5,
+          probes = 1)
+        .filter($"id" === $"qid").select($"qid").as[Long].collect().toSet
+      assert(found == (200L to 209L).toSet, s"$tier: probed $found")
     }
   }
 }

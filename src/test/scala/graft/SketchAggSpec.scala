@@ -111,8 +111,15 @@ class SketchAggSpec extends SparkSpec {
 
   test("stream-maintained sketch table merges to the exact answer") {
     val dir = java.nio.file.Files.createTempDirectory("graft_sks").toString
-    graft.streaming.EventStreams.sketchAvailableNow(
-      spark, s"$sfDir/events.parquet", s"$dir/sk", s"$dir/ckpt")
+    graft.streaming.EventStreams.drainBatches(
+        graft.streaming.EventStreams.rawEventSource(spark,
+            s"$sfDir/events.parquet", s"$dir/ckpt")
+          .select(date_trunc("hour", $"ts").as("w_start"), $"event_type",
+            $"user_id"), s"$dir/ckpt") { (batch, batchId) =>
+      batch.groupBy($"w_start", $"event_type")
+        .agg(theta_sketch_agg($"user_id", 12).as("theta"))
+        .write.mode("overwrite").parquet(s"$dir/sk/batch=$batchId")
+    }
     val merged = spark.read.parquet(s"$dir/sk/batch=*")
       .groupBy($"w_start", $"event_type")
       .agg(theta_union_agg($"theta", 12).as("theta"))
